@@ -159,7 +159,7 @@ def prometheus_metrics(
         recs = getattr(svc, "metrics", [])
         svc_cnt.append(({"uid": uid}, len(recs)))
         svc_sum.append(
-            ({"uid": uid}, round(sum(float(r.get("p50_ms", 0)) for r in recs), 3))
+            ({"uid": uid}, round(sum(float(r.get("search_ms", 0)) for r in recs), 3))
         )
         svc_zero.append(
             ({"uid": uid}, sum(1 for r in recs if not r.get("n_hits")))

@@ -360,11 +360,11 @@ def resolve_content_boosts(thai_ratio: float, query_len: int) -> dict:
 def query_metrics_frame(spark, records: list[dict]) -> DataFrame:
     """Small metrics DataFrame (one row per query) for export per run.
 
-    records: {query, variant_count, n_hits, p50_ms, algorithm}.  Written by
+    records: {query, variant_count, n_hits, search_ms, algorithm}.  Written by
     callers with ``df.write.json``/parquet — the reference's JSON export
     (analytics.py:388-429) maps onto a one-file-per-run metrics sink.
     """
-    schema = "query string, variant_count int, n_hits long, p50_ms double, algorithm string"
+    schema = "query string, variant_count int, n_hits long, search_ms double, algorithm string"
     return spark.createDataFrame([tuple(r.get(k) for k in
-                                        ("query", "variant_count", "n_hits", "p50_ms", "algorithm"))
+                                        ("query", "variant_count", "n_hits", "search_ms", "algorithm"))
                                   for r in records], schema)

@@ -15,6 +15,7 @@ MeiliSearch's internal index (SURVEY X1/X2/R11).
 
 from __future__ import annotations
 
+import itertools
 import os
 import re
 from contextlib import contextmanager
@@ -30,6 +31,10 @@ from pyspark.sql import types as T
 from ..index.builder import FIELD_SEP, IndexMeta, load_meta
 from ..index.codec import varbyte_decode
 from .pipeline import split_negative_keywords  # re-export (parse lives in Q1-Q8)
+
+# process-wide temp-view namer; next() on a count is atomic, so engines in
+# different threads never register the same name
+_VIEW_SEQ = itertools.count(1)
 
 
 def _row_field(term: str, field_params, avgdl: float) -> tuple[float, float, str]:
@@ -59,6 +64,114 @@ class QueryTerm:
 
     variant_id: int
     term: str
+
+
+@dataclass(frozen=True)
+class Variant:
+    """One scoring variant; its variant id is its position in the list.
+    Each conjunctive prefix of a Q7 'last'/'frequency' variant is its own
+    scoring variant carrying the parent's type and weight."""
+
+    type: str
+    weight: float
+    n_terms: int
+    matching: str
+    query: int = 0  # batch namespace (position in the request batch)
+
+
+def required_terms(variants: list[Variant]) -> dict[int, int]:
+    """variant id → matched-term count a doc needs (conjunctive variants)."""
+    return {
+        vid: v.n_terms for vid, v in enumerate(variants) if v.matching in ("all", "phrase")
+    }
+
+
+def _sql_str(s: str) -> str:
+    """A Spark SQL string literal (the form ``lit(s).expr().sql()`` prints)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_map(pairs) -> str:
+    return "map(" + ", ".join(f"{a}, {b}" for a, b in pairs) + ")"
+
+
+def rank_sql(
+    src: str,
+    variants: list[Variant] | None = None,
+    *,
+    required: dict[int, int] | None = None,
+    normalize: bool = False,
+    threshold: float = 0.0,
+    k: int | None = None,
+    per_query: bool = False,
+    dedup: bool = False,
+) -> str:
+    """Per-doc ranking over ``src`` — a view or parenthesized query with
+    columns (variant_id, doc_id, score, terms_matched), one row per
+    (variant, doc) — as one SQL statement:
+
+    required-terms filter → [R1/R2 ``score * weight * boost`` → X4 best
+    variant per doc] → [R6 ``max(score) OVER ()`` normalization] → P7
+    threshold → ``ORDER BY score DESC, doc_id ASC LIMIT k`` (with
+    ``per_query``: the first ``k`` of each query by ``row_number``).
+
+    ``variants=None`` ranks raw BM25; ``dedup`` then keeps each doc's best
+    sub-variant (ties to the earliest).  Doubles print with ``repr`` and a
+    ``D`` suffix, so every constant folds to the same IEEE value the Column
+    API would build, and the weighting multiplies in the same order —
+    results are bit-identical to a Column plan of the same shape."""
+    from .ranker import VARIANT_BOOST_SQL
+
+    rel = src
+    if required:
+        need = _sql_map(sorted(required.items())) + "[variant_id]"
+        rel = f"(SELECT * FROM {rel} WHERE {need} IS NULL OR terms_matched = {need})"
+    keys = ["query_id", "doc_id"] if per_query else ["doc_id"]
+    if variants is not None:
+        by = ", ".join(keys)
+        weight = _sql_map((i, f"{v.weight!r}D") for i, v in enumerate(variants))
+        vtype = _sql_map((i, _sql_str(v.type)) for i, v in enumerate(variants))
+        qid = (
+            f", {_sql_map((i, v.query) for i, v in enumerate(variants))}[variant_id] AS query_id"
+            if per_query
+            else ""
+        )
+        cols = [*keys, "score", "variant_type", "terms_matched"]
+        # X4: each doc keeps its best variant hit; ties to the larger
+        # weight, then the earlier variant
+        rel = (
+            f"(SELECT {by}, b.score AS score, b.variant_type AS variant_type,"
+            f" b.terms_matched AS terms_matched FROM (SELECT {by},"
+            f" max_by(struct(score, variant_type, terms_matched),"
+            f" struct(score, weight, -variant_id)) AS b FROM (SELECT {by},"
+            f" variant_id, terms_matched, weight, variant_type,"
+            f" score * weight * {VARIANT_BOOST_SQL} AS score FROM (SELECT *,"
+            f" {weight}[variant_id] AS weight, {vtype}[variant_id] AS variant_type{qid}"
+            f" FROM {rel})) GROUP BY {by}))"
+        )
+    elif dedup:
+        cols = ["doc_id", "score", "terms_matched"]
+        rel = (
+            f"(SELECT doc_id, b.score AS score, b.terms_matched AS terms_matched FROM"
+            f" (SELECT doc_id, max_by(struct(score, terms_matched),"
+            f" struct(score, -variant_id)) AS b FROM {rel} GROUP BY doc_id))"
+        )
+    else:
+        cols = ["doc_id", "score", "terms_matched"]
+    if normalize:
+        mx = f"max(score) OVER ({'PARTITION BY query_id' if per_query else ''})"
+        norm = f"CASE WHEN {mx} > 0 THEN score / {mx} ELSE score END AS score"
+        rel = f"(SELECT {', '.join(norm if c == 'score' else c for c in cols)} FROM {rel})"
+    out = ", ".join(cols)
+    where = f" WHERE score >= {float(threshold)!r}D" if threshold > 0 else ""
+    if k is None:
+        return f"SELECT {out} FROM {rel}{where}"
+    if per_query:
+        return (
+            f"SELECT {out} FROM (SELECT *, row_number() OVER (PARTITION BY query_id"
+            f" ORDER BY score DESC, doc_id ASC) AS _rn FROM {rel}{where}) WHERE _rn <= {int(k)}"
+        )
+    return f"SELECT {out} FROM {rel}{where} ORDER BY score DESC, doc_id ASC LIMIT {int(k)}"
 
 
 def _make_decoder(k1: float, b: float, avgdl: float, n_docs: int, field_params=None):
@@ -618,7 +731,6 @@ class SearchEngine:
     # comes from warm_memory_report() — this constant only sizes the
     # head-term selection before the tier exists
     WARM_BYTES_PER_POSTING = 48
-    _VIEW_SEQ = 0  # process-wide warm temp-view namer (rebuilt per tier)
 
     def __init__(
         self,
@@ -635,6 +747,8 @@ class SearchEngine:
         self._warm: DataFrame | None = None  # decoded serving tier (lazy)
         self._warm_budget = warm_budget_bytes  # None = warm everything
         self._doomed_df: DataFrame | None = None  # lazy anti-join side (>cap)
+        # (warm tier, its temp view, that view's plan cache) — _warm_binding
+        self._warm_bound: tuple = (None, None, {})
         self._load_index()
 
     def _load_index(self) -> None:
@@ -670,6 +784,15 @@ class SearchEngine:
         # ("i\x1f<term>"); queries fan each word out across all searchable
         # attributes and scores weight per field (builder.field_params)
         self._fp = self.meta.field_params()
+        # per-row BM25 contribution over the warm view as a SQL scalar (the
+        # fielded tier pre-merges scores into "s")
+        k1, b = self.meta.k1, self.meta.b
+        N, avgdl = float(self.meta.n_docs), float(self.meta.avgdl)
+        self._warm_s_sql = "s" if self._fp else (
+            f"ln(1.0D + ({N!r}D - df + 0.5D) / (df + 0.5D))"
+            f" * (tf * {k1 + 1.0!r}D)"
+            f" / (tf + {k1!r}D * ({1.0 - b!r}D + {b!r}D * dl / {avgdl!r}D))"
+        )
         self._fprefixes = (
             [f"{i}{FIELD_SEP}" for i in range(len(self.meta.fields))] if self._fp else []
         )
@@ -813,79 +936,95 @@ class SearchEngine:
         return self._warm
 
     def _warm_view(self) -> str:
-        """Register the warm tier as a temp view ONCE per tier build and
-        precompile the per-row BM25 contribution as a SQL scalar string.
+        """The warm tier's temp view name (registered once per tier build)."""
+        return self._warm_binding()[0]
 
-        Why: profiling (scripts/profile_serving.py, BASELINE.md §Serving
-        latency decomposition) shows ~87 ms of a warm point query's ~160 ms
-        is DataFrame PLAN CONSTRUCTION — dozens of py4j round-trips building
-        Column expressions — before Spark runs anything.  Routing the
-        single-variant point query through ONE ``spark.sql()`` string cuts
-        that to a single round-trip; the parsed plan is the same shape
-        (cached-relation filter → exchange-free hash agg → TakeOrdered), so
-        results are bit-identical (equality-tested against the Column path
-        in test_warm_serving.py).
+    def _warm_binding(self) -> tuple[str, dict]:
+        """(warm view name, its plan cache), registered once per tier build.
 
-        Double literals carry the ``D`` suffix (Spark SQL would otherwise
-        parse ``0.75`` as DECIMAL) and ``repr(float)`` round-trips IEEE
-        doubles exactly, so the SQL expression folds to the same constants
-        as the Column version."""
+        Warm queries run as ONE ``spark.sql`` string over this view (see
+        :meth:`_warm_ranked`): building the plan through the Column API cost
+        one py4j round trip per expression node — over a thousand per
+        multi-variant request.  The view and the plan cache bound to it are
+        swapped in ONE assignment, so a concurrent reader never pairs a new
+        view with plans parsed against the old one, and a rebuilt tier
+        (refresh, deletes) drops every cached plan with its view."""
         w = self.warm_postings()
-        if getattr(self, "_warm_view_df", None) is not w:
-            if getattr(self, "_warm_view_name", None):
+        bound = self._warm_bound
+        if bound[0] is not w:
+            if bound[1] is not None:
                 # the old view pins the replaced tier's plan in the catalog
-                self.spark.catalog.dropTempView(self._warm_view_name)
-            SearchEngine._VIEW_SEQ += 1
-            name = f"mst_warm_{SearchEngine._VIEW_SEQ}"
+                self.spark.catalog.dropTempView(bound[1])
+            name = f"mst_warm_{next(_VIEW_SEQ)}"
             w.createOrReplaceTempView(name)
-            self._warm_view_df = w
-            self._warm_view_name = name
-            if self._fp:
-                self._warm_s_sql = "s"  # fielded tier pre-merges scores
-            else:
-                k1, b = self.meta.k1, self.meta.b
-                N, avgdl = float(self.meta.n_docs), float(self.meta.avgdl)
-                self._warm_s_sql = (
-                    f"ln(1.0D + ({N!r}D - df + 0.5D) / (df + 0.5D))"
-                    f" * (tf * {k1 + 1.0!r}D)"
-                    f" / (tf + {k1!r}D * ({1.0 - b!r}D + {b!r}D * dl / {avgdl!r}D))"
-                )
-        return self._warm_view_name
+            bound = self._warm_bound = (w, name, {})
+        return bound[1], bound[2]
 
-    _PLAN_CACHE_CAP = 512  # parsed point-query plans per engine (tiny objects)
+    _PLAN_CACHE_CAP = 512  # parsed warm plans per engine (tiny objects)
 
-    def _warm_point_rows(self, terms: list[str], k: int) -> list:
-        """Single-variant warm point query as ONE spark.sql call (see
-        :meth:`_warm_view`).  Returns the scored top-k rows
-        (doc_id, score, terms_matched) — same columns, same values as the
-        Column-API warm path.
-
-        Repeated queries reuse the parsed Dataset (a per-engine LRU keyed
-        by (term set, k) — the plan cache every serving engine keeps):
-        Spark caches the analyzed/compiled QueryExecution on the Dataset
-        object, so a repeat pays only scheduling + execution.  The cache
-        binds to one warm view generation and drops wholesale on
-        refresh/rebuild, so it can never serve a stale tier."""
-        view = self._warm_view()
-        cache = getattr(self, "_point_plan_cache", None)
-        if cache is None or getattr(self, "_point_plan_view", None) != view:
-            cache, self._point_plan_cache = {}, {}
-            cache = self._point_plan_cache
-            self._point_plan_view = view
-        key = (tuple(sorted(set(terms))), int(k))
-        df = cache.get(key)
-        if df is None:
-            in_list = ", ".join("'" + t.replace("'", "''") + "'" for t in key[0])
-            df = self.spark.sql(
-                f"SELECT doc_id, sum({self._warm_s_sql}) AS score,"
-                f" count(1) AS terms_matched"
-                f" FROM {view} WHERE term IN ({in_list})"
-                f" GROUP BY doc_id ORDER BY score DESC, doc_id ASC LIMIT {int(k)}"
+    def _warm_scored_sql(self, view: str, qterms: list[QueryTerm], neg_ids=None) -> str:
+        """(variant_id, doc_id, score, terms_matched) per (variant, doc) over
+        the warm view: ``term IN (…)`` (an InSet — the columnar cache prunes
+        term-sorted batches) → ``explode(map(term → variant ids)[term])`` →
+        the BM25 scalar → sum and count, exchange-free (the tier is
+        hash-partitioned by doc_id).  A single-variant query takes a
+        constant variant id instead of the map, so its generated code is
+        identical across queries.  Negative-keyword ids drop at the scan:
+        the whole matching set is scored here, so that is exact."""
+        by_term: dict[str, list[int]] = {}
+        for q in qterms:
+            by_term.setdefault(q.term, []).append(q.variant_id)
+        terms = sorted(by_term)
+        where = f"term IN ({', '.join(map(_sql_str, terms))})" if terms else "FALSE"
+        if neg_ids is not None and len(neg_ids):
+            where += f" AND doc_id NOT IN ({', '.join(str(int(i)) for i in neg_ids)})"
+        vids = sorted({q.variant_id for q in qterms})
+        if len(vids) <= 1:
+            return (
+                f"(SELECT {vids[0] if vids else 0} AS variant_id, doc_id,"
+                f" sum({self._warm_s_sql}) AS score, count(1) AS terms_matched"
+                f" FROM {view} WHERE {where} GROUP BY doc_id)"
             )
-            if len(cache) >= self._PLAN_CACHE_CAP:
-                cache.pop(next(iter(cache)))  # FIFO eviction — bounded, simple
-            cache[key] = df
-        return df.collect()
+        vmap = _sql_map((_sql_str(t), f"array({', '.join(map(str, by_term[t]))})") for t in terms)
+        return (
+            f"(SELECT variant_id, doc_id, sum(s) AS score, count(1) AS terms_matched"
+            f" FROM (SELECT explode({vmap}[term]) AS variant_id, doc_id,"
+            f" {self._warm_s_sql} AS s FROM {view} WHERE {where})"
+            f" GROUP BY variant_id, doc_id)"
+        )
+
+    def _warm_ranked(self, qterms: list[QueryTerm], variants=None, neg_ids=None, **rank) -> DataFrame:
+        """The warm route as ONE cached ``spark.sql`` statement:
+        :meth:`_warm_scored_sql` ranked by :func:`rank_sql` (``rank`` are its
+        keywords; raw BM25 dedups sub-variants by itself).
+
+        Parsed Datasets are kept per engine, keyed by the SQL text: Spark
+        caches the analyzed and compiled QueryExecution on the Dataset, so a
+        repeated query pays only execution.  The cache belongs to one warm
+        view (:meth:`_warm_binding`), so it can never serve a stale tier."""
+        view, plans = self._warm_binding()
+        if variants is None:
+            rank.setdefault("dedup", len({q.variant_id for q in qterms}) > 1)
+        text = rank_sql(self._warm_scored_sql(view, qterms, neg_ids), variants, **rank)
+        df = plans.get(text)
+        if df is None:
+            df = self.spark.sql(text)
+            if len(plans) >= self._PLAN_CACHE_CAP:
+                plans.pop(next(iter(plans), None), None)  # FIFO — bounded, simple
+            plans[text] = df
+        return df
+
+    def _rank_scored(self, scored: DataFrame, variants=None, **rank) -> DataFrame:
+        """:func:`rank_sql` over a scored frame of the compressed routes
+        (block-max, filtered, exact) — the same statement the warm route
+        runs, through a temp view that lives only while the SQL is parsed
+        (the Dataset keeps the resolved plan)."""
+        name = f"mst_scored_{next(_VIEW_SEQ)}"
+        scored.createOrReplaceTempView(name)
+        try:
+            return self.spark.sql(rank_sql(name, variants, **rank))
+        finally:
+            self.spark.catalog.dropTempView(name)
 
     def _stats_view(self) -> str:
         """doc_stats as a temp view (same once-per-binding contract as
@@ -895,8 +1034,7 @@ class SearchEngine:
         if getattr(self, "_stats_view_df", None) is not ds:
             if getattr(self, "_stats_view_name", None):
                 self.spark.catalog.dropTempView(self._stats_view_name)
-            SearchEngine._VIEW_SEQ += 1
-            name = f"mst_stats_{SearchEngine._VIEW_SEQ}"
+            name = f"mst_stats_{next(_VIEW_SEQ)}"
             ds.createOrReplaceTempView(name)
             self._stats_view_df = ds
             self._stats_view_name = name
@@ -969,66 +1107,6 @@ class SearchEngine:
             "truncated": self._warm_terms is not None,
             "warm_term_count": len(self._warm_terms) if self._warm_terms is not None else None,
         }
-
-    def _bm25_expr(self):
-        k1, b = self.meta.k1, self.meta.b
-        idf_c = F.log(
-            F.lit(1.0)
-            + (F.lit(float(self.meta.n_docs)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-        )
-        return idf_c * (F.col("tf") * F.lit(k1 + 1.0)) / (
-            F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(self.meta.avgdl))
-        )
-
-    def _warm_score_variants(
-        self, qterms: list[QueryTerm], required: dict[int, int] | None = None
-    ) -> DataFrame:
-        """JVM twin of :meth:`score_variants` over the warm tier — identical
-        BM25 formula as Column arithmetic, zero Python stages."""
-        w = self.warm_postings()
-        by_term: dict[str, list[int]] = {}
-        for q in qterms:
-            by_term.setdefault(q.term, []).append(q.variant_id)
-        terms = sorted(by_term)
-        if not terms:
-            return w.filter(F.lit(False)).select(
-                F.lit(0).alias("variant_id"), "doc_id",
-                F.lit(0.0).alias("score"), F.lit(0).cast("long").alias("terms_matched"),
-            )
-        vids = {q.variant_id for q in qterms}
-        if len(vids) == 1:
-            # single-variant point query (the common serving shape): constant
-            # variant_id instead of a per-query literal map — the generated
-            # Java source is then IDENTICAL across queries (terms live in a
-            # referenced InSet object), so codegen compiles once per engine
-            base = w.filter(F.col("term").isin(terms)).withColumn(
-                "variant_id", F.lit(next(iter(vids)))
-            )
-        else:
-            kv = []
-            for t in terms:
-                kv.append(F.lit(t))
-                kv.append(F.array([F.lit(v) for v in by_term[t]]))
-            vmap = F.create_map(*kv)
-            base = w.filter(F.col("term").isin(terms)).withColumn(
-                "variant_id", F.explode(vmap[F.col("term")])
-            )
-        if not self._fp:
-            base = base.withColumn("s", self._bm25_expr())
-        # fielded tiers precompute "s" (and pre-merge fields), so count(*)
-        # is the matched-word count on both tier layouts
-        scored = base.groupBy("variant_id", "doc_id").agg(
-            F.sum("s").alias("score"), F.count("*").alias("terms_matched")
-        )
-        if required:
-            needmap = F.create_map(
-                *[x for vid, n in required.items() for x in (F.lit(vid), F.lit(n))]
-            )
-            scored = scored.filter(
-                needmap[F.col("variant_id")].isNull()
-                | (F.col("terms_matched") == needmap[F.col("variant_id")])
-            )
-        return scored
 
     def vocabulary(self) -> list[str]:
         """Sorted index terms, collected once per engine — BOUNDED.
@@ -1806,7 +1884,7 @@ class SearchEngine:
         terms = extract_index_terms(tokenize_for_index(query))
         if not terms:
             return []
-        _uniq, prefixes, qterms, required = self._expand_matching(terms, matching)
+        _uniq, _prefixes, qterms, required = self._expand_matching(terms, matching)
         if not self._warm_covers(qterms):
             # budget-truncated tier + a cold term: identical results via the
             # compressed block-max path (the lazy API routes it)
@@ -1817,18 +1895,7 @@ class SearchEngine:
                     attributes_to_retrieve=attributes_to_retrieve,
                 ).collect()
             ]
-        if len(prefixes) == 1 and not required:
-            # the common serving shape (single conjunctive-free variant):
-            # one spark.sql round-trip instead of ~90 ms of py4j Column
-            # construction — identical plan shape and values (_warm_view)
-            rows = self._warm_point_rows([q.term for q in qterms], k)
-            return self._resolve_meta(rows, attributes_to_retrieve)
-        scored = self._warm_score_variants(qterms, required)
-        if len(prefixes) > 1:
-            scored = self._dedup_best_per_doc(scored)
-        else:
-            scored = scored.drop("variant_id")
-        rows = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
+        rows = self._warm_ranked(qterms, required=required, k=k).collect()
         return self._resolve_meta(rows, attributes_to_retrieve)
 
     def _finalize_hits(
@@ -2226,13 +2293,8 @@ class SearchEngine:
                 required_terms=required, extra_excluded=neg_ids,
             )
         elif self._warm_covers(qterms):
-            # point-query serving: pure-JVM plan over the decoded warm tier
-            # full matching set is scored here, cut comes below — a
-            # post-scoring filter is exact (unlike on the heap paths, where
-            # exclusion must happen inside the kernels)
-            scored = self._apply_negative_exclusion(
-                self._warm_score_variants(qterms, required), neg_ids, blocked=None
-            )
+            # point-query serving: one cached SQL statement over the warm tier
+            return self._warm_ranked(qterms, required=required, neg_ids=neg_ids, k=k)
         else:
             scored = self.score_variants_topk(
                 qterms, k=k, required_terms=required, extra_excluded=neg_ids
@@ -2555,9 +2617,8 @@ class SearchEngine:
                 .limit(k)
                 .select(*out_cols)
             )
-        topk = dedup.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         return (
-            self.doc_stats.join(F.broadcast(topk), "doc_id")
+            self.doc_stats.join(F.broadcast(dedup), "doc_id")
             .select(*out_cols)
             .orderBy(F.desc("score"), F.asc("doc_id"))
         )
@@ -2603,11 +2664,10 @@ class SearchEngine:
         # raises regardless of whether the query matched (parity with the
         # lazy path and multi_variant_search)
         self._check_attrs(attributes_to_retrieve)
-        dedup, _ = self._multi_variant_dedup(query, k, min_score_threshold, normalize, None, None, pq=pq)
-        if dedup is None:
+        topk, _ = self._multi_variant_dedup(query, k, min_score_threshold, normalize, None, None, pq=pq)
+        if topk is None:
             return []
-        rows = dedup.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-        return self._resolve_meta(rows, attributes_to_retrieve)
+        return self._resolve_meta(topk.collect(), attributes_to_retrieve)
 
     def facet_distribution(
         self,
@@ -2890,10 +2950,7 @@ class SearchEngine:
 
         Returns one hit-row list per input query (order preserved)."""
         from .pipeline import process_query
-        from .ranker import variant_boost_expr
 
-        qterms: list[QueryTerm] = []
-        vmeta_rows: list[tuple[int, int, str, float, int, str]] = []
         if pqs is None:  # caller (SearchService) usually already processed them
             pqs = [process_query(q, synonyms=self._synonyms or None) for q in queries]
         negi = [i for i, p in enumerate(pqs) if getattr(p, "exclude_terms", None)]
@@ -2922,94 +2979,22 @@ class SearchEngine:
         # ONE df lookup covering every query's 'frequency' terms — per-query
         # term_dfs calls would serialize up to 50 driver-blocking scans before
         # the single scoring job (memoized, so only uncached terms cost)
-        all_freq = sorted(
-            {
-                t
-                for pq in pqs
-                for v in pq.variants
-                if v.matching == "frequency" and len(set(v.terms)) > 1
-                for t in v.terms
-            }
-        )
-        dfs = self.term_dfs(all_freq) if all_freq else None
+        dfs = self._frequency_dfs([v for pq in pqs for v in pq.variants])
+        qterms: list[QueryTerm] = []
+        variants: list[Variant] = []
         for qi, pq in enumerate(pqs):
-            if not pq.variants:
-                continue
-            for v in pq.variants:
-                uniq = list(dict.fromkeys(self._drop_stopwords(v.terms)))
-                if not uniq:
-                    continue
-                groups = (
-                    matching_prefixes(uniq, v.matching, dfs)
-                    if v.matching in ("last", "frequency") and len(uniq) >= 2
-                    else [uniq]
-                )
-                m = "all" if len(groups) > 1 else v.matching
-                for pf in groups:
-                    vid = len(vmeta_rows)
-                    for t in pf:
-                        qterms.append(QueryTerm(vid, t))
-                    vmeta_rows.append((vid, qi, v.variant_type, float(v.weight), len(pf), m))
-            # Q10 expansion fallbacks, namespaced to this query (suppression
-            # set = THIS query's own terms only — another batch member's
-            # terms must not mask an expansion here)
-            q_seen = {t for v in pq.variants for t in v.terms}
-            for terms, weight in self._expansion_variants(
-                [t for v in pq.variants for t in v.terms], q_seen
-            ):
-                vid = len(vmeta_rows)
-                for e in terms:
-                    qterms.append(QueryTerm(vid, e))
-                vmeta_rows.append((vid, qi, "fallback", weight, len(terms), "best"))
+            self._add_scoring_variants(pq, dfs, qterms, variants, query=qi)
         if not qterms:
             return [[] for _ in queries]
-        required = {
-            vid: n for vid, _qi, _t, _w, n, m in vmeta_rows if m in ("all", "phrase")
-        }
+        required = required_terms(variants)
+        rank = dict(normalize=normalize, threshold=min_score_threshold, k=k, per_query=True)
         if self._warm_covers(qterms):
-            scored = self._warm_score_variants(qterms, required)
+            ranked = self._warm_ranked(qterms, variants, required=required, **rank)
         else:
-            scored = self.score_variants_topk(qterms, k=k, required_terms=required)
-        qmap = F.create_map(*[x for vid, qi, *_r in vmeta_rows for x in (F.lit(vid), F.lit(qi))])
-        wmap = F.create_map(*[x for vid, _qi, _t, w, _n, _m in vmeta_rows for x in (F.lit(vid), F.lit(w))])
-        tmap = F.create_map(*[x for vid, _qi, t, _w, _n, _m in vmeta_rows for x in (F.lit(vid), F.lit(t))])
-        hit = (
-            scored.withColumn("query_id", qmap[F.col("variant_id")])
-            .withColumn("weight", wmap[F.col("variant_id")])
-            .withColumn("variant_type", tmap[F.col("variant_id")])
-            .withColumn("score", F.col("score") * F.col("weight") * variant_boost_expr("variant_type"))
-        )
-        best = F.max_by(
-            F.struct("score", "variant_type", "terms_matched"),
-            F.struct(F.col("score"), F.col("weight"), -F.col("variant_id")),
-        ).alias("best")
-        dedup = hit.groupBy("query_id", "doc_id").agg(best).select(
-            "query_id",
-            "doc_id",
-            F.col("best.score").alias("score"),
-            F.col("best.variant_type").alias("variant_type"),
-            F.col("best.terms_matched").alias("terms_matched"),
-        )
-        if normalize:
-            # R6 per query: divide by that query's max (window over the
-            # k-bounded per-query groups, not the whole corpus)
-            wmax = Window.partitionBy("query_id")
-            dedup = dedup.withColumn(
-                "score",
-                F.when(
-                    F.max("score").over(wmax) > 0,
-                    F.col("score") / F.max("score").over(wmax),
-                ).otherwise(F.col("score")),
+            ranked = self._rank_scored(
+                self.score_variants_topk(qterms, k=k, required_terms=required), variants, **rank
             )
-        if min_score_threshold > 0:
-            dedup = dedup.filter(F.col("score") >= F.lit(min_score_threshold))
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        rows = (
-            dedup.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-            .collect()
-        )
+        rows = ranked.collect()
         resolved = self._resolve_meta(rows)
         out: list[list[dict]] = [[] for _ in queries]
         for d in resolved:
@@ -3049,6 +3034,54 @@ class SearchEngine:
             out.append((fuzzy[:10], 0.5))
         return out
 
+    def _frequency_dfs(self, variants) -> dict[str, int] | None:
+        """One df lookup covering every 'frequency' variant's terms (memoized)."""
+        terms = sorted(
+            {t for v in variants if v.matching == "frequency" and len(set(v.terms)) > 1 for t in v.terms}
+        )
+        return self.term_dfs(terms) if terms else None
+
+    def _add_scoring_variants(
+        self, pq, dfs, qterms: list[QueryTerm], variants: list[Variant],
+        query: int = 0, phrase_specs: dict[int, list[str]] | None = None,
+    ) -> None:
+        """One processed query's Q1-Q8 variants, then its Q10 expansion
+        fallbacks, appended as scoring variants (variant id = position in
+        ``variants``).  ``phrase_specs``, when given, collects the positional
+        check of each phrase variant; without it a phrase degrades to
+        conjunctive matching (all terms required, no adjacency)."""
+
+        def add(vtype: str, terms: list[str], weight: float, m: str) -> int:
+            vid = len(variants)
+            qterms.extend(QueryTerm(vid, t) for t in terms)
+            variants.append(Variant(vtype, float(weight), len(terms), m, query))
+            return vid
+
+        for v in pq.variants:
+            uniq = list(dict.fromkeys(self._drop_stopwords(v.terms)))
+            if not uniq:
+                continue  # pure-stopword variant: nothing indexable to match
+            if v.matching in ("last", "frequency") and len(uniq) >= 2:
+                # Q7: one conjunctive sub-variant per prefix, all in this job;
+                # a doc's longest matched prefix wins the per-doc dedup
+                for pf in matching_prefixes(uniq, v.matching, dfs):
+                    add(v.variant_type, pf, v.weight, "all")
+                continue
+            vid = add(v.variant_type, uniq, v.weight, v.matching)
+            if phrase_specs is not None and v.matching == "phrase":
+                # stop-words leave the phrase too: the build strips them
+                # BEFORE position numbering, so remaining terms are adjacent
+                # in the index exactly when they surround dropped stop-words
+                phrase_specs[vid] = self._drop_stopwords(list(v.terms))
+        # Q10 vocabulary expansion as extra FALLBACK variants: MeiliSearch
+        # matches sub-words/prefixes natively (the golden corpus's
+        # partial_compound queries rely on it); exact-term BM25 needs the
+        # expansion made explicit.  Suppression set = THIS query's own terms
+        # (stop-words never enter the vocabulary, so they never expand)
+        tokens = [t for v in pq.variants for t in v.terms]
+        for terms, weight in self._expansion_variants(tokens, set(tokens)):
+            add("fallback", terms, weight, "best")
+
     def _multi_variant_dedup(
         self,
         query: str,
@@ -3061,74 +3094,33 @@ class SearchEngine:
     ):
         """Variant pipeline + scoring + weighting + per-doc dedup + threshold.
 
-        Returns ``(dedup DataFrame | None, sort_cols | None)`` — the part of
-        the search shared by the lazy DataFrame API and the eager page API.
-        ``pq`` lets a caller (SearchService) supply an already-processed
-        query carrying request-level overrides (matching_strategy,
-        max_query_variants) without a second pipeline pass."""
+        Returns ``(DataFrame | None, sort_cols | None)`` with columns
+        (doc_id, score, variant_type, terms_matched) — the part of the search
+        shared by the lazy DataFrame API and the eager page API.  Without
+        ``sort`` the frame is the final top-``k`` in score order; with it,
+        every matching doc, for the caller's field order.  ``pq`` lets a
+        caller (SearchService) supply an already-processed query carrying
+        request-level overrides (matching_strategy, max_query_variants)
+        without a second pipeline pass."""
         from .pipeline import process_query
-        from .ranker import MIN_SCORE_THRESHOLD, variant_boost_expr  # noqa: F401
 
         if pq is None:
             pq = process_query(query, synonyms=self._synonyms or None)
         if not pq.variants:
             return None, None
-
-        qterms = []
-        vmeta_rows = []
+        qterms: list[QueryTerm] = []
+        variants: list[Variant] = []
         phrase_specs: dict[int, list[str]] = {}
-        # one df lookup covering every 'frequency' variant's terms (memoized)
-        freq_terms = sorted(
-            {t for v in pq.variants if v.matching == "frequency" and len(set(v.terms)) > 1 for t in v.terms}
+        self._add_scoring_variants(
+            pq, self._frequency_dfs(pq.variants), qterms, variants,
+            phrase_specs=phrase_specs if getattr(self.meta, "positional", False) and not sort else None,
         )
-        dfs = self.term_dfs(freq_terms) if freq_terms else None
-
-        def add_scoring_variant(vtype: str, terms: list[str], weight: float, m: str) -> int:
-            vid = len(vmeta_rows)
-            for t in terms:
-                qterms.append(QueryTerm(vid, t))
-            vmeta_rows.append((vid, vtype, float(weight), len(terms), m))
-            return vid
-
-        for v in pq.variants:
-            uniq = list(dict.fromkeys(self._drop_stopwords(v.terms)))
-            if not uniq:
-                continue  # pure-stopword variant: nothing indexable to match
-            if v.matching in ("last", "frequency") and len(uniq) >= 2:
-                # Q7: one conjunctive sub-variant per prefix, all in this job;
-                # a doc's longest matched prefix wins the per-doc dedup
-                for pf in matching_prefixes(uniq, v.matching, dfs):
-                    add_scoring_variant(v.variant_type, pf, v.weight, "all")
-                continue
-            vid = add_scoring_variant(v.variant_type, uniq, v.weight, v.matching)
-            if v.matching == "phrase" and getattr(self.meta, "positional", False) and not sort:
-                # stop-words leave the phrase too: the build strips them
-                # BEFORE position numbering, so remaining terms are adjacent
-                # in the index exactly when they surround dropped stop-words
-                phrase_specs[vid] = self._drop_stopwords(list(v.terms))
-            # non-positional index or sort path: phrase degrades to
-            # conjunctive matching (all terms required, no adjacency)
-
-        # Q10 vocabulary expansion as extra FALLBACK variants: MeiliSearch
-        # matches sub-words/prefixes natively (the golden corpus's
-        # partial_compound queries rely on it); exact-term BM25 needs the
-        # expansion made explicit.
-        seen_terms = {q.term for q in qterms}
-        for terms, weight in self._expansion_variants(
-            [t for v in pq.variants for t in v.terms], seen_terms
-        ):
-            vid = len(vmeta_rows)
-            for e in terms:
-                qterms.append(QueryTerm(vid, e))
-            vmeta_rows.append((vid, "fallback", weight, len(terms), "best"))
-
         # per-variant EXACT top-k with bucket pruning is sufficient for the
         # global top-k after weighting: weights are constant per variant, so
         # within-variant rank by raw score == rank by weighted score, and any
         # doc in the final top-k is in its winning variant's top-k
-        required = {
-            vid: n for vid, _t, _w, n, m in vmeta_rows if m in ("all", "phrase")
-        }
+        required = required_terms(variants)
+        rank = dict(normalize=normalize, threshold=min_score_threshold, k=None if sort else k)
         # negative keywords parsed by Q1-Q8 ride the same routing the
         # single-variant path uses (literal excluded-array vs distributed
         # blocked-DataFrame, by df estimate)
@@ -3146,15 +3138,8 @@ class SearchEngine:
             if filters:
                 scored = scored.join(self.allowed_docs(filters), "doc_id")
             scored = self._apply_negative_exclusion(scored, neg_ids, blocked)
-            if required:
-                needmap = F.create_map(
-                    *[x for vid, n in required.items() for x in (F.lit(vid), F.lit(n))]
-                )
-                scored = scored.filter(
-                    needmap[F.col("variant_id")].isNull()
-                    | (F.col("terms_matched") == needmap[F.col("variant_id")])
-                )
-        elif blocked is not None:
+            return self._rank_scored(scored, variants, required=required, **rank), sort_cols
+        if blocked is not None:
             # high-df negatives: allowed = docs ∖ blocked, fully distributed
             allowed = (
                 self.allowed_docs(filters) if filters
@@ -3171,43 +3156,13 @@ class SearchEngine:
                 extra_excluded=neg_ids,
             )
         elif not phrase_specs and self._warm_covers(qterms):
-            # point-query serving: pure-JVM plan over the decoded warm tier
-            # (phrase variants need positional decode — python path below);
-            # the full matching set is scored here, so a post-scoring neg
-            # filter is exact
-            scored = self._apply_negative_exclusion(
-                self._warm_score_variants(qterms, required), neg_ids, blocked=None
-            )
+            # point-query serving: one cached SQL statement over the warm
+            # tier (phrase variants need positional decode — python path
+            # below)
+            return self._warm_ranked(qterms, variants, neg_ids, required=required, **rank), None
         else:
             scored = self.score_variants_topk(
                 qterms, k=k, required_terms=required,
                 phrase_terms=phrase_specs or None, extra_excluded=neg_ids,
             )
-        # variant metadata folded in as literal maps (≤5 variants): no
-        # createDataFrame / broadcast exchange on the latency path
-        wmap = F.create_map(*[x for vid, _t, w, _n, _m in vmeta_rows for x in (F.lit(vid), F.lit(w))])
-        tmap = F.create_map(*[x for vid, t, _w, _n, _m in vmeta_rows for x in (F.lit(vid), F.lit(t))])
-        hit = (
-            scored.withColumn("weight", wmap[F.col("variant_id")])
-            .withColumn("variant_type", tmap[F.col("variant_id")])
-            # R1/R2: final = bm25 * variant_weight * variant_boost
-            .withColumn("score", F.col("score") * F.col("weight") * variant_boost_expr("variant_type"))
-        )
-        # X4: per-doc best variant hit; tie-break weight desc then variant_id
-        best = F.max_by(
-            F.struct("score", "variant_type", "terms_matched"),
-            F.struct(F.col("score"), F.col("weight"), -F.col("variant_id")),
-        ).alias("best")
-        dedup = hit.groupBy("doc_id").agg(best).select(
-            "doc_id",
-            F.col("best.score").alias("score"),
-            F.col("best.variant_type").alias("variant_type"),
-            F.col("best.terms_matched").alias("terms_matched"),
-        )
-        if normalize:
-            from .ranker import normalize_scores
-
-            dedup = normalize_scores(dedup, "score")
-        if min_score_threshold > 0:
-            dedup = dedup.filter(F.col("score") >= F.lit(min_score_threshold))
-        return dedup, (sort_cols if sort else None)
+        return self._rank_scored(scored, variants, **rank), None

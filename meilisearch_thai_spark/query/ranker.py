@@ -24,6 +24,14 @@ VARIANT_BOOSTS = {
     # ×PREFIX_COMPLETION_WEIGHT variant weight, not a second boost discount
     "prefix": 1.2,
 }
+# R2 boost as ONE SQL CASE over a ``variant_type`` column (unknown types
+# keep 1.0); doubles print with ``repr`` + ``D`` so they fold to the table's
+# exact IEEE values
+VARIANT_BOOST_SQL = (
+    "CASE variant_type "
+    + " ".join(f"WHEN '{vt}' THEN {boost!r}D" for vt, boost in VARIANT_BOOSTS.items())
+    + " ELSE 1.0D END"
+)
 ENGINE_BOOST_NEWMM = 1.1
 # search-as-you-type: a completed last word scores slightly below the same
 # words matched literally (MeiliSearch exactness ranks exact above prefix)
@@ -114,11 +122,3 @@ def exact_match_boost(df: DataFrame, text_col: str, query: str, score_col: str =
     (result_ranker.py:1286-1303)."""
     hit = F.contains(F.lower(F.col(text_col)), F.lit(query.lower()))
     return df.withColumn(score_col, F.when(hit, F.col(score_col) * EXACT_MATCH_BOOST).otherwise(F.col(score_col)))
-
-
-def variant_boost_expr(variant_type_col: str):
-    """R2 boost as a Column expression (broadcast-free CASE chain)."""
-    expr = F.lit(1.0)
-    for vt, boost in VARIANT_BOOSTS.items():
-        expr = F.when(F.col(variant_type_col) == vt, F.lit(boost)).otherwise(expr)
-    return expr

@@ -77,10 +77,20 @@ class SearchResponse:
 class SearchService:
     """Driver-facing facade over a built index (reference: SearchProxyService)."""
 
+    # S6 records kept per service, newest last: past the cap the oldest
+    # records drop, so a long-lived service holds bounded memory
+    MAX_RECORDS = 10_000
+
     def __init__(self, spark: SparkSession, index_dir: str, cache_postings: bool = True):
         self.engine = SearchEngine(spark, index_dir, cache_postings=cache_postings)
         self.metrics: list[dict] = []  # S6: one record per query
         self.events: list[dict] = []  # S6: analytics.EVENT_SCHEMA records
+
+    def _keep(self, records: list[dict], rec: dict) -> None:
+        """Append ``rec``, dropping the oldest records past ``MAX_RECORDS``."""
+        records.append(rec)
+        if len(records) > self.MAX_RECORDS:
+            del records[: len(records) - self.MAX_RECORDS]
 
     def search(
         self,
@@ -348,14 +358,15 @@ class SearchService:
             "search_ms": round((t_search - t_tok) * 1000, 2),
             "ranking_ms": round((t_rank - t_search) * 1000, 2),
         }
-        self.metrics.append(
+        self._keep(
+            self.metrics,
             {
                 "query": req.query,
                 "variant_count": len(pq.variants),
                 "n_hits": total,
-                "p50_ms": timings["search_ms"],
+                "search_ms": timings["search_ms"],
                 "algorithm": algorithm,
-            }
+            },
         )
         # S6 event record (analytics.EVENT_SCHEMA) — success=True because the
         # request EXECUTED (failures are recorded in search()'s except path;
@@ -407,7 +418,8 @@ class SearchService:
     def _record_event(self, query, session_id, response_time_ms, n_hits, success, language):
         import datetime as _dt
 
-        self.events.append(
+        self._keep(
+            self.events,
             {
                 "query": query,
                 "session_id": session_id,
@@ -416,7 +428,7 @@ class SearchService:
                 "n_hits": n_hits,
                 "success": success,
                 "language": language,
-            }
+            },
         )
 
     MAX_BATCH_SIZE = 50  # reference models/requests.py:98 (max_items=50)

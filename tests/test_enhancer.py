@@ -108,7 +108,7 @@ def test_content_boost_presets():
 # ------------------------------------------------------------------ S6
 def test_metrics_frame(spark):
     recs = [
-        {"query": "วากาเมะ", "variant_count": 3, "n_hits": 10, "p50_ms": 420.0, "algorithm": "optimized_score"},
+        {"query": "วากาเมะ", "variant_count": 3, "n_hits": 10, "search_ms": 420.0, "algorithm": "optimized_score"},
     ]
     df = E.query_metrics_frame(spark, recs)
     assert df.count() == 1

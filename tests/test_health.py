@@ -169,6 +169,12 @@ def test_prometheus_metrics_exposition(spark, root):
         l == f'mst_queries_zero_results_total{{uid="idx1"}} {expected_zero}'
         for l in lines
     )
+    # the exported search-stage sum is the sum of the records' search_ms
+    expected_sum = round(sum(r["search_ms"] for r in svc.metrics), 3)
+    assert any(
+        l == f'mst_query_search_ms_sum{{uid="idx1"}} {expected_sum}' for l in lines
+    )
+    assert expected_sum > 0
     # every sample line belongs to a declared family and parses as
     # name{labels} value
     families = {l.split()[2] for l in lines if l.startswith("# TYPE")}

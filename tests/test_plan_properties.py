@@ -11,7 +11,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from meilisearch_thai_spark.index.builder import build_index
-from meilisearch_thai_spark.query.executor import QueryTerm, SearchEngine
+from meilisearch_thai_spark.query.executor import (
+    QueryTerm,
+    SearchEngine,
+    Variant,
+    required_terms,
+)
+from meilisearch_thai_spark.query.ranker import VARIANT_BOOSTS
 from meilisearch_thai_spark.sources.pages import generate_pages
 
 
@@ -32,20 +38,28 @@ def _final_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _query_part(df) -> str:
+    """The executed plan above the cached tier.  (Exchange/MapInPandas
+    strings appear inside InMemoryRelation cache-BUILD subtrees.)"""
+    return _final_plan(df).split("InMemoryRelation")[0]
+
+
 def test_warm_point_query_plan_has_no_python_stage_or_exchange(warm_engine):
-    scored = warm_engine._warm_score_variants([QueryTerm(0, "เทคโนโลยี"), QueryTerm(0, "อาหาร")], None)
-    plan = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
-    plan.collect()  # finalize AQE so the executed plan is the real one
-    txt = _final_plan(plan)
-    # the query path itself: no Python, no shuffle.  (Exchange/MapInPandas
-    # strings appear inside InMemoryRelation cache-BUILD subtrees, so strip
-    # cached-plan sections before asserting.)
-    query_part = txt.split("InMemoryRelation")[0]
-    assert "MapInPandas" not in query_part
-    assert "Exchange" not in query_part
-    assert "TakeOrderedAndProject" in txt
-    # terms compiled as a referenced InSet, not inlined constants
-    assert "INSET" in txt.upper()
+    single = [QueryTerm(0, "เทคโนโลยี"), QueryTerm(0, "อาหาร")]
+    multi = single + [QueryTerm(1, "อาหาร"), QueryTerm(1, "โรงเรียน")]
+    variants = [Variant("original", 1.0, 2, "best"), Variant("tokenized", 0.8, 2, "all")]
+    for plan in (
+        warm_engine._warm_ranked(single, k=10),
+        warm_engine._warm_ranked(multi, variants, required=required_terms(variants), k=10),
+    ):
+        plan.collect()  # finalize AQE so the executed plan is the real one
+        txt = _final_plan(plan)
+        # the query path itself: no Python, no shuffle
+        assert "MapInPandas" not in _query_part(plan)
+        assert "Exchange" not in _query_part(plan)
+        assert "TakeOrderedAndProject" in txt
+        # terms compiled as a referenced InSet, not inlined constants
+        assert "INSET" in txt.upper()
 
 
 def test_warm_single_variant_plan_is_query_invariant(warm_engine):
@@ -55,12 +69,13 @@ def test_warm_single_variant_plan_is_query_invariant(warm_engine):
     import re
 
     def shape(terms):
-        scored = warm_engine._warm_score_variants([QueryTerm(0, t) for t in terms], None)
-        plan = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
+        plan = warm_engine._warm_ranked([QueryTerm(0, t) for t in terms], k=10)
         plan.collect()
-        txt = _final_plan(plan).split("InMemoryRelation")[0]
-        txt = re.sub(r"INSET [^)]*", "INSET <terms>", txt)
+        txt = re.sub(r"INSET [^)]*", "INSET <terms>", _query_part(plan))
         txt = re.sub(r"#\d+L?", "#x", txt)  # normalize expr ids
+        # a plan-cache hit re-executes the cached Dataset, which numbers
+        # its result stage anew
+        txt = re.sub(r"ResultQueryStage \d+", "ResultQueryStage <n>", txt)
         return txt
 
     # ≥2 terms keeps the InSet form (a 1-element isin optimizes to EqualTo,
@@ -69,32 +84,108 @@ def test_warm_single_variant_plan_is_query_invariant(warm_engine):
     assert shape(["เทคโนโลยี", "อาหาร"]) == shape(["อาหารไทย", "โรงเรียน"])
 
 
-def test_warm_sql_point_path_same_plan_and_values(warm_engine):
-    """Round 5: the one-spark.sql point path (_warm_point_rows) must parse
-    to the SAME plan shape as the Column path — no Python, no Exchange in
-    the query part, TakeOrdered cut — and return the identical rows."""
-    terms = ["เทคโนโลยี", "อาหาร"]
-    view = warm_engine._warm_view()
-    in_list = ", ".join(f"'{t}'" for t in sorted(terms))
-    df = warm_engine.spark.sql(
-        f"SELECT doc_id, sum({warm_engine._warm_s_sql}) AS score,"
-        f" count(1) AS terms_matched FROM {view} WHERE term IN ({in_list})"
-        f" GROUP BY doc_id ORDER BY score DESC, doc_id ASC LIMIT 10"
+def _column_reference(eng, qterms, variants):
+    """The multi-variant warm page written with the Column API — the
+    reference the one-statement SQL route must equal bit for bit."""
+    k1, b = eng.meta.k1, eng.meta.b
+    idf = F.log(F.lit(1.0) + (F.lit(float(eng.meta.n_docs)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5)))
+    bm25 = idf * (F.col("tf") * F.lit(k1 + 1.0)) / (
+        F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(eng.meta.avgdl))
     )
-    df.collect()
-    query_part = _final_plan(df).split("InMemoryRelation")[0]
-    assert "MapInPandas" not in query_part
-    assert "Exchange" not in query_part
-    assert "TakeOrderedAndProject" in _final_plan(df)
-    # value identity vs the Column-API warm path, bit for bit
-    fast = warm_engine._warm_point_rows(terms, 10)
-    scored = warm_engine._warm_score_variants(
-        [QueryTerm(0, t) for t in terms], None
-    ).drop("variant_id")
-    slow = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(10).collect()
-    assert [(r["doc_id"], r["score"], r["terms_matched"]) for r in fast] == [
+    by_term = {}
+    for q in qterms:
+        by_term.setdefault(q.term, []).append(q.variant_id)
+    terms = sorted(by_term)
+    vmap = F.create_map(*[x for t in terms for x in (F.lit(t), F.array([F.lit(v) for v in by_term[t]]))])
+    scored = (
+        eng.warm_postings().filter(F.col("term").isin(terms))
+        .withColumn("variant_id", F.explode(vmap[F.col("term")]))
+        .withColumn("s", bm25)
+        .groupBy("variant_id", "doc_id")
+        .agg(F.sum("s").alias("score"), F.count("*").alias("terms_matched"))
+    )
+    wmap = F.create_map(*[x for i, v in enumerate(variants) for x in (F.lit(i), F.lit(v.weight))])
+    tmap = F.create_map(*[x for i, v in enumerate(variants) for x in (F.lit(i), F.lit(v.type))])
+    boost = F.lit(1.0)
+    for vt, bst in VARIANT_BOOSTS.items():
+        boost = F.when(F.col("variant_type") == vt, F.lit(bst)).otherwise(boost)
+    hit = (
+        scored.withColumn("weight", wmap[F.col("variant_id")])
+        .withColumn("variant_type", tmap[F.col("variant_id")])
+        .withColumn("score", F.col("score") * F.col("weight") * boost)
+    )
+    best = F.max_by(
+        F.struct("score", "variant_type", "terms_matched"),
+        F.struct(F.col("score"), F.col("weight"), -F.col("variant_id")),
+    ).alias("best")
+    return (
+        hit.groupBy("doc_id").agg(best)
+        .select("doc_id", "best.score", "best.variant_type", "best.terms_matched")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(10)
+        .collect()
+    )
+
+
+def test_warm_sql_point_path_same_plan_and_values(warm_engine):
+    """The one-statement warm route (``_warm_ranked``) returns the rows a
+    Column-API plan of the same shape returns, bit for bit: raw BM25 on a
+    single variant, and weighted, boosted, per-doc-deduplicated scores on
+    several."""
+    terms = ["เทคโนโลยี", "อาหาร"]
+    fast = warm_engine._warm_ranked([QueryTerm(0, t) for t in terms], k=10).collect()
+    slow = _column_reference(
+        warm_engine, [QueryTerm(0, t) for t in terms], [Variant("x", 1.0, 2, "best")]
+    )
+    assert fast and [(r["doc_id"], r["score"], r["terms_matched"]) for r in fast] == [
         (r["doc_id"], r["score"], r["terms_matched"]) for r in slow
     ]
+    qterms = [QueryTerm(0, "เทคโนโลยี"), QueryTerm(0, "อาหาร"), QueryTerm(1, "อาหาร"),
+              QueryTerm(2, "อาหารไทย"), QueryTerm(2, "เทคโนโลยี")]
+    variants = [Variant("original", 1.0, 2, "best"), Variant("tokenized", 0.9, 1, "best"),
+                Variant("fallback", 0.6, 2, "best")]
+    fast = warm_engine._warm_ranked(qterms, variants, k=10).collect()
+    slow = _column_reference(warm_engine, qterms, variants)
+    assert fast and [tuple(r) for r in fast] == [tuple(r) for r in slow]
+
+
+def test_warm_search_py4j_budget(spark, warm_engine):
+    """A warm SearchService.search builds its plan in one spark.sql call:
+    at most 20 Py4J round trips on a plan-cache miss and fewer on the
+    repeat (the Column-built plan took over a thousand).  Frees of proxies
+    left by earlier work ("m d" commands, sent whenever Python's garbage
+    collector runs) are not the request's own calls and are not counted."""
+    import gc
+
+    from meilisearch_thai_spark.query.service import SearchService
+
+    svc = SearchService(spark, warm_engine.index_dir)
+    svc.engine.warm_postings()
+    svc.search("ปัญญาประดิษฐ์")  # first search: vocabulary, typo settings
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    counts = []
+    client.send_command = counting
+    try:
+        for _ in range(2):
+            gc.collect()
+            calls.clear()
+            svc.search("เทคโนโลยี อาหาร")
+            counts.append(len(calls))
+    finally:
+        del client.send_command
+    miss, hit = counts
+    assert miss <= 20, counts
+    assert hit < miss, counts
+    svc.engine.postings.unpersist()
+    svc.engine.doc_stats.unpersist()
+    svc.engine._warm.unpersist()
 
 
 def test_cold_scan_pushes_term_filter(spark, warm_engine):

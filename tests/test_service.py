@@ -55,7 +55,20 @@ def test_metrics_export(service, spark):
     service.search("ตลาดหุ้น", limit=3)
     df = service.export_metrics(spark)
     assert df.count() == len(service.metrics) > 0
-    assert "p50_ms" in df.columns
+    assert "search_ms" in df.columns
+    assert df.filter("search_ms IS NULL").count() == 0
+
+
+def test_records_bounded_oldest_dropped(service, monkeypatch):
+    """metrics/events stay lists capped at MAX_RECORDS, oldest dropped."""
+    monkeypatch.setattr(SearchService, "MAX_RECORDS", 3)
+    qs = ["ตลาดหุ้น", "โรงเรียน", "อาหารไทย", "เทคโนโลยี", "ปัญญาประดิษฐ์"]
+    for q in qs:
+        service.search(q, limit=2)
+    assert isinstance(service.metrics, list) and isinstance(service.events, list)
+    assert [r["query"] for r in service.metrics] == qs[-3:]
+    assert [e["query"] for e in service.events] == qs[-3:]
+    assert [e["query"] for e in service.events[-2:]] == qs[-2:]
 
 
 def test_stored_content_eops(spark, tmp_path_factory):

@@ -92,3 +92,57 @@ def test_fuzzy_length_bands_equal_brute_scan(spark, idx):
             if t != tok and t.isascii() and _edit_distance_within(tok, t, budget)
         }
         assert banded == brute, tok
+
+
+def _canon(pairs):
+    return [(u, round(float(s), 6)) for u, s in pairs]
+
+
+def _drop_engine(eng):
+    eng.postings.unpersist()
+    eng.doc_stats.unpersist()
+    if eng._warm is not None:
+        eng._warm.unpersist()
+
+
+def test_plan_cache_never_serves_a_deleted_doc(spark, tmp_path):
+    """A repeated warm query reuses its parsed plan; after delete_docs +
+    refresh_deletes the repeat must run on the rebuilt tier."""
+    from meilisearch_thai_spark.index.maintenance import delete_docs
+    from meilisearch_thai_spark.query.service import SearchService
+
+    out = str(tmp_path / "idx")
+    build_index(spark, generate_pages(spark, 300, seed=31), out)
+    svc = SearchService(spark, out)
+    eng, q = svc.engine, "เทคโนโลยี"
+    before = svc.search(q, limit=5)
+    assert eng.search_page(q, k=5)
+    assert len(eng._warm_binding()[1]) == 2  # both plans cached
+    victim = before.hits[0].url
+    assert delete_docs(spark, out, [victim]) == 1
+    assert eng.refresh_deletes() == 1
+    assert victim not in {h.url for h in svc.search(q, limit=5).hits}
+    assert victim not in {r["url"] for r in eng.search_page(q, k=5)}
+    _drop_engine(eng)
+
+
+def test_plan_cache_follows_refresh_after_rebuild(spark, tmp_path):
+    """After the directory is rebuilt with another corpus and the live
+    engine refreshed, a repeated query equals the oracle on the NEW corpus."""
+    from meilisearch_thai_spark.index.maintenance import swap_indexes
+    from meilisearch_thai_spark.query.oracle import BM25Oracle
+
+    live_dir, next_dir = str(tmp_path / "live"), str(tmp_path / "next")
+    build_index(spark, generate_pages(spark, 300, seed=32), live_dir)
+    pages = generate_pages(spark, 300, seed=33)
+    build_index(spark, pages, next_dir)
+    corpus = {r["url"]: r["text"] for r in pages.select("url", "text").collect()}
+    eng = SearchEngine(spark, live_dir)
+    q = "อาหารไทย"
+    old = eng.search_page(q, k=10)
+    swap_indexes(live_dir, next_dir)
+    eng.refresh_index()
+    got = _canon((r["url"], r["score"]) for r in eng.search_page(q, k=10))
+    assert got == _canon(BM25Oracle(corpus).top_k(q, k=10))
+    assert got != _canon((r["url"], r["score"]) for r in old)
+    _drop_engine(eng)
