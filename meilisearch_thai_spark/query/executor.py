@@ -1588,20 +1588,6 @@ class SearchEngine:
                 self._df_cache.setdefault(t, 0)
         return {t: self._df_cache[t] for t in terms}
 
-    @staticmethod
-    def _dedup_best_per_doc(scored: DataFrame) -> DataFrame:
-        """Keep each doc's best sub-variant row (X4 within one logical
-        variant): max score, ties to the earliest sub-variant."""
-        best = F.max_by(
-            F.struct("score", "terms_matched"),
-            F.struct(F.col("score"), -F.col("variant_id")),
-        ).alias("b")
-        return scored.groupBy("doc_id").agg(best).select(
-            "doc_id",
-            F.col("b.score").alias("score"),
-            F.col("b.terms_matched").alias("terms_matched"),
-        )
-
     def _check_declared(self, fields, declared, kind: str) -> None:
         from .requests import check_declared
 
@@ -1715,16 +1701,7 @@ class SearchEngine:
         scored = self.score_variants(qterms)
         if filters:
             scored = scored.join(self.allowed_docs(filters), "doc_id")
-        if required:
-            needmap = F.create_map(
-                *[x for vid, n in required.items() for x in (F.lit(vid), F.lit(n))]
-            )
-            scored = scored.filter(F.col("terms_matched") == needmap[F.col("variant_id")])
-        return (
-            self._dedup_best_per_doc(scored)
-            if len(prefixes) > 1
-            else scored.drop("variant_id")
-        )
+        return self._rank_scored(scored, required=required, dedup=len(prefixes) > 1)
 
     def _hit_cols(self, attributes: list[str] | None) -> list[str]:
         """Output column set for a hit row (validated attributes appended)."""
@@ -2248,11 +2225,7 @@ class SearchEngine:
                 F.lit(PREFIX_COMPLETION_WEIGHT)
             ),
         )
-        topk = (
-            self._dedup_best_per_doc(scored)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        topk = self._rank_scored(scored, k=k, dedup=True)
         return self._finalize_hits(topk, attributes=attributes_to_retrieve)
 
     def scored_topk(
@@ -2299,13 +2272,7 @@ class SearchEngine:
             scored = self.score_variants_topk(
                 qterms, k=k, required_terms=required, extra_excluded=neg_ids
             )
-        if len(prefixes) > 1:
-            scored = self._dedup_best_per_doc(scored)
-        return (
-            scored.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .select("doc_id", "score", "terms_matched")
-        )
+        return self._rank_scored(scored, k=k, dedup=len(prefixes) > 1)
 
     def search_phrase(self, terms: list[str], k: int = 10) -> DataFrame:
         """Exact-adjacency phrase search (MeiliSearch quoted-phrase
