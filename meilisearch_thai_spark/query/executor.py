@@ -127,6 +127,7 @@ def rank_sql(
         need = _sql_map(sorted(required.items())) + "[variant_id]"
         rel = f"(SELECT * FROM {rel} WHERE {need} IS NULL OR terms_matched = {need})"
     keys = ["query_id", "doc_id"] if per_query else ["doc_id"]
+    cols = ["doc_id", "score", "terms_matched"]
     if variants is not None:
         by = ", ".join(keys)
         weight = _sql_map((i, f"{v.weight!r}D") for i, v in enumerate(variants))
@@ -150,14 +151,11 @@ def rank_sql(
             f" FROM {rel})) GROUP BY {by}))"
         )
     elif dedup:
-        cols = ["doc_id", "score", "terms_matched"]
         rel = (
             f"(SELECT doc_id, b.score AS score, b.terms_matched AS terms_matched FROM"
             f" (SELECT doc_id, max_by(struct(score, terms_matched),"
             f" struct(score, -variant_id)) AS b FROM {rel} GROUP BY doc_id))"
         )
-    else:
-        cols = ["doc_id", "score", "terms_matched"]
     if normalize:
         mx = f"max(score) OVER ({'PARTITION BY query_id' if per_query else ''})"
         norm = f"CASE WHEN {mx} > 0 THEN score / {mx} ELSE score END AS score"
@@ -3044,7 +3042,7 @@ class SearchEngine:
         # matches sub-words/prefixes natively (the golden corpus's
         # partial_compound queries rely on it); exact-term BM25 needs the
         # expansion made explicit.  Suppression set = THIS query's own terms
-        # (stop-words never enter the vocabulary, so they never expand)
+        # (in a batch, another query's terms must not mask an expansion)
         tokens = [t for v in pq.variants for t in v.terms]
         for terms, weight in self._expansion_variants(tokens, set(tokens)):
             add("fallback", terms, weight, "best")
