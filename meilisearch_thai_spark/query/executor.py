@@ -32,8 +32,8 @@ from ..index.builder import FIELD_SEP, IndexMeta, load_meta
 from ..index.codec import varbyte_decode
 from .pipeline import split_negative_keywords  # re-export (parse lives in Q1-Q8)
 
-# process-wide temp-view namer; next() on a count is atomic, so engines in
-# different threads never register the same name
+# process-wide temp-view namer; next() on a count is atomic, so engines and
+# requests in different threads never register the same name
 _VIEW_SEQ = itertools.count(1)
 
 
@@ -747,6 +747,7 @@ class SearchEngine:
         self._doomed_df: DataFrame | None = None  # lazy anti-join side (>cap)
         # (warm tier, its temp view, that view's plan cache) — _warm_binding
         self._warm_bound: tuple = (None, None, {})
+        self._view_id = next(_VIEW_SEQ)  # names this engine's temp views
         self._load_index()
 
     def _load_index(self) -> None:
@@ -944,16 +945,17 @@ class SearchEngine:
         :meth:`_warm_ranked`): building the plan through the Column API cost
         one py4j round trip per expression node — over a thousand per
         multi-variant request.  The view and the plan cache bound to it are
-        swapped in ONE assignment, so a concurrent reader never pairs a new
-        view with plans parsed against the old one, and a rebuilt tier
-        (refresh, deletes) drops every cached plan with its view."""
+        swapped in ONE assignment, after the view is replaced: a reader
+        that sees the new cache parses against the new tier, and a rebuilt
+        tier (refresh, deletes) starts an empty cache."""
         w = self.warm_postings()
         bound = self._warm_bound
         if bound[0] is not w:
-            if bound[1] is not None:
-                # the old view pins the replaced tier's plan in the catalog
-                self.spark.catalog.dropTempView(bound[1])
-            name = f"mst_warm_{next(_VIEW_SEQ)}"
+            # one view name per engine, replaced in place and never
+            # dropped: dropping a temp view uncaches every cached plan with
+            # the same result — after refresh_index over unchanged files,
+            # that is the freshly built tier itself
+            name = f"mst_warm_{self._view_id}"
             w.createOrReplaceTempView(name)
             bound = self._warm_bound = (w, name, {})
         return bound[1], bound[2]
@@ -1028,15 +1030,11 @@ class SearchEngine:
         """doc_stats as a temp view (same once-per-binding contract as
         :meth:`_warm_view`) — the join side of SQL-composed serving paths
         (query.federation's warm fast path)."""
-        ds = self.doc_stats
+        ds, name = self.doc_stats, f"mst_stats_{self._view_id}"
         if getattr(self, "_stats_view_df", None) is not ds:
-            if getattr(self, "_stats_view_name", None):
-                self.spark.catalog.dropTempView(self._stats_view_name)
-            name = f"mst_stats_{next(_VIEW_SEQ)}"
-            ds.createOrReplaceTempView(name)
+            ds.createOrReplaceTempView(name)  # replaced, never dropped (above)
             self._stats_view_df = ds
-            self._stats_view_name = name
-        return self._stats_view_name
+        return name
 
     def _warm_covers(self, qterms: list[QueryTerm]) -> bool:
         """True iff every query term is resident in the warm tier.

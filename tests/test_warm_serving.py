@@ -146,3 +146,20 @@ def test_plan_cache_follows_refresh_after_rebuild(spark, tmp_path):
     assert got == _canon(BM25Oracle(corpus).top_k(q, k=10))
     assert got != _canon((r["url"], r["score"]) for r in old)
     _drop_engine(eng)
+
+
+def test_warm_tier_stays_cached_across_refresh(spark, tmp_path):
+    """Rebinding the warm view after refresh_index over unchanged files
+    must not uncache the freshly built tier: dropping a temp view uncaches
+    every cached plan with the same result, which here is the new tier."""
+    out = str(tmp_path / "idx")
+    build_index(spark, generate_pages(spark, 200, seed=34), out)
+    eng = SearchEngine(spark, out)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for _ in range(2):
+        assert eng.search_page("อาหารไทย", k=5)
+        assert cache.lookupCachedData(eng._warm._jdf).isDefined()
+        eng.refresh_index()
+    assert eng.search_page("อาหารไทย", k=5)
+    assert cache.lookupCachedData(eng._warm._jdf).isDefined()
+    _drop_engine(eng)
