@@ -47,18 +47,14 @@ THAI_QUERIES = [
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from meilisearch_thai_spark.session import build_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("bench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("BENCH_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    # the session the library ships, so timings reflect its configuration
+    spark = build_spark(
+        app_name="bench",
+        cores=CPUS,
+        shuffle_partitions=CPUS,
+        extra_conf={"spark.driver.memory": os.environ.get("BENCH_DRIVER_MEM", "48g")},
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -2,15 +2,19 @@
 
 The reference fans out per-variant HTTP searches to MeiliSearch under an
 asyncio semaphore (src/search_proxy/services/search_executor.py:55-176); here
-ALL variants score in ONE Spark job:
+ALL variants score in ONE Spark job, on one of two routes chosen by the
+serving planner (:meth:`SearchEngine._ranked_topk`):
 
-    postings  ⋈ broadcast(query terms)     [term filter pushed to parquet scan]
-      → mapInPandas block decode + BM25    [numpy, Arrow-batched]
-      → groupBy(variant_id, doc_id) sum    [JVM hash agg]
-      → matching-strategy filter, boosts, dedup, top-k
+- warm: one cached SQL statement over the decoded in-memory tier —
+  ``term IN (…)`` scan [+ ``doc_id IN`` the filter's doc_stats ids, a
+  broadcast semi-join] → explode(term → variant ids) → BM25 SQL scalar →
+  per-(variant, doc) sum, exchange-free → :func:`rank_sql`;
+- compressed: term-pushdown scan of the posting blocks → block-max bucket
+  heaps in a pandas UDF (cogrouped with the allowed doc ids when a filter
+  or a high-df negative keyword restricts candidates) → :func:`rank_sql`.
 
-Term lookup is the broadcast hash join the reference outsources to
-MeiliSearch's internal index (SURVEY X1/X2/R11).
+Both rank with the same statement: matching-strategy filter, variant
+weights and boosts, per-doc dedup, threshold, top-k.
 """
 
 from __future__ import annotations
@@ -31,6 +35,7 @@ from pyspark.sql import types as T
 from ..index.builder import FIELD_SEP, IndexMeta, load_meta
 from ..index.codec import varbyte_decode
 from .pipeline import split_negative_keywords  # re-export (parse lives in Q1-Q8)
+from .requests import filters_to_sql, sql_str
 
 # process-wide temp-view namer; next() on a count is atomic, so engines and
 # requests in different threads never register the same name
@@ -86,11 +91,6 @@ def required_terms(variants: list[Variant]) -> dict[int, int]:
     }
 
 
-def _sql_str(s: str) -> str:
-    """A Spark SQL string literal (the form ``lit(s).expr().sql()`` prints)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _sql_map(pairs) -> str:
     return "map(" + ", ".join(f"{a}, {b}" for a, b in pairs) + ")"
 
@@ -131,7 +131,7 @@ def rank_sql(
     if variants is not None:
         by = ", ".join(keys)
         weight = _sql_map((i, f"{v.weight!r}D") for i, v in enumerate(variants))
-        vtype = _sql_map((i, _sql_str(v.type)) for i, v in enumerate(variants))
+        vtype = _sql_map((i, sql_str(v.type)) for i, v in enumerate(variants))
         qid = (
             f", {_sql_map((i, v.query) for i, v in enumerate(variants))}[variant_id] AS query_id"
             if per_query
@@ -962,7 +962,9 @@ class SearchEngine:
 
     _PLAN_CACHE_CAP = 512  # parsed warm plans per engine (tiny objects)
 
-    def _warm_scored_sql(self, view: str, qterms: list[QueryTerm], neg_ids=None) -> str:
+    def _warm_scored_sql(
+        self, view: str, qterms: list[QueryTerm], neg_ids=None, allowed: str | None = None
+    ) -> str:
         """(variant_id, doc_id, score, terms_matched) per (variant, doc) over
         the warm view: ``term IN (…)`` (an InSet — the columnar cache prunes
         term-sorted batches) → ``explode(map(term → variant ids)[term])`` →
@@ -970,14 +972,20 @@ class SearchEngine:
         hash-partitioned by doc_id).  A single-variant query takes a
         constant variant id instead of the map, so its generated code is
         identical across queries.  Negative-keyword ids drop at the scan:
-        the whole matching set is scored here, so that is exact."""
+        the whole matching set is scored here, so that is exact.  So do
+        the docs outside ``allowed`` (a query of allowed doc ids): Spark
+        plans ``doc_id IN (…)`` as a semi-join below the explode, a
+        broadcast of the ids at serving sizes, which keeps the stream
+        side's doc_id partitioning and the aggregates exchange-free."""
         by_term: dict[str, list[int]] = {}
         for q in qterms:
             by_term.setdefault(q.term, []).append(q.variant_id)
         terms = sorted(by_term)
-        where = f"term IN ({', '.join(map(_sql_str, terms))})" if terms else "FALSE"
+        where = f"term IN ({', '.join(map(sql_str, terms))})" if terms else "FALSE"
         if neg_ids is not None and len(neg_ids):
             where += f" AND doc_id NOT IN ({', '.join(str(int(i)) for i in neg_ids)})"
+        if allowed is not None:
+            where += f" AND doc_id IN ({allowed})"
         vids = sorted({q.variant_id for q in qterms})
         if len(vids) <= 1:
             return (
@@ -985,7 +993,7 @@ class SearchEngine:
                 f" sum({self._warm_s_sql}) AS score, count(1) AS terms_matched"
                 f" FROM {view} WHERE {where} GROUP BY doc_id)"
             )
-        vmap = _sql_map((_sql_str(t), f"array({', '.join(map(str, by_term[t]))})") for t in terms)
+        vmap = _sql_map((sql_str(t), f"array({', '.join(map(str, by_term[t]))})") for t in terms)
         return (
             f"(SELECT variant_id, doc_id, sum(s) AS score, count(1) AS terms_matched"
             f" FROM (SELECT explode({vmap}[term]) AS variant_id, doc_id,"
@@ -993,19 +1001,27 @@ class SearchEngine:
             f" GROUP BY variant_id, doc_id)"
         )
 
-    def _warm_ranked(self, qterms: list[QueryTerm], variants=None, neg_ids=None, **rank) -> DataFrame:
+    def _warm_ranked(
+        self, qterms: list[QueryTerm], variants=None, neg_ids=None,
+        filter_sql: str | None = None, **rank,
+    ) -> DataFrame:
         """The warm route as ONE cached ``spark.sql`` statement:
         :meth:`_warm_scored_sql` ranked by :func:`rank_sql` (``rank`` are its
-        keywords; raw BM25 dedups sub-variants by itself).
+        keywords).  ``filter_sql`` (:func:`filters_to_sql`) restricts the
+        scan to the doc_stats rows it selects.
 
-        Parsed Datasets are kept per engine, keyed by the SQL text: Spark
-        caches the analyzed and compiled QueryExecution on the Dataset, so a
-        repeated query pays only execution.  The cache belongs to one warm
-        view (:meth:`_warm_binding`), so it can never serve a stale tier."""
+        Parsed Datasets are kept per engine, keyed by the SQL text — filter
+        included: Spark caches the analyzed and compiled QueryExecution on
+        the Dataset, so a repeated query pays only execution.  The cache
+        belongs to one warm view (:meth:`_warm_binding`), so it can never
+        serve a stale tier; a refresh that rereads doc_stats also rebuilds
+        the tier, so it never serves stale metadata either."""
         view, plans = self._warm_binding()
-        if variants is None:
-            rank.setdefault("dedup", len({q.variant_id for q in qterms}) > 1)
-        text = rank_sql(self._warm_scored_sql(view, qterms, neg_ids), variants, **rank)
+        allowed = (
+            None if filter_sql is None
+            else f"SELECT doc_id FROM {self._stats_view()} WHERE {filter_sql}"
+        )
+        text = rank_sql(self._warm_scored_sql(view, qterms, neg_ids, allowed), variants, **rank)
         df = plans.get(text)
         if df is None:
             df = self.spark.sql(text)
@@ -1029,7 +1045,7 @@ class SearchEngine:
     def _stats_view(self) -> str:
         """doc_stats as a temp view (same once-per-binding contract as
         :meth:`_warm_view`) — the join side of SQL-composed serving paths
-        (query.federation's warm fast path)."""
+        (the warm route's filter, query.federation's warm fast path)."""
         ds, name = self.doc_stats, f"mst_stats_{self._view_id}"
         if getattr(self, "_stats_view_df", None) is not ds:
             ds.createOrReplaceTempView(name)  # replaced, never dropped (above)
@@ -1592,23 +1608,28 @@ class SearchEngine:
     def allowed_docs(self, filters: dict) -> DataFrame:
         """P4: filter dict → allowed doc_id set from the doc metadata table
         (reference filter semantics: restrict candidates, corpus-wide BM25
-        stats unchanged — search_executor.py:766-829).  When the index
-        declares ``filterableAttributes``, undeclared fields are a request
-        error (MeiliSearch 400)."""
-        from .requests import filters_to_column
+        stats unchanged — search_executor.py:766-829)."""
+        return self.doc_stats.filter(self._filter_sql(filters) or "TRUE").select("doc_id")
 
+    def _filter_sql(self, filters: dict | None) -> str | None:
+        """A request's filter as validated Spark SQL (None = unfiltered).
+        When the index declares ``filterableAttributes``, undeclared fields
+        are a request error (MeiliSearch 400); like a ``_geo`` filter on an
+        index without lat/lng, it raises here, before any Spark job."""
+        if not filters:
+            return None
         self._check_declared(
-            (filters or {}).keys(),
+            filters.keys(),
             getattr(self.meta, "filterable_attributes", None),
             "filterable fields",
         )
         self._check_geo_filter(filters)
-        return self.doc_stats.filter(filters_to_column(filters)).select("doc_id")
+        return filters_to_sql(filters)
 
     def _check_geo_filter(self, filters: dict | None) -> None:
         """A ``_geo`` filter needs lat/lng doc metadata — raise the clean
         request error (not a plan-time AnalysisException) on EVERY path that
-        hands filters to ``filters_to_column``: search, facets, deletes."""
+        compiles filters: search, facets, deletes."""
         if "_geo" in (filters or {}):
             missing = {"lat", "lng"} - set(self.doc_stats.columns)
             if missing:
@@ -1625,7 +1646,9 @@ class SearchEngine:
         phrase_terms: dict[int, list[str]] | None = None,
         extra_excluded=None,
     ) -> DataFrame:
-        """Exact per-variant top-k over an allowed-doc subset (P4 + R11).
+        """Exact per-variant top-k over an allowed-doc subset (P4 + R11) —
+        the compressed route for restricted requests the warm tier cannot
+        serve (:meth:`_ranked_topk`).
 
         Cogroups candidate blocks with the allowed doc ids per bucket:
         buckets with no allowed docs are pruned before any decode, and the
@@ -1839,14 +1862,18 @@ class SearchEngine:
     ) -> list[dict]:
         """The SERVING call: top-k hits as plain rows (eager, k-bounded).
 
-        On a warm engine this is two small pure-JVM jobs — scored top-k
-        collect (TakeOrderedAndProject) + metadata point lookup — with no
-        Python stage and no broadcast exchange; the lazy :meth:`search`
-        DataFrame API remains for plan composition.  Filter/sort/cold paths
-        delegate to it."""
+        The scored top-k comes from the serving planner
+        (:meth:`_ranked_topk`: on a warm engine one cached SQL statement,
+        filters and negative keywords included) and the winners' metadata
+        from a direct point read (:meth:`_resolve_meta`) — no metadata job.
+        Sorted requests and negative-only queries take the lazy
+        :meth:`search` plan, which the DataFrame API keeps for composition."""
         from ..tokenizer import extract_index_terms, tokenize_for_index
+        from .pipeline import split_query_negatives
 
-        if filters or sort or not self._warm_enabled:
+        positive, exclude_terms = split_query_negatives(query)
+        terms = extract_index_terms(tokenize_for_index(positive))
+        if sort or (exclude_terms and not terms):
             return [
                 r.asDict()
                 for r in self.search(
@@ -1854,21 +1881,18 @@ class SearchEngine:
                     attributes_to_retrieve=attributes_to_retrieve,
                 ).collect()
             ]
-        terms = extract_index_terms(tokenize_for_index(query))
+        filter_sql = self._filter_sql(filters)
+        self._check_attrs(attributes_to_retrieve)
         if not terms:
             return []
+        neg_ids = blocked = None
+        if exclude_terms:
+            neg_ids, blocked = self._negative_exclusion(exclude_terms)
         _uniq, _prefixes, qterms, required = self._expand_matching(terms, matching)
-        if not self._warm_covers(qterms):
-            # budget-truncated tier + a cold term: identical results via the
-            # compressed block-max path (the lazy API routes it)
-            return [
-                r.asDict()
-                for r in self.search(
-                    query, k=k, matching=matching,
-                    attributes_to_retrieve=attributes_to_retrieve,
-                ).collect()
-            ]
-        rows = self._warm_ranked(qterms, required=required, k=k).collect()
+        rows = self._ranked_topk(
+            qterms, k=k, required=required, neg_ids=neg_ids, blocked=blocked,
+            filter_sql=filter_sql,
+        ).collect()
         return self._resolve_meta(rows, attributes_to_retrieve)
 
     def _finalize_hits(
@@ -1927,6 +1951,7 @@ class SearchEngine:
                     attributes_to_retrieve=attributes_to_retrieve,
                     distinct=distinct, exclude_terms=exclude_terms,
                 )
+        filter_sql = self._filter_sql(filters)
         neg_ids = blocked = None
         if exclude_terms:
             neg_ids, blocked = self._negative_exclusion(exclude_terms)
@@ -2019,8 +2044,9 @@ class SearchEngine:
                 joined = attach_geo_distance(joined, gp)
                 out_cols = [*out_cols, "_geoDistance"]
             return joined.orderBy(*order).limit(k).select(*out_cols)
-        topk = self._scored_topk_expanded(
-            qterms, required, prefixes, k, filters, neg_ids=neg_ids, blocked=blocked
+        topk = self._ranked_topk(
+            qterms, k=k, required=required, neg_ids=neg_ids, blocked=blocked,
+            filter_sql=filter_sql,
         )
         return self._finalize_hits(topk, attributes=attributes_to_retrieve)
 
@@ -2158,7 +2184,8 @@ class SearchEngine:
         verbatim).  Shape: variant 0 = the literal terms; variant i = the
         same terms with the last word replaced by completion i (bounded
         head-vocab scan of :meth:`expand_terms`, lexicographic order).  All
-        variants score in ONE block-max bucket top-k job; completions are
+        variants score in ONE job on the serving planner's route
+        (:meth:`_ranked_topk`, filters included); completions are
         discounted ×``PREFIX_COMPLETION_WEIGHT`` so the literal word beats
         its completions at equal raw score (exactness above prefix), and a
         doc keeps its best variant (X4 dedup, ties to the literal variant).
@@ -2195,33 +2222,19 @@ class SearchEngine:
                 attributes_to_retrieve=attributes_to_retrieve,
                 exclude_terms=exclude_terms or None,
             )
+        filter_sql = self._filter_sql(filters)
         neg_ids = blocked = None
         if exclude_terms:
             neg_ids, blocked = self._negative_exclusion(exclude_terms)
         qterms = [QueryTerm(vid, t) for vid, ts in enumerate(variants) for t in ts]
-        if blocked is not None:
-            allowed = (
-                self.allowed_docs(filters) if filters
-                else self._exclude_deleted(self.doc_stats.select("doc_id"))
-            )
-            scored = self.score_variants_topk_filtered(
-                qterms, k=k, allowed=allowed.join(blocked, "doc_id", "left_anti")
-            )
-        elif filters:
-            scored = self.score_variants_topk_filtered(
-                qterms, k=k, allowed=self.allowed_docs(filters),
-                extra_excluded=neg_ids,
-            )
-        else:
-            scored = self.score_variants_topk(qterms, k=k, extra_excluded=neg_ids)
-        scored = scored.withColumn(
-            "score",
-            F.col("score")
-            * F.when(F.col("variant_id") == 0, F.lit(1.0)).otherwise(
-                F.lit(PREFIX_COMPLETION_WEIGHT)
-            ),
+        # a variant type without a boost (R2's table falls back to 1.0), so
+        # the weight alone discounts completions; ties keep the literal
+        # variant (larger weight, then the earlier variant)
+        weights = [1.0] + [PREFIX_COMPLETION_WEIGHT] * (len(variants) - 1)
+        topk = self._ranked_topk(
+            qterms, [Variant("completion", w, len(ts), "best") for w, ts in zip(weights, variants)],
+            k=k, neg_ids=neg_ids, blocked=blocked, filter_sql=filter_sql,
         )
-        topk = self._rank_scored(scored, k=k, dedup=True)
         return self._finalize_hits(topk, attributes=attributes_to_retrieve)
 
     def scored_topk(
@@ -2238,37 +2251,46 @@ class SearchEngine:
         federation measured FASTER with per-branch `search_terms` joins
         (see query/federation.py), so this is a building block, not the
         federation's current shape."""
-        uniq, prefixes, qterms, required = self._expand_matching(terms, matching)
-        return self._scored_topk_expanded(qterms, required, prefixes, k, filters)
+        filter_sql = self._filter_sql(filters)
+        _uniq, _prefixes, qterms, required = self._expand_matching(terms, matching)
+        return self._ranked_topk(qterms, k=k, required=required, filter_sql=filter_sql)
 
-    def _scored_topk_expanded(
-        self, qterms, required, prefixes, k: int, filters: dict | None,
-        neg_ids=None, blocked: DataFrame | None = None,
+    def _ranked_topk(
+        self, qterms: list[QueryTerm], variants: list[Variant] | None = None, *,
+        k: int, required: dict[int, int] | None = None,
+        phrase_terms: dict[int, list[str]] | None = None, neg_ids=None,
+        blocked: DataFrame | None = None, filter_sql: str | None = None, **rank,
     ) -> DataFrame:
-        if blocked is not None:
-            # high-df negative keywords: allowed = docs ∖ blocked through the
-            # filtered cogroup — fully distributed, never collected
-            allowed = (
-                self.allowed_docs(filters) if filters
-                else self._exclude_deleted(self.doc_stats.select("doc_id"))
+        """The serving planner: the per-doc top-``k`` of ``qterms`` ranked by
+        :func:`rank_sql` (``rank`` are its other keywords; raw BM25 over
+        several sub-variants keeps each doc's best), on one of two routes.
+
+        Warm — :meth:`_warm_ranked`, one cached SQL statement, a filter
+        (``filter_sql``) riding as a doc_stats semi-join — whenever the
+        tier can answer: it holds every query term (:meth:`_warm_covers`:
+        warm tier enabled, no cold term on a budget-truncated tier, no
+        attributesToSearchOn restriction), no variant needs positions
+        (``phrase_terms``), and no high-df negative keyword left its
+        blocked ids distributed (``blocked``).  Otherwise the compressed
+        block-max heaps: cogrouped with the allowed ids when a filter or
+        ``blocked`` restricts candidates, the plain bucket heap when not.
+        Both routes rank with the same statement."""
+        if variants is None:
+            rank.setdefault("dedup", len({q.variant_id for q in qterms}) > 1)
+        if blocked is None and not phrase_terms and self._warm_covers(qterms):
+            return self._warm_ranked(
+                qterms, variants, neg_ids, filter_sql, required=required, k=k, **rank
             )
-            scored = self.score_variants_topk_filtered(
-                qterms, k=k, allowed=allowed.join(blocked, "doc_id", "left_anti"),
-                required_terms=required,
-            )
-        elif filters:
-            scored = self.score_variants_topk_filtered(
-                qterms, k=k, allowed=self.allowed_docs(filters),
-                required_terms=required, extra_excluded=neg_ids,
-            )
-        elif self._warm_covers(qterms):
-            # point-query serving: one cached SQL statement over the warm tier
-            return self._warm_ranked(qterms, required=required, neg_ids=neg_ids, k=k)
+        heap = dict(required_terms=required, phrase_terms=phrase_terms, extra_excluded=neg_ids)
+        if filter_sql is None and blocked is None:
+            scored = self.score_variants_topk(qterms, k=k, **heap)
         else:
-            scored = self.score_variants_topk(
-                qterms, k=k, required_terms=required, extra_excluded=neg_ids
-            )
-        return self._rank_scored(scored, k=k, dedup=len(prefixes) > 1)
+            allowed = self.doc_stats.filter(filter_sql or "TRUE").select("doc_id")
+            if blocked is not None:
+                # high-df negatives: allowed = docs ∖ blocked, never collected
+                allowed = allowed.join(blocked, "doc_id", "left_anti")
+            scored = self.score_variants_topk_filtered(qterms, k=k, allowed=allowed, **heap)
+        return self._rank_scored(scored, variants, k=k, **rank)
 
     def search_phrase(self, terms: list[str], k: int = 10) -> DataFrame:
         """Exact-adjacency phrase search (MeiliSearch quoted-phrase
@@ -2514,7 +2536,8 @@ class SearchEngine:
         normalization, P7 threshold, R10 top-k.
 
         ``filters`` (P4, search_executor.py:721-764) restricts candidates by
-        doc metadata through the filtered block-max path; ``sort`` (P6,
+        doc metadata, on whichever route the serving planner picks
+        (:meth:`_ranked_topk`); ``sort`` (P6,
         search_executor.py:766-843) orders the final page by doc fields with
         relevance as tie-break (score top-k pruning is disabled then — sort
         must see every matching doc).  With sort, phrase variants degrade to
@@ -2597,24 +2620,17 @@ class SearchEngine:
         attributes_to_retrieve: list[str] | None = None,
         pq=None,
     ) -> list[dict]:
-        """Eager serving twin of :meth:`multi_variant_search`: two k-bounded
-        pure-JVM jobs on a warm engine (scored top-k collect + metadata point
-        lookup) — the path a request/response service should call."""
+        """Eager serving twin of :meth:`multi_variant_search` — the path a
+        request/response service should call: the planner's scored top-k
+        collect (on a warm engine one cached SQL statement, filtered or
+        not) + a direct metadata point read (:meth:`_resolve_meta`).
+        Sorted requests and negative-only queries (placeholder semantics)
+        take the lazy plan."""
         if pq is None:
             from .pipeline import process_query
 
             pq = process_query(query, synonyms=self._synonyms or None)
-        if not pq.variants and getattr(pq, "exclude_terms", None):
-            # negative-only query: placeholder semantics live on the lazy path
-            return [
-                r.asDict()
-                for r in self.multi_variant_search(
-                    query, k=k, min_score_threshold=min_score_threshold,
-                    normalize=normalize, filters=filters, sort=sort,
-                    attributes_to_retrieve=attributes_to_retrieve, pq=pq,
-                ).collect()
-            ]
-        if filters or sort or not self._warm_enabled:
+        if sort or (not pq.variants and getattr(pq, "exclude_terms", None)):
             return [
                 r.asDict()
                 for r in self.multi_variant_search(
@@ -2627,7 +2643,7 @@ class SearchEngine:
         # raises regardless of whether the query matched (parity with the
         # lazy path and multi_variant_search)
         self._check_attrs(attributes_to_retrieve)
-        topk, _ = self._multi_variant_dedup(query, k, min_score_threshold, normalize, None, None, pq=pq)
+        topk, _ = self._multi_variant_dedup(query, k, min_score_threshold, normalize, filters, None, pq=pq)
         if topk is None:
             return []
         return self._resolve_meta(topk.collect(), attributes_to_retrieve)
@@ -2699,9 +2715,7 @@ class SearchEngine:
         ``filters``) — the shared match set behind facetDistribution and
         facetStats.  The postings read prunes to the query terms' blocks
         (term INSET pushdown); only those blocks decode."""
-        from .requests import filters_to_column
-
-        self._check_geo_filter(filters)
+        filter_sql = self._filter_sql(filters)
         if self._fp:  # fielded index: a word appears once per indexed field
             inset = [f"{i}{FIELD_SEP}{t}" for i in range(len(self.meta.fields)) for t in qterms]
         else:
@@ -2714,14 +2728,7 @@ class SearchEngine:
             .select("doc_id")
             .distinct()
         )
-        ds = self.doc_stats
-        if filters:
-            self._check_declared(
-                filters.keys(),
-                getattr(self.meta, "filterable_attributes", None),
-                "filterable fields",
-            )
-            ds = ds.filter(filters_to_column(filters))
+        ds = self.doc_stats if filter_sql is None else self.doc_stats.filter(filter_sql)
         return ds.join(matched, "doc_id")
 
     def facet_stats(
@@ -2821,17 +2828,10 @@ class SearchEngine:
                 return self.spark.createDataFrame([], "value string, count long")
             ds = self._facet_match_set(qterms, filters)
         else:
-            from .requests import filters_to_column
-
+            filter_sql = self._filter_sql(filters)
             ds = self._exclude_deleted(self.doc_stats)
-            if filters:
-                self._check_declared(
-                    filters.keys(),
-                    getattr(self.meta, "filterable_attributes", None),
-                    "filterable fields",
-                )
-                self._check_geo_filter(filters)
-                ds = ds.filter(filters_to_column(filters))
+            if filter_sql is not None:
+                ds = ds.filter(filter_sql)
         value = F.col(facet_name).cast("string")
         out = ds.select(value.alias("value")).filter(F.col("value").isNotNull())
         if facet_query:
@@ -2950,14 +2950,10 @@ class SearchEngine:
         if not qterms:
             return [[] for _ in queries]
         required = required_terms(variants)
-        rank = dict(normalize=normalize, threshold=min_score_threshold, k=k, per_query=True)
-        if self._warm_covers(qterms):
-            ranked = self._warm_ranked(qterms, variants, required=required, **rank)
-        else:
-            ranked = self._rank_scored(
-                self.score_variants_topk(qterms, k=k, required_terms=required), variants, **rank
-            )
-        rows = ranked.collect()
+        rows = self._ranked_topk(
+            qterms, variants, k=k, required=required, normalize=normalize,
+            threshold=min_score_threshold, per_query=True,
+        ).collect()
         resolved = self._resolve_meta(rows)
         out: list[list[dict]] = [[] for _ in queries]
         for d in resolved:
@@ -3071,6 +3067,16 @@ class SearchEngine:
             pq = process_query(query, synonyms=self._synonyms or None)
         if not pq.variants:
             return None, None
+        # request errors (undeclared filter/sort fields) before any Spark job
+        filter_sql = self._filter_sql(filters)
+        sort_cols = None
+        if sort:
+            self._check_declared(
+                [x.partition(":")[0] for x in sort],
+                getattr(self.meta, "sortable_attributes", None),
+                "sortable fields",
+            )
+            sort_cols = parse_sort(sort, self.doc_stats.columns)
         qterms: list[QueryTerm] = []
         variants: list[Variant] = []
         phrase_specs: dict[int, list[str]] = {}
@@ -3083,7 +3089,7 @@ class SearchEngine:
         # within-variant rank by raw score == rank by weighted score, and any
         # doc in the final top-k is in its winning variant's top-k
         required = required_terms(variants)
-        rank = dict(normalize=normalize, threshold=min_score_threshold, k=None if sort else k)
+        rank = dict(normalize=normalize, threshold=min_score_threshold)
         # negative keywords parsed by Q1-Q8 ride the same routing the
         # single-variant path uses (literal excluded-array vs distributed
         # blocked-DataFrame, by df estimate)
@@ -3091,41 +3097,12 @@ class SearchEngine:
         if getattr(pq, "exclude_terms", None):
             neg_ids, blocked = self._negative_exclusion(pq.exclude_terms)
         if sort:
-            self._check_declared(
-                [x.partition(":")[0] for x in sort],
-                getattr(self.meta, "sortable_attributes", None),
-                "sortable fields",
-            )
-            sort_cols = parse_sort(sort, self.doc_stats.columns)
             scored = self.score_variants(qterms)
             if filters:
                 scored = scored.join(self.allowed_docs(filters), "doc_id")
             scored = self._apply_negative_exclusion(scored, neg_ids, blocked)
             return self._rank_scored(scored, variants, required=required, **rank), sort_cols
-        if blocked is not None:
-            # high-df negatives: allowed = docs ∖ blocked, fully distributed
-            allowed = (
-                self.allowed_docs(filters) if filters
-                else self._exclude_deleted(self.doc_stats.select("doc_id"))
-            )
-            scored = self.score_variants_topk_filtered(
-                qterms, k=k, allowed=allowed.join(blocked, "doc_id", "left_anti"),
-                required_terms=required, phrase_terms=phrase_specs or None,
-            )
-        elif filters:
-            scored = self.score_variants_topk_filtered(
-                qterms, k=k, allowed=self.allowed_docs(filters),
-                required_terms=required, phrase_terms=phrase_specs or None,
-                extra_excluded=neg_ids,
-            )
-        elif not phrase_specs and self._warm_covers(qterms):
-            # point-query serving: one cached SQL statement over the warm
-            # tier (phrase variants need positional decode — python path
-            # below)
-            return self._warm_ranked(qterms, variants, neg_ids, required=required, **rank), None
-        else:
-            scored = self.score_variants_topk(
-                qterms, k=k, required_terms=required,
-                phrase_terms=phrase_specs or None, extra_excluded=neg_ids,
-            )
-        return self._rank_scored(scored, variants, **rank), None
+        return self._ranked_topk(
+            qterms, variants, k=k, required=required, phrase_terms=phrase_specs or None,
+            neg_ids=neg_ids, blocked=blocked, filter_sql=filter_sql, **rank,
+        ), None

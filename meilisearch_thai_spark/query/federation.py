@@ -54,6 +54,7 @@ def _warm_sql_federated(
     falls through to the classic per-branch plan, results identical.
     """
     from .executor import QueryTerm
+    from .requests import sql_str
 
     per_engine: dict[str, list[str]] = {}
     for uid, eng in engines.items():
@@ -73,10 +74,7 @@ def _warm_sql_federated(
         view = eng._warm_view()
         stats = eng._stats_view()
         if dropped:
-            in_list = ", ".join(
-                "'" + t.replace("'", "''") + "'" for t in sorted(set(dropped))
-            )
-            where = f"term IN ({in_list})"
+            where = f"term IN ({', '.join(map(sql_str, sorted(set(dropped))))})"
         else:
             where = "FALSE"  # stop-worded-away query: empty branch, shape kept
         branches.append(

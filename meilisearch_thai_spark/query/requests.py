@@ -68,8 +68,10 @@ def validate_request(req: SearchRequest) -> SearchRequest:
 
 # P4 — filter translation: the reference turns {"field": {"$gte": 100}} into
 # MeiliSearch filter strings (search_executor.py:766-829); here the target is
-# a typed Spark Column predicate.
+# Spark SQL text — one definition, used as a Column (``filters_to_column``)
+# and spliced into the warm serving statement as-is.
 _OPS = {"$eq", "$ne", "$gt", "$gte", "$lt", "$lte", "$in", "$exists"}
+_CMP = {"$eq": "=", "$ne": "!=", "$gt": ">", "$gte": ">=", "$lt": "<", "$lte": "<="}
 _GEO_OPS = {"$radius", "$boundingBox"}
 
 # Geo search (MeiliSearch `_geoRadius` / `_geoBoundingBox` filters and
@@ -84,40 +86,85 @@ EARTH_RADIUS_M = 6371000.0
 DEG_TO_RAD = 0.017453292519943295  # math.pi / 180, as a pinned double
 
 
+def sql_str(s: str) -> str:
+    """A Spark SQL string literal (the form ``lit(s).expr().sql()`` prints)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_double(x: float) -> str:
+    """A Spark SQL DOUBLE literal: ``repr`` plus the ``D`` suffix, so it
+    folds to the same IEEE value ``lit(x)`` holds (a bare ``1.5`` parses as
+    DECIMAL)."""
+    import math
+
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    return f"CAST('{'NaN' if x != x else '-Infinity' if x < 0 else 'Infinity'}' AS DOUBLE)"
+
+
+def _sql_ident(name: str) -> str:
+    """A column reference with ``F.col``'s reading of ``name`` (dots
+    separate nested fields); every part is backquoted."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in name.split("."))
+
+
+def _sql_value(v) -> str:
+    """A filter value as the SQL literal ``lit(v)`` builds."""
+    import numbers
+
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, numbers.Integral):
+        return str(int(v))
+    if isinstance(v, numbers.Real):
+        return sql_double(v)
+    if isinstance(v, str):
+        return sql_str(v)
+    raise ValueError(f"unsupported filter value {v!r} (strings, numbers, booleans, null)")
+
+
+def _haversine_sql(lat: float, lng: float, lat_sql: str, lng_sql: str, num) -> str:
+    """Haversine distance (meters) from a fixed point to (``lat_sql``,
+    ``lng_sql``); ``num`` prints each double literal in the target dialect."""
+    d2r = num(DEG_TO_RAD)
+    p1 = num(float(lat) * DEG_TO_RAD)
+    l1 = num(float(lng) * DEG_TO_RAD)
+    sp = f"sin((({lat_sql}) * {d2r} - {p1}) / {num(2.0)})"
+    sl = f"sin((({lng_sql}) * {d2r} - {l1}) / {num(2.0)})"
+    h = f"{sp} * {sp} + (cos({p1}) * cos(({lat_sql}) * {d2r})) * ({sl} * {sl})"
+    return f"{num(2.0 * EARTH_RADIUS_M)} * asin(least({num(1.0)}, sqrt({h})))"
+
+
 def geo_distance_m(lat: float, lng: float, lat_col: str = "lat", lng_col: str = "lng"):
     """Haversine distance (meters) from a fixed point to each doc's
     (``lat_col``, ``lng_col``) as a pure Column — JVM codegen, no Python.
 
-    The expression order mirrors :func:`geo_distance_sql` term for term so
-    the DuckDB oracle agrees bit-for-bit up to libm's sin/asin ulps (outputs
-    are floored to whole meters wherever cross-engine hashes compare)."""
+    The Spark SQL twin of :func:`geo_distance_sql`, term for term, so the
+    DuckDB oracle agrees bit-for-bit up to libm's sin/asin ulps (outputs are
+    floored to whole meters wherever cross-engine hashes compare)."""
     from pyspark.sql import functions as F
 
-    p1 = F.lit(float(lat) * DEG_TO_RAD)
-    l1 = F.lit(float(lng) * DEG_TO_RAD)
-    p2 = F.col(lat_col) * F.lit(DEG_TO_RAD)
-    l2 = F.col(lng_col) * F.lit(DEG_TO_RAD)
-    sp = F.sin((p2 - p1) / F.lit(2.0))
-    sl = F.sin((l2 - l1) / F.lit(2.0))
-    h = sp * sp + (F.cos(p1) * F.cos(p2)) * (sl * sl)
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.least(F.lit(1.0), F.sqrt(h)))
+    return F.expr(_haversine_sql(lat, lng, _sql_ident(lat_col), _sql_ident(lng_col), sql_double))
 
 
 def geo_distance_sql(lat: float, lng: float, lat_sql: str = "lat", lng_sql: str = "lng") -> str:
     """DuckDB twin of :func:`geo_distance_m` — same literals, same order.
     ``lat_sql``/``lng_sql`` may be arbitrary SQL expressions (e.g. the
     deterministic coordinate derivation the driver entries use)."""
-    p1 = repr(float(lat) * DEG_TO_RAD)
-    l1 = repr(float(lng) * DEG_TO_RAD)
-    sp = f"sin((({lat_sql}) * {DEG_TO_RAD} - {p1}) / 2.0)"
-    sl = f"sin((({lng_sql}) * {DEG_TO_RAD} - {l1}) / 2.0)"
-    h = f"{sp} * {sp} + (cos({p1}) * cos(({lat_sql}) * {DEG_TO_RAD})) * ({sl} * {sl})"
-    return f"{2.0 * EARTH_RADIUS_M!r} * asin(least(1.0, sqrt({h})))"
+    return _haversine_sql(lat, lng, lat_sql, lng_sql, repr)
 
 
-def _radius_prefilter(lat: float, lng: float, meters: float):
+def _between(col: str, lo: float, hi: float) -> str:
+    """``Column.between``'s expansion, as SQL."""
+    return f"{col} >= {sql_double(lo)} AND {col} <= {sql_double(hi)}"
+
+
+def _radius_prefilter(lat: float, lng: float, meters: float) -> str:
     """Conservative bounding box around a `_geoRadius` circle, as plain
-    range Columns on lat/lng (driver-side spherical math; Matuschek's
+    range predicates on lat/lng (driver-side spherical math; Matuschek's
     bounding-coordinates construction).  Guarantees box ⊇ circle:
     Δlat = the angular radius; Δlng = asin(sin t / cos φ) taken at the
     latitude of the RANGE with the smallest cosine (≥ the exact center
@@ -125,14 +172,12 @@ def _radius_prefilter(lat: float, lng: float, meters: float):
     asin argument reaches 1, drops the longitude constraint entirely."""
     import math
 
-    from pyspark.sql import functions as F
-
     t = meters / EARTH_RADIUS_M  # angular radius, radians
     if t >= math.pi:
-        return F.lit(True)  # the circle covers the sphere
+        return "TRUE"  # the circle covers the sphere
     dlat = math.degrees(t) + 1e-9
     lat_lo, lat_hi = lat - dlat, lat + dlat
-    p = F.col("lat").between(F.lit(max(-90.0, lat_lo)), F.lit(min(90.0, lat_hi)))
+    p = _between("`lat`", max(-90.0, lat_lo), min(90.0, lat_hi))
     if lat_lo <= -90.0 or lat_hi >= 90.0 or t >= math.pi / 2:
         return p  # a pole may be inside: every longitude is reachable
     cos_min = min(math.cos(math.radians(lat_lo)), math.cos(math.radians(lat_hi)))
@@ -144,23 +189,21 @@ def _radius_prefilter(lat: float, lng: float, meters: float):
         return p
     left, right = lng - dlng, lng + dlng
     if left < -180.0:
-        return p & ((F.col("lng") >= F.lit(left + 360.0)) | (F.col("lng") <= F.lit(right)))
+        return f"{p} AND (`lng` >= {sql_double(left + 360.0)} OR `lng` <= {sql_double(right)})"
     if right > 180.0:
-        return p & ((F.col("lng") >= F.lit(left)) | (F.col("lng") <= F.lit(right - 360.0)))
-    return p & F.col("lng").between(F.lit(left), F.lit(right))
+        return f"{p} AND (`lng` >= {sql_double(left)} OR `lng` <= {sql_double(right - 360.0)})"
+    return f"{p} AND {_between('`lng`', left, right)}"
 
 
-def _geo_filter_column(cond: dict):
-    """``_geo`` filter conditions → Column predicate over lat/lng metadata.
+def _geo_filter_sql(cond: dict) -> list[str]:
+    """``_geo`` filter conditions → predicates over lat/lng metadata.
 
     ``{"$radius": [lat, lng, meters]}`` — MeiliSearch `_geoRadius`:
     haversine distance ≤ meters.  ``{"$boundingBox": [[lat, lng], [lat,
     lng]]}`` — MeiliSearch `_geoBoundingBox(topRight, bottomLeft)`; a box
     whose left longitude exceeds its right one crosses the antimeridian and
     becomes the OR of the two wrapped ranges, like MeiliSearch."""
-    from pyspark.sql import functions as F
-
-    pred = None
+    preds = []
     for op, val in cond.items():
         if op not in _GEO_OPS:
             raise ValueError(
@@ -182,23 +225,24 @@ def _geo_filter_column(cond: dict):
             # 100 TB; plan-guarded in tests/test_geo.py).  The box is a
             # strict superset of the circle, so AND-ing it never changes the
             # result set.
-            p = _radius_prefilter(float(lat), float(lng), float(meters))
-            p = p & (geo_distance_m(lat, lng) <= F.lit(float(meters)))
+            box = _radius_prefilter(float(lat), float(lng), float(meters))
+            dist = _haversine_sql(lat, lng, "`lat`", "`lng`", sql_double)
+            preds.append(f"{box} AND {dist} <= {sql_double(meters)}")
         else:
             (top, right), (bottom, left) = val
             if not (-90.0 <= bottom <= top <= 90.0):
                 raise ValueError(f"boundingBox latitudes must satisfy -90 <= bottom <= top <= 90, got {val}")
             if not (-180.0 <= left <= 180.0 and -180.0 <= right <= 180.0):
                 raise ValueError(f"boundingBox longitudes must be in [-180, 180], got {val}")
-            p = F.col("lat").between(F.lit(float(bottom)), F.lit(float(top)))
+            p = _between("`lat`", bottom, top)
             if left <= right:
-                p = p & F.col("lng").between(F.lit(float(left)), F.lit(float(right)))
+                p += f" AND {_between('`lng`', left, right)}"
             else:  # antimeridian crossing
-                p = p & ((F.col("lng") >= F.lit(float(left))) | (F.col("lng") <= F.lit(float(right))))
-        pred = p if pred is None else (pred & p)
-    if pred is None:
+                p += f" AND (`lng` >= {sql_double(left)} OR `lng` <= {sql_double(right)})"
+            preds.append(p)
+    if not preds:
         raise ValueError("_geo filter requires $radius or $boundingBox")
-    return pred
+    return preds
 
 
 def normalize_declared_name(field: str) -> str:
@@ -223,45 +267,36 @@ def check_declared(fields, declared, kind: str) -> None:
         )
 
 
-def filters_to_column(filters: dict):
-    """AND-joined Column predicate from the reference's filter dict syntax."""
-    from pyspark.sql import functions as F
-
-    pred = None
-
-    def _and(p):
-        nonlocal pred
-        pred = p if pred is None else (pred & p)
-
+def filters_to_sql(filters: dict | None) -> str:
+    """AND-joined Spark SQL predicate from the reference's filter dict
+    syntax (``TRUE`` when empty).  Unsupported operators and values raise
+    ``ValueError``; strings are escaped and field names backquoted, so no
+    request text reaches the parser unquoted."""
+    preds: list[str] = []
     for fld, cond in (filters or {}).items():
         if fld == "_geo":
             if not isinstance(cond, dict):
                 raise ValueError("_geo filter must be a {'$radius'|'$boundingBox': ...} dict")
-            _and(_geo_filter_column(cond))
+            preds.extend(_geo_filter_sql(cond))
             continue
-        col = F.col(fld)
+        col = _sql_ident(fld)
         if not isinstance(cond, dict):
-            _and(col == F.lit(cond))
-            continue
+            cond = {"$eq": cond}
         for op, val in cond.items():
             if op not in _OPS:
                 raise ValueError(f"unsupported filter operator {op!r}")
-            if op == "$eq":
-                _and(col == F.lit(val))
-            elif op == "$ne":
-                _and(col != F.lit(val))
-            elif op == "$gt":
-                _and(col > F.lit(val))
-            elif op == "$gte":
-                _and(col >= F.lit(val))
-            elif op == "$lt":
-                _and(col < F.lit(val))
-            elif op == "$lte":
-                _and(col <= F.lit(val))
-            elif op == "$in":
-                _and(col.isin(list(val)))
+            if op == "$in":
+                vals = [_sql_value(v) for v in list(val)]
+                preds.append(f"{col} IN ({', '.join(vals)})" if vals else "FALSE")
             elif op == "$exists":
-                _and(col.isNotNull() if val else col.isNull())
-    from pyspark.sql import functions as F  # noqa: F811
+                preds.append(f"{col} IS {'NOT ' if val else ''}NULL")
+            else:
+                preds.append(f"{col} {_CMP[op]} {_sql_value(val)}")
+    return " AND ".join(f"({p})" for p in preds) or "TRUE"
 
-    return pred if pred is not None else F.lit(True)
+
+def filters_to_column(filters: dict | None):
+    """:func:`filters_to_sql` as a Column predicate."""
+    from pyspark.sql import functions as F
+
+    return F.expr(filters_to_sql(filters))

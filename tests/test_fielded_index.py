@@ -166,6 +166,33 @@ def test_filtered_fielded_search(cold, corpus):
         assert gs == pytest.approx(ws, abs=1e-9), gu
 
 
+def test_filtered_warm_route_matches_cogroup_and_oracle(cold, warm, corpus, monkeypatch):
+    """A filtered fielded query stays on the warm tier (doc_stats
+    semi-join) and equals the compressed cogroup and the BM25F oracle
+    restricted to the allowed docs."""
+    by_url = {r["url"]: r for r in corpus}
+    calls, route = [], warm.score_variants_topk_filtered
+    monkeypatch.setattr(
+        warm, "score_variants_topk_filtered", lambda *a, **kw: calls.append(1) or route(*a, **kw)
+    )
+    cases = [
+        ({"url": {"$gte": "0010", "$lt": "9002"}}, lambda r: "0010" <= r["url"] < "9002"),
+        ({"title": {"$ne": "apple pie"}}, lambda r: r["title"] != "apple pie"),
+    ]
+    for filters, allow in cases:
+        for q in (["apple", "banana"], ["zebra"], ["mango", "olive", "fig"]):
+            want = [
+                (u, s) for u, s, _m in bm25f_oracle(corpus, q, [2.0, 1.0]) if allow(by_url[u])
+            ][:50]
+            assert want, (filters, q)
+            for eng in (warm, cold):
+                got = [(r["url"], r["score"]) for r in eng.search_terms(q, k=50, filters=filters).collect()]
+                assert [u for u, _ in got] == [u for u, _ in want], (filters, q, eng._warm_enabled)
+                for (u, a), (_, b) in zip(got, want):
+                    assert a == pytest.approx(b, abs=1e-9), u
+    assert calls == []
+
+
 def test_phrase_within_field_only(cold):
     # "red fish" is adjacent in 9003's TITLE; 9004 has both words split
     # across fields — a phrase must never chain across attributes

@@ -69,6 +69,22 @@ def test_negative_search_warm_path_matches(spark, built):
     assert [u for u, _ in got] == [u for u, _ in want]
 
 
+def test_search_page_honors_negative_keywords(spark, built):
+    """The eager serving call excludes like the lazy API on both routes
+    (on the warm tier the negated word once scored as a positive term)."""
+    out, corpus = built
+    want = BM25Oracle(corpus).top_k("อาหารไทย", k=10, exclude_terms=["เชียงใหม่"])
+    for eng in (SearchEngine(spark, out), SearchEngine(spark, out, cache_postings=False)):
+        got = [(r["url"], r["score"]) for r in eng.search_page("อาหารไทย -เชียงใหม่", k=10)]
+        assert [u for u, _ in got] == [u for u, _ in want], eng._warm_enabled
+        for (u, a), (_, b) in zip(got, want):
+            assert a == pytest.approx(b, abs=1e-9), u
+        if eng._bucket_partitioned:
+            eng.postings.unpersist()
+            eng.doc_stats.unpersist()
+            eng._warm.unpersist()
+
+
 def test_negative_highdf_fallback_path_identical(spark, built, monkeypatch):
     # force the distributed blocked-DataFrame path (as if the negative term
     # had df > cap) and require bit-identical results to the literal path

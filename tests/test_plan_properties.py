@@ -149,12 +149,66 @@ def test_warm_sql_point_path_same_plan_and_values(warm_engine):
     assert fast and [tuple(r) for r in fast] == [tuple(r) for r in slow]
 
 
+def _exec_nodes(plan) -> list:
+    """The JVM nodes of an executed plan outside cached relations: AQE
+    plans and query stages are descended into, while an InMemoryTableScan
+    is a leaf (the cached tier's build plan is not part of the query)."""
+    out, stack = [], [plan]
+    while stack:
+        p = stack.pop()
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(p.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            stack.append(p.plan())
+            continue
+        out.append(p)
+        children = p.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def test_warm_filtered_plan_is_a_broadcast_semi_join(spark, warm_engine):
+    """A filtered warm statement keeps the warm plan and adds one
+    broadcast semi-join over the cached doc_stats: no Python stage, no
+    shuffle, the term InSet still on the tier scan."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    stats_cache = cache.lookupCachedData(warm_engine.doc_stats._jdf).get().cachedRepresentation()
+    single = [QueryTerm(0, "เทคโนโลยี"), QueryTerm(0, "อาหาร")]
+    multi = single + [QueryTerm(1, "อาหาร"), QueryTerm(1, "โรงเรียน")]
+    variants = [Variant("original", 1.0, 2, "best"), Variant("tokenized", 0.8, 2, "all")]
+    filter_sql = warm_engine._filter_sql({"lang": {"$in": ["th", "th-en"]}})
+    for plan in (
+        warm_engine._warm_ranked(single, filter_sql=filter_sql, k=10),
+        warm_engine._warm_ranked(
+            multi, variants, filter_sql=filter_sql, required=required_terms(variants), k=10
+        ),
+    ):
+        assert plan.collect()
+        nodes = _exec_nodes(plan._jdf.queryExecution().executedPlan())
+        names = [n.nodeName() for n in nodes]
+        assert not [n for n in names if "InPandas" in n], names
+        assert [n for n in names if "Exchange" in n] == ["BroadcastExchange"], names
+        semi = [
+            n for n in nodes
+            if n.nodeName() == "BroadcastHashJoin" and n.joinType().toString() == "LeftSemi"
+        ]
+        assert len(semi) == 1, names
+        built = [n for n in _exec_nodes(semi[0].right()) if n.nodeName() == "InMemoryTableScan"]
+        assert len(built) == 1
+        assert built[0].relation().cacheBuilder().equals(stats_cache.cacheBuilder())
+        streamed = [n for n in _exec_nodes(semi[0].left()) if n.nodeName() == "InMemoryTableScan"]
+        assert len(streamed) == 1 and "INSET" in streamed[0].simpleString(1000).upper()
+
+
 def test_warm_search_py4j_budget(spark, warm_engine):
-    """A warm SearchService.search builds its plan in one spark.sql call:
-    at most 20 Py4J round trips on a plan-cache miss and fewer on the
-    repeat (the Column-built plan took over a thousand).  Frees of proxies
-    left by earlier work ("m d" commands, sent whenever Python's garbage
-    collector runs) are not the request's own calls and are not counted."""
+    """A warm SearchService.search builds its plan in one spark.sql call,
+    filtered or not: at most 20 Py4J round trips on a plan-cache miss and
+    fewer on the repeat (the Column-built plan took over a thousand).
+    Frees of proxies left by earlier work ("m d" commands, sent whenever
+    Python's garbage collector runs) are not the request's own calls and
+    are not counted."""
     import gc
 
     from meilisearch_thai_spark.query.service import SearchService
@@ -170,19 +224,20 @@ def test_warm_search_py4j_budget(spark, warm_engine):
             calls.append(command)
         return send(command, *args, **kwargs)
 
-    counts = []
     client.send_command = counting
     try:
-        for _ in range(2):
-            gc.collect()
-            calls.clear()
-            svc.search("เทคโนโลยี อาหาร")
-            counts.append(len(calls))
+        for filters in (None, {"lang": "th"}):
+            counts = []
+            for _ in range(2):
+                gc.collect()
+                calls.clear()
+                svc.search("เทคโนโลยี อาหาร", filters=filters)
+                counts.append(len(calls))
+            miss, hit = counts
+            assert miss <= 20, (filters, counts)
+            assert hit < miss, (filters, counts)
     finally:
         del client.send_command
-    miss, hit = counts
-    assert miss <= 20, counts
-    assert hit < miss, counts
     svc.engine.postings.unpersist()
     svc.engine.doc_stats.unpersist()
     svc.engine._warm.unpersist()

@@ -111,6 +111,28 @@ def test_warm_term_query_uses_warm_tier(engines):
     assert capped._warm is not None and capped._warm.count() == 150
 
 
+def test_filtered_cold_term_routes_compressed(engines, monkeypatch):
+    """A filtered query with a cold term on the budget-truncated tier takes
+    the compressed cogroup; with head terms only it stays on the warm
+    tier.  Every engine returns the same page."""
+    capped, cold, full = engines
+    filters = {"url": {"$lt": "u/025"}}
+    calls, route = [], capped.score_variants_topk_filtered
+    monkeypatch.setattr(
+        capped, "score_variants_topk_filtered",
+        lambda *a, **kw: calls.append(1) or route(*a, **kw),
+    )
+    for q, cogroups in [("common rwba", 1), ("common extra", 0)]:
+        calls.clear()
+        pages = [
+            [(h["url"], round(h["score"], 9)) for h in e.search_page(q, k=20, filters=filters)]
+            for e in (capped, cold, full)
+        ]
+        assert pages[0] and pages[0] == pages[1] == pages[2], q
+        assert all(u < "u/025" for u, _ in pages[0]), q
+        assert len(calls) == cogroups, q
+
+
 def test_memory_report_disabled_engine_is_estimate_only(engines):
     # the memory-safety probe must not itself decode+persist a tier that a
     # cache_postings=False engine will never read

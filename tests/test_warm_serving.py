@@ -163,3 +163,57 @@ def test_warm_tier_stays_cached_across_refresh(spark, tmp_path):
     assert eng.search_page("อาหารไทย", k=5)
     assert cache.lookupCachedData(eng._warm._jdf).isDefined()
     _drop_engine(eng)
+
+
+def test_filtered_plan_cache_never_serves_a_deleted_doc(spark, tmp_path):
+    """A repeated filtered warm query reuses its parsed plan (filter text
+    in the key); after delete_docs + refresh_deletes the repeat must run on
+    the rebuilt tier."""
+    from meilisearch_thai_spark.index.maintenance import delete_docs
+    from meilisearch_thai_spark.query.service import SearchService
+
+    out = str(tmp_path / "idx")
+    build_index(spark, generate_pages(spark, 300, seed=36), out)
+    svc = SearchService(spark, out)
+    eng, q, filt = svc.engine, "อาหารไทย", {"lang": "th"}
+    before = svc.search(q, limit=5, filters=filt)
+    assert before.hits and eng.search_page(q, k=5, filters=filt)
+    assert any("mst_stats_" in text for text in eng._warm_binding()[1])
+    victim = before.hits[0].url
+    assert delete_docs(spark, out, [victim]) == 1
+    assert eng.refresh_deletes() == 1
+    assert victim not in {h.url for h in svc.search(q, limit=5, filters=filt).hits}
+    assert victim not in {r["url"] for r in eng.search_page(q, k=5, filters=filt)}
+    _drop_engine(eng)
+
+
+def test_filtered_plan_follows_rebuilt_metadata(spark, tmp_path):
+    """The directory is rebuilt from the same texts with other lang values
+    (identical postings, new doc_stats) and the live engine refreshed: a
+    repeated filtered query must answer from the NEW metadata."""
+    from pyspark.sql import functions as F
+
+    from meilisearch_thai_spark.index.maintenance import swap_indexes
+    from meilisearch_thai_spark.query.oracle import BM25Oracle
+
+    live_dir, next_dir = str(tmp_path / "live"), str(tmp_path / "next")
+    pages = generate_pages(spark, 300, seed=37).persist()
+    build_index(spark, pages, live_dir)
+    flipped = pages.withColumn("lang", F.when(F.col("lang") == "th", "en").otherwise("th"))
+    build_index(spark, flipped, next_dir)
+    rows = flipped.select("url", "text", "lang").collect()
+    pages.unpersist()
+    new_lang = {r["url"]: r["lang"] for r in rows}
+    oracle = BM25Oracle({r["url"]: r["text"] for r in rows})
+    eng = SearchEngine(spark, live_dir)
+    q, filt = "อาหารไทย", {"lang": "th"}
+    old = _canon((r["url"], r["score"]) for r in eng.search_page(q, k=10, filters=filt))
+    swap_indexes(live_dir, next_dir)
+    eng.refresh_index()
+    got = _canon((r["url"], r["score"]) for r in eng.search_page(q, k=10, filters=filt))
+    want = _canon(
+        [(u, s) for u, s in oracle.top_k(q, k=len(rows)) if new_lang[u] == "th"][:10]
+    )
+    assert old and got == want
+    assert not {u for u, _ in got} & {u for u, _ in old}
+    _drop_engine(eng)
