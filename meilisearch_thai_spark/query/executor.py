@@ -14,7 +14,10 @@ serving planner (:meth:`SearchEngine._ranked_topk`):
   or a high-df negative keyword restricts candidates) → :func:`rank_sql`.
 
 Both rank with the same statement: matching-strategy filter, variant
-weights and boosts, per-doc dedup, threshold, top-k.
+weights and boosts, per-doc dedup, threshold, top-k.  Sort, distinct and
+cursor requests ask for no top-k (``k=None``: every matching doc, the
+compressed route then decoding full scores), and the federation composes
+each index's statement as SQL text (:meth:`SearchEngine._ranked_sql`).
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from __future__ import annotations
 import itertools
 import os
 import re
+import threading
 from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Iterator
@@ -40,6 +44,8 @@ from .requests import filters_to_sql, sql_str
 # process-wide temp-view namer; next() on a count is atomic, so engines and
 # requests in different threads never register the same name
 _VIEW_SEQ = itertools.count(1)
+# guards the warm plan caches' insert-and-evict (_warm_ranked)
+_PLAN_LOCK = threading.Lock()
 
 
 def _row_field(term: str, field_params, avgdl: float) -> tuple[float, float, str]:
@@ -850,7 +856,8 @@ class SearchEngine:
         this is the classic in-memory hot tier over the compressed
         source-of-truth layout, per serving shard at scale.  Disable with
         ``cache_postings=False`` (batch/analytics jobs keep the compressed
-        block-max path; so do filtered/phrase queries).
+        block-max path; so do phrase queries and high-df negative keywords —
+        :meth:`_ranked_sql` has the route rule).
 
         With ``warm_budget_bytes`` set, only the HEAD TERMS BY POSTING COUNT
         that fit the budget (at WARM_BYTES_PER_POSTING estimated decoded
@@ -942,7 +949,7 @@ class SearchEngine:
         """(warm view name, its plan cache), registered once per tier build.
 
         Warm queries run as ONE ``spark.sql`` string over this view (see
-        :meth:`_warm_ranked`): building the plan through the Column API cost
+        :meth:`_ranked_sql`): building the plan through the Column API cost
         one py4j round trip per expression node — over a thousand per
         multi-variant request.  The view and the plan cache bound to it are
         swapped in ONE assignment, after the view is replaced: a reader
@@ -1001,14 +1008,9 @@ class SearchEngine:
             f" GROUP BY variant_id, doc_id)"
         )
 
-    def _warm_ranked(
-        self, qterms: list[QueryTerm], variants=None, neg_ids=None,
-        filter_sql: str | None = None, **rank,
-    ) -> DataFrame:
-        """The warm route as ONE cached ``spark.sql`` statement:
-        :meth:`_warm_scored_sql` ranked by :func:`rank_sql` (``rank`` are its
-        keywords).  ``filter_sql`` (:func:`filters_to_sql`) restricts the
-        scan to the doc_stats rows it selects.
+    def _warm_ranked(self, text: str) -> DataFrame:
+        """Parse a warm statement (the planner's text step on the warm
+        route, :meth:`_ranked_sql`) through the plan cache.
 
         Parsed Datasets are kept per engine, keyed by the SQL text — filter
         included: Spark caches the analyzed and compiled QueryExecution on
@@ -1016,36 +1018,22 @@ class SearchEngine:
         belongs to one warm view (:meth:`_warm_binding`), so it can never
         serve a stale tier; a refresh that rereads doc_stats also rebuilds
         the tier, so it never serves stale metadata either."""
-        view, plans = self._warm_binding()
-        allowed = (
-            None if filter_sql is None
-            else f"SELECT doc_id FROM {self._stats_view()} WHERE {filter_sql}"
-        )
-        text = rank_sql(self._warm_scored_sql(view, qterms, neg_ids, allowed), variants, **rank)
+        plans = self._warm_binding()[1]
         df = plans.get(text)
         if df is None:
             df = self.spark.sql(text)
-            if len(plans) >= self._PLAN_CACHE_CAP:
-                plans.pop(next(iter(plans), None), None)  # FIFO — bounded, simple
-            plans[text] = df
+            # FIFO eviction iterates the dict: no other thread's insert may
+            # land between the iterator and its first key
+            with _PLAN_LOCK:
+                if len(plans) >= self._PLAN_CACHE_CAP:
+                    plans.pop(next(iter(plans), None), None)
+                plans[text] = df
         return df
-
-    def _rank_scored(self, scored: DataFrame, variants=None, **rank) -> DataFrame:
-        """:func:`rank_sql` over a scored frame of the compressed routes
-        (block-max, filtered, exact) — the same statement the warm route
-        runs, through a temp view that lives only while the SQL is parsed
-        (the Dataset keeps the resolved plan)."""
-        name = f"mst_scored_{next(_VIEW_SEQ)}"
-        scored.createOrReplaceTempView(name)
-        try:
-            return self.spark.sql(rank_sql(name, variants, **rank))
-        finally:
-            self.spark.catalog.dropTempView(name)
 
     def _stats_view(self) -> str:
         """doc_stats as a temp view (same once-per-binding contract as
         :meth:`_warm_view`) — the join side of SQL-composed serving paths
-        (the warm route's filter, query.federation's warm fast path)."""
+        (the warm route's filter, query.federation's url join)."""
         ds, name = self.doc_stats, f"mst_stats_{self._view_id}"
         if getattr(self, "_stats_view_df", None) is not ds:
             ds.createOrReplaceTempView(name)  # replaced, never dropped (above)
@@ -1492,11 +1480,9 @@ class SearchEngine:
                 self._doomed_df = None
         return len(self._tombstones)
 
-    def score_variants(self, qterms: list[QueryTerm], prune_threshold: float | None = None) -> DataFrame:
+    def score_variants(self, qterms: list[QueryTerm]) -> DataFrame:
         """Per-(variant, doc) BM25 sums + matched-term counts."""
         blocks = self.candidate_blocks(qterms)
-        if prune_threshold is not None:
-            blocks = blocks.filter(F.col("block_max_score") >= F.lit(prune_threshold))
         decode = _make_decoder(
             self.meta.k1, self.meta.b, self.meta.avgdl, self.meta.n_docs, self._fp
         )
@@ -1714,14 +1700,6 @@ class SearchEngine:
             self._pads = pads.dataset(os.path.join(self.index_dir, "doc_stats"))
         return self._pads
 
-    def _exact_scored(self, qterms, filters, required, prefixes) -> DataFrame:
-        """Shared exact-scoring preamble for the sort/distinct paths: full
-        scores (+ filter join, required-terms map, per-doc dedup)."""
-        scored = self.score_variants(qterms)
-        if filters:
-            scored = scored.join(self.allowed_docs(filters), "doc_id")
-        return self._rank_scored(scored, required=required, dedup=len(prefixes) > 1)
-
     def _hit_cols(self, attributes: list[str] | None) -> list[str]:
         """Output column set for a hit row (validated attributes appended)."""
         return list(
@@ -1917,6 +1895,52 @@ class SearchEngine:
             .orderBy(F.desc("score"), F.asc("doc_id"))
         )
 
+    def _page_tail(self, k: int, sort: list[str] | None, distinct: str | None, out_cols: list[str]):
+        """The one page-ordering tail of the requests ranked without a cut
+        (sort, distinct, negative-only placeholders).  Validates ``sort``
+        (declared sortable, parseable) and ``distinct`` (a public field)
+        when called — call it before any Spark job — and returns the
+        function that cuts a doc_stats ⋈ scored frame into the page:
+
+        distinct window (MeiliSearch distinctAttribute: at most one hit per
+        value of a stored field, the best by relevance; a NULL value is its
+        own group) → ``_geoDistance`` when sorting by ``_geoPoint`` → sort
+        fields, then ``score DESC, doc_id ASC`` → ``LIMIT k``
+        (TakeOrderedAndProject — no full sort materializes)."""
+        order = []
+        if sort:
+            self._check_declared(
+                [x.partition(":")[0] for x in sort],
+                getattr(self.meta, "sortable_attributes", None),
+                "sortable fields",
+            )
+            order = parse_sort(sort, self.doc_stats.columns)
+        if distinct and distinct not in self._public_fields():
+            raise ValueError(
+                f"unknown distinct field {distinct!r}; available {self._public_fields()}"
+            )
+        gp = geo_sort_point(sort)
+        cols = [*out_cols, "_geoDistance"] if gp is not None else out_cols
+        relevance = [F.desc("score"), F.asc("doc_id")]
+
+        def page(joined: DataFrame) -> DataFrame:
+            if distinct:
+                key = F.coalesce(
+                    F.col(distinct).cast("string"),
+                    F.concat(F.lit("\x00doc:"), F.col("doc_id").cast("string")),
+                )
+                w = Window.partitionBy(key).orderBy(*relevance)
+                joined = (
+                    joined.withColumn("_rn", F.row_number().over(w))
+                    .filter(F.col("_rn") == 1)
+                    .drop("_rn")
+                )
+            if gp is not None:
+                joined = attach_geo_distance(joined, gp)
+            return joined.orderBy(*order, *relevance).limit(k).select(*cols)
+
+        return page
+
     def search_terms(
         self,
         terms: list[str],
@@ -1938,8 +1962,10 @@ class SearchEngine:
         ``filters`` restricts candidates by doc metadata (corpus-wide BM25
         stats unchanged); ``sort`` replaces relevance order with doc-field
         order (MeiliSearch sort semantics: sort fields first, relevance as
-        tie-break) — with sort the top-k cannot prune by score, so the exact
-        full-scoring path runs instead of the block-max heap.
+        tie-break) and ``distinct`` keeps the best hit per value of a stored
+        field — both need every matching doc, so the serving planner ranks
+        without a cut (``k=None``: on a warm engine the warm statement
+        without its LIMIT) and :meth:`_page_tail` cuts the page.
         ``attributes_to_search_on`` restricts matching to the named
         searchable attributes of a fielded index (MeiliSearch
         attributesToSearchOn, default all).
@@ -1951,99 +1977,34 @@ class SearchEngine:
                     attributes_to_retrieve=attributes_to_retrieve,
                     distinct=distinct, exclude_terms=exclude_terms,
                 )
+        # request errors (sort, distinct, attributes, filter) before any
+        # Spark job: negative keywords and 'frequency' matching collect
+        page = self._page_tail(k, sort, distinct, self._hit_cols(attributes_to_retrieve))
         filter_sql = self._filter_sql(filters)
         neg_ids = blocked = None
         if exclude_terms:
             neg_ids, blocked = self._negative_exclusion(exclude_terms)
-        uniq, prefixes, qterms, required = self._expand_matching(terms, matching)
+        _uniq, _prefixes, qterms, required = self._expand_matching(terms, matching)
         if not qterms and exclude_terms:
             # negative-only query: MeiliSearch placeholder semantics — every
             # non-excluded doc, no relevance score; filters/sort/distinct
             # apply exactly as on a placeholder search
             base = self._exclude_deleted(self.doc_stats)
-            if filters:
-                base = base.join(self.allowed_docs(filters), "doc_id")
+            if filter_sql is not None:
+                base = base.filter(filter_sql)
             base = self._apply_negative_exclusion(base, neg_ids, blocked)
-            if distinct:
-                if distinct not in self._public_fields():
-                    raise ValueError(
-                        f"unknown distinct field {distinct!r}; available "
-                        f"{self._public_fields()}"
-                    )
-                key = F.coalesce(
-                    F.col(distinct).cast("string"),
-                    F.concat(F.lit("\x00doc:"), F.col("doc_id").cast("string")),
-                )
-                w = Window.partitionBy(key).orderBy(F.asc("doc_id"))
-                base = (
-                    base.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
-            if sort:
-                self._check_declared(
-                    [x.partition(":")[0] for x in sort],
-                    getattr(self.meta, "sortable_attributes", None),
-                    "sortable fields",
-                )
-            order = (
-                [*parse_sort(sort, self.doc_stats.columns)] if sort else []
-            ) + [F.asc("doc_id")]
-            # not _finalize_hits: it re-orders by score, which would discard
-            # a requested placeholder sort (all scores are 0.0 here)
-            joined = base.withColumn("score", F.lit(0.0)).withColumn(
-                "terms_matched", F.lit(0).cast("long")
+            return page(
+                base.withColumn("score", F.lit(0.0))
+                .withColumn("terms_matched", F.lit(0).cast("long"))
             )
-            out_cols = self._hit_cols(attributes_to_retrieve)
-            gp = geo_sort_point(sort)
-            if gp is not None:
-                joined = attach_geo_distance(joined, gp)
-                out_cols = [*out_cols, "_geoDistance"]
-            return joined.orderBy(*order).limit(k).select(*out_cols)
         if distinct or sort:
-            # exact full-scoring path: a block-max top-k could starve a
-            # distinct value, and with sort the cut cannot prune by score
-            scored = self._exact_scored(qterms, filters, required, prefixes)
-            # before the distinct window/cut: an excluded doc must never be
-            # a distinct representative either
-            scored = self._apply_negative_exclusion(scored, neg_ids, blocked)
-            out_cols = self._hit_cols(attributes_to_retrieve)
-            joined = self.doc_stats.join(scored, "doc_id")
-            if distinct:
-                # MeiliSearch distinctAttribute: at most one hit per value of
-                # a stored field, best-by-relevance representative, applied
-                # BEFORE the top-k cut.  Docs with a NULL field value stay
-                # individually distinct (each its own group), matching
-                # MeiliSearch.
-                if distinct not in self._public_fields():
-                    raise ValueError(
-                        f"unknown distinct field {distinct!r}; available "
-                        f"{self._public_fields()}"
-                    )
-                key = F.coalesce(
-                    F.col(distinct).cast("string"),
-                    F.concat(F.lit("\x00doc:"), F.col("doc_id").cast("string")),
-                )
-                w = Window.partitionBy(key).orderBy(F.desc("score"), F.asc("doc_id"))
-                joined = (
-                    joined.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
-            if sort:
-                self._check_declared(
-                    [x.partition(":")[0] for x in sort],
-                    getattr(self.meta, "sortable_attributes", None),
-                    "sortable fields",
-                )
-            order = (
-                [*parse_sort(sort, self.doc_stats.columns)] if sort else []
-            ) + [F.desc("score"), F.asc("doc_id")]
-            gp = geo_sort_point(sort)
-            if gp is not None:
-                joined = attach_geo_distance(joined, gp)
-                out_cols = [*out_cols, "_geoDistance"]
-            return joined.orderBy(*order).limit(k).select(*out_cols)
+            # every matching doc, uncut: a top-k could starve a distinct
+            # value, and a sort cannot prune by score
+            scored = self._ranked_topk(
+                qterms, k=None, required=required, neg_ids=neg_ids, blocked=blocked,
+                filter_sql=filter_sql,
+            )
+            return page(self.doc_stats.join(scored, "doc_id"))
         topk = self._ranked_topk(
             qterms, k=k, required=required, neg_ids=neg_ids, blocked=blocked,
             filter_sql=filter_sql,
@@ -2078,13 +2039,16 @@ class SearchEngine:
         come from THIS method so all pages share one total order.
 
         ``cursor`` is ``(score, url)`` of the previous page's last hit.
-        Runs the exact full-scoring path (the same one sort/distinct use):
-        the cursor predicate lands between scoring and the top-k, so the
-        plan is Filter → TakeOrderedAndProject(k) — never a growing heap.
+        The serving planner ranks every matching doc (``k=None``, as for
+        sort/distinct): the cursor predicate lands between scoring and the
+        top-k, so the plan is Filter → TakeOrderedAndProject(k) — never a
+        growing heap.
         """
         from .adhoc import SCORE_DECIMALS
 
-        uniq, prefixes, qterms, required = self._expand_matching(terms, matching)
+        filter_sql = self._filter_sql(filters)
+        out_cols = self._hit_cols(attributes_to_retrieve)
+        _uniq, _prefixes, qterms, required = self._expand_matching(terms, matching)
         if not qterms:
             # no scorable terms → the walk has no pages.  With a cursor the
             # answer must stay inside THIS method's total order (never
@@ -2095,7 +2059,7 @@ class SearchEngine:
                 attributes_to_retrieve=attributes_to_retrieve,
             )
             return base.limit(0) if cursor is not None else base
-        scored = self._exact_scored(qterms, filters, required, prefixes)
+        scored = self._ranked_topk(qterms, k=None, required=required, filter_sql=filter_sql)
         joined = self.doc_stats.join(scored, "doc_id").withColumn(
             "score", F.round("score", SCORE_DECIMALS)
         )
@@ -2105,7 +2069,6 @@ class SearchEngine:
                 (F.col("score") < F.lit(cs))
                 | ((F.col("score") == F.lit(cs)) & (F.col("url") > F.lit(cu)))
             )
-        out_cols = self._hit_cols(attributes_to_retrieve)
         return (
             joined.orderBy(F.desc("score"), F.asc("url")).limit(k).select(*out_cols)
         )
@@ -2245,44 +2208,70 @@ class SearchEngine:
         filters: dict | None = None,
     ) -> DataFrame:
         """The scoring core of :meth:`search_terms` WITHOUT the metadata
-        join → (doc_id, score, terms_matched), same top-k and order.
-
-        Useful when the caller resolves metadata itself (or not at all);
-        federation measured FASTER with per-branch `search_terms` joins
-        (see query/federation.py), so this is a building block, not the
-        federation's current shape."""
+        join → (doc_id, score, terms_matched), same top-k and order — for
+        callers that resolve metadata themselves (or not at all).  The
+        federation composes the same planner output as SQL text instead
+        (:meth:`_ranked_sql`), so all its branches parse as one statement."""
         filter_sql = self._filter_sql(filters)
         _uniq, _prefixes, qterms, required = self._expand_matching(terms, matching)
         return self._ranked_topk(qterms, k=k, required=required, filter_sql=filter_sql)
 
     def _ranked_topk(
+        self, qterms: list[QueryTerm], variants: list[Variant] | None = None, **plan
+    ) -> DataFrame:
+        """The serving planner: :meth:`_ranked_sql`'s ranked relation as a
+        DataFrame — a warm statement through the plan cache
+        (:meth:`_warm_ranked`), any other parsed while its scored view
+        lives."""
+        with self._ranked_sql(qterms, variants, **plan) as (text, warm):
+            return self._warm_ranked(text) if warm else self.spark.sql(text)
+
+    @contextmanager
+    def _ranked_sql(
         self, qterms: list[QueryTerm], variants: list[Variant] | None = None, *,
-        k: int, required: dict[int, int] | None = None,
+        k: int | None, required: dict[int, int] | None = None,
         phrase_terms: dict[int, list[str]] | None = None, neg_ids=None,
         blocked: DataFrame | None = None, filter_sql: str | None = None, **rank,
-    ) -> DataFrame:
-        """The serving planner: the per-doc top-``k`` of ``qterms`` ranked by
-        :func:`rank_sql` (``rank`` are its other keywords; raw BM25 over
-        several sub-variants keeps each doc's best), on one of two routes.
+    ):
+        """The serving planner's text step: yields ``(sql, warm)``, the
+        per-doc ranking of ``qterms`` by :func:`rank_sql` (``rank`` are its
+        other keywords; raw BM25 over several sub-variants keeps each doc's
+        best) as one SQL statement, cut to the top ``k`` — or, with
+        ``k=None``, every matching doc unordered, for a caller that cuts by
+        sort, distinct or cursor.  The text is valid inside the block only.
 
-        Warm — :meth:`_warm_ranked`, one cached SQL statement, a filter
-        (``filter_sql``) riding as a doc_stats semi-join — whenever the
-        tier can answer: it holds every query term (:meth:`_warm_covers`:
-        warm tier enabled, no cold term on a budget-truncated tier, no
+        Warm — :meth:`_warm_scored_sql` over the tier's view, a filter
+        (``filter_sql``) riding as a doc_stats semi-join and literal
+        negative ids (``neg_ids``) dropping at the scan — whenever the tier
+        can answer: it holds every query term (:meth:`_warm_covers`: warm
+        tier enabled, no cold term on a budget-truncated tier, no
         attributesToSearchOn restriction), no variant needs positions
         (``phrase_terms``), and no high-df negative keyword left its
         blocked ids distributed (``blocked``).  Otherwise the compressed
-        block-max heaps: cogrouped with the allowed ids when a filter or
-        ``blocked`` restricts candidates, the plain bucket heap when not.
-        Both routes rank with the same statement."""
+        posting blocks: the block-max heaps for a top-k (cogrouped with the
+        allowed ids when a filter or ``blocked`` restricts candidates), the
+        full scores joined to the filter's ids and minus the negatives for
+        ``k=None`` (phrase checks need a heap, so they need a ``k``).  That
+        frame sits behind a temp view, dropped when the block exits — a
+        parsed Dataset keeps the resolved plan."""
+        rank.update(required=required, k=k)
         if variants is None:
             rank.setdefault("dedup", len({q.variant_id for q in qterms}) > 1)
         if blocked is None and not phrase_terms and self._warm_covers(qterms):
-            return self._warm_ranked(
-                qterms, variants, neg_ids, filter_sql, required=required, k=k, **rank
+            allowed = (
+                None if filter_sql is None
+                else f"SELECT doc_id FROM {self._stats_view()} WHERE {filter_sql}"
             )
+            scored = self._warm_scored_sql(self._warm_view(), qterms, neg_ids, allowed)
+            yield rank_sql(scored, variants, **rank), True
+            return
         heap = dict(required_terms=required, phrase_terms=phrase_terms, extra_excluded=neg_ids)
-        if filter_sql is None and blocked is None:
+        if k is None:
+            scored = self.score_variants(qterms)
+            if filter_sql is not None:
+                scored = scored.join(self.doc_stats.filter(filter_sql).select("doc_id"), "doc_id")
+            scored = self._apply_negative_exclusion(scored, neg_ids, blocked)
+        elif filter_sql is None and blocked is None:
             scored = self.score_variants_topk(qterms, k=k, **heap)
         else:
             allowed = self.doc_stats.filter(filter_sql or "TRUE").select("doc_id")
@@ -2290,7 +2279,12 @@ class SearchEngine:
                 # high-df negatives: allowed = docs ∖ blocked, never collected
                 allowed = allowed.join(blocked, "doc_id", "left_anti")
             scored = self.score_variants_topk_filtered(qterms, k=k, allowed=allowed, **heap)
-        return self._rank_scored(scored, variants, k=k, **rank)
+        name = f"mst_scored_{next(_VIEW_SEQ)}"
+        scored.createOrReplaceTempView(name)
+        try:
+            yield rank_sql(name, variants, **rank), False
+        finally:
+            self.spark.catalog.dropTempView(name)
 
     def search_phrase(self, terms: list[str], k: int = 10) -> DataFrame:
         """Exact-adjacency phrase search (MeiliSearch quoted-phrase
@@ -2539,10 +2533,10 @@ class SearchEngine:
         doc metadata, on whichever route the serving planner picks
         (:meth:`_ranked_topk`); ``sort`` (P6,
         search_executor.py:766-843) orders the final page by doc fields with
-        relevance as tie-break (score top-k pruning is disabled then — sort
-        must see every matching doc).  With sort, phrase variants degrade to
-        conjunctive matching (positions aren't decoded on the full-scoring
-        path).
+        relevance as tie-break: the planner ranks every matching doc
+        (``k=None``) and :meth:`_page_tail` cuts the page.  With sort,
+        phrase variants degrade to conjunctive matching (positions are only
+        checked inside the top-k heaps).
 
         Returns (url, doc_id, score, variant_type, terms_matched).
         """
@@ -2556,15 +2550,16 @@ class SearchEngine:
                 + self._check_attrs(attributes_to_retrieve)
             )
         )
+        # a bad sort is a request error before any Spark job
+        page = self._page_tail(k, sort, None, out_cols) if sort else None
         if pq is None:
             from .pipeline import process_query
 
             pq = process_query(query, synonyms=self._synonyms or None)
-        dedup, sort_cols = self._multi_variant_dedup(
-            query, k, min_score_threshold, normalize, filters, sort, pq=pq
+        dedup = self._multi_variant_dedup(
+            query, None if sort else k, min_score_threshold, normalize, filters, pq=pq
         )
-        gp = geo_sort_point(sort)
-        if gp is not None:
+        if geo_sort_point(sort) is not None:
             # _geoPoint sort exposes _geoDistance on every response shape
             # (MeiliSearch geosearch), including the empty and placeholder ones
             out_cols = [*out_cols, "_geoDistance"]
@@ -2592,17 +2587,8 @@ class SearchEngine:
                 [T.StructField(c, score_types.get(c) or ds_types[c]) for c in out_cols]
             )
             return self.spark.createDataFrame([], empty)
-        if sort_cols:
-            # sort fields first, relevance as tie-break; limit AFTER the
-            # metadata join (TakeOrderedAndProject — no full sort materializes)
-            joined = self.doc_stats.join(dedup, "doc_id")
-            if gp is not None:
-                joined = attach_geo_distance(joined, gp)
-            return (
-                joined.orderBy(*sort_cols, F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .select(*out_cols)
-            )
+        if page is not None:
+            return page(self.doc_stats.join(dedup, "doc_id"))
         return (
             self.doc_stats.join(F.broadcast(dedup), "doc_id")
             .select(*out_cols)
@@ -2643,7 +2629,7 @@ class SearchEngine:
         # raises regardless of whether the query matched (parity with the
         # lazy path and multi_variant_search)
         self._check_attrs(attributes_to_retrieve)
-        topk, _ = self._multi_variant_dedup(query, k, min_score_threshold, normalize, filters, None, pq=pq)
+        topk = self._multi_variant_dedup(query, k, min_score_threshold, normalize, filters, pq=pq)
         if topk is None:
             return []
         return self._resolve_meta(topk.collect(), attributes_to_retrieve)
@@ -3044,21 +3030,22 @@ class SearchEngine:
     def _multi_variant_dedup(
         self,
         query: str,
-        k: int,
+        k: int | None,
         min_score_threshold: float,
         normalize: bool,
         filters: dict | None,
-        sort: list[str] | None,
         pq=None,
-    ):
+    ) -> DataFrame | None:
         """Variant pipeline + scoring + weighting + per-doc dedup + threshold.
 
-        Returns ``(DataFrame | None, sort_cols | None)`` with columns
-        (doc_id, score, variant_type, terms_matched) — the part of the search
-        shared by the lazy DataFrame API and the eager page API.  Without
-        ``sort`` the frame is the final top-``k`` in score order; with it,
-        every matching doc, for the caller's field order.  ``pq`` lets a
-        caller (SearchService) supply an already-processed query carrying
+        Returns the serving planner's frame (doc_id, score, variant_type,
+        terms_matched), or None when the query has no variant — the part of
+        the search shared by the lazy DataFrame API and the eager page API.
+        With a ``k`` it is the final top-``k`` in score order; with
+        ``k=None``, every matching doc, for a caller's field order (phrase
+        variants then degrade to conjunctive matching: positions are only
+        checked inside the top-k heaps).  ``pq`` lets a caller
+        (SearchService) supply an already-processed query carrying
         request-level overrides (matching_strategy, max_query_variants)
         without a second pipeline pass."""
         from .pipeline import process_query
@@ -3066,43 +3053,31 @@ class SearchEngine:
         if pq is None:
             pq = process_query(query, synonyms=self._synonyms or None)
         if not pq.variants:
-            return None, None
-        # request errors (undeclared filter/sort fields) before any Spark job
+            return None
+        # request errors (undeclared filter fields) before any Spark job
         filter_sql = self._filter_sql(filters)
-        sort_cols = None
-        if sort:
-            self._check_declared(
-                [x.partition(":")[0] for x in sort],
-                getattr(self.meta, "sortable_attributes", None),
-                "sortable fields",
-            )
-            sort_cols = parse_sort(sort, self.doc_stats.columns)
         qterms: list[QueryTerm] = []
         variants: list[Variant] = []
+        # positions are checked inside the top-k heaps only
+        positional = getattr(self.meta, "positional", False) and k is not None
         phrase_specs: dict[int, list[str]] = {}
         self._add_scoring_variants(
             pq, self._frequency_dfs(pq.variants), qterms, variants,
-            phrase_specs=phrase_specs if getattr(self.meta, "positional", False) and not sort else None,
+            phrase_specs=phrase_specs if positional else None,
         )
         # per-variant EXACT top-k with bucket pruning is sufficient for the
         # global top-k after weighting: weights are constant per variant, so
         # within-variant rank by raw score == rank by weighted score, and any
         # doc in the final top-k is in its winning variant's top-k
         required = required_terms(variants)
-        rank = dict(normalize=normalize, threshold=min_score_threshold)
         # negative keywords parsed by Q1-Q8 ride the same routing the
         # single-variant path uses (literal excluded-array vs distributed
         # blocked-DataFrame, by df estimate)
         neg_ids = blocked = None
         if getattr(pq, "exclude_terms", None):
             neg_ids, blocked = self._negative_exclusion(pq.exclude_terms)
-        if sort:
-            scored = self.score_variants(qterms)
-            if filters:
-                scored = scored.join(self.allowed_docs(filters), "doc_id")
-            scored = self._apply_negative_exclusion(scored, neg_ids, blocked)
-            return self._rank_scored(scored, variants, required=required, **rank), sort_cols
         return self._ranked_topk(
             qterms, variants, k=k, required=required, phrase_terms=phrase_specs or None,
-            neg_ids=neg_ids, blocked=blocked, filter_sql=filter_sql, **rank,
-        ), None
+            neg_ids=neg_ids, blocked=blocked, filter_sql=filter_sql,
+            normalize=normalize, threshold=min_score_threshold,
+        )

@@ -20,3 +20,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def planner_routes(monkeypatch):
+    """``spy(engine)`` → the list the engine's serving planner appends
+    each planned route to (``"warm"`` or ``"compressed"``), recorded at
+    its text step (``SearchEngine._ranked_sql``) so the federation's
+    branches count too."""
+    from contextlib import contextmanager
+
+    def spy(eng):
+        routes, planned = [], eng._ranked_sql
+
+        @contextmanager
+        def ranked_sql(*args, **kwargs):
+            with planned(*args, **kwargs) as (text, warm):
+                routes.append("warm" if warm else "compressed")
+                yield text, warm
+
+        monkeypatch.setattr(eng, "_ranked_sql", ranked_sql)
+        return routes
+
+    return spy

@@ -73,13 +73,10 @@ def test_single_job_plan_and_validation(spark, two_indexes):
         federated_search({}, ["wakame"])
 
 
-def test_warm_sql_fast_path_matches_classic_and_falls_back(spark, tmp_path_factory):
-    """Round 5: with warm engines the federation composes as ONE spark.sql
-    plan (fast path) — values must equal the classic per-branch plan, and
-    any engine that cannot serve warm must route the whole call back to
-    the classic path (results identical either way)."""
-    from meilisearch_thai_spark.query.federation import _warm_sql_federated
-
+@pytest.fixture(scope="module")
+def warm_and_cold(spark, tmp_path_factory):
+    """The same two indexes served by warm engines and by
+    ``cache_postings=False`` engines."""
     base = tmp_path_factory.mktemp("fedwarm")
 
     def mk(name, rows, **kw):
@@ -108,22 +105,49 @@ def test_warm_sql_fast_path_matches_classic_and_falls_back(spark, tmp_path_facto
     warm = {"a": mk("wa", rows_a), "b": mk("wb", rows_b)}
     cold = {"a": mk("ca", rows_a, cache_postings=False),
             "b": mk("cb", rows_b, cache_postings=False)}
+    return warm, cold
 
+
+def _fed_rows(df):
+    return [(r["index_uid"], r["url"], r["score"], r["federated_score"]) for r in df.collect()]
+
+
+def test_warm_sql_fast_path_matches_classic_and_falls_back(spark, warm_and_cold, planner_routes):
+    """Every branch is its engine's planner statement: the warm tier's on
+    warm engines, the compressed heaps' on cold ones — and the merged
+    values are the same either way."""
+    warm, cold = warm_and_cold
+    routes = {
+        (side, uid): planner_routes(eng)
+        for side, engines in (("warm", warm), ("cold", cold))
+        for uid, eng in engines.items()
+    }
     for normalize in (True, False):
         fast = federated_search(warm, ["wakame", "soup"], k=10, normalize=normalize)
         classic = federated_search(cold, ["wakame", "soup"], k=10, normalize=normalize)
-        # the warm call really took the SQL path...
-        assert _warm_sql_federated(
-            warm, ["wakame", "soup"], 10, {}, 10, normalize
-        ) is not None
-        # ...and the cold one really cannot
-        assert _warm_sql_federated(
-            cold, ["wakame", "soup"], 10, {}, 10, normalize
-        ) is None
-        got = [(r["index_uid"], r["url"], r["score"], r["federated_score"])
-               for r in fast.collect()]
-        want = [(r["index_uid"], r["url"], r["score"], r["federated_score"])
-                for r in classic.collect()]
+        got, want = _fed_rows(fast), _fed_rows(classic)
         assert got == want, (normalize, got, want)
     # schema parity with the classic path
     assert fast.columns == classic.columns
+    assert routes == {
+        ("warm", "a"): ["warm"] * 2, ("warm", "b"): ["warm"] * 2,
+        ("cold", "a"): ["compressed"] * 2, ("cold", "b"): ["compressed"] * 2,
+    }
+
+
+def test_index_uid_with_a_quote(spark, warm_and_cold):
+    """Index uids are SQL string literals in the merge statement: a uid
+    with a quote serves the same hits on warm and cold engines."""
+    warm, cold = warm_and_cold
+    uids = {"a": "o'brien", "b": "b\\'x"}
+    for normalize in (True, False):
+        got, want = (
+            _fed_rows(
+                federated_search(
+                    {uids[u]: e for u, e in engines.items()}, ["wakame", "soup"], k=10,
+                    weights={uids["b"]: 0.5}, normalize=normalize,
+                )
+            )
+            for engines in (warm, cold)
+        )
+        assert got == want and {u for u, *_ in got} == set(uids.values()), (normalize, got)

@@ -49,8 +49,8 @@ def test_warm_point_query_plan_has_no_python_stage_or_exchange(warm_engine):
     multi = single + [QueryTerm(1, "อาหาร"), QueryTerm(1, "โรงเรียน")]
     variants = [Variant("original", 1.0, 2, "best"), Variant("tokenized", 0.8, 2, "all")]
     for plan in (
-        warm_engine._warm_ranked(single, k=10),
-        warm_engine._warm_ranked(multi, variants, required=required_terms(variants), k=10),
+        warm_engine._ranked_topk(single, k=10),
+        warm_engine._ranked_topk(multi, variants, required=required_terms(variants), k=10),
     ):
         plan.collect()  # finalize AQE so the executed plan is the real one
         txt = _final_plan(plan)
@@ -69,7 +69,7 @@ def test_warm_single_variant_plan_is_query_invariant(warm_engine):
     import re
 
     def shape(terms):
-        plan = warm_engine._warm_ranked([QueryTerm(0, t) for t in terms], k=10)
+        plan = warm_engine._ranked_topk([QueryTerm(0, t) for t in terms], k=10)
         plan.collect()
         txt = re.sub(r"INSET [^)]*", "INSET <terms>", _query_part(plan))
         txt = re.sub(r"#\d+L?", "#x", txt)  # normalize expr ids
@@ -128,12 +128,12 @@ def _column_reference(eng, qterms, variants):
 
 
 def test_warm_sql_point_path_same_plan_and_values(warm_engine):
-    """The one-statement warm route (``_warm_ranked``) returns the rows a
-    Column-API plan of the same shape returns, bit for bit: raw BM25 on a
-    single variant, and weighted, boosted, per-doc-deduplicated scores on
-    several."""
+    """The one-statement warm route (``_ranked_topk`` on a warm engine)
+    returns the rows a Column-API plan of the same shape returns, bit for
+    bit: raw BM25 on a single variant, and weighted, boosted,
+    per-doc-deduplicated scores on several."""
     terms = ["เทคโนโลยี", "อาหาร"]
-    fast = warm_engine._warm_ranked([QueryTerm(0, t) for t in terms], k=10).collect()
+    fast = warm_engine._ranked_topk([QueryTerm(0, t) for t in terms], k=10).collect()
     slow = _column_reference(
         warm_engine, [QueryTerm(0, t) for t in terms], [Variant("x", 1.0, 2, "best")]
     )
@@ -144,7 +144,7 @@ def test_warm_sql_point_path_same_plan_and_values(warm_engine):
               QueryTerm(2, "อาหารไทย"), QueryTerm(2, "เทคโนโลยี")]
     variants = [Variant("original", 1.0, 2, "best"), Variant("tokenized", 0.9, 1, "best"),
                 Variant("fallback", 0.6, 2, "best")]
-    fast = warm_engine._warm_ranked(qterms, variants, k=10).collect()
+    fast = warm_engine._ranked_topk(qterms, variants, k=10).collect()
     slow = _column_reference(warm_engine, qterms, variants)
     assert fast and [tuple(r) for r in fast] == [tuple(r) for r in slow]
 
@@ -180,8 +180,8 @@ def test_warm_filtered_plan_is_a_broadcast_semi_join(spark, warm_engine):
     variants = [Variant("original", 1.0, 2, "best"), Variant("tokenized", 0.8, 2, "all")]
     filter_sql = warm_engine._filter_sql({"lang": {"$in": ["th", "th-en"]}})
     for plan in (
-        warm_engine._warm_ranked(single, filter_sql=filter_sql, k=10),
-        warm_engine._warm_ranked(
+        warm_engine._ranked_topk(single, filter_sql=filter_sql, k=10),
+        warm_engine._ranked_topk(
             multi, variants, filter_sql=filter_sql, required=required_terms(variants), k=10
         ),
     ):
@@ -205,12 +205,15 @@ def test_warm_filtered_plan_is_a_broadcast_semi_join(spark, warm_engine):
 def test_warm_search_py4j_budget(spark, warm_engine):
     """A warm SearchService.search builds its plan in one spark.sql call,
     filtered or not: at most 20 Py4J round trips on a plan-cache miss and
-    fewer on the repeat (the Column-built plan took over a thousand).
-    Frees of proxies left by earlier work ("m d" commands, sent whenever
-    Python's garbage collector runs) are not the request's own calls and
-    are not counted."""
+    fewer on the repeat (the Column-built plan took over a thousand).  A
+    federated search over two warm engines composes both branches into
+    one statement: at most 12 round trips, collect included.  Frees of
+    proxies left by earlier work ("m d" commands, sent whenever Python's
+    garbage collector runs) are not the request's own calls and are not
+    counted."""
     import gc
 
+    from meilisearch_thai_spark.query.federation import federated_search
     from meilisearch_thai_spark.query.service import SearchService
 
     svc = SearchService(spark, warm_engine.index_dir)
@@ -236,6 +239,14 @@ def test_warm_search_py4j_budget(spark, warm_engine):
             miss, hit = counts
             assert miss <= 20, (filters, counts)
             assert hit < miss, (filters, counts)
+        engines = {"a": warm_engine, "b": svc.engine}
+        counts = []
+        for _ in range(2):
+            gc.collect()
+            calls.clear()
+            assert federated_search(engines, ["เทคโนโลยี", "อาหาร"], k=10).collect()
+            counts.append(len(calls))
+        assert counts[1] <= 12, counts
     finally:
         del client.send_command
     svc.engine.postings.unpersist()
