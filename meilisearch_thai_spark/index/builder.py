@@ -188,6 +188,41 @@ def idf(df: np.ndarray | float, n_docs: int) -> np.ndarray | float:
     return np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
+def bm25(df, tf, dl, n_docs: int, k1: float, b: float, avgdl, w=1.0) -> np.ndarray:
+    """The numpy BM25 term score of posting rows — the one definition both
+    the build (block-max bounds) and the query kernels (heaps, the fielded
+    warm tier) evaluate:
+    ``w * idf * (tf*(k1+1)) / (tf + k1*(1-b+b*dl/avgdl))``.
+
+    ``w``/``avgdl`` are scalars or per-row arrays (:func:`field_weights`);
+    ``w=1.0`` when unfielded, and ``1.0*x`` is exact, so one operation order
+    keeps every bound bit-identical to the scores it bounds."""
+    tf = np.asarray(tf, dtype=np.float64)
+    dl = np.asarray(dl, dtype=np.float64)
+    return w * idf(np.asarray(df, dtype=np.float64), n_docs) * (tf * (k1 + 1.0)) / (
+        tf + k1 * (1.0 - b + b * dl / avgdl)
+    )
+
+
+def field_weights(
+    terms, field_params: dict[str, tuple[float, float]] | None, avgdl: float
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per-term (weight, avgdl, base term): a field-prefixed term resolves
+    to its field's index-setting weight and per-field avgdl, its prefix
+    stripped; any other term (or an unfielded index) is (1.0, avgdl, term).
+    O(#terms) Python — callers pass one term per block or group."""
+    n = len(terms)
+    w, adl = np.ones(n), np.full(n, float(avgdl))
+    base = np.empty(n, dtype=object)
+    for i, t in enumerate(terms):
+        pre, sep, rest = t.partition(FIELD_SEP)
+        if field_params and sep:
+            w[i], adl[i] = field_params.get(pre, (1.0, avgdl))
+            t = rest
+        base[i] = t
+    return w, adl, base
+
+
 def url_doc_id_map(
     pages: DataFrame, partitions: int | None = None, _caches: list[DataFrame] | None = None
 ) -> DataFrame:
@@ -490,28 +525,13 @@ def _encode_sorted_frame(
     blens = np.diff(np.append(bstarts, n)).astype(np.int32)
     block_id = (gix[bstarts] // block_size).astype(np.int32)
 
-    idf_v = idf(dfs.astype(np.float64), n_docs)
-    tfs_f = tfs.astype(np.float64)
+    w, adl = 1.0, avgdl
     if field_params:
-        # per-(term, bucket) group lookup of (weight, per-field avgdl) by the
-        # term's field prefix, broadcast to rows via the group run-lengths —
-        # O(#groups) Python, fully vectorized arithmetic after
-        w_g = np.ones(len(gstarts))
-        a_g = np.full(len(gstarts), avgdl)
-        for j, gs in enumerate(gstarts):
-            t = terms[gs]
-            pre, sep, _rest = t.partition(FIELD_SEP)
-            if sep:
-                w_g[j], a_g[j] = field_params.get(pre, (1.0, avgdl))
-        w_row = np.repeat(w_g, glens)
-        a_row = np.repeat(a_g, glens)
-        scores = w_row * idf_v * (tfs_f * (k1 + 1.0)) / (
-            tfs_f + k1 * (1.0 - b + b * dls.astype(np.float64) / a_row)
-        )
-    else:
-        scores = idf_v * (tfs_f * (k1 + 1.0)) / (
-            tfs_f + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl)
-        )
+        # per-(term, bucket) group weight and avgdl, broadcast to rows via
+        # the group run-lengths
+        w_g, a_g, _base = field_weights(terms[gstarts], field_params, avgdl)
+        w, adl = np.repeat(w_g, glens), np.repeat(a_g, glens)
+    scores = bm25(dfs, tfs, dls, n_docs, k1, b, adl, w)
     bmax = np.maximum.reduceat(scores, bstarts)
 
     deltas = np.empty_like(ids)

@@ -60,13 +60,12 @@ def varbyte_encode_chunks(values: np.ndarray, chunk_starts: np.ndarray) -> list[
     return [flat[bounds[i] : bounds[i + 1]] for i in range(len(chunk_starts))]
 
 
-def varbyte_decode(buf: bytes) -> np.ndarray:
-    """Decode to uint64 array; vectorized (≤10 passes over byte planes)."""
-    if not buf:
-        return np.zeros(0, dtype=np.uint64)
+def _varbyte_split(buf: bytes) -> tuple[np.ndarray, np.ndarray]:
+    """(decoded uint64 values, byte index of each value's last byte)."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    is_last = (b & 0x80) == 0
-    ends = np.flatnonzero(is_last)
+    ends = np.flatnonzero((b & 0x80) == 0)
+    if not len(ends):
+        return np.zeros(0, dtype=np.uint64), ends
     starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
@@ -75,7 +74,12 @@ def varbyte_decode(buf: bytes) -> np.ndarray:
     for i in range(int(lens.max())):
         sel = lens > i
         values[sel] |= (b[starts[sel] + i] & np.uint64(0x7F)).astype(np.uint64) << np.uint64(7 * i)
-    return values
+    return values, ends
+
+
+def varbyte_decode(buf: bytes) -> np.ndarray:
+    """Decode to uint64 array; vectorized (≤10 passes over byte planes)."""
+    return _varbyte_split(buf)[0]
 
 
 def encode_doc_block(doc_ids: np.ndarray, tfs: np.ndarray) -> tuple[bytes, bytes]:
@@ -91,6 +95,28 @@ def decode_doc_block(doc_bytes: bytes, tf_bytes: bytes) -> tuple[np.ndarray, np.
     """Decode one posting block back to (doc_ids, tfs)."""
     deltas = varbyte_decode(doc_bytes)
     return np.cumsum(deltas, dtype=np.uint64), varbyte_decode(tf_bytes)
+
+
+def decode_blocks(doc_bytes, *streams) -> tuple[np.ndarray, ...]:
+    """Decode a batch of posting blocks in one pass — the posting decoder of
+    every whole-batch consumer (warm tier, scoring kernels, compaction,
+    doc-id sets).
+
+    ``doc_bytes`` and each of ``streams`` (tf_bytes, dl_bytes, …) are
+    sequences of per-block byte strings, every block non-empty.  Varbyte
+    streams are self-delimiting, so each column's buffers concatenate into
+    ONE decode call, and the per-block delta→absolute cumsum becomes one
+    segmented cumsum (uint64 wrap-around cancels in the subtraction).
+    Returns ``(per-block doc counts, doc ids as int64, *streams as
+    uint64)``, values flat in block order — ~6× over a per-block loop."""
+    lens = np.fromiter(map(len, doc_bytes), dtype=np.int64, count=len(doc_bytes))
+    deltas, ends = _varbyte_split(b"".join(doc_bytes))
+    # a block's first value = the number of values ending before its bytes
+    starts = np.searchsorted(ends, np.cumsum(lens) - lens)
+    counts = np.diff(np.append(starts, len(deltas)))
+    csum = np.cumsum(deltas, dtype=np.uint64)
+    ids = (csum - np.repeat(csum[starts] - deltas[starts], counts)).astype(np.int64)
+    return (counts, ids, *(varbyte_decode(b"".join(s)) for s in streams))
 
 
 def decode_block_positions(pos_bytes: bytes, tfs: np.ndarray) -> list[np.ndarray]:

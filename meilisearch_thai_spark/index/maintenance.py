@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .builder import BM25Params, IndexMeta, encode_postings, load_meta
-from .codec import decode_block_positions, varbyte_decode
+from .codec import decode_block_positions, decode_blocks, varbyte_decode
 
 TOMBSTONES = "tombstones"
 
@@ -284,28 +284,18 @@ def _make_block_unpacker(excluded: list[int], positional: bool):
     """posting blocks → surviving (term, doc_id, tf, doc_len[, positions])
     rows — the decode half of compaction and merging.
 
-    Non-positional path is whole-batch vectorized: varbyte streams are
-    self-delimiting, so ALL blocks' buffers concatenate into three decode
-    calls per Arrow batch, split back by the blocks' ``n_docs`` counts, and
-    the per-block delta→absolute cumsum becomes one segmented cumsum —
-    ~6× over the per-block Python loop (which the positional path keeps:
-    per-doc position lists don't flatten)."""
+    Non-positional path is whole-batch vectorized (:func:`codec.decode_blocks`);
+    the positional path keeps a per-block loop, because per-doc position
+    lists don't flatten."""
     excl = np.sort(np.asarray(excluded, dtype=np.int64)) if excluded else None
 
     def unpack_fast(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf):
-                continue
-            n_per = pdf["n_docs"].to_numpy(np.int64)
-            deltas = varbyte_decode(b"".join(pdf["doc_bytes"]))
-            tfs = varbyte_decode(b"".join(pdf["tf_bytes"])).astype(np.int64)
-            dls = varbyte_decode(b"".join(pdf["dl_bytes"])).astype(np.int64)
-            starts = np.zeros(len(n_per), dtype=np.int64)
-            np.cumsum(n_per[:-1], out=starts[1:])
-            csum = np.cumsum(deltas, dtype=np.uint64)
-            base = csum[starts] - deltas[starts]  # cumsum before each block
-            ids = (csum - np.repeat(base, n_per)).astype(np.int64)
-            terms = np.repeat(pdf["term"].to_numpy(object), n_per)
+            counts, ids, tfs, dls = decode_blocks(
+                pdf["doc_bytes"], pdf["tf_bytes"], pdf["dl_bytes"]
+            )
+            terms = np.repeat(pdf["term"].to_numpy(object), counts)
+            tfs, dls = tfs.astype(np.int64), dls.astype(np.int64)
             if excl is not None:
                 keep = ~np.isin(ids, excl)
                 terms, ids, tfs, dls = terms[keep], ids[keep], tfs[keep], dls[keep]

@@ -2,22 +2,26 @@
 
 The reference fans out per-variant HTTP searches to MeiliSearch under an
 asyncio semaphore (src/search_proxy/services/search_executor.py:55-176); here
-ALL variants score in ONE Spark job, on one of two routes chosen by the
-serving planner (:meth:`SearchEngine._ranked_topk`):
+ALL variants score in ONE Spark job, on one of three routes chosen by the
+serving planner (:meth:`SearchEngine._ranked_sql`):
 
 - warm: one cached SQL statement over the decoded in-memory tier —
   ``term IN (…)`` scan [+ ``doc_id IN`` the filter's doc_stats ids, a
   broadcast semi-join] → explode(term → variant ids) → BM25 SQL scalar →
   per-(variant, doc) sum, exchange-free → :func:`rank_sql`;
-- compressed: term-pushdown scan of the posting blocks → block-max bucket
+- exact: the same statement over the request's own posting blocks,
+  decoded into tier rows behind a temp view — requests that ask for no
+  top-k (``k=None``: sort, distinct, cursor) when the tier cannot serve;
+- block-max: term-pushdown scan of the posting blocks → block-max bucket
   heaps in a pandas UDF (cogrouped with the allowed doc ids when a filter
   or a high-df negative keyword restricts candidates) → :func:`rank_sql`.
 
-Both rank with the same statement: matching-strategy filter, variant
-weights and boosts, per-doc dedup, threshold, top-k.  Sort, distinct and
-cursor requests ask for no top-k (``k=None``: every matching doc, the
-compressed route then decoding full scores), and the federation composes
-each index's statement as SQL text (:meth:`SearchEngine._ranked_sql`).
+All rank with the same statement: matching-strategy filter, variant
+weights and boosts, per-doc dedup, threshold, top-k.  BM25 has one
+definition per substrate: the SQL scalar (``_warm_s_sql``) and the numpy
+kernel (:func:`builder.bm25`, shared with the build's block-max bounds);
+posting blocks decode through :mod:`index.codec`.  The federation
+composes each index's statement as SQL text (:meth:`SearchEngine._ranked_sql`).
 """
 
 from __future__ import annotations
@@ -36,8 +40,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..index.builder import FIELD_SEP, IndexMeta, load_meta
-from ..index.codec import varbyte_decode
+from ..index.builder import FIELD_SEP, IndexMeta, bm25, field_weights, load_meta
+from ..index.codec import decode_blocks, decode_doc_block
 from .pipeline import split_negative_keywords  # re-export (parse lives in Q1-Q8)
 from .requests import filters_to_sql, sql_str
 
@@ -46,27 +50,6 @@ from .requests import filters_to_sql, sql_str
 _VIEW_SEQ = itertools.count(1)
 # guards the warm plan caches' insert-and-evict (_warm_ranked)
 _PLAN_LOCK = threading.Lock()
-
-
-def _row_field(term: str, field_params, avgdl: float) -> tuple[float, float, str]:
-    """(weight, avgdl, base_term) for one posting row — identity on
-    unfielded indexes; on fielded indexes resolves the term's field prefix
-    to its index-setting weight and per-field avgdl (builder.FIELD_SEP)."""
-    if field_params:
-        pre, sep, base = term.partition(FIELD_SEP)
-        if sep:
-            w, adl = field_params.get(pre, (1.0, avgdl))
-            return w, adl, base
-    return 1.0, avgdl, term
-
-_SCORED_SCHEMA = T.StructType(
-    [
-        T.StructField("variant_id", T.IntegerType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("term", T.StringType(), False),
-        T.StructField("score", T.DoubleType(), False),
-    ]
-)
 
 
 @dataclass
@@ -178,42 +161,6 @@ def rank_sql(
     return f"SELECT {out} FROM {rel}{where} ORDER BY score DESC, doc_id ASC LIMIT {int(k)}"
 
 
-def _make_decoder(k1: float, b: float, avgdl: float, n_docs: int, field_params=None):
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_vid, out_doc, out_term, out_score = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                deltas = varbyte_decode(row.doc_bytes)
-                ids = np.cumsum(deltas, dtype=np.uint64).astype(np.int64)
-                tfs = varbyte_decode(row.tf_bytes).astype(np.float64)
-                dls = varbyte_decode(row.dl_bytes).astype(np.float64)
-                w, adl, base = _row_field(row.term, field_params, avgdl)
-                term_idf = np.log(1.0 + (n_docs - row.df + 0.5) / (row.df + 0.5))
-                scores = w * term_idf * (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * dls / adl))
-                n = len(ids)
-                out_vid.append(np.full(n, row.variant_id, dtype=np.int32))
-                out_doc.append(ids)
-                # base term, not the field-prefixed one: downstream
-                # terms_matched counts DISTINCT QUERY WORDS matched (a word
-                # hitting both title and content is one match)
-                out_term.append(np.full(n, base, dtype=object))
-                out_score.append(scores)
-            if not out_doc:
-                continue
-            yield pd.DataFrame(
-                {
-                    "variant_id": np.concatenate(out_vid),
-                    "doc_id": np.concatenate(out_doc),
-                    "term": np.concatenate(out_term),
-                    "score": np.concatenate(out_score),
-                }
-            )
-
-    return decode
-
-
 def _edit_distance_within(a: str, b: str, k: int) -> bool:
     """Banded Damerau-Levenshtein (OSA): True iff distance ≤ k (O(len·k)).
 
@@ -298,9 +245,7 @@ def _phrase_docs(g, ordered_terms: list[str]) -> set[int]:
     for row in g.itertuples(index=False):
         if row.term not in want or not row.pos_bytes:
             continue
-        deltas = varbyte_decode(row.doc_bytes)
-        ids = np.cumsum(deltas, dtype=np.uint64).astype(np.int64)
-        tfs = varbyte_decode(row.tf_bytes)
+        ids, tfs = decode_doc_block(row.doc_bytes, row.tf_bytes)
         perterm.setdefault(row.term, {}).update(_decode_doc_positions(ids, tfs, row.pos_bytes))
     if set(perterm) != want:
         return set()
@@ -331,39 +276,29 @@ def _phrase_docs_any_field(g, terms: list[str], prefixes: list[str]) -> set[int]
     return ok
 
 
-def _score_block_rows(
-    vg, k1: float, b: float, avgdl: float, n_docs: int, field_params
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode one (variant[, bucket]) group of posting blocks into flat
-    (doc_ids, scores, base_term_ids) arrays.
-
-    ``base_term_ids`` number the DISTINCT BASE terms (field prefix stripped)
-    so callers can count matched query words per doc: on a fielded index the
-    same word matching in two attributes is still ONE matched word."""
-    ids_l, score_l, tid_l = [], [], []
-    tids: dict[str, int] = {}
-    for row in vg.itertuples(index=False):
-        deltas = varbyte_decode(row.doc_bytes)
-        ids = np.cumsum(deltas, dtype=np.uint64).astype(np.int64)
-        tfs = varbyte_decode(row.tf_bytes).astype(np.float64)
-        dls = varbyte_decode(row.dl_bytes).astype(np.float64)
-        w, adl, base = _row_field(row.term, field_params, avgdl)
-        idf = np.log(1.0 + (n_docs - row.df + 0.5) / (row.df + 0.5))
-        score_l.append(w * idf * (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * dls / adl)))
-        ids_l.append(ids)
-        tid_l.append(np.full(len(ids), tids.setdefault(base, len(tids)), dtype=np.int64))
-    return np.concatenate(ids_l), np.concatenate(score_l), np.concatenate(tid_l)
+def _score_blocks(
+    pdf: pd.DataFrame, k1: float, b: float, avgdl: float, n_docs: int, field_params
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Decode and BM25-score a frame of posting blocks (one batch decode,
+    one :func:`builder.bm25` call) → ``(per-block doc counts, doc_ids,
+    scores, per-block base terms)``: a fielded term scores with its field's
+    weight and avgdl and reports its base term (field prefix stripped)."""
+    counts, ids, tfs, dls = decode_blocks(pdf["doc_bytes"], pdf["tf_bytes"], pdf["dl_bytes"])
+    w, adl, base = field_weights(pdf["term"].to_numpy(object), field_params, avgdl)
+    df = np.repeat(pdf["df"].to_numpy(np.int64), counts)
+    scores = bm25(df, tfs, dls, n_docs, k1, b, np.repeat(adl, counts), np.repeat(w, counts))
+    return counts, ids, scores, base
 
 
 def _agg_doc_scores(
-    ids: np.ndarray, scores: np.ndarray, tids: np.ndarray, fielded: bool
+    ids: np.ndarray, scores: np.ndarray, tids: np.ndarray | None
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(per-row doc, score, base-term id) → per-doc (uids, score sums,
-    distinct-base-term counts).  Unfielded indexes keep the cheap bincount
-    (each (term, doc) row is unique there)."""
+    distinct-base-term counts).  Unfielded indexes (``tids=None``) keep the
+    cheap bincount (each (term, doc) row is unique there)."""
     uids, inv = np.unique(ids, return_inverse=True)
     sums = np.bincount(inv, weights=scores)
-    if not fielded:
+    if tids is None:
         return uids, sums, np.bincount(inv)
     ntid = int(tids.max()) + 1 if len(tids) else 1
     upair = np.unique(inv * ntid + tids)
@@ -371,19 +306,51 @@ def _agg_doc_scores(
     return uids, sums, cnts
 
 
-def _make_bucket_topk(
+def _make_group_scorer(
     k1: float,
     b: float,
     avgdl: float,
     n_docs: int,
-    k: int,
     required_terms: dict[int, int],
     phrase_terms: dict[int, list[str]] | None = None,
     excluded: np.ndarray | None = None,
     field_params=None,
     field_prefixes: list[str] | None = None,
 ):
-    """Block-max pruned per-partition top-k (R11 block-max WAND, SURVEY §7.4).
+    """The per-group step both heap kernels share:
+    ``score(variant_id, blocks, allowed=None)`` decodes and scores one
+    (variant[, bucket]) group of posting blocks → per-doc ``(uids, sums,
+    cnts)`` (``cnts`` = DISTINCT base words matched: on a fielded index a
+    word matching in two attributes is one match), then drops docs outside
+    ``allowed``, excluded docs (tombstones, negative keywords — inside the
+    heap, so pages stay full), docs short of the variant's required count,
+    and finally docs failing its phrase check."""
+
+    def score(vid, g: pd.DataFrame, allowed: np.ndarray | None = None):
+        vid = int(vid)
+        counts, ids, scores, base = _score_blocks(g, k1, b, avgdl, n_docs, field_params)
+        tids = np.repeat(np.unique(base, return_inverse=True)[1], counts) if field_params else None
+        uids, sums, cnts = _agg_doc_scores(ids, scores, tids)
+        keep = np.ones(len(uids), dtype=bool)
+        if allowed is not None:
+            keep &= np.isin(uids, allowed)
+        if excluded is not None:
+            keep &= ~np.isin(uids, excluded)
+        if vid in required_terms:
+            keep &= cnts == required_terms[vid]
+        uids, sums, cnts = uids[keep], sums[keep], cnts[keep]
+        if phrase_terms and vid in phrase_terms and len(uids):
+            ok = _phrase_docs_any_field(g, phrase_terms[vid], field_prefixes or [])
+            keep = np.fromiter((int(d) in ok for d in uids), dtype=bool, count=len(uids))
+            uids, sums, cnts = uids[keep], sums[keep], cnts[keep]
+        return uids, sums, cnts
+
+    return score
+
+
+def _make_bucket_topk(score, k: int):
+    """Block-max pruned per-partition top-k (R11 block-max WAND, SURVEY §7.4)
+    over the groups ``score`` (:func:`_make_group_scorer`) ranks.
 
     Buckets are doc-ranges aligned across terms (bucket = doc_id//span), so a
     doc's WHOLE multi-term score lives inside one bucket: per-bucket sums are
@@ -404,7 +371,6 @@ def _make_bucket_topk(
         pdf = pd.concat(parts, ignore_index=True)
         out_vid, out_doc, out_score, out_cnt = [], [], [], []
         for vid, vg in pdf.groupby("variant_id", sort=False):
-            need = required_terms.get(int(vid))
             # upper bound per bucket: Σ over terms of that term's best block
             ub = (
                 vg.groupby(["bucket", "term"])["block_max_score"].max().groupby(level=0).sum()
@@ -416,20 +382,7 @@ def _make_bucket_topk(
                     break  # descending bounds: nothing below can enter top-k
                     # (strict <: an equal-bound bucket could still win a
                     # doc_id tie-break at exactly the k-th score)
-                g = grouped[bucket]
-                ids, scores, tids = _score_block_rows(g, k1, b, avgdl, n_docs, field_params)
-                uids, sums, cnts = _agg_doc_scores(ids, scores, tids, bool(field_params))
-                if excluded is not None and len(uids):
-                    # tombstones excluded INSIDE the heap so pages stay full
-                    keep = ~np.isin(uids, excluded)
-                    uids, sums, cnts = uids[keep], sums[keep], cnts[keep]
-                if need is not None:
-                    keep = cnts == need
-                    uids, sums, cnts = uids[keep], sums[keep], cnts[keep]
-                if phrase_terms and int(vid) in phrase_terms and len(uids):
-                    ok = _phrase_docs_any_field(g, phrase_terms[int(vid)], field_prefixes or [])
-                    keep = np.fromiter((int(d) in ok for d in uids), dtype=bool, count=len(uids))
-                    uids, sums, cnts = uids[keep], sums[keep], cnts[keep]
+                uids, sums, cnts = score(vid, grouped[bucket])
                 for d, s, c in zip(uids, sums, cnts):
                     item = (float(s), -int(d), int(c))
                     if len(heap) < k:
@@ -465,18 +418,7 @@ def _empty_topk_pdf() -> pd.DataFrame:
     )
 
 
-def _make_filtered_bucket_topk(
-    k1: float,
-    b: float,
-    avgdl: float,
-    n_docs: int,
-    k: int,
-    required_terms: dict[int, int],
-    phrase_terms: dict[int, list[str]] | None = None,
-    excluded: np.ndarray | None = None,
-    field_params=None,
-    field_prefixes: list[str] | None = None,
-):
+def _make_filtered_bucket_topk(score, k: int):
     """Per-bucket top-k restricted to an allowed-doc set (P4 filtered search).
 
     Runs as a cogroup of (candidate blocks, allowed doc ids) per bucket: a
@@ -491,26 +433,9 @@ def _make_filtered_bucket_topk(
         if not len(blocks_pdf) or not len(allowed_pdf):
             return _empty_topk_pdf()
         allowed = np.sort(allowed_pdf["doc_id"].to_numpy(np.int64))
-        if excluded is not None:
-            allowed = allowed[~np.isin(allowed, excluded)]
-        if not len(allowed):
-            return _empty_topk_pdf()
         out_vid, out_doc, out_score, out_cnt = [], [], [], []
         for vid, vg in blocks_pdf.groupby("variant_id", sort=False):
-            need = required_terms.get(int(vid))
-            ids, scores, tids = _score_block_rows(vg, k1, b, avgdl, n_docs, field_params)
-            keep = np.isin(ids, allowed, assume_unique=False)
-            ids, scores, tids = ids[keep], scores[keep], tids[keep]
-            if not len(ids):
-                continue
-            uids, sums, cnts = _agg_doc_scores(ids, scores, tids, bool(field_params))
-            if need is not None:
-                keep = cnts == need
-                uids, sums, cnts = uids[keep], sums[keep], cnts[keep]
-            if phrase_terms and int(vid) in phrase_terms and len(uids):
-                ok = _phrase_docs_any_field(vg, phrase_terms[int(vid)], field_prefixes or [])
-                keep = np.fromiter((int(d) in ok for d in uids), dtype=bool, count=len(uids))
-                uids, sums, cnts = uids[keep], sums[keep], cnts[keep]
+            uids, sums, cnts = score(vid, vg, allowed)
             if not len(uids):
                 continue
             order = np.lexsort((uids, -sums))[:k]
@@ -652,39 +577,6 @@ _WARM_SCHEMA = T.StructType(
 )
 
 
-def _make_warm_exploder():
-    """postings blocks → decoded (term, doc_id, tf, dl, df) rows — the one-off
-    pass that builds the hot serving tier.
-
-    One pandas DataFrame per ARROW BATCH (numpy arrays concatenated across
-    blocks), not one per posting block: per-block frame construction + concat
-    dominated the tier load at scale (~617k blocks for a 3M-doc index)."""
-
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            terms_l, ids_l, tf_l, dl_l, df_l = [], [], [], [], []
-            for row in pdf.itertuples(index=False):
-                ids = np.cumsum(varbyte_decode(row.doc_bytes), dtype=np.uint64).astype(np.int64)
-                n = len(ids)
-                terms_l.append(np.full(n, row.term, dtype=object))
-                ids_l.append(ids)
-                tf_l.append(varbyte_decode(row.tf_bytes).astype(np.int32))
-                dl_l.append(varbyte_decode(row.dl_bytes).astype(np.int32))
-                df_l.append(np.full(n, row.df, dtype=np.int64))
-            if ids_l:
-                yield pd.DataFrame(
-                    {
-                        "term": np.concatenate(terms_l),
-                        "doc_id": np.concatenate(ids_l),
-                        "tf": np.concatenate(tf_l),
-                        "dl": np.concatenate(dl_l),
-                        "df": np.concatenate(df_l),
-                    }
-                )
-
-    return explode
-
-
 _WARM_FIELDED_SCHEMA = T.StructType(
     [
         T.StructField("term", T.StringType(), False),
@@ -693,35 +585,55 @@ _WARM_FIELDED_SCHEMA = T.StructType(
     ]
 )
 
+_DOC_ID_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType(), False)])
 
-def _make_warm_fielded_exploder(k1: float, b: float, avgdl: float, n_docs: int, field_params):
-    """Fielded twin of :func:`_make_warm_exploder`: per posting row the
-    weighted per-field BM25 term score is FINAL at warm-build time (w, idf,
-    per-field avgdl are all index settings), so the tier stores
-    (base term, doc_id, score) directly — the caller merges multi-field rows
-    into one row per (word, doc), keeping the serving plan's
-    count(*) == matched-word-count property."""
+
+def _make_tier_exploder(k1: float, b: float, avgdl: float, n_docs: int, field_params):
+    """posting blocks → decoded warm-tier rows, one pandas DataFrame per
+    ARROW BATCH (one :func:`codec.decode_blocks` call; per-block frames
+    dominated the tier load at scale, ~617k blocks for a 3M-doc index).
+
+    Unfielded rows are (term, doc_id, tf, dl, df) and score in SQL.  On a
+    fielded index the weighted per-field BM25 term score is FINAL at decode
+    time (w, idf, per-field avgdl are all index settings), so the rows are
+    (base term, doc_id, s) — the caller merges multi-field rows into one
+    row per (word, doc), keeping the serving plan's count(*) ==
+    matched-word-count property."""
 
     def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            terms_l, ids_l, s_l = [], [], []
-            for row in pdf.itertuples(index=False):
-                ids = np.cumsum(varbyte_decode(row.doc_bytes), dtype=np.uint64).astype(np.int64)
-                tfs = varbyte_decode(row.tf_bytes).astype(np.float64)
-                dls = varbyte_decode(row.dl_bytes).astype(np.float64)
-                w, adl, base = _row_field(row.term, field_params, avgdl)
-                idf = np.log(1.0 + (n_docs - row.df + 0.5) / (row.df + 0.5))
-                s_l.append(w * idf * (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * dls / adl)))
-                terms_l.append(np.full(len(ids), base, dtype=object))
-                ids_l.append(ids)
-            if ids_l:
-                yield pd.DataFrame(
-                    {
-                        "term": np.concatenate(terms_l),
-                        "doc_id": np.concatenate(ids_l),
-                        "s": np.concatenate(s_l),
-                    }
-                )
+            if not len(pdf):
+                continue
+            if field_params:
+                counts, ids, s, base = _score_blocks(pdf, k1, b, avgdl, n_docs, field_params)
+                yield pd.DataFrame({"term": np.repeat(base, counts), "doc_id": ids, "s": s})
+                continue
+            counts, ids, tfs, dls = decode_blocks(
+                pdf["doc_bytes"], pdf["tf_bytes"], pdf["dl_bytes"]
+            )
+            yield pd.DataFrame(
+                {
+                    "term": np.repeat(pdf["term"].to_numpy(object), counts),
+                    "doc_id": ids,
+                    "tf": tfs.astype(np.int32),
+                    "dl": dls.astype(np.int32),
+                    "df": np.repeat(pdf["df"].to_numpy(np.int64), counts),
+                }
+            )
+
+    return explode
+
+
+def _make_doc_id_exploder(excluded: np.ndarray | None):
+    """posting blocks → their doc ids minus ``excluded`` (one batch decode
+    per Arrow batch; the exclusion ships in the closure, not the plan)."""
+
+    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = decode_blocks(pdf["doc_bytes"])[1]
+            if excluded is not None:
+                ids = ids[~np.isin(ids, excluded)]
+            yield pd.DataFrame({"doc_id": ids})
 
     return explode
 
@@ -842,8 +754,9 @@ class SearchEngine:
 
     # ------------------------------------------------------------------
     def warm_postings(self) -> DataFrame:
-        """The hot serving tier: postings decoded ONCE into cached
-        (term, doc_id, tf, dl, df) rows, hash-partitioned by doc_id.
+        """The hot serving tier: postings decoded ONCE (:meth:`_tier_rows`)
+        into cached (term, doc_id, tf, dl, df) rows — (term, doc_id, s) on a
+        fielded index — hash-partitioned by doc_id and term-sorted within.
 
         Point queries over this tier are pure JVM — filter(InSet) → hash agg
         (exchange-free: the cache partitioning already clusters doc_id) →
@@ -865,8 +778,10 @@ class SearchEngine:
         at 100×: head terms carry most of the postings AND most of the query
         traffic, so a small term set buys most of the latency win, and
         queries touching any cold term transparently fall back to the
-        compressed block-max path (:meth:`_warm_covers` routes per query;
-        results are identical, tested)."""
+        compressed posting blocks (:meth:`_warm_covers` routes per query;
+        results are identical, tested): a top-k to the block-max heaps, an
+        uncut request (sort, distinct, cursor) to the same warm statement
+        over its own terms' blocks, decoded by :meth:`_tier_rows`."""
         if self._warm is None:
             src = self.postings
             if self._warm_budget is not None:
@@ -902,29 +817,7 @@ class SearchEngine:
                 src = src.filter(key.isin(*self._warm_terms)) if self._warm_terms else src.filter(F.lit(False))
             rows = max(self.meta.n_postings, 1)
             P = max(1, min(self.spark.sparkContext.defaultParallelism, rows * 32 // (64 << 20) + 1))
-            if self._fp:
-                # fielded: scores are final at warm time (weights/avgdl are
-                # index settings); merge per (word, doc) across fields ONCE
-                # here so every query keeps count(*) == matched-word-count
-                warm = (
-                    src.select("term", "df", "doc_bytes", "tf_bytes", "dl_bytes")
-                    .mapInPandas(
-                        _make_warm_fielded_exploder(
-                            self.meta.k1, self.meta.b, self.meta.avgdl,
-                            self.meta.n_docs, self._fp,
-                        ),
-                        _WARM_FIELDED_SCHEMA,
-                    )
-                    .groupBy("term", "doc_id")
-                    .agg(F.sum("s").alias("s"))
-                )
-            else:
-                warm = src.select(
-                    "term", "df", "doc_bytes", "tf_bytes", "dl_bytes"
-                ).mapInPandas(_make_warm_exploder(), _WARM_SCHEMA)
-            # deleted docs never enter the serving tier — zero per-query
-            # cost for deletes on the warm path
-            warm = self._exclude_deleted(warm)
+            warm = self._tier_rows(src)
             self._warm = (
                 warm.repartition(P, "doc_id")
                 # term-sorted WITHIN each doc_id partition: the in-memory
@@ -940,6 +833,23 @@ class SearchEngine:
             )
             self._warm.count()
         return self._warm
+
+    def _tier_rows(self, blocks: DataFrame) -> DataFrame:
+        """Posting blocks → warm-tier rows, the shape
+        :meth:`_warm_scored_sql` reads: (term, doc_id, tf, dl, df), or on a
+        fielded index (base term, doc_id, s) merged ONCE per (word, doc)
+        across fields, so every query keeps count(*) == matched-word-count.
+        Deleted docs never enter (zero per-query cost for deletes).  The
+        decode of the warm tier (:meth:`warm_postings` adds the partitioning
+        and the persist) and of the exact route (:meth:`_ranked_sql`)."""
+        m = self.meta
+        rows = blocks.select("term", "df", "doc_bytes", "tf_bytes", "dl_bytes").mapInPandas(
+            _make_tier_exploder(m.k1, m.b, m.avgdl, m.n_docs, self._fp),
+            _WARM_FIELDED_SCHEMA if self._fp else _WARM_SCHEMA,
+        )
+        if self._fp:
+            rows = rows.groupBy("term", "doc_id").agg(F.sum("s").alias("s"))
+        return self._exclude_deleted(rows)
 
     def _warm_view(self) -> str:
         """The warm tier's temp view name (registered once per tier build)."""
@@ -1480,31 +1390,6 @@ class SearchEngine:
                 self._doomed_df = None
         return len(self._tombstones)
 
-    def score_variants(self, qterms: list[QueryTerm]) -> DataFrame:
-        """Per-(variant, doc) BM25 sums + matched-term counts."""
-        blocks = self.candidate_blocks(qterms)
-        decode = _make_decoder(
-            self.meta.k1, self.meta.b, self.meta.avgdl, self.meta.n_docs, self._fp
-        )
-        scored = blocks.select(
-            "variant_id", "term", "df", "doc_bytes", "tf_bytes", "dl_bytes"
-        ).mapInPandas(decode, _SCORED_SCHEMA)
-        scored = self._exclude_deleted(scored)
-        if self._fp:
-            # fielded: the decoder emits BASE terms, and a doc matching the
-            # same word in two attributes yields two rows — matched-word
-            # count must be distinct over base terms
-            return scored.groupBy("variant_id", "doc_id").agg(
-                F.sum("score").alias("score"),
-                F.countDistinct("term").alias("terms_matched"),
-            )
-        # count(*) == countDistinct(term): a doc appears in exactly one bucket
-        # per term, so each (variant, doc, term) row is unique
-        return scored.groupBy("variant_id", "doc_id").agg(
-            F.sum("score").alias("score"),
-            F.count("*").alias("terms_matched"),
-        )
-
     def score_variants_topk(
         self,
         qterms: list[QueryTerm],
@@ -1518,14 +1403,27 @@ class SearchEngine:
 
         One small shuffle of candidate *blocks* by (variant, bucket) — doc
         alignment of buckets across terms makes per-bucket scores final, so
-        decoded postings never shuffle at all (vs ``score_variants``, which
-        shuffles every decoded (variant, doc) row into a hash agg).  Output is
-        ≤ partitions × k rows per variant; merge with a global top-k.
+        decoded postings never shuffle at all, and buckets whose block-max
+        bound cannot reach the running k-th score never decode (the exact
+        route, for requests without a ``k``, decodes every candidate
+        posting into tier rows and aggregates them in the JVM instead,
+        :meth:`_ranked_sql`).  Output is ≤ partitions × k rows per variant;
+        merge with a global top-k.
         """
-        cols = [
-            "variant_id", "bucket", "term", "df", "block_max_score",
-            "doc_bytes", "tf_bytes", "dl_bytes",
-        ]
+        blocks, score = self._heap_inputs(
+            qterms, ["block_max_score"], required_terms, phrase_terms, extra_excluded
+        )
+        if not self._bucket_partitioned:
+            # cold path: establish bucket-completeness per partition explicitly
+            partitions = partitions or self.spark.sparkContext.defaultParallelism
+            blocks = blocks.repartition(partitions, "bucket")
+        return blocks.mapInPandas(_make_bucket_topk(score, k), _TOPK_SCHEMA)
+
+    def _heap_inputs(self, qterms, extra_cols, required_terms, phrase_terms, extra_excluded):
+        """(candidate blocks, per-group scorer) — the set-up both heap
+        routes share; phrase checks add ``pos_bytes`` and need a positional
+        index."""
+        cols = ["variant_id", "bucket", "term", "df", *extra_cols, "doc_bytes", "tf_bytes", "dl_bytes"]
         if phrase_terms:
             if not getattr(self.meta, "positional", False):
                 raise ValueError(
@@ -1533,18 +1431,12 @@ class SearchEngine:
                     "(build_index(positional=True))"
                 )
             cols.append("pos_bytes")
-        blocks = self.candidate_blocks(qterms).select(*cols)
-        if not self._bucket_partitioned:
-            # cold path: establish bucket-completeness per partition explicitly
-            partitions = partitions or self.spark.sparkContext.defaultParallelism
-            blocks = blocks.repartition(partitions, "bucket")
-        run = _make_bucket_topk(
-            self.meta.k1, self.meta.b, self.meta.avgdl, self.meta.n_docs, k,
-            required_terms or {}, phrase_terms,
-            self._merged_excluded(extra_excluded),
-            self._fp, self._lookup_prefixes(),
+        m = self.meta
+        score = _make_group_scorer(
+            m.k1, m.b, m.avgdl, m.n_docs, required_terms or {}, phrase_terms,
+            self._merged_excluded(extra_excluded), self._fp, self._lookup_prefixes(),
         )
-        return blocks.mapInPandas(run, _TOPK_SCHEMA)
+        return self.candidate_blocks(qterms).select(*cols), score
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """Document frequency per query term (drives 'frequency' matching).
@@ -1646,31 +1538,16 @@ class SearchEngine:
         are scored independently (no running cross-bucket threshold exists
         inside a cogroup), so the bound could never prune here — shipping it
         through the Arrow exchange was pure dead weight (ADVICE r2)."""
-        cols = [
-            "variant_id", "bucket", "term", "df",
-            "doc_bytes", "tf_bytes", "dl_bytes",
-        ]
-        if phrase_terms:
-            if not getattr(self.meta, "positional", False):
-                raise ValueError(
-                    "phrase matching requires a positional index "
-                    "(build_index(positional=True))"
-                )
-            cols.append("pos_bytes")
-        blocks = self.candidate_blocks(qterms).select(*cols)
+        blocks, score = self._heap_inputs(
+            qterms, [], required_terms, phrase_terms, extra_excluded
+        )
         allowed_b = allowed.withColumn(
             "bucket", (F.col("doc_id") / F.lit(self.meta.bucket_span)).cast("long")
-        )
-        run = _make_filtered_bucket_topk(
-            self.meta.k1, self.meta.b, self.meta.avgdl, self.meta.n_docs, k,
-            required_terms or {}, phrase_terms,
-            self._merged_excluded(extra_excluded),
-            self._fp, self._lookup_prefixes(),
         )
         return (
             blocks.groupby("bucket")
             .cogroup(allowed_b.groupby("bucket"))
-            .applyInPandas(run, _TOPK_SCHEMA)
+            .applyInPandas(_make_filtered_bucket_topk(score, k), _TOPK_SCHEMA)
         )
 
     def _drop_stopwords(self, terms: list[str]) -> list[str]:
@@ -2247,42 +2124,45 @@ class SearchEngine:
         tier enabled, no cold term on a budget-truncated tier, no
         attributesToSearchOn restriction), no variant needs positions
         (``phrase_terms``), and no high-df negative keyword left its
-        blocked ids distributed (``blocked``).  Otherwise the compressed
-        posting blocks: the block-max heaps for a top-k (cogrouped with the
-        allowed ids when a filter or ``blocked`` restricts candidates), the
-        full scores joined to the filter's ids and minus the negatives for
-        ``k=None`` (phrase checks need a heap, so they need a ``k``).  That
-        frame sits behind a temp view, dropped when the block exits — a
-        parsed Dataset keeps the resolved plan."""
+        blocked ids distributed (``blocked``).  Otherwise, without a ``k``
+        (exact): the same statement over the query terms' posting blocks,
+        decoded into tier rows (:meth:`_tier_rows`, the lookup honouring an
+        attributesToSearchOn restriction) minus ``blocked``.  With a ``k``:
+        the block-max heaps, cogrouped with the allowed ids when a filter
+        or ``blocked`` restricts candidates (phrase checks need a heap, so
+        they need a ``k``).  A decoded or heap frame sits behind a temp
+        view, dropped when the block exits — a parsed Dataset keeps the
+        resolved plan."""
         rank.update(required=required, k=k)
         if variants is None:
             rank.setdefault("dedup", len({q.variant_id for q in qterms}) > 1)
-        if blocked is None and not phrase_terms and self._warm_covers(qterms):
-            allowed = (
-                None if filter_sql is None
-                else f"SELECT doc_id FROM {self._stats_view()} WHERE {filter_sql}"
-            )
+        warm = blocked is None and not phrase_terms and self._warm_covers(qterms)
+        allowed = None  # the filter's semi-join side, for the SQL routes
+        if filter_sql is not None and (warm or k is None):
+            allowed = f"SELECT doc_id FROM {self._stats_view()} WHERE {filter_sql}"
+        if warm:
             scored = self._warm_scored_sql(self._warm_view(), qterms, neg_ids, allowed)
             yield rank_sql(scored, variants, **rank), True
             return
         heap = dict(required_terms=required, phrase_terms=phrase_terms, extra_excluded=neg_ids)
         if k is None:
-            scored = self.score_variants(qterms)
-            if filter_sql is not None:
-                scored = scored.join(self.doc_stats.filter(filter_sql).select("doc_id"), "doc_id")
-            scored = self._apply_negative_exclusion(scored, neg_ids, blocked)
+            blocks = self.postings.filter(F.col("term").isin(sorted(self._index_term_map(qterms))))
+            frame = self._tier_rows(blocks)
+            if blocked is not None:
+                frame = frame.join(blocked, "doc_id", "left_anti")
         elif filter_sql is None and blocked is None:
-            scored = self.score_variants_topk(qterms, k=k, **heap)
+            frame = self.score_variants_topk(qterms, k=k, **heap)
         else:
-            allowed = self.doc_stats.filter(filter_sql or "TRUE").select("doc_id")
+            allowed_ids = self.doc_stats.filter(filter_sql or "TRUE").select("doc_id")
             if blocked is not None:
                 # high-df negatives: allowed = docs ∖ blocked, never collected
-                allowed = allowed.join(blocked, "doc_id", "left_anti")
-            scored = self.score_variants_topk_filtered(qterms, k=k, allowed=allowed, **heap)
+                allowed_ids = allowed_ids.join(blocked, "doc_id", "left_anti")
+            frame = self.score_variants_topk_filtered(qterms, k=k, allowed=allowed_ids, **heap)
         name = f"mst_scored_{next(_VIEW_SEQ)}"
-        scored.createOrReplaceTempView(name)
+        frame.createOrReplaceTempView(name)
+        scored = name if k is not None else self._warm_scored_sql(name, qterms, neg_ids, allowed)
         try:
-            yield rank_sql(name, variants, **rank), False
+            yield rank_sql(scored, variants, **rank), False
         finally:
             self.spark.catalog.dropTempView(name)
 
@@ -2373,8 +2253,7 @@ class SearchEngine:
             # group, keep the doc's best field
             perdoc: dict[tuple[int, str], dict[str, np.ndarray]] = {}
             for row in g.itertuples(index=False):
-                ids = np.cumsum(varbyte_decode(row.doc_bytes), dtype=np.uint64).astype(np.int64)
-                tfs = varbyte_decode(row.tf_bytes)
+                ids, tfs = decode_doc_block(row.doc_bytes, row.tf_bytes)
                 posmap = _decode_doc_positions(ids, tfs, row.pos_bytes)
                 fid, sep, base = row.term.partition(FIELD_SEP)
                 if not sep:
@@ -2426,15 +2305,14 @@ class SearchEngine:
         """DISTINCT doc ids containing ANY of ``terms`` — a lazy decode-only
         plan (term-pushdown scan of those terms' posting blocks → vectorized
         varbyte unpack → distinct), tombstones excluded, honoring an active
-        attributesToSearchOn restriction.  Backs negative keywords; also the
-        building block for "docs mentioning X" audits."""
-        from ..index.maintenance import _make_block_unpacker, _tf_schema
-
+        attributesToSearchOn restriction.  Backs negative keywords and the
+        facet match set; also the building block for "docs mentioning X"
+        audits."""
         blocks = self.postings.filter(
             F.col("term").isin(self._neg_scan_terms(terms))
-        ).select("term", "n_docs", "doc_bytes", "tf_bytes", "dl_bytes")
-        unpack = _make_block_unpacker(list(self._tombstones or []), positional=False)
-        return blocks.mapInPandas(unpack, _tf_schema(False)).select("doc_id").distinct()
+        ).select("doc_bytes")
+        explode = _make_doc_id_exploder(self._excluded_array())
+        return blocks.mapInPandas(explode, _DOC_ID_SCHEMA).distinct()
 
     def _negative_exclusion(self, exclude_terms: list[str]):
         """Negative-keyword routing → ``(ids, blocked_df)``, at most one
@@ -2699,23 +2577,11 @@ class SearchEngine:
     def _facet_match_set(self, qterms: list[str], filters: dict | None) -> DataFrame:
         """doc_stats rows of every document containing >= 1 query term (after
         ``filters``) — the shared match set behind facetDistribution and
-        facetStats.  The postings read prunes to the query terms' blocks
-        (term INSET pushdown); only those blocks decode."""
+        facetStats: a join to :meth:`docs_with_terms`, whose postings read
+        prunes to the query terms' blocks (term INSET pushdown)."""
         filter_sql = self._filter_sql(filters)
-        if self._fp:  # fielded index: a word appears once per indexed field
-            inset = [f"{i}{FIELD_SEP}{t}" for i in range(len(self.meta.fields)) for t in qterms]
-        else:
-            inset = qterms
-        blocks = self.postings.filter(F.col("term").isin(inset)).select(
-            "term", "df", "doc_bytes", "tf_bytes", "dl_bytes"
-        )
-        matched = (
-            self._exclude_deleted(blocks.mapInPandas(_make_warm_exploder(), _WARM_SCHEMA))
-            .select("doc_id")
-            .distinct()
-        )
         ds = self.doc_stats if filter_sql is None else self.doc_stats.filter(filter_sql)
-        return ds.join(matched, "doc_id")
+        return ds.join(self.docs_with_terms(qterms), "doc_id")
 
     def facet_stats(
         self,

@@ -8,6 +8,9 @@ driver's CORRECTNESS gate closely enough to catch mismatches before a round
 ends.
 
 Usage: python scripts/selfcheck.py [sf_dir] [only_query ...]
+
+The summary counts the entries that ran; naming an entry that does not
+exist exits 2 before any Spark work.
 """
 
 from __future__ import annotations
@@ -63,6 +66,12 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
 
+    qs = entrymod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown entries: {', '.join(unknown)}")
+        return 2
+
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("selfcheck")
@@ -80,12 +89,13 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    ran = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        ran += 1
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
@@ -122,7 +132,7 @@ def main() -> int:
         if status == "FAIL":
             failures.append(name)
 
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} pass")
+    print(f"\n{ran - len(failures)}/{ran} pass")
     return 1 if failures else 0
 
 

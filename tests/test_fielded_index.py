@@ -49,10 +49,12 @@ def _tok(text: str) -> list[str]:
 
 def bm25f_oracle(
     rows: list[dict], query_terms: list[str], weights: list[float],
-    k1: float = 1.2, b: float = 0.75,
+    k1: float = 1.2, b: float = 0.75, search_on: list[str] | None = None,
 ) -> list[tuple[str, float, int]]:
     """(url, score, matched_words) for every matching doc, BM25F with
-    per-field df/dl/avgdl — the build-side contract re-derived independently."""
+    per-field df/dl/avgdl — the build-side contract re-derived independently.
+    ``search_on`` matches only the named fields (attributesToSearchOn);
+    their corpus statistics are unchanged."""
     docs = [(r["url"], [_tok(r[f]) for f in FIELDS]) for r in rows]
     n = len(docs)
     avgdl = [max(sum(len(d[1][i]) for d in docs) / n, 1e-9) for i in range(len(FIELDS))]
@@ -65,6 +67,8 @@ def bm25f_oracle(
     for url, per in docs:
         s, matched = 0.0, set()
         for i, toks in enumerate(per):
+            if search_on is not None and FIELDS[i] not in search_on:
+                continue
             c = Counter(toks)
             for t in dict.fromkeys(query_terms):
                 tf = c.get(t, 0)
@@ -349,3 +353,61 @@ def test_term_dfs_respects_search_on_without_cache_pollution(cold):
     assert title_df == 1 and full >= 1
     # restricted lookups must not poison the shared memo cache
     assert cold.term_dfs(["zebra"])["zebra"] == full
+
+
+_UNCUT_QUERIES = (["apple", "banana"], ["zebra"], ["mango", "olive", "fig"])
+
+
+@pytest.mark.parametrize("search_on", [None, ["content"]])
+@pytest.mark.parametrize("engine", ["warm", "cold"])
+def test_uncut_routes_match_oracle(request, corpus, planner_routes, engine, search_on):
+    """Sort, distinct and a search_after walk rank every matching doc
+    (k=None): the warm statement over the tier, or — cold, or restricted by
+    attributesToSearchOn — over the request's own decoded posting blocks.
+    Both equal the BM25F oracle: the same order, scores within 1e-9."""
+    from meilisearch_thai_spark.query.adhoc import SCORE_DECIMALS
+
+    eng = request.getfixturevalue(engine)
+    routes = planner_routes(eng)
+    titles = {r["url"]: r["title"] for r in corpus}
+    for q in _UNCUT_QUERIES:
+        want = bm25f_oracle(corpus, q, [2.0, 1.0], search_on=search_on)
+        if not want:
+            continue
+        # every hit has lang "en": the sort leaves relevance order
+        got = eng.search_terms(
+            q, k=50, sort=["lang:asc"], attributes_to_search_on=search_on
+        ).collect()
+        _assert_same_ranking([(r["url"], r["score"], r["terms_matched"]) for r in got], want[:50])
+        # distinct title: each title's best doc, in relevance order
+        best: dict[str, tuple] = {}
+        for hit in want:
+            best.setdefault(titles[hit[0]], hit)
+        got = eng.search_terms(
+            q, k=50, distinct="title", attributes_to_search_on=search_on
+        ).collect()
+        _assert_same_ranking(
+            [(r["url"], r["score"], r["terms_matched"]) for r in got],
+            sorted(best.values(), key=lambda h: (-h[1], h[0]))[:50],
+        )
+        # a cursor walk of 4-hit pages in (rounded score DESC, url) order
+        walk, cursor = [], None
+        with eng.search_on(search_on):
+            while True:
+                page = eng.search_after(q, cursor=cursor, k=4).collect()
+                if not page:
+                    break
+                walk += [(r["url"], r["score"], r["terms_matched"]) for r in page]
+                cursor = (page[-1]["score"], page[-1]["url"])
+        rounded = sorted(
+            ((u, round(s, SCORE_DECIMALS), m) for u, s, m in want), key=lambda h: (-h[1], h[0])
+        )
+        _assert_same_ranking(walk, rounded)
+    expected = "warm" if engine == "warm" and search_on is None else "compressed"
+    assert routes and set(routes) == {expected}
+
+
+def _assert_same_ranking(got, want):
+    assert [(u, m) for u, _s, m in got] == [(u, m) for u, _s, m in want]
+    for (u, a, _), (_u, b, _m) in zip(got, want):
+        assert a == pytest.approx(b, abs=1e-9), u
