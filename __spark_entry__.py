@@ -1116,8 +1116,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def r11_negative_search(spark, sf):
         # MeiliSearch negative keywords (-word, 1.8+) through the REAL
         # engine path: docs containing the excluded term leave the page
-        # (exclusion rides the heap kernels' excluded-array hook; corpus
-        # BM25 stats untouched) — must equal DuckDB's NOT IN twin
+        # (on this cold engine the exact route decodes the query and
+        # negative words' blocks and the ranking statement anti-joins the
+        # negative's docs; corpus BM25 stats untouched) — must equal
+        # DuckDB's NOT IN twin
         from meilisearch_thai_spark.query.executor import SearchEngine
 
         eng = SearchEngine(spark, _docs_index(spark, sf), cache_postings=False)

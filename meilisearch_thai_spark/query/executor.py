@@ -7,14 +7,18 @@ serving planner (:meth:`SearchEngine._ranked_sql`):
 
 - warm: one cached SQL statement over the decoded in-memory tier —
   ``term IN (…)`` scan [+ ``doc_id IN`` the filter's doc_stats ids, a
-  broadcast semi-join] → explode(term → variant ids) → BM25 SQL scalar →
-  per-(variant, doc) sum, exchange-free → :func:`rank_sql`;
-- exact: the same statement over the request's own posting blocks,
-  decoded into tier rows behind a temp view — requests that ask for no
-  top-k (``k=None``: sort, distinct, cursor) when the tier cannot serve;
+  broadcast semi-join] [+ ``doc_id NOT IN`` the docs holding a negative
+  keyword, a broadcast anti-join over the same view] → explode(term →
+  variant ids) → BM25 SQL scalar → per-(variant, doc) sum,
+  exchange-free → :func:`rank_sql`;
+- exact: the same statement over the request's own posting blocks (query
+  and negative words), decoded into tier rows behind a temp view — when
+  the tier cannot serve a request that asks for no top-k (``k=None``:
+  sort, distinct, cursor) or carries negative keywords;
 - block-max: term-pushdown scan of the posting blocks → block-max bucket
   heaps in a pandas UDF (cogrouped with the allowed doc ids when a filter
-  or a high-df negative keyword restricts candidates) → :func:`rank_sql`.
+  restricts candidates, or a phrase variant meets negative keywords) →
+  :func:`rank_sql`.
 
 All rank with the same statement: matching-strategy filter, variant
 weights and boosts, per-doc dedup, threshold, top-k.  BM25 has one
@@ -322,9 +326,9 @@ def _make_group_scorer(
     (variant[, bucket]) group of posting blocks → per-doc ``(uids, sums,
     cnts)`` (``cnts`` = DISTINCT base words matched: on a fielded index a
     word matching in two attributes is one match), then drops docs outside
-    ``allowed``, excluded docs (tombstones, negative keywords — inside the
-    heap, so pages stay full), docs short of the variant's required count,
-    and finally docs failing its phrase check."""
+    ``allowed``, excluded docs (tombstones — inside the heap, so pages stay
+    full), docs short of the variant's required count, and finally docs
+    failing its phrase check."""
 
     def score(vid, g: pd.DataFrame, allowed: np.ndarray | None = None):
         vid = int(vid)
@@ -457,14 +461,6 @@ def _make_filtered_bucket_topk(score, k: int):
     return run
 
 
-def _negative_literal_cap() -> int:
-    """Resolved at call time so a test (or operator) adjusting
-    ``index.maintenance.TOMBSTONE_LITERAL_CAP`` moves this gate too."""
-    from ..index import maintenance
-
-    return maintenance.TOMBSTONE_LITERAL_CAP
-
-
 def matching_prefixes(
     terms: list[str],
     matching: str,
@@ -587,6 +583,9 @@ _WARM_FIELDED_SCHEMA = T.StructType(
 
 _DOC_ID_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType(), False)])
 
+# the posting-block columns the warm-tier decode reads
+_TIER_COLS = ("term", "df", "doc_bytes", "tf_bytes", "dl_bytes")
+
 
 def _make_tier_exploder(k1: float, b: float, avgdl: float, n_docs: int, field_params):
     """posting blocks → decoded warm-tier rows, one pandas DataFrame per
@@ -665,6 +664,7 @@ class SearchEngine:
         self._doomed_df: DataFrame | None = None  # lazy anti-join side (>cap)
         # (warm tier, its temp view, that view's plan cache) — _warm_binding
         self._warm_bound: tuple = (None, None, {})
+        self._views: dict[str, DataFrame] = {}  # kind → df behind its temp view
         self._view_id = next(_VIEW_SEQ)  # names this engine's temp views
         self._load_index()
 
@@ -769,8 +769,8 @@ class SearchEngine:
         this is the classic in-memory hot tier over the compressed
         source-of-truth layout, per serving shard at scale.  Disable with
         ``cache_postings=False`` (batch/analytics jobs keep the compressed
-        block-max path; so do phrase queries and high-df negative keywords —
-        :meth:`_ranked_sql` has the route rule).
+        block-max path; so do phrase queries — :meth:`_ranked_sql` has the
+        route rule).
 
         With ``warm_budget_bytes`` set, only the HEAD TERMS BY POSTING COUNT
         that fit the budget (at WARM_BYTES_PER_POSTING estimated decoded
@@ -817,7 +817,7 @@ class SearchEngine:
                 src = src.filter(key.isin(*self._warm_terms)) if self._warm_terms else src.filter(F.lit(False))
             rows = max(self.meta.n_postings, 1)
             P = max(1, min(self.spark.sparkContext.defaultParallelism, rows * 32 // (64 << 20) + 1))
-            warm = self._tier_rows(src)
+            warm = self._tier_rows(src.select(*_TIER_COLS))
             self._warm = (
                 warm.repartition(P, "doc_id")
                 # term-sorted WITHIN each doc_id partition: the in-memory
@@ -835,7 +835,7 @@ class SearchEngine:
         return self._warm
 
     def _tier_rows(self, blocks: DataFrame) -> DataFrame:
-        """Posting blocks → warm-tier rows, the shape
+        """Posting blocks (``_TIER_COLS``) → warm-tier rows, the shape
         :meth:`_warm_scored_sql` reads: (term, doc_id, tf, dl, df), or on a
         fielded index (base term, doc_id, s) merged ONCE per (word, doc)
         across fields, so every query keeps count(*) == matched-word-count.
@@ -843,7 +843,7 @@ class SearchEngine:
         decode of the warm tier (:meth:`warm_postings` adds the partitioning
         and the persist) and of the exact route (:meth:`_ranked_sql`)."""
         m = self.meta
-        rows = blocks.select("term", "df", "doc_bytes", "tf_bytes", "dl_bytes").mapInPandas(
+        rows = blocks.mapInPandas(
             _make_tier_exploder(m.k1, m.b, m.avgdl, m.n_docs, self._fp),
             _WARM_FIELDED_SCHEMA if self._fp else _WARM_SCHEMA,
         )
@@ -880,7 +880,7 @@ class SearchEngine:
     _PLAN_CACHE_CAP = 512  # parsed warm plans per engine (tiny objects)
 
     def _warm_scored_sql(
-        self, view: str, qterms: list[QueryTerm], neg_ids=None, allowed: str | None = None
+        self, view: str, qterms: list[QueryTerm], neg: list[str] = (), allowed: str | None = None
     ) -> str:
         """(variant_id, doc_id, score, terms_matched) per (variant, doc) over
         the warm view: ``term IN (…)`` (an InSet — the columnar cache prunes
@@ -888,19 +888,24 @@ class SearchEngine:
         the BM25 scalar → sum and count, exchange-free (the tier is
         hash-partitioned by doc_id).  A single-variant query takes a
         constant variant id instead of the map, so its generated code is
-        identical across queries.  Negative-keyword ids drop at the scan:
-        the whole matching set is scored here, so that is exact.  So do
-        the docs outside ``allowed`` (a query of allowed doc ids): Spark
-        plans ``doc_id IN (…)`` as a semi-join below the explode, a
-        broadcast of the ids at serving sizes, which keeps the stream
-        side's doc_id partitioning and the aggregates exchange-free."""
+        identical across queries.  The docs holding a negative keyword
+        (``neg``, words of the same view) drop at the scan, and so do the
+        docs outside ``allowed`` (a query of allowed doc ids): the whole
+        matching set is scored here, so both are exact.  Spark plans
+        ``doc_id NOT IN (…)`` as an anti-join and ``doc_id IN (…)`` as a
+        semi-join below the explode, broadcast at serving sizes, which
+        keeps the stream side's doc_id partitioning and the aggregates
+        exchange-free."""
         by_term: dict[str, list[int]] = {}
         for q in qterms:
             by_term.setdefault(q.term, []).append(q.variant_id)
         terms = sorted(by_term)
         where = f"term IN ({', '.join(map(sql_str, terms))})" if terms else "FALSE"
-        if neg_ids is not None and len(neg_ids):
-            where += f" AND doc_id NOT IN ({', '.join(str(int(i)) for i in neg_ids)})"
+        if neg:
+            where += (
+                f" AND doc_id NOT IN (SELECT doc_id FROM {view}"
+                f" WHERE term IN ({', '.join(map(sql_str, neg))}))"
+            )
         if allowed is not None:
             where += f" AND doc_id IN ({allowed})"
         vids = sorted({q.variant_id for q in qterms})
@@ -941,24 +946,44 @@ class SearchEngine:
         return df
 
     def _stats_view(self) -> str:
-        """doc_stats as a temp view (same once-per-binding contract as
-        :meth:`_warm_view`) — the join side of SQL-composed serving paths
-        (the warm route's filter, query.federation's url join)."""
-        ds, name = self.doc_stats, f"mst_stats_{self._view_id}"
-        if getattr(self, "_stats_view_df", None) is not ds:
-            ds.createOrReplaceTempView(name)  # replaced, never dropped (above)
-            self._stats_view_df = ds
+        """doc_stats as a temp view — the join side of SQL-composed serving
+        paths (the warm route's filter, query.federation's url join)."""
+        return self._table_view(self.doc_stats, "stats")
+
+    def _postings_view(self) -> str:
+        """The posting blocks as a temp view — the scan of the compressed
+        routes, written as SQL text (:meth:`_blocks_sql`)."""
+        return self._table_view(self.postings, "postings")
+
+    def _table_view(self, df: DataFrame, kind: str) -> str:
+        """``df`` as the engine's ``mst_<kind>_<id>`` temp view, registered
+        once per binding (the :meth:`_warm_view` contract: replaced when
+        the engine rebinds, never dropped)."""
+        name, views = f"mst_{kind}_{self._view_id}", self._views
+        if views.get(kind) is not df:
+            df.createOrReplaceTempView(name)
+            views[kind] = df
         return name
 
-    def _warm_covers(self, qterms: list[QueryTerm]) -> bool:
-        """True iff every query term is resident in the warm tier.
+    def _blocks_sql(self, terms: list[str], cols: str) -> str:
+        """``SELECT cols`` over the posting blocks of the index-level
+        ``terms`` — one ``spark.sql`` text, where the Column API paid a
+        Py4J round trip per expression node and about four per literal;
+        the ``term IN`` filter pushes to the parquet scan."""
+        where = f"term IN ({', '.join(map(sql_str, terms))})" if terms else "FALSE"
+        return f"SELECT {cols} FROM {self._postings_view()} WHERE {where}"
+
+    def _warm_covers(self, qterms: list[QueryTerm], neg: list[str] = ()) -> bool:
+        """True iff every query term and negative keyword (``neg``) is
+        resident in the warm tier.
 
         On a budget-truncated tier a cold term would be silently ABSENT from
-        the decoded rows (wrong scores, not slow scores), so any cold term
-        routes the whole query to the compressed block-max path.  A term the
-        index has never seen is also routed cold: the compressed path
-        resolves it identically (zero postings), and treating unknown as
-        cold keeps this check a pure frozenset lookup with no vocab scan."""
+        the decoded rows (wrong scores, not slow scores; for a negative
+        keyword, a lost exclusion), so any cold word routes the whole query
+        to the compressed path.  A term the index has never seen is also
+        routed cold: the compressed path resolves it identically (zero
+        postings), and treating unknown as cold keeps this check a pure
+        frozenset lookup with no vocab scan."""
         if not self._warm_enabled:
             return False
         if self._active_prefixes is not None and self._active_prefixes != self._fprefixes:
@@ -970,7 +995,9 @@ class SearchEngine:
             return True
         if self._warm_terms is None:  # budget set but tier not built yet
             self.warm_postings()
-        return all(q.term in self._warm_terms for q in qterms)
+        return all(q.term in self._warm_terms for q in qterms) and all(
+            t in self._warm_terms for t in neg
+        )
 
     def warm_memory_report(self) -> dict:
         """Memory accounting for the decoded serving tier (VERDICT r2 #8).
@@ -1293,30 +1320,28 @@ class SearchEngine:
             self._active_prefixes = prev
 
     def candidate_blocks(self, qterms: list[QueryTerm]) -> DataFrame:
-        """Term lookup (X2): scan filter + literal term→variants expansion.
+        """Term lookup (X2): every posting-block column plus ``variant_id``
+        (:meth:`_candidate_sql`)."""
+        return self.spark.sql(self._candidate_sql(qterms, ["*"]))
+
+    def _candidate_sql(self, qterms: list[QueryTerm], cols: list[str]) -> str:
+        """The candidate posting blocks as SQL text: ``variant_id`` and
+        ``cols`` of the query terms' blocks.
 
         The (tiny) query-terms table is folded into the plan as a literal map
         instead of a broadcast join — same semantics, but no broadcast
-        exchange and no extra job on the per-query latency path.  The ``isin``
-        filter pushes to the scan so parquet row-group min/max stats on the
-        term-sorted files prune untouched groups.
+        exchange and no extra job on the per-query latency path.  The
+        ``term IN`` filter pushes to the scan so parquet row-group min/max
+        stats on the term-sorted files prune untouched groups.
         """
         by_term = self._index_term_map(qterms)
         terms = sorted(by_term)
-        if not terms:
-            return self.postings.filter(F.lit(False)).withColumn("variant_id", F.lit(0))
-        kv = []
-        for t in terms:
-            kv.append(F.lit(t))
-            kv.append(F.array([F.lit(v) for v in by_term[t]]))
-        vmap = F.create_map(*kv)
-        return (
-            self.postings.filter(F.col("term").isin(terms))
-            .withColumn("variant_id", F.explode(vmap[F.col("term")]))
-        )
+        vmap = _sql_map((sql_str(t), f"array({', '.join(map(str, by_term[t]))})") for t in terms)
+        vid = f"explode({vmap}[term])" if terms else "0"
+        return self._blocks_sql(terms, ", ".join([f"{vid} AS variant_id", *cols]))
 
     def _excluded_array(self):
-        """Snapshot exclusion set for the python heap paths.  Ships in the
+        """Snapshot tombstone set for the python heap paths.  Ships in the
         task closure (~8 bytes/id): fine through ~10^5 deletions; beyond
         that compaction is overdue (TOMBSTONE_LITERAL_CAP guidance) — the
         JVM paths switch to an anti-join there, the heap paths accept the
@@ -1325,27 +1350,19 @@ class SearchEngine:
             return None
         return np.sort(np.asarray(self._tombstones, dtype=np.int64))
 
-    def _merged_excluded(self, extra):
-        """Tombstones ∪ a per-query exclusion set (negative keywords) for
-        the heap kernels."""
-        base = self._excluded_array()
-        if extra is None or not len(extra):
-            return base
-        if base is None:
-            return extra
-        return np.unique(np.concatenate([base, extra]))
-
     def _exclude_deleted(self, df: DataFrame) -> DataFrame:
-        """Drop tombstoned doc ids from a (…, doc_id, …) frame: plan-literal
-        InSet for small delete sets, anti-join above TOMBSTONE_LITERAL_CAP
-        (a 10^5+-literal plan is the wrong shape — and that size means
-        compact_index is overdue)."""
+        """Drop tombstoned doc ids from a (…, doc_id, …) frame: a
+        ``doc_id NOT IN (…)`` SQL predicate for small delete sets (one Py4J
+        call, where ``Column.isin`` paid about four per id), anti-join above
+        TOMBSTONE_LITERAL_CAP (a 10^5+-literal plan is the wrong shape — and
+        that size means compact_index is overdue)."""
         from ..index.maintenance import TOMBSTONE_LITERAL_CAP
 
         if not self._tombstones:
             return df
         if len(self._tombstones) <= TOMBSTONE_LITERAL_CAP:
-            return df.filter(~F.col("doc_id").isin(self._tombstones))
+            ids = ", ".join(str(int(i)) for i in self._tombstones)
+            return df.filter(f"doc_id NOT IN ({ids})")
         # anti-join against the SNAPSHOTTED ids (not a re-read of the
         # tombstone files — files may have been cleared by a concurrent
         # compaction, and snapshot semantics must match the literal branch)
@@ -1397,7 +1414,6 @@ class SearchEngine:
         required_terms: dict[int, int] | None = None,
         partitions: int | None = None,
         phrase_terms: dict[int, list[str]] | None = None,
-        extra_excluded=None,
     ) -> DataFrame:
         """EXACT per-variant top-k with block-max bucket pruning (R11).
 
@@ -1410,20 +1426,19 @@ class SearchEngine:
         :meth:`_ranked_sql`).  Output is ≤ partitions × k rows per variant;
         merge with a global top-k.
         """
-        blocks, score = self._heap_inputs(
-            qterms, ["block_max_score"], required_terms, phrase_terms, extra_excluded
-        )
+        blocks, score = self._heap_inputs(qterms, ["block_max_score"], required_terms, phrase_terms)
         if not self._bucket_partitioned:
             # cold path: establish bucket-completeness per partition explicitly
             partitions = partitions or self.spark.sparkContext.defaultParallelism
             blocks = blocks.repartition(partitions, "bucket")
         return blocks.mapInPandas(_make_bucket_topk(score, k), _TOPK_SCHEMA)
 
-    def _heap_inputs(self, qterms, extra_cols, required_terms, phrase_terms, extra_excluded):
+    def _heap_inputs(self, qterms, extra_cols, required_terms, phrase_terms):
         """(candidate blocks, per-group scorer) — the set-up both heap
         routes share; phrase checks add ``pos_bytes`` and need a positional
-        index."""
-        cols = ["variant_id", "bucket", "term", "df", *extra_cols, "doc_bytes", "tf_bytes", "dl_bytes"]
+        index.  The heaps exclude tombstones; negative keywords restrict
+        the allowed docs instead (:meth:`_ranked_sql`)."""
+        cols = ["bucket", "term", "df", *extra_cols, "doc_bytes", "tf_bytes", "dl_bytes"]
         if phrase_terms:
             if not getattr(self.meta, "positional", False):
                 raise ValueError(
@@ -1434,9 +1449,9 @@ class SearchEngine:
         m = self.meta
         score = _make_group_scorer(
             m.k1, m.b, m.avgdl, m.n_docs, required_terms or {}, phrase_terms,
-            self._merged_excluded(extra_excluded), self._fp, self._lookup_prefixes(),
+            self._excluded_array(), self._fp, self._lookup_prefixes(),
         )
-        return self.candidate_blocks(qterms).select(*cols), score
+        return self.spark.sql(self._candidate_sql(qterms, cols)), score
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """Document frequency per query term (drives 'frequency' matching).
@@ -1522,7 +1537,6 @@ class SearchEngine:
         allowed: DataFrame,
         required_terms: dict[int, int] | None = None,
         phrase_terms: dict[int, list[str]] | None = None,
-        extra_excluded=None,
     ) -> DataFrame:
         """Exact per-variant top-k over an allowed-doc subset (P4 + R11) —
         the compressed route for restricted requests the warm tier cannot
@@ -1538,9 +1552,7 @@ class SearchEngine:
         are scored independently (no running cross-bucket threshold exists
         inside a cogroup), so the bound could never prune here — shipping it
         through the Arrow exchange was pure dead weight (ADVICE r2)."""
-        blocks, score = self._heap_inputs(
-            qterms, [], required_terms, phrase_terms, extra_excluded
-        )
+        blocks, score = self._heap_inputs(qterms, [], required_terms, phrase_terms)
         allowed_b = allowed.withColumn(
             "bucket", (F.col("doc_id") / F.lit(self.meta.bucket_span)).cast("long")
         )
@@ -1740,13 +1752,9 @@ class SearchEngine:
         self._check_attrs(attributes_to_retrieve)
         if not terms:
             return []
-        neg_ids = blocked = None
-        if exclude_terms:
-            neg_ids, blocked = self._negative_exclusion(exclude_terms)
         _uniq, _prefixes, qterms, required = self._expand_matching(terms, matching)
         rows = self._ranked_topk(
-            qterms, k=k, required=required, neg_ids=neg_ids, blocked=blocked,
-            filter_sql=filter_sql,
+            qterms, k=k, required=required, neg=exclude_terms, filter_sql=filter_sql
         ).collect()
         return self._resolve_meta(rows, attributes_to_retrieve)
 
@@ -1855,12 +1863,9 @@ class SearchEngine:
                     distinct=distinct, exclude_terms=exclude_terms,
                 )
         # request errors (sort, distinct, attributes, filter) before any
-        # Spark job: negative keywords and 'frequency' matching collect
+        # Spark job: 'frequency' matching collects
         page = self._page_tail(k, sort, distinct, self._hit_cols(attributes_to_retrieve))
         filter_sql = self._filter_sql(filters)
-        neg_ids = blocked = None
-        if exclude_terms:
-            neg_ids, blocked = self._negative_exclusion(exclude_terms)
         _uniq, _prefixes, qterms, required = self._expand_matching(terms, matching)
         if not qterms and exclude_terms:
             # negative-only query: MeiliSearch placeholder semantics — every
@@ -1869,7 +1874,7 @@ class SearchEngine:
             base = self._exclude_deleted(self.doc_stats)
             if filter_sql is not None:
                 base = base.filter(filter_sql)
-            base = self._apply_negative_exclusion(base, neg_ids, blocked)
+            base = base.join(self.docs_with_terms(exclude_terms), "doc_id", "left_anti")
             return page(
                 base.withColumn("score", F.lit(0.0))
                 .withColumn("terms_matched", F.lit(0).cast("long"))
@@ -1878,13 +1883,11 @@ class SearchEngine:
             # every matching doc, uncut: a top-k could starve a distinct
             # value, and a sort cannot prune by score
             scored = self._ranked_topk(
-                qterms, k=None, required=required, neg_ids=neg_ids, blocked=blocked,
-                filter_sql=filter_sql,
+                qterms, k=None, required=required, neg=exclude_terms, filter_sql=filter_sql
             )
             return page(self.doc_stats.join(scored, "doc_id"))
         topk = self._ranked_topk(
-            qterms, k=k, required=required, neg_ids=neg_ids, blocked=blocked,
-            filter_sql=filter_sql,
+            qterms, k=k, required=required, neg=exclude_terms, filter_sql=filter_sql
         )
         return self._finalize_hits(topk, attributes=attributes_to_retrieve)
 
@@ -2063,9 +2066,6 @@ class SearchEngine:
                 exclude_terms=exclude_terms or None,
             )
         filter_sql = self._filter_sql(filters)
-        neg_ids = blocked = None
-        if exclude_terms:
-            neg_ids, blocked = self._negative_exclusion(exclude_terms)
         qterms = [QueryTerm(vid, t) for vid, ts in enumerate(variants) for t in ts]
         # a variant type without a boost (R2's table falls back to 1.0), so
         # the weight alone discounts completions; ties keep the literal
@@ -2073,7 +2073,7 @@ class SearchEngine:
         weights = [1.0] + [PREFIX_COMPLETION_WEIGHT] * (len(variants) - 1)
         topk = self._ranked_topk(
             qterms, [Variant("completion", w, len(ts), "best") for w, ts in zip(weights, variants)],
-            k=k, neg_ids=neg_ids, blocked=blocked, filter_sql=filter_sql,
+            k=k, neg=exclude_terms, filter_sql=filter_sql,
         )
         return self._finalize_hits(topk, attributes=attributes_to_retrieve)
 
@@ -2107,8 +2107,8 @@ class SearchEngine:
     def _ranked_sql(
         self, qterms: list[QueryTerm], variants: list[Variant] | None = None, *,
         k: int | None, required: dict[int, int] | None = None,
-        phrase_terms: dict[int, list[str]] | None = None, neg_ids=None,
-        blocked: DataFrame | None = None, filter_sql: str | None = None, **rank,
+        phrase_terms: dict[int, list[str]] | None = None, neg: list[str] | None = None,
+        filter_sql: str | None = None, **rank,
     ):
         """The serving planner's text step: yields ``(sql, warm)``, the
         per-doc ranking of ``qterms`` by :func:`rank_sql` (``rank`` are its
@@ -2118,49 +2118,49 @@ class SearchEngine:
         sort, distinct or cursor.  The text is valid inside the block only.
 
         Warm — :meth:`_warm_scored_sql` over the tier's view, a filter
-        (``filter_sql``) riding as a doc_stats semi-join and literal
-        negative ids (``neg_ids``) dropping at the scan — whenever the tier
-        can answer: it holds every query term (:meth:`_warm_covers`: warm
-        tier enabled, no cold term on a budget-truncated tier, no
-        attributesToSearchOn restriction), no variant needs positions
-        (``phrase_terms``), and no high-df negative keyword left its
-        blocked ids distributed (``blocked``).  Otherwise, without a ``k``
-        (exact): the same statement over the query terms' posting blocks,
-        decoded into tier rows (:meth:`_tier_rows`, the lookup honouring an
-        attributesToSearchOn restriction) minus ``blocked``.  With a ``k``:
-        the block-max heaps, cogrouped with the allowed ids when a filter
-        or ``blocked`` restricts candidates (phrase checks need a heap, so
-        they need a ``k``).  A decoded or heap frame sits behind a temp
-        view, dropped when the block exits — a parsed Dataset keeps the
-        resolved plan."""
+        (``filter_sql``) riding as a doc_stats semi-join and the negative
+        keywords (``neg``) as an anti-join over the same view — whenever
+        the tier can answer: it holds every query and negative word
+        (:meth:`_warm_covers`: warm tier enabled, no cold word on a
+        budget-truncated tier, no attributesToSearchOn restriction) and no
+        variant needs positions (``phrase_terms``).  Otherwise, without a
+        ``k`` or with negatives and no phrase (exact): the same statement
+        over the query and negative words' posting blocks, decoded into
+        tier rows (:meth:`_tier_rows`, the lookup honouring an
+        attributesToSearchOn restriction).  Otherwise the block-max heaps,
+        cogrouped with the allowed ids — the filter's docs minus the
+        negatives' (:meth:`docs_with_terms`) — when either restricts
+        candidates (phrase checks need a heap, so they need a ``k``).  A
+        decoded or heap frame sits behind a temp view, dropped when the
+        block exits — a parsed Dataset keeps the resolved plan."""
         rank.update(required=required, k=k)
         if variants is None:
             rank.setdefault("dedup", len({q.variant_id for q in qterms}) > 1)
-        warm = blocked is None and not phrase_terms and self._warm_covers(qterms)
+        neg = sorted({t for t in neg or () if t})
+        warm = not phrase_terms and self._warm_covers(qterms, neg)
+        exact = k is None or (bool(neg) and not phrase_terms)
         allowed = None  # the filter's semi-join side, for the SQL routes
-        if filter_sql is not None and (warm or k is None):
+        if filter_sql is not None and (warm or exact):
             allowed = f"SELECT doc_id FROM {self._stats_view()} WHERE {filter_sql}"
         if warm:
-            scored = self._warm_scored_sql(self._warm_view(), qterms, neg_ids, allowed)
+            scored = self._warm_scored_sql(self._warm_view(), qterms, neg, allowed)
             yield rank_sql(scored, variants, **rank), True
             return
-        heap = dict(required_terms=required, phrase_terms=phrase_terms, extra_excluded=neg_ids)
-        if k is None:
-            blocks = self.postings.filter(F.col("term").isin(sorted(self._index_term_map(qterms))))
+        heap = dict(required_terms=required, phrase_terms=phrase_terms)
+        if exact:
+            keys = {*self._index_term_map(qterms), *(self._neg_scan_terms(neg) if neg else ())}
+            blocks = self.spark.sql(self._blocks_sql(sorted(keys), ", ".join(_TIER_COLS)))
             frame = self._tier_rows(blocks)
-            if blocked is not None:
-                frame = frame.join(blocked, "doc_id", "left_anti")
-        elif filter_sql is None and blocked is None:
+        elif filter_sql is None and not neg:
             frame = self.score_variants_topk(qterms, k=k, **heap)
         else:
             allowed_ids = self.doc_stats.filter(filter_sql or "TRUE").select("doc_id")
-            if blocked is not None:
-                # high-df negatives: allowed = docs ∖ blocked, never collected
-                allowed_ids = allowed_ids.join(blocked, "doc_id", "left_anti")
+            if neg:
+                allowed_ids = allowed_ids.join(self.docs_with_terms(neg), "doc_id", "left_anti")
             frame = self.score_variants_topk_filtered(qterms, k=k, allowed=allowed_ids, **heap)
         name = f"mst_scored_{next(_VIEW_SEQ)}"
         frame.createOrReplaceTempView(name)
-        scored = name if k is not None else self._warm_scored_sql(name, qterms, neg_ids, allowed)
+        scored = self._warm_scored_sql(name, qterms, neg, allowed) if exact else name
         try:
             yield rank_sql(scored, variants, **rank), False
         finally:
@@ -2308,58 +2308,9 @@ class SearchEngine:
         attributesToSearchOn restriction.  Backs negative keywords and the
         facet match set; also the building block for "docs mentioning X"
         audits."""
-        blocks = self.postings.filter(
-            F.col("term").isin(self._neg_scan_terms(terms))
-        ).select("doc_bytes")
+        blocks = self.spark.sql(self._blocks_sql(self._neg_scan_terms(terms), "doc_bytes"))
         explode = _make_doc_id_exploder(self._excluded_array())
         return blocks.mapInPandas(explode, _DOC_ID_SCHEMA).distinct()
-
-    def _negative_exclusion(self, exclude_terms: list[str]):
-        """Negative-keyword routing → ``(ids, blocked_df)``, at most one
-        non-None (both None when no negative term matches anything).
-
-        The routing estimate is the SUM of ``df`` over every matching
-        index-level term key (field-prefixed variants included — on a
-        fielded index the blocked set is the UNION across fields, so a
-        per-word max would undercount it): one exchange-free aggregate over
-        the term-pushdown scan, always ≥ |blocked|.  Small exclusion sets
-        (same ``TOMBSTONE_LITERAL_CAP`` economics as deletions) collect to
-        the driver once and ride the heap kernels' existing excluded-array
-        hook — pages stay full, block-max pruning intact, ONE extra bounded
-        job per query.  High-df negatives (excluding a frequent word can
-        block half the corpus) never collect: the blocked ids stay a
-        DataFrame and the query runs through the filtered cogroup path with
-        ``allowed = docs ∖ blocked``, all distributed."""
-        neg = [t for t in dict.fromkeys(exclude_terms) if t]
-        if not neg:
-            return None, None
-        est = (
-            self.postings.filter(F.col("term").isin(self._neg_scan_terms(neg)))
-            .groupBy("term").agg(F.max("df").alias("df"))  # df repeats per block
-            .agg(F.sum("df"))
-            .collect()[0][0]
-        )
-        total_df = int(est or 0)
-        if total_df == 0:
-            return None, None
-        blocked = self.docs_with_terms(neg)
-        if total_df > _negative_literal_cap():
-            return None, blocked
-        ids = np.asarray([r["doc_id"] for r in blocked.collect()], dtype=np.int64)
-        if not len(ids):
-            return None, None
-        return np.sort(ids), None
-
-    @staticmethod
-    def _apply_negative_exclusion(df: DataFrame, neg_ids, blocked) -> DataFrame:
-        """Drop negative-keyword-blocked docs from a (…, doc_id, …) frame —
-        literal InSet for collected sets, anti-join for DataFrame sets (the
-        tombstone `_exclude_deleted` shape, per-query)."""
-        if neg_ids is not None:
-            return df.filter(~F.col("doc_id").isin([int(i) for i in neg_ids]))
-        if blocked is not None:
-            return df.join(blocked, "doc_id", "left_anti")
-        return df
 
     def search(
         self,
@@ -2936,14 +2887,8 @@ class SearchEngine:
         # within-variant rank by raw score == rank by weighted score, and any
         # doc in the final top-k is in its winning variant's top-k
         required = required_terms(variants)
-        # negative keywords parsed by Q1-Q8 ride the same routing the
-        # single-variant path uses (literal excluded-array vs distributed
-        # blocked-DataFrame, by df estimate)
-        neg_ids = blocked = None
-        if getattr(pq, "exclude_terms", None):
-            neg_ids, blocked = self._negative_exclusion(pq.exclude_terms)
         return self._ranked_topk(
             qterms, variants, k=k, required=required, phrase_terms=phrase_specs or None,
-            neg_ids=neg_ids, blocked=blocked, filter_sql=filter_sql,
+            neg=getattr(pq, "exclude_terms", None), filter_sql=filter_sql,
             normalize=normalize, threshold=min_score_threshold,
         )

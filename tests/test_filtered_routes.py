@@ -156,37 +156,42 @@ def test_every_filter_form_agrees_on_both_routes(spark, corpus, monkeypatch):
     _drop(warm, cold)
 
 
-def _rare_negative(oracle, page, query):
-    """A literal negative keyword: a word of the page's best doc outside
-    the query, rare enough for the collected-id route, that tokenizes to
-    itself."""
+def _negative(oracle, rows, query, allow, words):
+    """A negative keyword for ``query``'s filtered page: the first of
+    ``words`` outside the query that tokenizes to itself and changes the
+    page without emptying it."""
     qterms = set(extract_index_terms(tokenize_for_index(query)))
-    best = page[0][0]
-    for t, _tf in sorted(oracle.tf[best].items()):
-        if t not in qterms and 1 <= oracle.df[t] <= 20 and extract_index_terms(tokenize_for_index(t)) == [t]:
+    plain = _oracle_page(oracle, rows, query, allow)
+    for t in words:
+        if t in qterms or extract_index_terms(tokenize_for_index(t)) != [t]:
+            continue
+        page = _oracle_page(oracle, rows, query, allow, exclude=[t])
+        if page and page != plain:
             return t
-    raise AssertionError(f"no rare word in {best}")
+    raise AssertionError("no negative keyword changes the page")
 
 
 def test_filtered_routes_with_negative_keywords(spark, corpus, monkeypatch):
-    """A literal (collected) negative keyword stays on the warm route; a
-    high-df one (ids kept distributed) moves both engines to the cogroup.
+    """A rare and a high-df negative keyword both ride the warm statement
+    as an anti-join, beside the filter's semi-join: no cogroup on the warm
+    engine, nor on the cold one, which ranks them on the exact route.
     Both answer like the oracle."""
     out, rows, oracle = corpus
     warm, cold = _engines(spark, out)
     filters, allow = FILTERS[0]
     q = QUERIES[0]
-    neg = _rare_negative(oracle, _oracle_page(oracle, rows, q, allow), q)
-    want = _oracle_page(oracle, rows, q, allow, exclude=[neg])
-    assert want and want != _oracle_page(oracle, rows, q, allow)
+    by_df = sorted(oracle.df, key=lambda t: (oracle.df[t], t))
+    best = _oracle_page(oracle, rows, q, allow)[0][0]
+    rare = _negative(oracle, rows, q, allow, [t for t in by_df if oracle.tf[best].get(t, 0)])
+    high = _negative(oracle, rows, q, allow, reversed(by_df))
+    assert oracle.df[rare] <= 20 and oracle.df[high] >= N_DOCS // 3
     warm_cogroups = _cogroup_calls(monkeypatch, warm)
-    for eng in (warm, cold):
-        _assert_same(_page(eng, f"{q} -{neg}", filters), want, ("literal", eng._warm_enabled))
-    assert warm_cogroups == []
-    monkeypatch.setattr(maintenance, "TOMBSTONE_LITERAL_CAP", 0)
-    for eng in (warm, cold):
-        _assert_same(_page(eng, f"{q} -{neg}", filters), want, ("blocked", eng._warm_enabled))
-    assert warm_cogroups == [1]
+    cold_cogroups = _cogroup_calls(monkeypatch, cold)
+    for neg in (rare, high):
+        want = _oracle_page(oracle, rows, q, allow, exclude=[neg])
+        for eng in (warm, cold):
+            _assert_same(_page(eng, f"{q} -{neg}", filters), want, (neg, eng._warm_enabled))
+    assert warm_cogroups == [] and cold_cogroups == []
     _drop(warm, cold)
 
 

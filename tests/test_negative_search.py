@@ -1,8 +1,8 @@
 """MeiliSearch negative keywords (-word, 1.8+ — reference runs 1.15.2):
 docs containing a negated word leave the result set; BM25 stats stay
 corpus-wide.  Engine results must match the in-process oracle on every
-execution path (block-max heap, warm tier, high-df distributed fallback,
-sort/exact path, negative-only placeholder)."""
+execution path (warm tier, exact route, sort path, the heaps with a
+phrase, negative-only placeholder)."""
 
 from __future__ import annotations
 
@@ -85,18 +85,39 @@ def test_search_page_honors_negative_keywords(spark, built):
             eng._warm.unpersist()
 
 
-def test_negative_highdf_fallback_path_identical(spark, built, monkeypatch):
-    # force the distributed blocked-DataFrame path (as if the negative term
-    # had df > cap) and require bit-identical results to the literal path
-    from meilisearch_thai_spark.index import maintenance
+def test_rare_and_highdf_negatives_stay_warm(spark, built, planner_routes):
+    """Negative keywords are words of the warm statement: a rare one and
+    a high-df one (in at least half the corpus) both stay on the warm
+    route and match the oracle."""
+    from meilisearch_thai_spark.tokenizer import extract_index_terms, tokenize_for_index
 
     out, corpus = built
-    eng = SearchEngine(spark, out, cache_postings=False)
-    small = _top(eng, "อาหารไทย -เชียงใหม่", corpus)
-    monkeypatch.setattr(maintenance, "TOMBSTONE_LITERAL_CAP", 0)
-    eng2 = SearchEngine(spark, out, cache_postings=False)
-    big = _top(eng2, "อาหารไทย -เชียงใหม่", corpus)
-    assert small == big and len(small) > 0
+    oracle = BM25Oracle(corpus)
+    pos = "อาหารไทย"
+    plain = [u for u, _ in oracle.top_k(pos, k=10)]
+    qterms = set(extract_index_terms(tokenize_for_index(pos)))
+    words = [
+        t for t in sorted(oracle.df, key=lambda t: (oracle.df[t], t))
+        if t not in qterms and extract_index_terms(tokenize_for_index(t)) == [t]
+    ]
+    rare = next(t for t in words if any(oracle.tf[u].get(t, 0) for u in plain))
+    high = next(t for t in reversed(words) if oracle.top_k(pos, k=10, exclude_terms=[t]))
+    assert oracle.df[rare] <= 20 and oracle.df[high] >= N_DOCS // 2
+    eng = SearchEngine(spark, out)
+    eng.warm_postings()
+    routes = planner_routes(eng)
+    for neg in (rare, high):
+        want = oracle.top_k(pos, k=10, exclude_terms=[neg])
+        assert want and [u for u, _ in want] != plain, neg
+        page = [(h["url"], h["score"]) for h in eng.search_page(f"{pos} -{neg}", k=10)]
+        for got in (page, _top(eng, f"{pos} -{neg}", corpus)):
+            assert [u for u, _ in got] == [u for u, _ in want], neg
+            for (u, a), (_, b) in zip(got, want):
+                assert a == pytest.approx(b, abs=1e-9), (neg, u)
+    assert routes == ["warm"] * 4
+    eng.postings.unpersist()
+    eng.doc_stats.unpersist()
+    eng._warm.unpersist()
 
 
 def test_negative_only_query_is_placeholder_page(spark, built):
@@ -174,19 +195,23 @@ def test_negative_respects_attributes_to_search_on(spark, tmp_path):
     )
     out = str(tmp_path / "fneg")
     build_index(spark, pages, out, fields=["title", "content"])
-    eng = SearchEngine(spark, out, cache_postings=False)
-    all_fields = {
-        r["url"] for r in eng.search_terms(["apple"], k=10, exclude_terms=["zebra"]).collect()
-    }
-    assert all_fields == {"0003"}
-    title_only = {
-        r["url"]
-        for r in eng.search_terms(
-            ["apple"], k=10, exclude_terms=["zebra"], attributes_to_search_on=["title"]
-        ).collect()
-    }
-    # the restriction applies to negatives too: content-only zebra survives
-    assert title_only == {"0002", "0003"}
+    for eng in (SearchEngine(spark, out), SearchEngine(spark, out, cache_postings=False)):
+        all_fields = {
+            r["url"] for r in eng.search_terms(["apple"], k=10, exclude_terms=["zebra"]).collect()
+        }
+        assert all_fields == {"0003"}, eng._warm_enabled
+        title_only = {
+            r["url"]
+            for r in eng.search_terms(
+                ["apple"], k=10, exclude_terms=["zebra"], attributes_to_search_on=["title"]
+            ).collect()
+        }
+        # the restriction applies to negatives too: content-only zebra survives
+        assert title_only == {"0002", "0003"}, eng._warm_enabled
+        if eng._bucket_partitioned:
+            eng.postings.unpersist()
+            eng.doc_stats.unpersist()
+            eng._warm.unpersist()
 
 
 def test_multi_variant_search_honors_negatives(spark, built):

@@ -59,6 +59,30 @@ def test_phrase_exact_adjacency(engines):
     assert {rows[0]["url"], rows[1]["url"]} == {"u/adjacent", "u/adjacent2"}
 
 
+def test_phrase_with_negative_keyword(engines, monkeypatch):
+    """A phrase variant with a negative keyword keeps its position check
+    on the cogroup heap, the negative's docs outside the allowed set: the
+    page is the plain phrase page minus the docs holding the negative."""
+    pos, _ = engines
+    calls, route = [], pos.score_variants_topk_filtered
+    monkeypatch.setattr(
+        pos, "score_variants_topk_filtered", lambda *a, **kw: calls.append(1) or route(*a, **kw)
+    )
+
+    def page(q):
+        rows = pos.multi_variant_search(q, k=10).collect()
+        return [(r["url"], r["score"], r["variant_type"]) for r in rows]
+
+    plain = page('"alpha beta"')
+    assert calls == []
+    got = page('"alpha beta" -gamma')
+    assert calls == [1]
+    want = [h for h in plain if h[0] != "u/adjacent"]  # the one doc with gamma
+    assert [(u, t) for u, _, t in got] == [(u, t) for u, _, t in want]
+    assert [s for _, s, _ in got] == pytest.approx([s for _, s, _ in want], abs=1e-9)
+    assert {u for u, _, t in got if t == "phrase"} == {"u/adjacent2"}
+
+
 def test_phrase_degrades_to_conjunctive_on_flat_index(engines):
     _, flat = engines
     rows = flat.multi_variant_search('"alpha beta"', k=10).collect()

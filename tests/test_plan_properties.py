@@ -7,6 +7,8 @@ a benchmark three rounds later.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -169,56 +171,68 @@ def _exec_nodes(plan) -> list:
     return out
 
 
+def _restricted_plans(eng, **restriction):
+    """A single- and a multi-variant warm statement under ``restriction``."""
+    single = [QueryTerm(0, "เทคโนโลยี"), QueryTerm(0, "อาหาร")]
+    multi = single + [QueryTerm(1, "อาหาร"), QueryTerm(1, "โรงเรียน")]
+    variants = [Variant("original", 1.0, 2, "best"), Variant("tokenized", 0.8, 2, "all")]
+    return (
+        eng._ranked_topk(single, k=10, **restriction),
+        eng._ranked_topk(multi, variants, required=required_terms(variants), k=10, **restriction),
+    )
+
+
+def _assert_one_broadcast_join(spark, plan, join_type, cached):
+    """``plan`` is the warm plan plus ONE broadcast hash join of
+    ``join_type`` whose build side scans ``cached``'s cache: no Python
+    stage, no exchange but the broadcast, the term InSet still on the tier
+    scan of the stream side."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    built_cache = cache.lookupCachedData(cached._jdf).get().cachedRepresentation()
+    assert plan.collect()
+    nodes = _exec_nodes(plan._jdf.queryExecution().executedPlan())
+    names = [n.nodeName() for n in nodes]
+    assert not [n for n in names if "InPandas" in n], names
+    assert [n for n in names if "Exchange" in n] == ["BroadcastExchange"], names
+    join = [
+        n for n in nodes
+        if n.nodeName() == "BroadcastHashJoin" and n.joinType().toString() == join_type
+    ]
+    assert len(join) == 1, names
+    built = [n for n in _exec_nodes(join[0].right()) if n.nodeName() == "InMemoryTableScan"]
+    assert len(built) == 1
+    assert built[0].relation().cacheBuilder().equals(built_cache.cacheBuilder())
+    streamed = [n for n in _exec_nodes(join[0].left()) if n.nodeName() == "InMemoryTableScan"]
+    assert len(streamed) == 1 and "INSET" in streamed[0].simpleString(1000).upper()
+
+
 def test_warm_filtered_plan_is_a_broadcast_semi_join(spark, warm_engine):
     """A filtered warm statement keeps the warm plan and adds one
     broadcast semi-join over the cached doc_stats: no Python stage, no
     shuffle, the term InSet still on the tier scan."""
-    cache = spark._jsparkSession.sharedState().cacheManager()
-    stats_cache = cache.lookupCachedData(warm_engine.doc_stats._jdf).get().cachedRepresentation()
-    single = [QueryTerm(0, "เทคโนโลยี"), QueryTerm(0, "อาหาร")]
-    multi = single + [QueryTerm(1, "อาหาร"), QueryTerm(1, "โรงเรียน")]
-    variants = [Variant("original", 1.0, 2, "best"), Variant("tokenized", 0.8, 2, "all")]
     filter_sql = warm_engine._filter_sql({"lang": {"$in": ["th", "th-en"]}})
-    for plan in (
-        warm_engine._ranked_topk(single, filter_sql=filter_sql, k=10),
-        warm_engine._ranked_topk(
-            multi, variants, filter_sql=filter_sql, required=required_terms(variants), k=10
-        ),
-    ):
-        assert plan.collect()
-        nodes = _exec_nodes(plan._jdf.queryExecution().executedPlan())
-        names = [n.nodeName() for n in nodes]
-        assert not [n for n in names if "InPandas" in n], names
-        assert [n for n in names if "Exchange" in n] == ["BroadcastExchange"], names
-        semi = [
-            n for n in nodes
-            if n.nodeName() == "BroadcastHashJoin" and n.joinType().toString() == "LeftSemi"
-        ]
-        assert len(semi) == 1, names
-        built = [n for n in _exec_nodes(semi[0].right()) if n.nodeName() == "InMemoryTableScan"]
-        assert len(built) == 1
-        assert built[0].relation().cacheBuilder().equals(stats_cache.cacheBuilder())
-        streamed = [n for n in _exec_nodes(semi[0].left()) if n.nodeName() == "InMemoryTableScan"]
-        assert len(streamed) == 1 and "INSET" in streamed[0].simpleString(1000).upper()
+    for plan in _restricted_plans(warm_engine, filter_sql=filter_sql):
+        _assert_one_broadcast_join(spark, plan, "LeftSemi", warm_engine.doc_stats)
 
 
-def test_warm_search_py4j_budget(spark, warm_engine):
-    """A warm SearchService.search builds its plan in one spark.sql call,
-    filtered or not: at most 20 Py4J round trips on a plan-cache miss and
-    fewer on the repeat (the Column-built plan took over a thousand).  A
-    federated search over two warm engines composes both branches into
-    one statement: at most 12 round trips, collect included.  Frees of
-    proxies left by earlier work ("m d" commands, sent whenever Python's
-    garbage collector runs) are not the request's own calls and are not
-    counted."""
+def test_warm_negative_plan_is_a_broadcast_anti_join(spark, warm_engine):
+    """Negative keywords keep the warm plan and add one broadcast
+    anti-join whose build side scans the warm tier's own cache: no Python
+    stage, no shuffle, the term InSet still on the stream side."""
+    neg = ["ไทย"]  # in many docs: an empty build side would be planned away
+    assert warm_engine.docs_with_terms(neg).count() > 0
+    for plan in _restricted_plans(warm_engine, neg=neg):
+        _assert_one_broadcast_join(spark, plan, "LeftAnti", warm_engine.warm_postings())
+
+
+@contextmanager
+def _py4j_calls(spark):
+    """The list of Py4J commands the driver sends inside the block.
+    Frees of proxies left by earlier work ("m d" commands, sent whenever
+    Python's garbage collector runs) are not the block's own calls and are
+    not counted."""
     import gc
 
-    from meilisearch_thai_spark.query.federation import federated_search
-    from meilisearch_thai_spark.query.service import SearchService
-
-    svc = SearchService(spark, warm_engine.index_dir)
-    svc.engine.warm_postings()
-    svc.search("ปัญญาประดิษฐ์")  # first search: vocabulary, typo settings
     client = spark.sparkContext._gateway._gateway_client
     send, calls = client.send_command, []
 
@@ -227,31 +241,72 @@ def test_warm_search_py4j_budget(spark, warm_engine):
             calls.append(command)
         return send(command, *args, **kwargs)
 
+    gc.collect()
     client.send_command = counting
     try:
-        for filters in (None, {"lang": "th"}):
-            counts = []
-            for _ in range(2):
-                gc.collect()
-                calls.clear()
-                svc.search("เทคโนโลยี อาหาร", filters=filters)
-                counts.append(len(calls))
-            miss, hit = counts
-            assert miss <= 20, (filters, counts)
-            assert hit < miss, (filters, counts)
-        engines = {"a": warm_engine, "b": svc.engine}
-        counts = []
-        for _ in range(2):
-            gc.collect()
-            calls.clear()
-            assert federated_search(engines, ["เทคโนโลยี", "อาหาร"], k=10).collect()
-            counts.append(len(calls))
-        assert counts[1] <= 12, counts
+        yield calls
     finally:
         del client.send_command
+
+
+def test_warm_search_py4j_budget(spark, warm_engine):
+    """A warm SearchService.search builds its plan in one spark.sql call,
+    filtered or not, with a negative keyword or not: at most 20 Py4J round
+    trips on a plan-cache miss and fewer on the repeat (the Column-built
+    plan took over a thousand).  A federated search over two warm engines
+    composes both branches into one statement: at most 12 round trips,
+    collect included."""
+    from meilisearch_thai_spark.query.federation import federated_search
+    from meilisearch_thai_spark.query.service import SearchService
+
+    svc = SearchService(spark, warm_engine.index_dir)
+    svc.engine.warm_postings()
+    svc.search("ปัญญาประดิษฐ์")  # first search: vocabulary, typo settings
+    for query, filters in (
+        ("เทคโนโลยี อาหาร", None),
+        ("เทคโนโลยี อาหาร", {"lang": "th"}),
+        ("เทคโนโลยี อาหาร -ข่าว", None),
+    ):
+        counts = []
+        for _ in range(2):
+            with _py4j_calls(spark) as calls:
+                svc.search(query, filters=filters)
+            counts.append(len(calls))
+        miss, hit = counts
+        assert miss <= 20, (query, filters, counts)
+        assert hit < miss, (query, filters, counts)
+    engines = {"a": warm_engine, "b": svc.engine}
+    counts = []
+    for _ in range(2):
+        with _py4j_calls(spark) as calls:
+            assert federated_search(engines, ["เทคโนโลยี", "อาหาร"], k=10).collect()
+        counts.append(len(calls))
+    assert counts[1] <= 12, counts
     svc.engine.postings.unpersist()
     svc.engine.doc_stats.unpersist()
     svc.engine._warm.unpersist()
+
+
+def test_compressed_plans_are_sql_text(spark, warm_engine):
+    """The compressed routes write their posting scans and the tombstone
+    exclusion as SQL text: a 1,000-id tombstone set is one Py4J call (the
+    Column API's isin made about four per id), and a cold search_page
+    builds its plan in far fewer round trips than the Column-built block
+    frame's 209."""
+    cold = SearchEngine(spark, warm_engine.index_dir, cache_postings=False)
+    ids = sorted(r["doc_id"] for r in cold.doc_stats.select("doc_id").collect())
+    cold._tombstones = ids[::2] + list(range(ids[-1] + 1, ids[-1] + 1001 - len(ids[::2])))
+    assert len(cold._tombstones) == 1000
+    with _py4j_calls(spark) as calls:
+        kept = cold._exclude_deleted(cold.doc_stats)
+    assert len(calls) <= 2, len(calls)
+    assert sorted(r["doc_id"] for r in kept.select("doc_id").collect()) == ids[1::2]
+    cold._tombstones = []
+    cold.search_page("เทคโนโลยี อาหาร")
+    for query in ("อาหาร ไทย", "อาหาร ไทย -โรงเรียน"):
+        with _py4j_calls(spark) as calls:
+            assert cold.search_page(query)
+        assert len(calls) <= 100, (query, len(calls))
 
 
 def test_cold_scan_pushes_term_filter(spark, warm_engine):

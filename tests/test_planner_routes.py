@@ -5,7 +5,7 @@ Sort, distinct and cursor requests ask the planner for every matching doc
 warm statement without its LIMIT; on a ``cache_postings=False`` engine it
 is the compressed posting decode.  Both must return the BM25 oracle's
 page: the same doc order, scores within 1e-9 — plain, filtered, with a
-literal negative keyword and with tombstones.
+negative keyword and with tombstones.
 """
 
 from __future__ import annotations
@@ -105,8 +105,8 @@ def _exec_nodes(plan) -> list:
 
 
 def _rare_negative(oracle, best, query):
-    """A literal negative keyword: a word of ``best`` outside the query,
-    rare enough for the collected-id route, that tokenizes to itself."""
+    """A rare negative keyword: a word of ``best`` outside the query that
+    tokenizes to itself."""
     qterms = set(extract_index_terms(tokenize_for_index(query)))
     for t, _tf in sorted(oracle.tf[best].items()):
         if t not in qterms and 1 <= oracle.df[t] <= 20 and extract_index_terms(tokenize_for_index(t)) == [t]:

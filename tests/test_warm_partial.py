@@ -15,29 +15,27 @@ import pytest
 
 from meilisearch_thai_spark.index.builder import build_index
 from meilisearch_thai_spark.query.executor import QueryTerm, SearchEngine
+from meilisearch_thai_spark.query.oracle import BM25Oracle
 from meilisearch_thai_spark.sources.pages import PAGES_SCHEMA
 
 _TS = datetime.datetime(2024, 1, 1)
 
 
-@pytest.fixture(scope="module")
-def idx(spark, tmp_path_factory):
+def _docs() -> dict[str, str]:
     # skewed dfs ('common'/'padding'/'extra' in all 50 docs, fill words in
     # 10 each, rare words exactly once) — a head-term budget separates them
     # cleanly.  All-alphabetic tokens: the tokenizer splits digit runs off,
     # which would collapse rare1..rare50 into one df-50 'rare' term.
     fills = ["fillaa", "fillbb", "fillcc", "filldd", "fillee"]
     rares = [f"rw{chr(97 + i % 26)}{chr(97 + i // 26)}" for i in range(50)]
-    rows = [
-        (
-            f"u/{i:03d}",
-            _TS,
-            b"",
-            f"common {fills[i % 5]} {rares[i]} padding extra",
-            "en",
-        )
-        for i in range(50)
-    ]
+    return {
+        f"u/{i:03d}": f"common {fills[i % 5]} {rares[i]} padding extra" for i in range(50)
+    }
+
+
+@pytest.fixture(scope="module")
+def idx(spark, tmp_path_factory):
+    rows = [(u, _TS, b"", text, "en") for u, text in _docs().items()]
     pages = spark.createDataFrame(rows, PAGES_SCHEMA)
     out = str(tmp_path_factory.mktemp("idx_warmcap"))
     build_index(spark, pages, out)
@@ -131,6 +129,28 @@ def test_filtered_cold_term_routes_compressed(engines, monkeypatch):
         assert pages[0] and pages[0] == pages[1] == pages[2], q
         assert all(u < "u/025" for u, _ in pages[0]), q
         assert len(calls) == cogroups, q
+
+
+def test_cold_negative_routes_off_the_warm_tier(engines, planner_routes):
+    """A negative keyword the budget left cold has no rows in the tier, so
+    the warm statement could not exclude its docs: warm positive words
+    plus one cold negative leave the warm tier and match the oracle, on a
+    top-k page and on a sorted one."""
+    capped, _, _ = engines
+    oracle = BM25Oracle(_docs())
+    q, neg = "common extra", "rwha"  # rwha: u/007 only, inside the plain top 20
+    assert capped._warm_covers([QueryTerm(0, "common"), QueryTerm(0, "extra")])
+    assert not capped._warm_covers([QueryTerm(0, "common")], [neg])
+    want = oracle.top_k(q, k=20, exclude_terms=[neg])
+    assert "u/007" in {u for u, _ in oracle.top_k(q, k=20)} - {u for u, _ in want}
+    routes = planner_routes(capped)
+    got = [(h["url"], h["score"]) for h in capped.search_page(f"{q} -{neg}", k=20)]
+    assert [u for u, _ in got] == [u for u, _ in want]
+    assert [s for _, s in got] == pytest.approx([s for _, s in want], abs=1e-9)
+    every = sorted(u for u, _ in oracle.top_k(q, k=50, exclude_terms=[neg]))
+    page = capped.search(f"{q} -{neg}", k=20, sort=["url:asc"]).collect()
+    assert [r["url"] for r in page] == every[:20]
+    assert routes == ["compressed", "compressed"]
 
 
 def test_memory_report_disabled_engine_is_estimate_only(engines):
