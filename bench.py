@@ -9,8 +9,13 @@ Headline set:
   - ``thai_index_build``  — generate a deterministic Thai pages corpus
     (``$BENCH_DOCS``, default 50k) and build the full compressed posting
     index (docs/sec is the north-rule build metric; also in ``extra``).
-  - ``thai_query_p50``    — median warm BM25 top-10 latency over the
-    reference benchmark query set (BASELINE.md).
+  - ``thai_query_first_p50`` — median first-sight warm BM25 top-10 latency
+    over the reference benchmark query set (BASELINE.md): each query's
+    first request, a plan-cache miss (parse + run).
+  - ``thai_query_p50``    — median warm BM25 top-10 latency over the same
+    set, the min over repeats.  A repeated warm page is a result hit (its
+    rows are kept in the plan cache: no Spark job), so this entry times
+    the result path; ``thai_query_first_p50`` times the miss.
   - ``thai_query_batch``  — ALL reference queries scored in ONE Spark job
     (the X1 fan-out shape: per-query cost at scale).
   - ad-hoc BM25, dedup (MinHash-LSH + exact Jaccard), ANN cosine, text
@@ -44,6 +49,7 @@ THAI_QUERIES = [
     "ตลาดหลักทรัพย์",
     "โรงเรียน",
 ]
+WARMUP_QUERY = "ข่าว"  # outside THAI_QUERIES: their first sights stay misses
 
 
 def main() -> None:
@@ -89,13 +95,21 @@ def main() -> None:
     eng = SearchEngine(spark, idx_dir)
     eng.postings.count()  # materialize cache
     eng.doc_stats.count()
-    # serving warmup: builds the decoded warm tier + compiles the point-query
-    # plan once (codegen cached thereafter — InSet keeps source stable)
-    eng.search_page(THAI_QUERIES[0], k=10)
-    # per-query MIN over interleaved reps: this host throttles CPU in
-    # multi-minute windows (BASELINE.md §Scaling methodology), so a single
-    # pass can land entirely inside a throttled window and report the host,
-    # not the engine
+    # serving warmup with a query outside the set: builds the decoded warm
+    # tier + compiles the point-query plan once, so each query's first sight
+    # below is a plan-cache miss on a warm JVM
+    eng.search_page(WARMUP_QUERY, k=10)
+    first = []
+    for q in THAI_QUERIES:
+        t0 = time.time()
+        eng.search_page(q, k=10)
+        first.append(time.time() - t0)
+    timings["thai_query_first_p50"] = round(statistics.median(first), 3)
+    extra["thai_query_first_max"] = round(max(first), 3)
+    # per-query MIN over interleaved reps (result hits): this host throttles
+    # CPU in multi-minute windows (BASELINE.md §Scaling methodology), so a
+    # single pass can land entirely inside a throttled window and report the
+    # host, not the engine
     best = {q: float("inf") for q in THAI_QUERIES}
     for _rep in range(3):
         for q in THAI_QUERIES:

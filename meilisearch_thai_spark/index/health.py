@@ -104,8 +104,8 @@ def prometheus_metrics(
     (src/api/endpoints/metrics.py:489-516 — health/system/search-proxy
     gauge families rendered as ``# HELP``/``# TYPE``/sample lines), scoped
     to what a Spark-native engine actually has: per-index document and
-    lifecycle gauges, per-engine warm-tier memory and settings staleness,
-    and per-service query counters/latency sums (Prometheus convention:
+    lifecycle gauges, per-engine warm-tier memory, settings staleness and
+    plan-cache counters, and per-service query counters/latency sums (Prometheus convention:
     export count + sum, let the scraper compute rates and means).
 
     Driver-side only — composes :func:`health_report` (without stats) and
@@ -154,6 +154,20 @@ def prometheus_metrics(
     if mem_samples:
         metric("mst_engine_cached_bytes", "gauge",
                "Spark block-manager bytes cached by the engine", mem_samples)
+    # the warm plan cache's serving cases (SearchEngine._warm_entry)
+    for name, mtype, key, help_ in (
+        ("mst_plan_cache_misses_total", "counter", "plan_cache_misses",
+         "warm statements parsed because no plan was cached"),
+        ("mst_plan_cache_hits_total", "counter", "plan_cache_hits",
+         "warm statements run from a cached parsed plan"),
+        ("mst_result_cache_hits_total", "counter", "result_cache_hits",
+         "warm pages answered from cached rows, with no Spark job"),
+        ("mst_result_cache_rows", "gauge", "result_rows_held",
+         "collected rows the warm plan cache keeps"),
+    ):
+        samples = [({"uid": uid}, er["memory"][key]) for uid, er in rep["engines"].items()]
+        if samples:
+            metric(name, mtype, help_, samples)
     svc_cnt, svc_sum, svc_zero = [], [], []
     for uid, svc in (services or {}).items():
         recs = getattr(svc, "metrics", [])

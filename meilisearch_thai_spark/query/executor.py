@@ -11,10 +11,11 @@ serving planner (:meth:`SearchEngine._ranked_sql`):
   keyword, a broadcast anti-join over the same view] → explode(term →
   variant ids) → BM25 SQL scalar → per-(variant, doc) sum,
   exchange-free → :func:`rank_sql`;
-- exact: the same statement over the request's own posting blocks (query
-  and negative words), decoded into tier rows behind a temp view — when
-  the tier cannot serve a request that asks for no top-k (``k=None``:
-  sort, distinct, cursor) or carries negative keywords;
+- exact: the same statement over the query words' posting blocks,
+  decoded into tier rows behind a temp view (the negative words' blocks
+  decode to bare doc ids behind a second one) — when the tier cannot
+  serve a request that asks for no top-k (``k=None``: sort, distinct,
+  cursor) or carries negative keywords;
 - block-max: term-pushdown scan of the posting blocks → block-max bucket
   heaps in a pandas UDF (cogrouped with the allowed doc ids when a filter
   restricts candidates, or a phrase variant meets negative keywords) →
@@ -26,6 +27,16 @@ definition per substrate: the SQL scalar (``_warm_s_sql``) and the numpy
 kernel (:func:`builder.bm25`, shared with the build's block-max bounds);
 posting blocks decode through :mod:`index.codec`.  The federation
 composes each index's statement as SQL text (:meth:`SearchEngine._ranked_sql`).
+
+A warm statement is served in one of three cases, keyed by its text in the
+warm binding's plan cache (:meth:`SearchEngine._warm_entry`):
+
+- a miss: the text is parsed (``spark.sql``) and run;
+- a plan hit (lazy API only): the parsed Dataset is reused, so only
+  execution is paid;
+- a result hit: an eager top-k page (:meth:`SearchEngine._ranked_rows`)
+  returns the rows collected the first time — no Spark job, no Py4J
+  round trip.
 """
 
 from __future__ import annotations
@@ -52,7 +63,8 @@ from .requests import filters_to_sql, sql_str
 # process-wide temp-view namer; next() on a count is atomic, so engines and
 # requests in different threads never register the same name
 _VIEW_SEQ = itertools.count(1)
-# guards the warm plan caches' insert-and-evict (_warm_ranked)
+# guards the warm plan caches' insert-and-evict, their rows ceiling and the
+# engines' cache counters (SearchEngine._warm_entry, _keep_rows)
 _PLAN_LOCK = threading.Lock()
 
 
@@ -86,6 +98,11 @@ def required_terms(variants: list[Variant]) -> dict[int, int]:
 
 def _sql_map(pairs) -> str:
     return "map(" + ", ".join(f"{a}, {b}" for a, b in pairs) + ")"
+
+
+def _rows_held(plans: dict) -> int:
+    """Collected rows kept across one binding's plan-cache entries."""
+    return sum(len(rows) for _df, rows in plans.values() if rows is not None)
 
 
 def rank_sql(
@@ -664,6 +681,11 @@ class SearchEngine:
         self._doomed_df: DataFrame | None = None  # lazy anti-join side (>cap)
         # (warm tier, its temp view, that view's plan cache) — _warm_binding
         self._warm_bound: tuple = (None, None, {})
+        # warm serving cases since the engine started (_warm_entry); they
+        # survive rebinds, as counters must
+        self._cache_counts = dict.fromkeys(
+            ("plan_cache_misses", "plan_cache_hits", "result_cache_hits"), 0
+        )
         self._views: dict[str, DataFrame] = {}  # kind → df behind its temp view
         self._view_id = next(_VIEW_SEQ)  # names this engine's temp views
         self._load_index()
@@ -877,10 +899,14 @@ class SearchEngine:
             bound = self._warm_bound = (w, name, {})
         return bound[1], bound[2]
 
-    _PLAN_CACHE_CAP = 512  # parsed warm plans per engine (tiny objects)
+    _PLAN_CACHE_CAP = 512  # parsed warm plans per binding (tiny objects)
+    # collected rows kept per binding, all entries together: at the
+    # default 10-hit page that is thousands of pages, above the plan cap
+    _RESULT_ROWS_CAP = 65_536
 
     def _warm_scored_sql(
-        self, view: str, qterms: list[QueryTerm], neg: list[str] = (), allowed: str | None = None
+        self, view: str, qterms: list[QueryTerm], excluded: str | None = None,
+        allowed: str | None = None,
     ) -> str:
         """(variant_id, doc_id, score, terms_matched) per (variant, doc) over
         the warm view: ``term IN (…)`` (an InSet — the columnar cache prunes
@@ -888,8 +914,8 @@ class SearchEngine:
         the BM25 scalar → sum and count, exchange-free (the tier is
         hash-partitioned by doc_id).  A single-variant query takes a
         constant variant id instead of the map, so its generated code is
-        identical across queries.  The docs holding a negative keyword
-        (``neg``, words of the same view) drop at the scan, and so do the
+        identical across queries.  The docs in ``excluded`` (a query of the
+        doc ids holding a negative keyword) drop at the scan, and so do the
         docs outside ``allowed`` (a query of allowed doc ids): the whole
         matching set is scored here, so both are exact.  Spark plans
         ``doc_id NOT IN (…)`` as an anti-join and ``doc_id IN (…)`` as a
@@ -901,11 +927,8 @@ class SearchEngine:
             by_term.setdefault(q.term, []).append(q.variant_id)
         terms = sorted(by_term)
         where = f"term IN ({', '.join(map(sql_str, terms))})" if terms else "FALSE"
-        if neg:
-            where += (
-                f" AND doc_id NOT IN (SELECT doc_id FROM {view}"
-                f" WHERE term IN ({', '.join(map(sql_str, neg))}))"
-            )
+        if excluded is not None:
+            where += f" AND doc_id NOT IN ({excluded})"
         if allowed is not None:
             where += f" AND doc_id IN ({allowed})"
         vids = sorted({q.variant_id for q in qterms})
@@ -923,27 +946,78 @@ class SearchEngine:
             f" GROUP BY variant_id, doc_id)"
         )
 
-    def _warm_ranked(self, text: str) -> DataFrame:
-        """Parse a warm statement (the planner's text step on the warm
-        route, :meth:`_ranked_sql`) through the plan cache.
+    def _warm_entry(self, text: str, eager: bool = False) -> list:
+        """A warm statement's plan-cache entry ``[Dataset, rows]``, parsed
+        on a miss; ``rows`` are its collected rows once an eager page kept
+        them (:meth:`_keep_rows`), else None.  Counts the serving case:
+        a miss, a plan hit, or — for an ``eager`` caller finding rows — a
+        result hit.
 
-        Parsed Datasets are kept per engine, keyed by the SQL text — filter
-        included: Spark caches the analyzed and compiled QueryExecution on
-        the Dataset, so a repeated query pays only execution.  The cache
-        belongs to one warm view (:meth:`_warm_binding`), so it can never
-        serve a stale tier; a refresh that rereads doc_stats also rebuilds
-        the tier, so it never serves stale metadata either."""
+        Entries are kept per warm binding, keyed by the SQL text, which
+        fixes every input of the answer: terms, variants, weights, ``k``,
+        threshold, normalisation, filter, negatives and view names.  Spark
+        caches the analyzed and compiled QueryExecution on the Dataset, so
+        a plan hit pays only execution.  The cache belongs to one warm view
+        (:meth:`_warm_binding`), so it can never serve a stale tier; a
+        refresh that rereads doc_stats also rebuilds the tier, so it never
+        serves stale metadata either."""
         plans = self._warm_binding()[1]
-        df = plans.get(text)
-        if df is None:
-            df = self.spark.sql(text)
-            # FIFO eviction iterates the dict: no other thread's insert may
-            # land between the iterator and its first key
-            with _PLAN_LOCK:
+        entry = plans.get(text)
+        if entry is None:
+            entry, case = [self.spark.sql(text), None], "plan_cache_misses"
+        else:
+            case = "result_cache_hits" if eager and entry[1] is not None else "plan_cache_hits"
+        with _PLAN_LOCK:
+            self._cache_counts[case] += 1
+            if case == "plan_cache_misses":
+                # FIFO eviction iterates the dict: no other thread's insert
+                # may land between the iterator and its first key
                 if len(plans) >= self._PLAN_CACHE_CAP:
                     plans.pop(next(iter(plans), None), None)
-                plans[text] = df
-        return df
+                plans[text] = entry
+        return entry
+
+    def _keep_rows(self, text: str, entry: list, rows: tuple) -> None:
+        """Keep ``rows`` in ``entry``, ``text``'s plan-cache entry, under
+        ``_RESULT_ROWS_CAP`` rows for the whole binding: the oldest entries
+        give up their rows (their Datasets stay) until these fit.  A page
+        larger than the ceiling is not kept, nor is an entry no longer in
+        the current binding (evicted, or the tier rebound meanwhile)."""
+        cap = self._RESULT_ROWS_CAP
+        with _PLAN_LOCK:
+            plans = self._warm_bound[2]
+            if plans.get(text) is not entry or len(rows) > cap:
+                return
+            held = _rows_held(plans)
+            for old in plans.values():
+                if held + len(rows) <= cap:
+                    break
+                if old[1] is not None:
+                    held -= len(old[1])
+                    old[1] = None
+            entry[1] = rows
+
+    def _ranked_rows(
+        self, qterms: list[QueryTerm], variants: list[Variant] | None = None, **plan
+    ) -> list:
+        """The serving planner's eager step: the rows of the statement
+        :meth:`_ranked_sql` writes, collected — every eager top-k page
+        ends here.  A warm statement's rows stay in its plan-cache entry
+        (:meth:`_warm_entry`), so a repeated request returns them with no
+        Spark job and no Py4J round trip.  A request none of whose words is
+        an index word returns no rows before planning, when the driver
+        vocabulary is complete (:meth:`_vocab_complete`)."""
+        if self._vocab_complete() and self._vocab_set().isdisjoint(q.term for q in qterms):
+            return []
+        with self._ranked_sql(qterms, variants, **plan) as (text, warm):
+            if not warm:
+                return self.spark.sql(text).collect()
+            entry = self._warm_entry(text, eager=True)
+            rows = entry[1]
+            if rows is None:
+                rows = tuple(entry[0].collect())
+                self._keep_rows(text, entry, rows)
+            return list(rows)
 
     def _stats_view(self) -> str:
         """doc_stats as a temp view — the join side of SQL-composed serving
@@ -1006,7 +1080,12 @@ class SearchEngine:
         whole truth, including the compressed postings/doc_stats caches),
         the warm tier's row count and estimated decoded bytes, the JVM's max
         heap, and the est. heap fraction — the number an operator watches
-        before raising ``warm_budget_bytes`` on a serving shard.
+        before raising ``warm_budget_bytes`` on a serving shard.  Beside
+        them, the warm serving cases counted since the engine started
+        (``plan_cache_misses``, ``plan_cache_hits``, ``result_cache_hits``)
+        and the collected rows the plan cache keeps (``result_rows_held``,
+        at most ``result_rows_cap``) — kept on the driver, so not in
+        ``cached_bytes_actual``.
 
         On a ``cache_postings=False`` engine this is a pure estimate from
         index metadata (``warm_rows`` is None): the probe must not itself
@@ -1026,6 +1105,7 @@ class SearchEngine:
                 "budget_bytes": self._warm_budget,
                 "truncated": None,
                 "warm_term_count": None,
+                **self._cache_report(),
             }
         w = self.warm_postings()
         warm_rows = w.count()
@@ -1043,7 +1123,17 @@ class SearchEngine:
             "budget_bytes": self._warm_budget,
             "truncated": self._warm_terms is not None,
             "warm_term_count": len(self._warm_terms) if self._warm_terms is not None else None,
+            **self._cache_report(),
         }
+
+    def _cache_report(self) -> dict:
+        """The plan cache's counters and the rows its binding keeps."""
+        with _PLAN_LOCK:
+            return {
+                **self._cache_counts,
+                "result_rows_held": _rows_held(self._warm_bound[2]),
+                "result_rows_cap": self._RESULT_ROWS_CAP,
+            }
 
     def vocabulary(self) -> list[str]:
         """Sorted index terms, collected once per engine — BOUNDED.
@@ -1094,6 +1184,12 @@ class SearchEngine:
         if not hasattr(self, "_vocabset"):
             self._vocabset = set(self.vocabulary())
         return self._vocabset
+
+    def _vocab_complete(self) -> bool:
+        """True iff the driver vocabulary is collected and not truncated:
+        it then holds every index word, with its df in ``_df_cache``, so a
+        word outside it has no posting.  Never collects it."""
+        return hasattr(self, "_vocab") and not self._vocab_truncated
 
     def expand_terms(self, token: str, max_expansions: int = 10) -> list[str]:
         """Q10: index terms containing (Thai) or prefixed by (Latin) ``token``.
@@ -1378,11 +1474,8 @@ class SearchEngine:
         DataFrames and cached file listings otherwise keep pointing at the
         swapped-out tables (maintenance.py single-writer contract).  Drops
         every derived cache (postings/doc_stats persists, warm tier, vocab,
-        df memo, tombstone snapshot) and re-reads everything."""
-        for df in (self._warm, self._doomed_df):
-            if df is not None:
-                df.unpersist()
-        self._warm, self._doomed_df = None, None
+        df memo, tombstone snapshot, plan cache) and re-reads everything."""
+        self._drop_warm()
         if hasattr(self, "_typo_cfg"):
             del self._typo_cfg  # settings may have changed on disk
         if self._bucket_partitioned:
@@ -1399,13 +1492,18 @@ class SearchEngine:
         before = set(self._tombstones)
         self._tombstones = tombstoned_ids(self.spark, self.index_dir)
         if set(self._tombstones) != before:
-            if self._warm is not None:
-                self._warm.unpersist()
-                self._warm = None  # rebuilt (minus deletes) on next warm query
-            if self._doomed_df is not None:
-                self._doomed_df.unpersist()
-                self._doomed_df = None
+            self._drop_warm()  # rebuilt (minus deletes) on next warm query
         return len(self._tombstones)
+
+    def _drop_warm(self) -> None:
+        """Unpersist the warm tier and the tombstone anti-join side, and
+        drop the plan cache bound to the tier with the rows it keeps; the
+        next warm query rebuilds the tier and starts an empty cache."""
+        for df in (self._warm, self._doomed_df):
+            if df is not None:
+                df.unpersist()
+        self._warm, self._doomed_df = None, None
+        self._warm_bound = (None, None, {})
 
     def score_variants_topk(
         self,
@@ -1459,7 +1557,9 @@ class SearchEngine:
         One term-pushdown scan for the not-yet-cached terms only; results are
         memoized per engine, so repeated/warm queries pay nothing.  A term
         absent from the index gets df=0 (sorts first — required earliest —
-        which keeps unknown terms from silently relaxing)."""
+        which keeps unknown terms from silently relaxing).  With a complete
+        driver vocabulary every index word is already cached, so no scan
+        runs at all."""
         restricted = (
             self._active_prefixes is not None
             and self._active_prefixes != self._fprefixes
@@ -1477,7 +1577,7 @@ class SearchEngine:
             found = {r["term"]: int(r["df"]) for r in rows}
             return {t: found.get(t, 0) for t in terms}
         missing = sorted({t for t in terms if t not in self._df_cache})
-        if missing:
+        if missing and not self._vocab_complete():
             if self._fprefixes:
                 # prefixed-term filter pushes to the scan; strip AFTER so a
                 # word's df = max over its per-attribute variants
@@ -1491,7 +1591,7 @@ class SearchEngine:
                 self._df_cache[r["term"]] = int(r["df"])
             for t in missing:
                 self._df_cache.setdefault(t, 0)
-        return {t: self._df_cache[t] for t in terms}
+        return {t: self._df_cache.get(t, 0) for t in terms}
 
     def _check_declared(self, fields, declared, kind: str) -> None:
         from .requests import check_declared
@@ -1729,10 +1829,11 @@ class SearchEngine:
     ) -> list[dict]:
         """The SERVING call: top-k hits as plain rows (eager, k-bounded).
 
-        The scored top-k comes from the serving planner
-        (:meth:`_ranked_topk`: on a warm engine one cached SQL statement,
-        filters and negative keywords included) and the winners' metadata
-        from a direct point read (:meth:`_resolve_meta`) — no metadata job.
+        The scored top-k comes from the serving planner's eager step
+        (:meth:`_ranked_rows`: on a warm engine one cached SQL statement,
+        filters and negative keywords included, its rows kept for a
+        repeat) and the winners' metadata from a direct point read
+        (:meth:`_resolve_meta`) — no metadata job.
         Sorted requests and negative-only queries take the lazy
         :meth:`search` plan, which the DataFrame API keeps for composition."""
         from ..tokenizer import extract_index_terms, tokenize_for_index
@@ -1753,9 +1854,9 @@ class SearchEngine:
         if not terms:
             return []
         _uniq, _prefixes, qterms, required = self._expand_matching(terms, matching)
-        rows = self._ranked_topk(
+        rows = self._ranked_rows(
             qterms, k=k, required=required, neg=exclude_terms, filter_sql=filter_sql
-        ).collect()
+        )
         return self._resolve_meta(rows, attributes_to_retrieve)
 
     def _finalize_hits(
@@ -2098,10 +2199,10 @@ class SearchEngine:
     ) -> DataFrame:
         """The serving planner: :meth:`_ranked_sql`'s ranked relation as a
         DataFrame — a warm statement through the plan cache
-        (:meth:`_warm_ranked`), any other parsed while its scored view
+        (:meth:`_warm_entry`), any other parsed while its scored view
         lives."""
         with self._ranked_sql(qterms, variants, **plan) as (text, warm):
-            return self._warm_ranked(text) if warm else self.spark.sql(text)
+            return self._warm_entry(text)[0] if warm else self.spark.sql(text)
 
     @contextmanager
     def _ranked_sql(
@@ -2125,14 +2226,17 @@ class SearchEngine:
         budget-truncated tier, no attributesToSearchOn restriction) and no
         variant needs positions (``phrase_terms``).  Otherwise, without a
         ``k`` or with negatives and no phrase (exact): the same statement
-        over the query and negative words' posting blocks, decoded into
-        tier rows (:meth:`_tier_rows`, the lookup honouring an
-        attributesToSearchOn restriction).  Otherwise the block-max heaps,
-        cogrouped with the allowed ids — the filter's docs minus the
-        negatives' (:meth:`docs_with_terms`) — when either restricts
-        candidates (phrase checks need a heap, so they need a ``k``).  A
-        decoded or heap frame sits behind a temp view, dropped when the
-        block exits — a parsed Dataset keeps the resolved plan."""
+        over the query words' posting blocks, decoded into tier rows
+        (:meth:`_tier_rows`), its anti-join over the negative words' blocks
+        decoded to doc ids (:meth:`_term_doc_ids`) — each block decodes
+        once, both lookups honouring an attributesToSearchOn restriction.
+        Otherwise the block-max heaps, cogrouped with the allowed ids — the
+        filter's docs minus the negatives' (:meth:`docs_with_terms`) — when
+        either restricts candidates (phrase checks need a heap, so they
+        need a ``k``).  Decoded or heap frames sit behind temp views,
+        dropped when the block exits — a parsed Dataset keeps the resolved
+        plan.  The eager step (:meth:`_ranked_rows`) runs after this one,
+        so every request it plans passes here."""
         rank.update(required=required, k=k)
         if variants is None:
             rank.setdefault("dedup", len({q.variant_id for q in qterms}) > 1)
@@ -2143,28 +2247,43 @@ class SearchEngine:
         if filter_sql is not None and (warm or exact):
             allowed = f"SELECT doc_id FROM {self._stats_view()} WHERE {filter_sql}"
         if warm:
-            scored = self._warm_scored_sql(self._warm_view(), qterms, neg, allowed)
+            view = self._warm_view()
+            excluded = (
+                f"SELECT doc_id FROM {view} WHERE term IN ({', '.join(map(sql_str, neg))})"
+                if neg else None
+            )
+            scored = self._warm_scored_sql(view, qterms, excluded, allowed)
             yield rank_sql(scored, variants, **rank), True
             return
         heap = dict(required_terms=required, phrase_terms=phrase_terms)
+        scored = rel = f"mst_scored_{next(_VIEW_SEQ)}"
+        views: dict[str, DataFrame] = {}  # temp views, dropped at exit
         if exact:
-            keys = {*self._index_term_map(qterms), *(self._neg_scan_terms(neg) if neg else ())}
-            blocks = self.spark.sql(self._blocks_sql(sorted(keys), ", ".join(_TIER_COLS)))
-            frame = self._tier_rows(blocks)
+            keys = sorted(self._index_term_map(qterms))
+            blocks = self.spark.sql(self._blocks_sql(keys, ", ".join(_TIER_COLS)))
+            views[scored] = self._tier_rows(blocks)
+            excluded = None
+            if neg:  # the negatives' blocks decode once, to bare doc ids
+                name = f"mst_excluded_{next(_VIEW_SEQ)}"
+                views[name] = self._term_doc_ids(neg)
+                excluded = f"SELECT doc_id FROM {name}"
+            rel = self._warm_scored_sql(scored, qterms, excluded, allowed)
         elif filter_sql is None and not neg:
-            frame = self.score_variants_topk(qterms, k=k, **heap)
+            views[scored] = self.score_variants_topk(qterms, k=k, **heap)
         else:
             allowed_ids = self.doc_stats.filter(filter_sql or "TRUE").select("doc_id")
             if neg:
                 allowed_ids = allowed_ids.join(self.docs_with_terms(neg), "doc_id", "left_anti")
-            frame = self.score_variants_topk_filtered(qterms, k=k, allowed=allowed_ids, **heap)
-        name = f"mst_scored_{next(_VIEW_SEQ)}"
-        frame.createOrReplaceTempView(name)
-        scored = self._warm_scored_sql(name, qterms, neg, allowed) if exact else name
+            views[scored] = self.score_variants_topk_filtered(
+                qterms, k=k, allowed=allowed_ids, **heap
+            )
+        for name, frame in views.items():
+            frame.createOrReplaceTempView(name)
         try:
-            yield rank_sql(scored, variants, **rank), False
+            yield rank_sql(rel, variants, **rank), False
         finally:
-            self.spark.catalog.dropTempView(name)
+            for name in views:
+                self.spark.catalog.dropTempView(name)
 
     def search_phrase(self, terms: list[str], k: int = 10) -> DataFrame:
         """Exact-adjacency phrase search (MeiliSearch quoted-phrase
@@ -2303,14 +2422,21 @@ class SearchEngine:
 
     def docs_with_terms(self, terms: list[str]) -> DataFrame:
         """DISTINCT doc ids containing ANY of ``terms`` — a lazy decode-only
-        plan (term-pushdown scan of those terms' posting blocks → vectorized
-        varbyte unpack → distinct), tombstones excluded, honoring an active
-        attributesToSearchOn restriction.  Backs negative keywords and the
-        facet match set; also the building block for "docs mentioning X"
-        audits."""
+        plan (:meth:`_term_doc_ids` → distinct).  Backs negative keywords
+        and the facet match set; also the building block for "docs
+        mentioning X" audits."""
+        return self._term_doc_ids(terms).distinct()
+
+    def _term_doc_ids(self, terms: list[str]) -> DataFrame:
+        """The doc ids of ``terms``' postings, one row per posting:
+        term-pushdown scan of those terms' posting blocks → vectorized
+        varbyte unpack, tombstones excluded, honoring an active
+        attributesToSearchOn restriction.  The ``exact`` route's anti-join
+        side, where duplicates cost nothing and a distinct would cost a
+        shuffle."""
         blocks = self.spark.sql(self._blocks_sql(self._neg_scan_terms(terms), "doc_bytes"))
         explode = _make_doc_id_exploder(self._excluded_array())
-        return blocks.mapInPandas(explode, _DOC_ID_SCHEMA).distinct()
+        return blocks.mapInPandas(explode, _DOC_ID_SCHEMA)
 
     def search(
         self,
@@ -2458,10 +2584,10 @@ class SearchEngine:
         # raises regardless of whether the query matched (parity with the
         # lazy path and multi_variant_search)
         self._check_attrs(attributes_to_retrieve)
-        topk = self._multi_variant_dedup(query, k, min_score_threshold, normalize, filters, pq=pq)
-        if topk is None:
-            return []
-        return self._resolve_meta(topk.collect(), attributes_to_retrieve)
+        rows = self._multi_variant_dedup(
+            query, k, min_score_threshold, normalize, filters, pq=pq, rank=self._ranked_rows
+        )
+        return self._resolve_meta(rows or [], attributes_to_retrieve)
 
     def facet_distribution(
         self,
@@ -2753,10 +2879,10 @@ class SearchEngine:
         if not qterms:
             return [[] for _ in queries]
         required = required_terms(variants)
-        rows = self._ranked_topk(
+        rows = self._ranked_rows(
             qterms, variants, k=k, required=required, normalize=normalize,
             threshold=min_score_threshold, per_query=True,
-        ).collect()
+        )
         resolved = self._resolve_meta(rows)
         out: list[list[dict]] = [[] for _ in queries]
         for d in resolved:
@@ -2852,12 +2978,15 @@ class SearchEngine:
         normalize: bool,
         filters: dict | None,
         pq=None,
-    ) -> DataFrame | None:
+        rank=None,
+    ) -> DataFrame | list | None:
         """Variant pipeline + scoring + weighting + per-doc dedup + threshold.
 
         Returns the serving planner's frame (doc_id, score, variant_type,
-        terms_matched), or None when the query has no variant — the part of
-        the search shared by the lazy DataFrame API and the eager page API.
+        terms_matched) — or its rows, when ``rank`` is the eager step
+        :meth:`_ranked_rows` — or None when the query has no variant: the
+        part of the search shared by the lazy DataFrame API and the eager
+        page API.
         With a ``k`` it is the final top-``k`` in score order; with
         ``k=None``, every matching doc, for a caller's field order (phrase
         variants then degrade to conjunctive matching: positions are only
@@ -2887,7 +3016,7 @@ class SearchEngine:
         # within-variant rank by raw score == rank by weighted score, and any
         # doc in the final top-k is in its winning variant's top-k
         required = required_terms(variants)
-        return self._ranked_topk(
+        return (rank or self._ranked_topk)(
             qterms, variants, k=k, required=required, phrase_terms=phrase_specs or None,
             neg=getattr(pq, "exclude_terms", None), filter_sql=filter_sql,
             normalize=normalize, threshold=min_score_threshold,

@@ -175,6 +175,22 @@ def test_prometheus_metrics_exposition(spark, root):
         l == f'mst_query_search_ms_sum{{uid="idx1"}} {expected_sum}' for l in lines
     )
     assert expected_sum > 0
+    # the warm plan cache's counters (the repeat is a result hit) and the
+    # rows it keeps
+    word = max(eng.vocabulary(), key=lambda t: (eng.term_dfs([t])[t], t))
+    for _ in range(2):
+        assert svc.search(word, limit=3).hits
+    text = prometheus_metrics(spark, root, engines={"idx1": eng}, services={"idx1": svc})
+    lines = text.strip().splitlines()
+    rep = eng.warm_memory_report()
+    assert rep["result_cache_hits"] >= 1 and rep["result_rows_held"] > 0
+    for name, key in (
+        ("mst_plan_cache_misses_total", "plan_cache_misses"),
+        ("mst_plan_cache_hits_total", "plan_cache_hits"),
+        ("mst_result_cache_hits_total", "result_cache_hits"),
+        ("mst_result_cache_rows", "result_rows_held"),
+    ):
+        assert f'{name}{{uid="idx1"}} {rep[key]}' in lines, name
     # every sample line belongs to a declared family and parses as
     # name{labels} value
     families = {l.split()[2] for l in lines if l.startswith("# TYPE")}

@@ -120,6 +120,41 @@ def test_rare_and_highdf_negatives_stay_warm(spark, built, planner_routes):
     eng._warm.unpersist()
 
 
+def test_exact_route_decodes_each_block_once(spark, built):
+    """On the exact route the anti-join's side decodes only the negative
+    words' blocks: the executed plan of a cold search with a negative
+    holds two decodes (``MapInPandas``) over disjoint posting scans — the
+    query words' and the negative words' — and the page equals the
+    oracle's."""
+    from test_plan_properties import _exec_nodes
+
+    from meilisearch_thai_spark.tokenizer import extract_index_terms, tokenize_for_index
+
+    out, corpus = built
+    pos, neg = "เทคโนโลยี อาหาร", "ความเข้าใจ"
+    want = BM25Oracle(corpus).top_k(pos, k=10, exclude_terms=[neg])
+    assert want and want != BM25Oracle(corpus).top_k(pos, k=10)
+    eng = SearchEngine(spark, out, cache_postings=False)
+    df = eng.search(f"{pos} -{neg}", k=10)
+    got = [(r["url"], r["score"]) for r in df.collect()]
+    assert [u for u, _ in got] == [u for u, _ in want]
+    for (u, a), (_, b) in zip(got, want):
+        assert a == pytest.approx(b, abs=1e-9), u
+    words = {
+        "query": set(extract_index_terms(tokenize_for_index(pos))),
+        "negative": set(extract_index_terms(tokenize_for_index(neg))),
+    }
+    decodes = [
+        n for n in _exec_nodes(df._jdf.queryExecution().executedPlan())
+        if n.nodeName() == "MapInPandas"
+    ]
+    scanned = []
+    for d in decodes:
+        scans = [n.simpleString(10_000) for n in _exec_nodes(d) if n.nodeName().startswith("Scan")]
+        scanned.append({w for s in scans for w in words["query"] | words["negative"] if w in s})
+    assert sorted(scanned, key=len) == sorted(words.values(), key=len), scanned
+
+
 def test_negative_only_query_is_placeholder_page(spark, built):
     out, corpus = built
     oracle = BM25Oracle(corpus)
