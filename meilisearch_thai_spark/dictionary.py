@@ -148,29 +148,3 @@ def set_custom_words(words) -> bool:
     _CUSTOM_WORDS = new
     _clear_dictionary_caches()
     return True
-
-
-def add_custom_words(words) -> int:
-    """Add words to the overlay (reference ``add_dictionary_words``);
-    returns how many were actually new."""
-    before = _CUSTOM_WORDS
-    set_custom_words(before | {str(w).strip() for w in words})
-    return len(_CUSTOM_WORDS - before)
-
-
-def remove_custom_words(words) -> int:
-    """Remove words from the overlay (reference ``remove_dictionary_words``);
-    packaged base/compound words are the pinned contract and cannot be
-    removed — attempting to raises.  Returns how many were removed."""
-    target = {w for w in (str(x).strip() for x in words) if w}
-    pinned = sorted(target & (load_base_words() | load_compound_words()))
-    if pinned:
-        raise ValueError(
-            f"cannot remove packaged dictionary words {pinned}: the base "
-            "vocabulary and compound dictionary are the pinned tokenization "
-            "contract (byte-identity) — only runtime overlay words are "
-            "removable"
-        )
-    before = _CUSTOM_WORDS
-    set_custom_words(before - target)
-    return len(before - _CUSTOM_WORDS)

@@ -27,14 +27,6 @@ def exact_duplicates(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def exact_duplicates_sql(table: str, id_col: str, text_col: str) -> str:
-    return f"""
-SELECT md5({text_col}) AS content_hash, MIN({id_col}) AS representative,
-       COUNT(*) AS n_copies
-FROM {table} GROUP BY 1 HAVING COUNT(*) > 1
-"""
-
-
 def _shingles(text_col: str, n: int = 3):
     """Word n-gram shingles as a Column (array<string>)."""
     toks = F.split(F.col(text_col), " ")

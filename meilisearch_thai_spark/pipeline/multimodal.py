@@ -213,20 +213,3 @@ def frame_sample(
             )
 
     return src.mapInPandas(run, FRAME_SAMPLE_SCHEMA)
-
-
-def binary_meta_sql(table: str, id_col: str, bin_col: str) -> str:
-    """DuckDB oracle for ``binary_meta`` (sniffing reproduced with prefix
-    compares; sha256 via DuckDB's built-in)."""
-    cases = []
-    for mime, magic in _MAGIC:
-        hexs = magic.hex().upper()
-        cases.append(f"WHEN upper(hex(substring({bin_col}, 1, {len(magic)}))) = '{hexs}' THEN '{mime}'")
-    case_sql = "CASE " + " ".join(cases) + " ELSE 'application/octet-stream' END"
-    return f"""
-SELECT {id_col},
-       octet_length({bin_col}) AS n_bytes,
-       sha256({bin_col}) AS content_sha256,
-       {case_sql} AS sniffed_type
-FROM {table}
-"""

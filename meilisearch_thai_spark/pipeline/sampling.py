@@ -55,17 +55,6 @@ def deterministic_sample(
     return docs.filter(_keep_expr(F.col(id_col), fraction, seed))
 
 
-def deterministic_sample_sql(
-    table: str, id_col: str, fraction: float, seed: str = "sample"
-) -> str:
-    """DuckDB twin of :func:`deterministic_sample` (SELECT * of kept rows)."""
-    return f"""
-SELECT * FROM {table}
-WHERE substring(md5('{seed}' || '|' || CAST({id_col} AS VARCHAR)), 1, 8)
-      < '{_threshold_hex(fraction)}'
-"""
-
-
 def stratified_sample(
     docs: DataFrame,
     id_col: str,

@@ -111,19 +111,6 @@ def boilerplate_lines(
     )
 
 
-def boilerplate_lines_sql(
-    table: str, id_col: str, text_col: str, min_df: int = 3
-) -> str:
-    return f"""
-WITH flat AS (
-  SELECT {id_col} AS doc_key, unnest(string_split({text_col}, chr(10))) AS line
-  FROM {table}
-)
-SELECT line, COUNT(DISTINCT doc_key) AS line_df
-FROM flat GROUP BY 1 HAVING COUNT(DISTINCT doc_key) >= {min_df}
-"""
-
-
 def remove_boilerplate(
     docs: DataFrame, id_col: str, text_col: str, min_df: int = 3, delim: str = "\n"
 ) -> DataFrame:

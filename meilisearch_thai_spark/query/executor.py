@@ -2,8 +2,13 @@
 
 The reference fans out per-variant HTTP searches to MeiliSearch under an
 asyncio semaphore (src/search_proxy/services/search_executor.py:55-176); here
-ALL variants score in ONE Spark job, on one of three routes chosen by the
-serving planner (:meth:`SearchEngine._ranked_sql`):
+ALL variants score in ONE Spark job.  Each search is one request, a frozen
+:class:`ServeRequest` built once from the entry point's arguments
+(:meth:`SearchEngine._request`: scoring terms and variants, ``k``, required
+counts, phrase checks, negative words, filter SQL, the attributesToSearchOn
+field prefixes, ranking options); nothing of it is engine state.  The
+serving planner (:meth:`SearchEngine._ranked_sql`) names the route that
+scores it:
 
 - warm: one cached SQL statement over the decoded in-memory tier —
   ``term IN (…)`` scan [+ ``doc_id IN`` the filter's doc_stats ids, a
@@ -16,10 +21,10 @@ serving planner (:meth:`SearchEngine._ranked_sql`):
   decode to bare doc ids behind a second one) — when the tier cannot
   serve a request that asks for no top-k (``k=None``: sort, distinct,
   cursor) or carries negative keywords;
-- block-max: term-pushdown scan of the posting blocks → block-max bucket
-  heaps in a pandas UDF (cogrouped with the allowed doc ids when a filter
-  restricts candidates, or a phrase variant meets negative keywords) →
-  :func:`rank_sql`.
+- block_max: term-pushdown scan of the posting blocks → block-max bucket
+  heaps in a pandas UDF → :func:`rank_sql`;
+- cogroup: the same heaps cogrouped with the allowed doc ids, when a
+  filter restricts candidates or a phrase variant meets negative keywords.
 
 All rank with the same statement: matching-strategy filter, variant
 weights and boosts, per-doc dedup, threshold, top-k.  BM25 has one
@@ -46,8 +51,8 @@ import os
 import re
 import threading
 from contextlib import contextmanager
-from dataclasses import dataclass
-from typing import Iterator
+from dataclasses import KW_ONLY, dataclass, replace
+from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -57,8 +62,10 @@ from pyspark.sql import types as T
 
 from ..index.builder import FIELD_SEP, IndexMeta, bm25, field_weights, load_meta
 from ..index.codec import decode_blocks, decode_doc_block
+from ..tokenizer import extract_index_terms, tokenize_for_index
 from .pipeline import split_negative_keywords  # re-export (parse lives in Q1-Q8)
-from .requests import filters_to_sql, sql_str
+from .pipeline import split_query_negatives
+from .requests import check_declared, filters_to_sql, sql_str
 
 # process-wide temp-view namer; next() on a count is atomic, so engines and
 # requests in different threads never register the same name
@@ -94,6 +101,52 @@ def required_terms(variants: list[Variant]) -> dict[int, int]:
     return {
         vid: v.n_terms for vid, v in enumerate(variants) if v.matching in ("all", "phrase")
     }
+
+
+def _query_words(query: str) -> tuple[list[str], list[str]]:
+    """Query text → (index words, negative words), both tokenized by the
+    pinned index tokenizer (:func:`pipeline.split_query_negatives`)."""
+    positive, negatives = split_query_negatives(query)
+    return extract_index_terms(tokenize_for_index(positive)), negatives
+
+
+@dataclass(frozen=True)
+class ServeRequest:
+    """One scored search, built once from an entry point's arguments
+    (:meth:`SearchEngine._request`) and read by every step of the serving
+    planner (:meth:`SearchEngine._ranked_sql`).  Nothing of a request lives
+    on the engine, so concurrent requests never see each other's
+    restriction.
+
+    ``qterms`` are the scoring (variant, word) pairs and ``variants`` their
+    weighted variants (None: raw BM25, a doc keeping its best
+    sub-variant); ``k`` cuts the top-k (None: every matching doc);
+    ``required`` maps a variant to the words a doc must match and
+    ``phrase_terms`` a phrase variant to its positional check; ``neg`` are
+    the negative words, ``filter_sql`` the compiled filter and ``prefixes``
+    the attributesToSearchOn field prefixes (None: every searchable
+    attribute); the rest are :func:`rank_sql` options."""
+
+    qterms: Sequence[QueryTerm]
+    variants: Sequence[Variant] | None = None
+    _: KW_ONLY
+    k: int | None
+    required: dict[int, int] | None = None
+    phrase_terms: dict[int, list[str]] | None = None
+    neg: Sequence[str] = ()
+    filter_sql: str | None = None
+    prefixes: tuple[str, ...] | None = None
+    normalize: bool = False
+    threshold: float = 0.0
+    per_query: bool = False
+
+    def ranked(self, src: str) -> str:
+        """:func:`rank_sql` of ``src`` under this request's options."""
+        return rank_sql(
+            src, self.variants, required=self.required, normalize=self.normalize,
+            threshold=self.threshold, k=self.k, per_query=self.per_query,
+            dedup=self.variants is None and len({q.variant_id for q in self.qterms}) > 1,
+        )
 
 
 def _sql_map(pairs) -> str:
@@ -735,11 +788,6 @@ class SearchEngine:
         self._fprefixes = (
             [f"{i}{FIELD_SEP}" for i in range(len(self.meta.fields))] if self._fp else []
         )
-        # attributesToSearchOn (MeiliSearch search param): when set, term
-        # LOOKUP fans out to these field prefixes only — scoring math is
-        # untouched (weights/df/avgdl ride the per-field term rows that
-        # remain).  None = all searchable attributes.
-        self._active_prefixes: list[str] | None = None
         # deleted docs (index/maintenance.py delete_docs): excluded exactly
         # in every scoring path; compact_index() resets the set — keep it
         # compacted before it grows unbounded (Lucene-style deletes).
@@ -997,20 +1045,22 @@ class SearchEngine:
                     old[1] = None
             entry[1] = rows
 
-    def _ranked_rows(
-        self, qterms: list[QueryTerm], variants: list[Variant] | None = None, **plan
-    ) -> list:
+    def _ranked_rows(self, req: ServeRequest) -> list:
         """The serving planner's eager step: the rows of the statement
         :meth:`_ranked_sql` writes, collected — every eager top-k page
         ends here.  A warm statement's rows stay in its plan-cache entry
         (:meth:`_warm_entry`), so a repeated request returns them with no
-        Spark job and no Py4J round trip.  A request none of whose words is
-        an index word returns no rows before planning, when the driver
-        vocabulary is complete (:meth:`_vocab_complete`)."""
-        if self._vocab_complete() and self._vocab_set().isdisjoint(q.term for q in qterms):
+        Spark job and no Py4J round trip.  A request with no scoring word,
+        or none that is an index word when the driver vocabulary is
+        complete (:meth:`_vocab_complete`), returns no rows before
+        planning."""
+        qterms = req.qterms
+        if not qterms or (
+            self._vocab_complete() and self._vocab_set().isdisjoint(q.term for q in qterms)
+        ):
             return []
-        with self._ranked_sql(qterms, variants, **plan) as (text, warm):
-            if not warm:
+        with self._ranked_sql(req) as (text, route):
+            if route != "warm":
                 return self.spark.sql(text).collect()
             entry = self._warm_entry(text, eager=True)
             rows = entry[1]
@@ -1047,9 +1097,14 @@ class SearchEngine:
         where = f"term IN ({', '.join(map(sql_str, terms))})" if terms else "FALSE"
         return f"SELECT {cols} FROM {self._postings_view()} WHERE {where}"
 
-    def _warm_covers(self, qterms: list[QueryTerm], neg: list[str] = ()) -> bool:
+    def _warm_covers(
+        self, qterms: Sequence[QueryTerm], neg: Sequence[str] = (),
+        prefixes: tuple[str, ...] | None = None,
+    ) -> bool:
         """True iff every query term and negative keyword (``neg``) is
-        resident in the warm tier.
+        resident in the warm tier, and no attributesToSearchOn restriction
+        (``prefixes``) applies: warm rows pre-merge the per-field scores,
+        so only the compressed path's term lookup can honour one.
 
         On a budget-truncated tier a cold term would be silently ABSENT from
         the decoded rows (wrong scores, not slow scores; for a negative
@@ -1058,12 +1113,7 @@ class SearchEngine:
         routed cold: the compressed path resolves it identically (zero
         postings), and treating unknown as cold keeps this check a pure
         frozenset lookup with no vocab scan."""
-        if not self._warm_enabled:
-            return False
-        if self._active_prefixes is not None and self._active_prefixes != self._fprefixes:
-            # warm rows pre-merge per-field scores; an attributesToSearchOn
-            # restriction cannot be applied there — route to the compressed
-            # path, whose term lookup honours the restriction exactly
+        if not self._warm_enabled or prefixes is not None:
             return False
         if self._warm_budget is None:
             return True
@@ -1090,39 +1140,22 @@ class SearchEngine:
         On a ``cache_postings=False`` engine this is a pure estimate from
         index metadata (``warm_rows`` is None): the probe must not itself
         decode and persist a tier no query path will ever read."""
-        if not self._warm_enabled:
-            jsc = self.spark.sparkContext._jsc.sc()
-            cached = sum(i.memSize() for i in jsc.getRDDStorageInfo())
-            heap = int(self.spark._jvm.java.lang.Runtime.getRuntime().maxMemory())
-            est = self.meta.n_postings * self.WARM_BYTES_PER_POSTING
-            return {
-                "warm_rows": None,
-                "total_postings": int(self.meta.n_postings),
-                "est_warm_bytes": int(est),
-                "cached_bytes_actual": int(cached),
-                "jvm_max_heap_bytes": heap,
-                "est_heap_fraction": est / heap if heap else None,
-                "budget_bytes": self._warm_budget,
-                "truncated": None,
-                "warm_term_count": None,
-                **self._cache_report(),
-            }
-        w = self.warm_postings()
-        warm_rows = w.count()
+        warm_rows = int(self.warm_postings().count()) if self._warm_enabled else None
         jsc = self.spark.sparkContext._jsc.sc()
         cached = sum(i.memSize() for i in jsc.getRDDStorageInfo())
         heap = int(self.spark._jvm.java.lang.Runtime.getRuntime().maxMemory())
-        est = warm_rows * self.WARM_BYTES_PER_POSTING
+        est = (self.meta.n_postings if warm_rows is None else warm_rows) * self.WARM_BYTES_PER_POSTING
+        terms = self._warm_terms
         return {
-            "warm_rows": int(warm_rows),
+            "warm_rows": warm_rows,
             "total_postings": int(self.meta.n_postings),
             "est_warm_bytes": int(est),
             "cached_bytes_actual": int(cached),
             "jvm_max_heap_bytes": heap,
             "est_heap_fraction": est / heap if heap else None,
             "budget_bytes": self._warm_budget,
-            "truncated": self._warm_terms is not None,
-            "warm_term_count": len(self._warm_terms) if self._warm_terms is not None else None,
+            "truncated": None if warm_rows is None else terms is not None,
+            "warm_term_count": None if terms is None else len(terms),
             **self._cache_report(),
         }
 
@@ -1350,15 +1383,19 @@ class SearchEngine:
             self._typo_cfg = cfg
         return self._typo_cfg
 
-    def _index_term_map(self, qterms: list[QueryTerm]) -> dict[str, list[int]]:
+    def _index_term_map(
+        self, qterms: Sequence[QueryTerm], prefixes: tuple[str, ...] | None = None
+    ) -> dict[str, list[int]]:
         """query (variant, word) pairs → index-term → variant ids.
 
         On a fielded index each query word fans out to one lookup term per
-        searchable attribute (the reference's searchableAttributes: a word
-        matches in ANY field, settings_manager.py:72-95) — the fan-out is a
-        LOOKUP-set expansion only, scoring stays per (field, term) row."""
+        searched attribute — ``prefixes``, the attributesToSearchOn
+        restriction, or every searchable attribute (the reference's
+        searchableAttributes: a word matches in ANY field,
+        settings_manager.py:72-95) — the fan-out is a LOOKUP-set expansion
+        only, scoring stays per (field, term) row."""
         by_term: dict[str, list[int]] = {}
-        prefixes = self._lookup_prefixes()
+        prefixes = prefixes or self._fprefixes
         for q in qterms:
             if prefixes:
                 for pre in prefixes:
@@ -1367,31 +1404,15 @@ class SearchEngine:
                 by_term.setdefault(q.term, []).append(q.variant_id)
         return by_term
 
-    def _lookup_prefixes(self) -> list[str]:
-        """Field prefixes for query-time term lookup: the attributesToSearchOn
-        restriction when one is active, else every searchable attribute."""
-        return (
-            self._active_prefixes
-            if self._active_prefixes is not None
-            else self._fprefixes
-        )
-
-    @contextmanager
-    def search_on(self, attributes: list[str] | None):
-        """Restrict term lookup to the named searchable attributes for the
-        queries PLANNED inside the block (MeiliSearch ``attributesToSearchOn``,
-        default all).  Plans capture the restriction eagerly (literal term
-        maps / closures), so executing the returned DataFrames after the
-        block is safe.  Unknown fields are a request error (MeiliSearch
-        400s); requires a fielded index.
-
-        NOT thread-safe (sets engine-level state for the duration of the
-        block, like every other mutable engine cache): an engine is a
-        single-request planner — concurrent requests need one engine per
-        thread, or serialized planning."""
+    def _search_on(self, attributes: list[str] | None) -> tuple[str, ...] | None:
+        """attributesToSearchOn (MeiliSearch search param, default all) →
+        the field prefixes term lookup fans out to, None when it names
+        every searchable attribute or is not given.  Scoring math is
+        untouched: weights, df and avgdl ride the per-field term rows that
+        remain.  Unknown fields are a request error (MeiliSearch 400s); it
+        requires a fielded index."""
         if attributes is None:
-            yield
-            return
+            return None
         if not self._fp:
             raise ValueError(
                 "attributes_to_search_on requires a multi-attribute index "
@@ -1406,23 +1427,21 @@ class SearchEngine:
                 f"unknown searchable attributes {bad}; index fields are "
                 f"{self.meta.fields}"
             )
-        prev = self._active_prefixes
-        self._active_prefixes = [
-            f"{i}{FIELD_SEP}" for i in sorted({idx[a] for a in attributes})
-        ]
-        try:
-            yield
-        finally:
-            self._active_prefixes = prev
+        prefixes = [f"{i}{FIELD_SEP}" for i in sorted({idx[a] for a in attributes})]
+        return None if prefixes == self._fprefixes else tuple(prefixes)
 
     def candidate_blocks(self, qterms: list[QueryTerm]) -> DataFrame:
         """Term lookup (X2): every posting-block column plus ``variant_id``
         (:meth:`_candidate_sql`)."""
         return self.spark.sql(self._candidate_sql(qterms, ["*"]))
 
-    def _candidate_sql(self, qterms: list[QueryTerm], cols: list[str]) -> str:
+    def _candidate_sql(
+        self, qterms: Sequence[QueryTerm], cols: list[str],
+        prefixes: tuple[str, ...] | None = None,
+    ) -> str:
         """The candidate posting blocks as SQL text: ``variant_id`` and
-        ``cols`` of the query terms' blocks.
+        ``cols`` of the query terms' blocks in the searched attributes
+        (``prefixes``, :meth:`_index_term_map`).
 
         The (tiny) query-terms table is folded into the plan as a literal map
         instead of a broadcast join — same semantics, but no broadcast
@@ -1430,7 +1449,7 @@ class SearchEngine:
         ``term IN`` filter pushes to the scan so parquet row-group min/max
         stats on the term-sorted files prune untouched groups.
         """
-        by_term = self._index_term_map(qterms)
+        by_term = self._index_term_map(qterms, prefixes)
         terms = sorted(by_term)
         vmap = _sql_map((sql_str(t), f"array({', '.join(map(str, by_term[t]))})") for t in terms)
         vid = f"explode({vmap}[term])" if terms else "0"
@@ -1505,15 +1524,8 @@ class SearchEngine:
         self._warm, self._doomed_df = None, None
         self._warm_bound = (None, None, {})
 
-    def score_variants_topk(
-        self,
-        qterms: list[QueryTerm],
-        k: int,
-        required_terms: dict[int, int] | None = None,
-        partitions: int | None = None,
-        phrase_terms: dict[int, list[str]] | None = None,
-    ) -> DataFrame:
-        """EXACT per-variant top-k with block-max bucket pruning (R11).
+    def score_variants_topk(self, req: ServeRequest, partitions: int | None = None) -> DataFrame:
+        """EXACT per-variant top-``req.k`` with block-max bucket pruning (R11).
 
         One small shuffle of candidate *blocks* by (variant, bucket) — doc
         alignment of buckets across terms makes per-bucket scores final, so
@@ -1524,20 +1536,20 @@ class SearchEngine:
         :meth:`_ranked_sql`).  Output is ≤ partitions × k rows per variant;
         merge with a global top-k.
         """
-        blocks, score = self._heap_inputs(qterms, ["block_max_score"], required_terms, phrase_terms)
+        blocks, score = self._heap_inputs(req, ["block_max_score"])
         if not self._bucket_partitioned:
             # cold path: establish bucket-completeness per partition explicitly
             partitions = partitions or self.spark.sparkContext.defaultParallelism
             blocks = blocks.repartition(partitions, "bucket")
-        return blocks.mapInPandas(_make_bucket_topk(score, k), _TOPK_SCHEMA)
+        return blocks.mapInPandas(_make_bucket_topk(score, req.k), _TOPK_SCHEMA)
 
-    def _heap_inputs(self, qterms, extra_cols, required_terms, phrase_terms):
-        """(candidate blocks, per-group scorer) — the set-up both heap
-        routes share; phrase checks add ``pos_bytes`` and need a positional
-        index.  The heaps exclude tombstones; negative keywords restrict
-        the allowed docs instead (:meth:`_ranked_sql`)."""
+    def _heap_inputs(self, req: ServeRequest, extra_cols: list[str]):
+        """(candidate blocks, per-group scorer) of ``req`` — the set-up both
+        heap routes share; phrase checks add ``pos_bytes`` and need a
+        positional index.  The heaps exclude tombstones; negative keywords
+        restrict the allowed docs instead (:meth:`_ranked_sql`)."""
         cols = ["bucket", "term", "df", *extra_cols, "doc_bytes", "tf_bytes", "dl_bytes"]
-        if phrase_terms:
+        if req.phrase_terms:
             if not getattr(self.meta, "positional", False):
                 raise ValueError(
                     "phrase matching requires a positional index "
@@ -1546,57 +1558,39 @@ class SearchEngine:
             cols.append("pos_bytes")
         m = self.meta
         score = _make_group_scorer(
-            m.k1, m.b, m.avgdl, m.n_docs, required_terms or {}, phrase_terms,
-            self._excluded_array(), self._fp, self._lookup_prefixes(),
+            m.k1, m.b, m.avgdl, m.n_docs, req.required or {}, req.phrase_terms,
+            self._excluded_array(), self._fp, req.prefixes or self._fprefixes,
         )
-        return self.spark.sql(self._candidate_sql(qterms, cols)), score
+        return self.spark.sql(self._candidate_sql(req.qterms, cols, req.prefixes)), score
 
-    def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Document frequency per query term (drives 'frequency' matching).
+    def term_dfs(
+        self, terms: list[str], prefixes: tuple[str, ...] | None = None
+    ) -> dict[str, int]:
+        """Document frequency per query term (drives 'frequency' matching)
+        in the searched attributes: ``prefixes``, an attributesToSearchOn
+        restriction, or all (None), where a word's df is the max over its
+        fields.
 
-        One term-pushdown scan for the not-yet-cached terms only; results are
-        memoized per engine, so repeated/warm queries pay nothing.  A term
-        absent from the index gets df=0 (sorts first — required earliest —
-        which keeps unknown terms from silently relaxing).  With a complete
-        driver vocabulary every index word is already cached, so no scan
-        runs at all."""
-        restricted = (
-            self._active_prefixes is not None
-            and self._active_prefixes != self._fprefixes
-        )
-        if restricted:
-            # attributesToSearchOn: dfs must reflect the SEARCHED fields only
-            # ('frequency' ordering would otherwise rank by fields the query
-            # cannot match) — computed fresh, NOT memoized: the shared
-            # _df_cache holds all-field values and must stay unpolluted
-            pref = self._active_prefixes
-            src = self.postings.filter(
-                F.col("term").isin([p + t for t in sorted(set(terms)) for p in pref])
-            ).select(F.substring_index("term", FIELD_SEP, -1).alias("term"), "df")
-            rows = src.groupBy("term").agg(F.max("df").alias("df")).collect()
-            found = {r["term"]: int(r["df"]) for r in rows}
-            return {t: found.get(t, 0) for t in terms}
-        missing = sorted({t for t in terms if t not in self._df_cache})
-        if missing and not self._vocab_complete():
-            if self._fprefixes:
-                # prefixed-term filter pushes to the scan; strip AFTER so a
-                # word's df = max over its per-attribute variants
-                src = self.postings.filter(
-                    F.col("term").isin([p + t for t in missing for p in self._fprefixes])
-                ).select(F.substring_index("term", FIELD_SEP, -1).alias("term"), "df")
-            else:
-                src = self.postings.filter(F.col("term").isin(missing)).select("term", "df")
-            rows = src.groupBy("term").agg(F.max("df").alias("df")).collect()
-            for r in rows:
-                self._df_cache[r["term"]] = int(r["df"])
+        One term-pushdown scan for the terms not yet known, written as SQL
+        text over the posting blocks (:meth:`_blocks_sql`).  Unrestricted
+        dfs are memoized per engine, so repeated/warm queries pay nothing,
+        and with a complete driver vocabulary every index word is already
+        cached, so no scan runs at all; restricted dfs are computed fresh,
+        so the memo keeps its all-field values.  A term absent from the
+        index gets df=0 (sorts first — required earliest — which keeps
+        unknown terms from silently relaxing)."""
+        memo = self._df_cache if prefixes is None else {}
+        missing = sorted({t for t in terms if t not in memo})
+        if missing and (prefixes is not None or not self._vocab_complete()):
+            pre = prefixes or self._fprefixes
+            keys = [p + t for t in missing for p in pre] if pre else missing
+            # the field prefix is stripped AFTER the pushed-down term filter
+            word = f"substring_index(term, {sql_str(FIELD_SEP)}, -1)" if pre else "term"
+            text = self._blocks_sql(keys, f"{word} AS word, max(df) AS df") + " GROUP BY 1"
+            memo.update((r["word"], int(r["df"])) for r in self.spark.sql(text).collect())
             for t in missing:
-                self._df_cache.setdefault(t, 0)
-        return {t: self._df_cache.get(t, 0) for t in terms}
-
-    def _check_declared(self, fields, declared, kind: str) -> None:
-        from .requests import check_declared
-
-        check_declared(fields, declared, kind)
+                memo.setdefault(t, 0)
+        return {t: memo.get(t, 0) for t in terms}
 
     def allowed_docs(self, filters: dict) -> DataFrame:
         """P4: filter dict → allowed doc_id set from the doc metadata table
@@ -1611,7 +1605,7 @@ class SearchEngine:
         index without lat/lng, it raises here, before any Spark job."""
         if not filters:
             return None
-        self._check_declared(
+        check_declared(
             filters.keys(),
             getattr(self.meta, "filterable_attributes", None),
             "filterable fields",
@@ -1630,14 +1624,7 @@ class SearchEngine:
                     f"_geo filter needs lat/lng doc metadata; missing {sorted(missing)}"
                 )
 
-    def score_variants_topk_filtered(
-        self,
-        qterms: list[QueryTerm],
-        k: int,
-        allowed: DataFrame,
-        required_terms: dict[int, int] | None = None,
-        phrase_terms: dict[int, list[str]] | None = None,
-    ) -> DataFrame:
+    def score_variants_topk_filtered(self, req: ServeRequest, allowed: DataFrame) -> DataFrame:
         """Exact per-variant top-k over an allowed-doc subset (P4 + R11) —
         the compressed route for restricted requests the warm tier cannot
         serve (:meth:`_ranked_topk`).
@@ -1652,34 +1639,20 @@ class SearchEngine:
         are scored independently (no running cross-bucket threshold exists
         inside a cogroup), so the bound could never prune here — shipping it
         through the Arrow exchange was pure dead weight (ADVICE r2)."""
-        blocks, score = self._heap_inputs(qterms, [], required_terms, phrase_terms)
+        blocks, score = self._heap_inputs(req, [])
         allowed_b = allowed.withColumn(
             "bucket", (F.col("doc_id") / F.lit(self.meta.bucket_span)).cast("long")
         )
         return (
             blocks.groupby("bucket")
             .cogroup(allowed_b.groupby("bucket"))
-            .applyInPandas(_make_filtered_bucket_topk(score, k), _TOPK_SCHEMA)
+            .applyInPandas(_make_filtered_bucket_topk(score, req.k), _TOPK_SCHEMA)
         )
 
     def _drop_stopwords(self, terms: list[str]) -> list[str]:
         if not self._stopwords:
             return terms
         return [t for t in terms if t not in self._stopwords]
-
-    def _expand_matching(self, terms: list[str], matching: str):
-        """Shared Q7 expansion: (uniq, prefixes, qterms, required)."""
-        uniq = list(dict.fromkeys(self._drop_stopwords(terms)))
-        dfs = self.term_dfs(uniq) if matching == "frequency" and len(uniq) > 1 else None
-        prefixes = matching_prefixes(uniq, matching, dfs)
-        qterms = [QueryTerm(vid, t) for vid, pf in enumerate(prefixes) for t in pf]
-        if matching == "all":
-            required: dict[int, int] | None = {0: len(uniq)}
-        elif len(prefixes) > 1:
-            required = {vid: len(pf) for vid, pf in enumerate(prefixes)}
-        else:
-            required = None
-        return uniq, prefixes, qterms, required
 
     def _doc_store(self):
         """pyarrow dataset over doc_stats for direct point lookups."""
@@ -1689,11 +1662,14 @@ class SearchEngine:
             self._pads = pads.dataset(os.path.join(self.index_dir, "doc_stats"))
         return self._pads
 
-    def _hit_cols(self, attributes: list[str] | None) -> list[str]:
-        """Output column set for a hit row (validated attributes appended)."""
+    def _hit_cols(self, attributes: list[str] | None, variant: bool = False) -> list[str]:
+        """A hit row's columns — ``url, doc_id, score, [variant_type,]
+        terms_matched``, the stored text crop, then the retrieved
+        ``attributes`` (validated, :meth:`_check_attrs`): the one
+        definition behind every hit shape, lazy or eager."""
         return list(
             dict.fromkeys(
-                ["url", "doc_id", "score", "terms_matched"]
+                ["url", "doc_id", "score", *(["variant_type"] if variant else []), "terms_matched"]
                 + (["text_crop"] if "text_crop" in self.doc_stats.columns else [])
                 + self._check_attrs(attributes)
             )
@@ -1720,8 +1696,10 @@ class SearchEngine:
             )
         return [a for a in dict.fromkeys(attributes) if not a.startswith("_")]
 
-    def _resolve_meta(self, rows: list, attributes: list[str] | None = None) -> list[dict]:
-        """k-bounded doc-metadata lookup + driver-side merge.
+    def _resolve_meta(self, rows: list, cols: list[str] | None = None) -> list[dict]:
+        """k-bounded doc-metadata lookup + driver-side merge: the scored
+        ``rows`` gain the stored hit ``cols`` (:meth:`_hit_cols`, by default
+        a hit without retrieved attributes).
 
         Serving engines resolve stored fields for the k winners with a DIRECT
         point read against the doc store, not a cluster job: doc_stats files
@@ -1733,14 +1711,9 @@ class SearchEngine:
         if not rows:
             return []
         ids = [int(r["doc_id"]) for r in rows]
-        attrs = self._check_attrs(attributes)
-        cols = list(
-            dict.fromkeys(
-                ["doc_id", "url"]
-                + (["text_crop"] if "text_crop" in self.doc_stats.columns else [])
-                + attrs
-            )
-        )
+        scored = ("doc_id", "score", "variant_type", "terms_matched")
+        stored = [c for c in cols or self._hit_cols(None) if c not in scored]
+        cols = ["doc_id", *stored]
         try:
             import pyarrow.dataset as pads
 
@@ -1757,11 +1730,8 @@ class SearchEngine:
             m = meta.get(int(d["doc_id"]))
             if m is None:
                 continue
-            d["url"] = m["url"]
-            if "text_crop" in cols:
-                d["text_crop"] = m["text_crop"]
-            for a in attrs:
-                d[a] = m[a]
+            for c in stored:
+                d[c] = m[c]
             out.append(d)
         return out
 
@@ -1827,57 +1797,141 @@ class SearchEngine:
         sort: list[str] | None = None,
         attributes_to_retrieve: list[str] | None = None,
     ) -> list[dict]:
-        """The SERVING call: top-k hits as plain rows (eager, k-bounded).
+        """The SERVING call: top-k hits as plain rows (eager, k-bounded) —
+        the eager twin of :meth:`search`, sharing its preparation
+        (:meth:`_prepare`) up to the run step (:meth:`_run_eager`).
 
         The scored top-k comes from the serving planner's eager step
         (:meth:`_ranked_rows`: on a warm engine one cached SQL statement,
         filters and negative keywords included, its rows kept for a
         repeat) and the winners' metadata from a direct point read
         (:meth:`_resolve_meta`) — no metadata job.
-        Sorted requests and negative-only queries take the lazy
-        :meth:`search` plan, which the DataFrame API keeps for composition."""
-        from ..tokenizer import extract_index_terms, tokenize_for_index
-        from .pipeline import split_query_negatives
+        Sorted requests and negative-only queries take the lazy plan, which
+        the DataFrame API keeps for composition."""
+        terms, neg = _query_words(query)
+        prepared = self._prepare(
+            k, attributes_to_retrieve, sort, terms=terms, matching=matching, neg=neg,
+            filters=filters,
+        )
+        return self._run_eager(prepared)
 
-        positive, exclude_terms = split_query_negatives(query)
-        terms = extract_index_terms(tokenize_for_index(positive))
-        if sort or (exclude_terms and not terms):
-            return [
-                r.asDict()
-                for r in self.search(
-                    query, k=k, matching=matching, filters=filters, sort=sort,
-                    attributes_to_retrieve=attributes_to_retrieve,
-                ).collect()
-            ]
+    def _request(
+        self, k: int | None, terms: Sequence[str] = (), matching: str = "best", *,
+        pqs: list | None = None, neg: Sequence[str] | None = None,
+        filters: dict | None = None, search_on: list[str] | None = None, **rank,
+    ) -> ServeRequest:
+        """The one preparation of a scored request, in request-error order
+        (every check raises before a Spark job runs): the attributesToSearchOn
+        prefixes (:meth:`_search_on`), the filter SQL (:meth:`_filter_sql`),
+        then the scoring terms.
+
+        ``terms`` expand by the Q7 ``matching`` strategy into conjunctive
+        prefix sub-variants (:func:`matching_prefixes`, stop-words dropped;
+        'frequency' orders by the dfs of the searched fields).  ``pqs``
+        instead contribute each processed query's weighted variants
+        (:meth:`_add_scoring_variants`, namespaced by query in a batch),
+        and their negative words are the request's; a single query's phrase
+        variants keep their positional check when there is a ``k`` to heap
+        (positions are only checked inside the top-k heaps).  ``rank`` are
+        :class:`ServeRequest`'s :func:`rank_sql` options."""
+        prefixes = self._search_on(search_on)
         filter_sql = self._filter_sql(filters)
-        self._check_attrs(attributes_to_retrieve)
-        if not terms:
-            return []
-        _uniq, _prefixes, qterms, required = self._expand_matching(terms, matching)
-        rows = self._ranked_rows(
-            qterms, k=k, required=required, neg=exclude_terms, filter_sql=filter_sql
+        variants = phrases = None
+        if pqs is None:
+            uniq = list(dict.fromkeys(self._drop_stopwords(terms)))
+            dfs = self.term_dfs(uniq, prefixes) if matching == "frequency" and len(uniq) > 1 else None
+            groups = matching_prefixes(uniq, matching, dfs)
+            qterms = [QueryTerm(vid, t) for vid, g in enumerate(groups) for t in g]
+            if matching == "all":
+                required: dict[int, int] | None = {0: len(uniq)}
+            elif len(groups) > 1:
+                required = {vid: len(g) for vid, g in enumerate(groups)}
+            else:
+                required = None
+        else:
+            qterms, variants, phrases = [], [], {}
+            positional = k is not None and not rank.get("per_query") and self.meta.positional
+            # one df lookup covers every query's 'frequency' terms
+            dfs = self._frequency_dfs([v for pq in pqs for v in pq.variants], prefixes)
+            for qi, pq in enumerate(pqs):
+                self._add_scoring_variants(
+                    pq, dfs, qterms, variants, qi, phrases if positional else None
+                )
+            # per-variant EXACT top-k suffices for the global top-k after
+            # weighting: weights are constant per variant, so any doc in the
+            # final top-k is in its winning variant's top-k
+            required = required_terms(variants)
+            neg = [t for pq in pqs for t in pq.exclude_terms]
+        return ServeRequest(
+            qterms, variants, k=k, required=required, phrase_terms=phrases or None,
+            neg=sorted({t for t in neg or () if t}), filter_sql=filter_sql,
+            prefixes=prefixes, **rank,
         )
-        return self._resolve_meta(rows, attributes_to_retrieve)
 
-    def _finalize_hits(
-        self,
-        topk: DataFrame,
-        extra_cols: list[str] | None = None,
-        attributes: list[str] | None = None,
-    ) -> DataFrame:
-        """Resolve urls (and stored text + requested attributes) for the
-        ≤ k winning rows."""
-        out_cols = list(
-            dict.fromkeys(
-                ["url", "doc_id", "score", "terms_matched"]
-                + (extra_cols or [])
-                + (["text_crop"] if "text_crop" in self.doc_stats.columns else [])
-                + self._check_attrs(attributes)
-            )
+    def _prepare(
+        self, k: int, attributes: list[str] | None, sort: list[str] | None = None,
+        distinct: str | None = None, **request,
+    ) -> tuple[ServeRequest, object, list[str]]:
+        """What a search and its eager twin share up to the run step, every
+        request error first: the hit columns (:meth:`_hit_cols`, the
+        retrieved ``attributes`` checked — a ``pqs`` request's hits carry
+        their variant type), the page tail (:meth:`_page_tail`, ``sort`` and
+        ``distinct`` checked) and the request (:meth:`_request`, asking for
+        every matching doc when the page tail cuts by sort or distinct) →
+        ``(request, page tail, hit columns)``."""
+        cols = self._hit_cols(attributes, variant="pqs" in request)
+        page = self._page_tail(k, sort, distinct, cols)
+        return self._request(None if sort or distinct else k, **request), page, cols
+
+    def _run_lazy(self, req: ServeRequest, page, cols: list[str]) -> DataFrame:
+        """The lazy run step: the request's hits as a DataFrame — the
+        planner's top-k (:meth:`_ranked_topk`) joined to its doc metadata,
+        or every matching doc cut by the page tail when the request has no
+        ``k``; a request with no scoring word is unscored
+        (:meth:`_unscored`)."""
+        if not req.qterms:
+            return page(self._unscored(req))
+        scored = self._ranked_topk(req)
+        if req.k is None:
+            return page(self.doc_stats.join(scored, "doc_id"))
+        return self._finalize_hits(scored, cols)
+
+    def _run_eager(self, prepared: tuple) -> list[dict]:
+        """The eager run step: the planner's collected top-k
+        (:meth:`_ranked_rows`) with its metadata point-read
+        (:meth:`_resolve_meta`).  A request the page tail must cut (sort)
+        and a negative-only query take the lazy step."""
+        req, page, cols = prepared
+        if req.k is None or (req.neg and not req.qterms):
+            return [r.asDict() for r in self._run_lazy(req, page, cols).collect()]
+        return self._resolve_meta(self._ranked_rows(req), cols)
+
+    def _unscored(self, req: ServeRequest) -> DataFrame:
+        """The hits of a request with no scoring word, at score 0.  A
+        negative-only query has MeiliSearch placeholder semantics: every
+        live doc the filter keeps that holds no negative word in the
+        searched fields, variant type ``placeholder``; otherwise there is
+        none."""
+        base = self._exclude_deleted(self.doc_stats)
+        if req.filter_sql is not None:
+            base = base.filter(req.filter_sql)
+        if req.neg:
+            neg_docs = self._term_doc_ids(req.neg, req.prefixes).distinct()
+            base = base.join(neg_docs, "doc_id", "left_anti")
+        else:
+            base = base.limit(0)
+        return (
+            base.withColumn("score", F.lit(0.0))
+            .withColumn("terms_matched", F.lit(0).cast("long"))
+            .withColumn("variant_type", F.lit("placeholder"))
         )
+
+    def _finalize_hits(self, topk: DataFrame, cols: list[str]) -> DataFrame:
+        """The ≤ k winning rows joined to their doc metadata, as hit
+        ``cols`` (:meth:`_hit_cols`), in score order."""
         return (
             self.doc_stats.join(F.broadcast(topk), "doc_id")
-            .select(*out_cols)
+            .select(*cols)
             .orderBy(F.desc("score"), F.asc("doc_id"))
         )
 
@@ -1895,7 +1949,7 @@ class SearchEngine:
         (TakeOrderedAndProject — no full sort materializes)."""
         order = []
         if sort:
-            self._check_declared(
+            check_declared(
                 [x.partition(":")[0] for x in sort],
                 getattr(self.meta, "sortable_attributes", None),
                 "sortable fields",
@@ -1907,9 +1961,9 @@ class SearchEngine:
             )
         gp = geo_sort_point(sort)
         cols = [*out_cols, "_geoDistance"] if gp is not None else out_cols
-        relevance = [F.desc("score"), F.asc("doc_id")]
 
         def page(joined: DataFrame) -> DataFrame:
+            relevance = [F.desc("score"), F.asc("doc_id")]
             if distinct:
                 key = F.coalesce(
                     F.col(distinct).cast("string"),
@@ -1954,43 +2008,14 @@ class SearchEngine:
         without its LIMIT) and :meth:`_page_tail` cuts the page.
         ``attributes_to_search_on`` restricts matching to the named
         searchable attributes of a fielded index (MeiliSearch
-        attributesToSearchOn, default all).
+        attributesToSearchOn, default all); ``exclude_terms`` are negative
+        keywords, and without any scoring word the page is a placeholder
+        (:meth:`_unscored`).
         """
-        if attributes_to_search_on is not None:
-            with self.search_on(attributes_to_search_on):
-                return self.search_terms(
-                    terms, k=k, matching=matching, filters=filters, sort=sort,
-                    attributes_to_retrieve=attributes_to_retrieve,
-                    distinct=distinct, exclude_terms=exclude_terms,
-                )
-        # request errors (sort, distinct, attributes, filter) before any
-        # Spark job: 'frequency' matching collects
-        page = self._page_tail(k, sort, distinct, self._hit_cols(attributes_to_retrieve))
-        filter_sql = self._filter_sql(filters)
-        _uniq, _prefixes, qterms, required = self._expand_matching(terms, matching)
-        if not qterms and exclude_terms:
-            # negative-only query: MeiliSearch placeholder semantics — every
-            # non-excluded doc, no relevance score; filters/sort/distinct
-            # apply exactly as on a placeholder search
-            base = self._exclude_deleted(self.doc_stats)
-            if filter_sql is not None:
-                base = base.filter(filter_sql)
-            base = base.join(self.docs_with_terms(exclude_terms), "doc_id", "left_anti")
-            return page(
-                base.withColumn("score", F.lit(0.0))
-                .withColumn("terms_matched", F.lit(0).cast("long"))
-            )
-        if distinct or sort:
-            # every matching doc, uncut: a top-k could starve a distinct
-            # value, and a sort cannot prune by score
-            scored = self._ranked_topk(
-                qterms, k=None, required=required, neg=exclude_terms, filter_sql=filter_sql
-            )
-            return page(self.doc_stats.join(scored, "doc_id"))
-        topk = self._ranked_topk(
-            qterms, k=k, required=required, neg=exclude_terms, filter_sql=filter_sql
-        )
-        return self._finalize_hits(topk, attributes=attributes_to_retrieve)
+        return self._run_lazy(*self._prepare(
+            k, attributes_to_retrieve, sort, distinct, terms=terms, matching=matching,
+            neg=exclude_terms, filters=filters, search_on=attributes_to_search_on,
+        ))
 
     def search_after(
         self,
@@ -2000,14 +2025,15 @@ class SearchEngine:
         matching: str = "best",
         filters: dict | None = None,
         attributes_to_retrieve: list[str] | None = None,
+        attributes_to_search_on: list[str] | None = None,
     ) -> DataFrame:
         """Keyset (cursor) pagination: the page strictly AFTER ``cursor`` in
         the stable pagination order — the deep-pagination shape offset
         pagination cannot sustain at scale (page P via offset needs a
         top-(P·k) heap on every executor and P·k rows through the final
         merge; the cursor filter keeps every heap at k rows regardless of
-        depth — R10's ``paginate`` covers the shallow MeiliSearch
-        offset/limit surface, this covers the exhaustive-export one).
+        depth — the service's offset/limit covers the shallow MeiliSearch
+        surface, this covers the exhaustive-export one).
 
         The pagination order is ``(presentation score DESC, url ASC)`` —
         score rounded to ``SCORE_DECIMALS`` exactly as hits display it.
@@ -2023,25 +2049,16 @@ class SearchEngine:
         The serving planner ranks every matching doc (``k=None``, as for
         sort/distinct): the cursor predicate lands between scoring and the
         top-k, so the plan is Filter → TakeOrderedAndProject(k) — never a
-        growing heap.
+        growing heap.  ``attributes_to_search_on`` restricts matching as in
+        :meth:`search_terms`.
         """
         from .adhoc import SCORE_DECIMALS
 
-        filter_sql = self._filter_sql(filters)
         out_cols = self._hit_cols(attributes_to_retrieve)
-        _uniq, _prefixes, qterms, required = self._expand_matching(terms, matching)
-        if not qterms:
-            # no scorable terms → the walk has no pages.  With a cursor the
-            # answer must stay inside THIS method's total order (never
-            # silently forward to search_terms, which would drop the cursor
-            # and re-serve page 1); without one, page 1 == the plain result.
-            base = self.search_terms(
-                terms, k=k, matching=matching, filters=filters,
-                attributes_to_retrieve=attributes_to_retrieve,
-            )
-            return base.limit(0) if cursor is not None else base
-        scored = self._ranked_topk(qterms, k=None, required=required, filter_sql=filter_sql)
-        joined = self.doc_stats.join(scored, "doc_id").withColumn(
+        req = self._request(None, terms, matching, filters=filters, search_on=attributes_to_search_on)
+        if not req.qterms:
+            return self._unscored(req).select(*out_cols)  # no scorable terms: no pages
+        joined = self.doc_stats.join(self._ranked_topk(req), "doc_id").withColumn(
             "score", F.round("score", SCORE_DECIMALS)
         )
         if cursor is not None:
@@ -2091,7 +2108,7 @@ class SearchEngine:
                 F.lit(0.0).alias("score"),
                 F.lit(0).cast("long").alias("terms_matched"),
             )
-        scored = self.score_variants_topk(qterms, k=k)
+        scored = self.score_variants_topk(ServeRequest(qterms, k=k))
         w = Window.partitionBy("variant_id").orderBy(F.desc("score"), F.asc("doc_id"))
         topk = (
             scored.withColumn("_rn", F.row_number().over(w))
@@ -2139,9 +2156,7 @@ class SearchEngine:
         Negative keywords (``-word``) parse exactly as in :meth:`search`;
         they never prefix-expand (MeiliSearch negates the literal word).
         """
-        from .pipeline import split_query_negatives
         from .ranker import PREFIX_COMPLETION_WEIGHT
-        from ..tokenizer import extract_index_terms, tokenize_for_index
 
         if not getattr(self.meta, "prefix_search", True):
             # S5 prefixSearch toggle (MeiliSearch v1.12: disabled) → 400
@@ -2149,34 +2164,30 @@ class SearchEngine:
                 "prefix search is disabled on this index "
                 "(settings.update_prefix_search to re-enable)"
             )
-        positive, exclude_terms = split_query_negatives(query)
-        base = list(
-            dict.fromkeys(
-                self._drop_stopwords(extract_index_terms(tokenize_for_index(positive)))
-            )
-        )
-        variants: list[list[str]] = [base]
+        terms, exclude_terms = _query_words(query)
+        base = list(dict.fromkeys(self._drop_stopwords(terms)))
+        groups: list[list[str]] = [base]
         if base and not query[-1].isspace():
             for c in self.expand_terms(base[-1], max_expansions):
-                variants.append(list(dict.fromkeys(base[:-1] + [c])))
-        if len(variants) == 1:
+                groups.append(list(dict.fromkeys(base[:-1] + [c])))
+        if len(groups) == 1:
             # nothing to complete → plain single-variant search
             return self.search_terms(
                 base, k=k, filters=filters,
                 attributes_to_retrieve=attributes_to_retrieve,
                 exclude_terms=exclude_terms or None,
             )
-        filter_sql = self._filter_sql(filters)
-        qterms = [QueryTerm(vid, t) for vid, ts in enumerate(variants) for t in ts]
+        cols = self._hit_cols(attributes_to_retrieve)
         # a variant type without a boost (R2's table falls back to 1.0), so
         # the weight alone discounts completions; ties keep the literal
         # variant (larger weight, then the earlier variant)
-        weights = [1.0] + [PREFIX_COMPLETION_WEIGHT] * (len(variants) - 1)
-        topk = self._ranked_topk(
-            qterms, [Variant("completion", w, len(ts), "best") for w, ts in zip(weights, variants)],
-            k=k, neg=exclude_terms, filter_sql=filter_sql,
+        weights = [1.0] + [PREFIX_COMPLETION_WEIGHT] * (len(groups) - 1)
+        req = replace(
+            self._request(k, neg=exclude_terms, filters=filters),
+            qterms=[QueryTerm(vid, t) for vid, ts in enumerate(groups) for t in ts],
+            variants=[Variant("completion", w, len(ts), "best") for w, ts in zip(weights, groups)],
         )
-        return self._finalize_hits(topk, attributes=attributes_to_retrieve)
+        return self._finalize_hits(self._ranked_topk(req), cols)
 
     def scored_topk(
         self,
@@ -2190,97 +2201,86 @@ class SearchEngine:
         callers that resolve metadata themselves (or not at all).  The
         federation composes the same planner output as SQL text instead
         (:meth:`_ranked_sql`), so all its branches parse as one statement."""
-        filter_sql = self._filter_sql(filters)
-        _uniq, _prefixes, qterms, required = self._expand_matching(terms, matching)
-        return self._ranked_topk(qterms, k=k, required=required, filter_sql=filter_sql)
+        return self._ranked_topk(self._request(k, terms, matching, filters=filters))
 
-    def _ranked_topk(
-        self, qterms: list[QueryTerm], variants: list[Variant] | None = None, **plan
-    ) -> DataFrame:
+    def _ranked_topk(self, req: ServeRequest) -> DataFrame:
         """The serving planner: :meth:`_ranked_sql`'s ranked relation as a
         DataFrame — a warm statement through the plan cache
         (:meth:`_warm_entry`), any other parsed while its scored view
         lives."""
-        with self._ranked_sql(qterms, variants, **plan) as (text, warm):
-            return self._warm_entry(text)[0] if warm else self.spark.sql(text)
+        with self._ranked_sql(req) as (text, route):
+            return self._warm_entry(text)[0] if route == "warm" else self.spark.sql(text)
 
     @contextmanager
-    def _ranked_sql(
-        self, qterms: list[QueryTerm], variants: list[Variant] | None = None, *,
-        k: int | None, required: dict[int, int] | None = None,
-        phrase_terms: dict[int, list[str]] | None = None, neg: list[str] | None = None,
-        filter_sql: str | None = None, **rank,
-    ):
-        """The serving planner's text step: yields ``(sql, warm)``, the
-        per-doc ranking of ``qterms`` by :func:`rank_sql` (``rank`` are its
-        other keywords; raw BM25 over several sub-variants keeps each doc's
-        best) as one SQL statement, cut to the top ``k`` — or, with
-        ``k=None``, every matching doc unordered, for a caller that cuts by
-        sort, distinct or cursor.  The text is valid inside the block only.
+    def _ranked_sql(self, req: ServeRequest):
+        """The serving planner's text step: yields ``(sql, route)``, the
+        per-doc ranking of the request (:meth:`ServeRequest.ranked`) as one
+        SQL statement, cut to the top ``req.k`` — or, with ``k=None``,
+        every matching doc unordered, for a caller that cuts by sort,
+        distinct or cursor — and the name of the route that scores it.
+        The text is valid inside the block only.
 
-        Warm — :meth:`_warm_scored_sql` over the tier's view, a filter
-        (``filter_sql``) riding as a doc_stats semi-join and the negative
-        keywords (``neg``) as an anti-join over the same view — whenever
-        the tier can answer: it holds every query and negative word
-        (:meth:`_warm_covers`: warm tier enabled, no cold word on a
-        budget-truncated tier, no attributesToSearchOn restriction) and no
-        variant needs positions (``phrase_terms``).  Otherwise, without a
-        ``k`` or with negatives and no phrase (exact): the same statement
-        over the query words' posting blocks, decoded into tier rows
-        (:meth:`_tier_rows`), its anti-join over the negative words' blocks
-        decoded to doc ids (:meth:`_term_doc_ids`) — each block decodes
-        once, both lookups honouring an attributesToSearchOn restriction.
-        Otherwise the block-max heaps, cogrouped with the allowed ids — the
-        filter's docs minus the negatives' (:meth:`docs_with_terms`) — when
-        either restricts candidates (phrase checks need a heap, so they
-        need a ``k``).  Decoded or heap frames sit behind temp views,
-        dropped when the block exits — a parsed Dataset keeps the resolved
-        plan.  The eager step (:meth:`_ranked_rows`) runs after this one,
-        so every request it plans passes here."""
-        rank.update(required=required, k=k)
-        if variants is None:
-            rank.setdefault("dedup", len({q.variant_id for q in qterms}) > 1)
-        neg = sorted({t for t in neg or () if t})
-        warm = not phrase_terms and self._warm_covers(qterms, neg)
-        exact = k is None or (bool(neg) and not phrase_terms)
+        ``warm`` — :meth:`_warm_scored_sql` over the tier's view, a filter
+        riding as a doc_stats semi-join and the negative keywords as an
+        anti-join over the same view — whenever the tier can answer: it
+        holds every query and negative word (:meth:`_warm_covers`: warm
+        tier enabled, no cold word on a budget-truncated tier, no
+        attributesToSearchOn restriction) and no variant needs positions
+        (``phrase_terms``).  Otherwise, without a ``k`` or with negatives
+        and no phrase, ``exact``: the same statement over the query words'
+        posting blocks, decoded into tier rows (:meth:`_tier_rows`), its
+        anti-join over the negative words' blocks decoded to doc ids
+        (:meth:`_term_doc_ids`) — each block decodes once, both lookups
+        honouring the request's attributesToSearchOn restriction.
+        Otherwise the block-max heaps: ``block_max``, or ``cogroup`` — the
+        heaps cogrouped with the allowed ids, the filter's docs minus the
+        negatives' — when either restricts candidates (phrase checks need a
+        heap, so they need a ``k``).  Decoded or heap frames sit behind
+        temp views, dropped when the block exits — a parsed Dataset keeps
+        the resolved plan.  The eager step (:meth:`_ranked_rows`) runs
+        after this one, so every request it plans passes here."""
+        neg, filter_sql = req.neg, req.filter_sql
+        if not req.phrase_terms and self._warm_covers(req.qterms, neg, req.prefixes):
+            route = "warm"
+        elif req.k is None or (neg and not req.phrase_terms):
+            route = "exact"
+        else:
+            route = "block_max" if filter_sql is None and not neg else "cogroup"
         allowed = None  # the filter's semi-join side, for the SQL routes
-        if filter_sql is not None and (warm or exact):
+        if filter_sql is not None and route in ("warm", "exact"):
             allowed = f"SELECT doc_id FROM {self._stats_view()} WHERE {filter_sql}"
-        if warm:
+        if route == "warm":
             view = self._warm_view()
             excluded = (
                 f"SELECT doc_id FROM {view} WHERE term IN ({', '.join(map(sql_str, neg))})"
                 if neg else None
             )
-            scored = self._warm_scored_sql(view, qterms, excluded, allowed)
-            yield rank_sql(scored, variants, **rank), True
+            yield req.ranked(self._warm_scored_sql(view, req.qterms, excluded, allowed)), route
             return
-        heap = dict(required_terms=required, phrase_terms=phrase_terms)
         scored = rel = f"mst_scored_{next(_VIEW_SEQ)}"
         views: dict[str, DataFrame] = {}  # temp views, dropped at exit
-        if exact:
-            keys = sorted(self._index_term_map(qterms))
+        if route == "exact":
+            keys = sorted(self._index_term_map(req.qterms, req.prefixes))
             blocks = self.spark.sql(self._blocks_sql(keys, ", ".join(_TIER_COLS)))
             views[scored] = self._tier_rows(blocks)
             excluded = None
             if neg:  # the negatives' blocks decode once, to bare doc ids
                 name = f"mst_excluded_{next(_VIEW_SEQ)}"
-                views[name] = self._term_doc_ids(neg)
+                views[name] = self._term_doc_ids(neg, req.prefixes)
                 excluded = f"SELECT doc_id FROM {name}"
-            rel = self._warm_scored_sql(scored, qterms, excluded, allowed)
-        elif filter_sql is None and not neg:
-            views[scored] = self.score_variants_topk(qterms, k=k, **heap)
+            rel = self._warm_scored_sql(scored, req.qterms, excluded, allowed)
+        elif route == "block_max":
+            views[scored] = self.score_variants_topk(req)
         else:
             allowed_ids = self.doc_stats.filter(filter_sql or "TRUE").select("doc_id")
             if neg:
-                allowed_ids = allowed_ids.join(self.docs_with_terms(neg), "doc_id", "left_anti")
-            views[scored] = self.score_variants_topk_filtered(
-                qterms, k=k, allowed=allowed_ids, **heap
-            )
+                neg_docs = self._term_doc_ids(neg, req.prefixes).distinct()
+                allowed_ids = allowed_ids.join(neg_docs, "doc_id", "left_anti")
+            views[scored] = self.score_variants_topk_filtered(req, allowed_ids)
         for name, frame in views.items():
             frame.createOrReplaceTempView(name)
         try:
-            yield rank_sql(rel, variants, **rank), False
+            yield req.ranked(rel), route
         finally:
             for name in views:
                 self.spark.catalog.dropTempView(name)
@@ -2292,22 +2292,20 @@ class SearchEngine:
         (requires ``build_index(positional=True)``).  Raw BM25 — the
         variant-weighted phrase boost lives in ``multi_variant_search``."""
         uniq = list(dict.fromkeys(self._drop_stopwords(terms)))
-        if not uniq:
-            return self._finalize_hits(
-                self.doc_stats.filter(F.lit(False)).select(
-                    "doc_id", F.lit(0.0).alias("score"), F.lit(0).cast("long").alias("terms_matched")
-                )
-            )
-        qterms = [QueryTerm(0, t) for t in uniq]
-        scored = self.score_variants_topk(
-            qterms, k=k, required_terms={0: len(uniq)}, phrase_terms={0: self._drop_stopwords(list(terms))}
+        req = ServeRequest(
+            [QueryTerm(0, t) for t in uniq], k=k, required={0: len(uniq)},
+            phrase_terms={0: self._drop_stopwords(list(terms))},
         )
+        cols = self._hit_cols(None)
+        if not uniq:
+            return self._unscored(req).select(*cols)
         topk = (
-            scored.orderBy(F.desc("score"), F.asc("doc_id"))
+            self.score_variants_topk(req)
+            .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
             .select("doc_id", "score", "terms_matched")
         )
-        return self._finalize_hits(topk)
+        return self._finalize_hits(topk, cols)
 
     def search_with_proximity(
         self,
@@ -2325,8 +2323,6 @@ class SearchEngine:
         terms asymptotically keep their BM25 score.  Runs as a driver-side
         re-rank of the collected candidate page (k rows), not a cluster job —
         exactly where the reference does its result re-ranking."""
-        from ..tokenizer import extract_index_terms, tokenize_for_index
-
         if not getattr(self.meta, "positional", False):
             raise ValueError("proximity ranking requires build_index(positional=True)")
         terms = list(dict.fromkeys(extract_index_terms(tokenize_for_index(query))))
@@ -2362,7 +2358,7 @@ class SearchEngine:
         executor-side no matter how hot the terms are at 100×."""
         buckets = [int(b) for b in sorted({d // self.meta.bucket_span for d in doc_ids})]
         want_docs = {int(d) for d in doc_ids}
-        pref = self._lookup_prefixes()
+        pref = self._fprefixes
         lookup = [p + t for t in terms for p in pref] if pref else list(terms)
         need = len(terms)
 
@@ -2410,14 +2406,17 @@ class SearchEngine:
             for r in self._min_windows_df(terms, doc_ids).collect()
         }
 
-    def _neg_scan_terms(self, terms: list[str]) -> list[str]:
-        """Index-level term keys for an exclusion lookup: the
-        attributesToSearchOn restriction applies to negatives exactly like
-        positives (a title-restricted search only excludes on title)."""
+    def _neg_scan_terms(
+        self, terms: Sequence[str], prefixes: tuple[str, ...] | None = None
+    ) -> list[str]:
+        """Index-level term keys for an exclusion lookup: an
+        attributesToSearchOn restriction (``prefixes``) applies to negatives
+        exactly like positives (a title-restricted search only excludes on
+        title)."""
         uniq = sorted({t for t in terms if t})
         if not uniq:
             raise ValueError("terms must be non-empty")
-        prefixes = self._lookup_prefixes()
+        prefixes = prefixes or self._fprefixes
         return [p + t for t in uniq for p in prefixes] if prefixes else uniq
 
     def docs_with_terms(self, terms: list[str]) -> DataFrame:
@@ -2427,14 +2426,17 @@ class SearchEngine:
         mentioning X" audits."""
         return self._term_doc_ids(terms).distinct()
 
-    def _term_doc_ids(self, terms: list[str]) -> DataFrame:
+    def _term_doc_ids(
+        self, terms: Sequence[str], prefixes: tuple[str, ...] | None = None
+    ) -> DataFrame:
         """The doc ids of ``terms``' postings, one row per posting:
-        term-pushdown scan of those terms' posting blocks → vectorized
-        varbyte unpack, tombstones excluded, honoring an active
-        attributesToSearchOn restriction.  The ``exact`` route's anti-join
-        side, where duplicates cost nothing and a distinct would cost a
-        shuffle."""
-        blocks = self.spark.sql(self._blocks_sql(self._neg_scan_terms(terms), "doc_bytes"))
+        term-pushdown scan of those terms' posting blocks in the searched
+        attributes (``prefixes``, :meth:`_neg_scan_terms`) → vectorized
+        varbyte unpack, tombstones excluded.  The ``exact`` route's
+        anti-join side, where duplicates cost nothing and a distinct would
+        cost a shuffle."""
+        keys = self._neg_scan_terms(terms, prefixes)
+        blocks = self.spark.sql(self._blocks_sql(keys, "doc_bytes"))
         explode = _make_doc_id_exploder(self._excluded_array())
         return blocks.mapInPandas(explode, _DOC_ID_SCHEMA)
 
@@ -2454,11 +2456,7 @@ class SearchEngine:
         resulting term excludes its documents from the result set
         (disjunctive over all negative tokens; corpus-wide BM25 stats
         unchanged — exclusion prunes candidates exactly like a filter)."""
-        from ..tokenizer import extract_index_terms, tokenize_for_index
-        from .pipeline import split_query_negatives
-
-        positive, exclude_terms = split_query_negatives(query)
-        terms = extract_index_terms(tokenize_for_index(positive))
+        terms, exclude_terms = _query_words(query)
         return self.search_terms(
             terms, k=k, matching=matching, filters=filters, sort=sort,
             attributes_to_retrieve=attributes_to_retrieve,
@@ -2475,6 +2473,7 @@ class SearchEngine:
         sort: list[str] | None = None,
         attributes_to_retrieve: list[str] | None = None,
         pq=None,
+        attributes_to_search_on: list[str] | None = None,
     ) -> DataFrame:
         """Full search-proxy semantics in ONE Spark job (SURVEY §3.3 / X1).
 
@@ -2491,64 +2490,19 @@ class SearchEngine:
         relevance as tie-break: the planner ranks every matching doc
         (``k=None``) and :meth:`_page_tail` cuts the page.  With sort,
         phrase variants degrade to conjunctive matching (positions are only
-        checked inside the top-k heaps).
+        checked inside the top-k heaps).  ``attributes_to_search_on``
+        restricts matching to the named searchable attributes (MeiliSearch
+        attributesToSearchOn).  ``pq`` lets a caller (SearchService) supply
+        an already-processed query carrying request-level overrides
+        (matching_strategy, max_query_variants) without a second pipeline
+        pass.
 
         Returns (url, doc_id, score, variant_type, terms_matched).
         """
-        # attrs validate (400-style ValueError) and shape the output schema
-        # BEFORE the empty-variant early exit, so a no-variant query returns
-        # the same columns as a matching one and still rejects unknown names
-        out_cols = list(
-            dict.fromkeys(
-                ["url", "doc_id", "score", "variant_type", "terms_matched"]
-                + (["text_crop"] if "text_crop" in self.doc_stats.columns else [])
-                + self._check_attrs(attributes_to_retrieve)
-            )
-        )
-        # a bad sort is a request error before any Spark job
-        page = self._page_tail(k, sort, None, out_cols) if sort else None
-        if pq is None:
-            from .pipeline import process_query
-
-            pq = process_query(query, synonyms=self._synonyms or None)
-        dedup = self._multi_variant_dedup(
-            query, None if sort else k, min_score_threshold, normalize, filters, pq=pq
-        )
-        if geo_sort_point(sort) is not None:
-            # _geoPoint sort exposes _geoDistance on every response shape
-            # (MeiliSearch geosearch), including the empty and placeholder ones
-            out_cols = [*out_cols, "_geoDistance"]
-        if dedup is None and getattr(pq, "exclude_terms", None):
-            # negative-only query → placeholder page (search_terms owns the
-            # semantics, including the _geoDistance attach); variant_type
-            # marks it for the proxy response shape
-            page = self.search_terms(
-                [], k=k, filters=filters, sort=sort,
-                attributes_to_retrieve=attributes_to_retrieve,
-                exclude_terms=pq.exclude_terms,
-            )
-            return page.withColumn("variant_type", F.lit("placeholder")).select(
-                *out_cols
-            )
-        if dedup is None:
-            score_types = {
-                "score": T.DoubleType(),
-                "variant_type": T.StringType(),
-                "terms_matched": T.LongType(),
-                "_geoDistance": T.LongType(),
-            }
-            ds_types = {f.name: f.dataType for f in self.doc_stats.schema.fields}
-            empty = T.StructType(
-                [T.StructField(c, score_types.get(c) or ds_types[c]) for c in out_cols]
-            )
-            return self.spark.createDataFrame([], empty)
-        if page is not None:
-            return page(self.doc_stats.join(dedup, "doc_id"))
-        return (
-            self.doc_stats.join(F.broadcast(dedup), "doc_id")
-            .select(*out_cols)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-        )
+        return self._run_lazy(*self._variant_prepare(
+            query, k, min_score_threshold, normalize, filters, sort,
+            attributes_to_retrieve, pq, attributes_to_search_on,
+        ))
 
     def multi_variant_page(
         self,
@@ -2560,6 +2514,7 @@ class SearchEngine:
         sort: list[str] | None = None,
         attributes_to_retrieve: list[str] | None = None,
         pq=None,
+        attributes_to_search_on: list[str] | None = None,
     ) -> list[dict]:
         """Eager serving twin of :meth:`multi_variant_search` — the path a
         request/response service should call: the planner's scored top-k
@@ -2567,27 +2522,25 @@ class SearchEngine:
         not) + a direct metadata point read (:meth:`_resolve_meta`).
         Sorted requests and negative-only queries (placeholder semantics)
         take the lazy plan."""
+        prepared = self._variant_prepare(
+            query, k, min_score_threshold, normalize, filters, sort,
+            attributes_to_retrieve, pq, attributes_to_search_on,
+        )
+        return self._run_eager(prepared)
+
+    def _variant_prepare(
+        self, query, k, threshold, normalize, filters, sort, attributes, pq, search_on
+    ) -> tuple:
+        """The multi-variant twins' shared preparation (:meth:`_prepare`):
+        the Q1-Q8 variant pipeline, unless the caller ran it (``pq``)."""
         if pq is None:
             from .pipeline import process_query
 
             pq = process_query(query, synonyms=self._synonyms or None)
-        if sort or (not pq.variants and getattr(pq, "exclude_terms", None)):
-            return [
-                r.asDict()
-                for r in self.multi_variant_search(
-                    query, k=k, min_score_threshold=min_score_threshold,
-                    normalize=normalize, filters=filters, sort=sort,
-                    attributes_to_retrieve=attributes_to_retrieve, pq=pq,
-                ).collect()
-            ]
-        # validate BEFORE any empty-result early return so a bad attribute
-        # raises regardless of whether the query matched (parity with the
-        # lazy path and multi_variant_search)
-        self._check_attrs(attributes_to_retrieve)
-        rows = self._multi_variant_dedup(
-            query, k, min_score_threshold, normalize, filters, pq=pq, rank=self._ranked_rows
+        return self._prepare(
+            k, attributes, sort, pqs=[pq], filters=filters, search_on=search_on,
+            normalize=normalize, threshold=threshold,
         )
-        return self._resolve_meta(rows or [], attributes_to_retrieve)
 
     def facet_distribution(
         self,
@@ -2608,17 +2561,7 @@ class SearchEngine:
         Facet fields are the public attribute surface: the build's declared
         ``stored_fields`` plus url/lang/text_crop when present (internal
         index columns like doc_len are not facetable)."""
-        missing = [f for f in facets if f not in self._public_fields()]
-        if missing:
-            raise ValueError(
-                f"unknown facet fields {missing}; available {self._public_fields()}"
-            )
-        # MeiliSearch: facets must be filterable attributes when a
-        # declaration exists (invalid_search_facets 400)
-        self._check_declared(
-            facets, getattr(self.meta, "filterable_attributes", None),
-            "filterable fields",
-        )
+        self._check_facets(facets)
         if max_values_per_facet is None:
             # S5 faceting.maxValuesPerFacet: the index setting supplies the
             # default when the call doesn't pass one (None = uncapped)
@@ -2651,6 +2594,19 @@ class SearchEngine:
             )
         return out
 
+    def _check_facets(self, facets: list[str]) -> None:
+        """Facet fields must be public document fields and, when the index
+        declares filterableAttributes, declared ones (MeiliSearch
+        invalid_search_facets 400)."""
+        missing = [f for f in facets if f not in self._public_fields()]
+        if missing:
+            raise ValueError(
+                f"unknown facet fields {missing}; available {self._public_fields()}"
+            )
+        check_declared(
+            facets, getattr(self.meta, "filterable_attributes", None), "filterable fields"
+        )
+
     def _facet_match_set(self, qterms: list[str], filters: dict | None) -> DataFrame:
         """doc_stats rows of every document containing >= 1 query term (after
         ``filters``) — the shared match set behind facetDistribution and
@@ -2679,15 +2635,7 @@ class SearchEngine:
         result is O(#facets)."""
         import pyspark.sql.types as _T
 
-        missing = [f for f in facets if f not in self._public_fields()]
-        if missing:
-            raise ValueError(
-                f"unknown facet fields {missing}; available {self._public_fields()}"
-            )
-        self._check_declared(
-            facets, getattr(self.meta, "filterable_attributes", None),
-            "filterable fields",
-        )
+        self._check_facets(facets)
         dtypes = {f.name: f.dataType for f in self.doc_stats.schema.fields}
         non_numeric = sorted(
             f for f in facets if not isinstance(dtypes.get(f), _T.NumericType)
@@ -2743,14 +2691,7 @@ class SearchEngine:
                 "facet search is disabled on this index "
                 "(settings.update_facet_search to re-enable)"
             )
-        if facet_name not in self._public_fields():
-            raise ValueError(
-                f"unknown facet field {facet_name!r}; available {self._public_fields()}"
-            )
-        self._check_declared(
-            [facet_name], getattr(self.meta, "filterable_attributes", None),
-            "filterable fields",
-        )
+        self._check_facets([facet_name])
         if terms is not None:
             qterms = list(dict.fromkeys(self._drop_stopwords(list(terms))))
             if not qterms:
@@ -2868,22 +2809,10 @@ class SearchEngine:
                     normalize=normalize, pq=pqs[i],
                 )
             return out
-        # ONE df lookup covering every query's 'frequency' terms — per-query
-        # term_dfs calls would serialize up to 50 driver-blocking scans before
-        # the single scoring job (memoized, so only uncached terms cost)
-        dfs = self._frequency_dfs([v for pq in pqs for v in pq.variants])
-        qterms: list[QueryTerm] = []
-        variants: list[Variant] = []
-        for qi, pq in enumerate(pqs):
-            self._add_scoring_variants(pq, dfs, qterms, variants, query=qi)
-        if not qterms:
-            return [[] for _ in queries]
-        required = required_terms(variants)
-        rows = self._ranked_rows(
-            qterms, variants, k=k, required=required, normalize=normalize,
-            threshold=min_score_threshold, per_query=True,
+        req = self._request(
+            k, pqs=pqs, normalize=normalize, threshold=min_score_threshold, per_query=True
         )
-        resolved = self._resolve_meta(rows)
+        resolved = self._resolve_meta(self._ranked_rows(req))
         out: list[list[dict]] = [[] for _ in queries]
         for d in resolved:
             out[int(d.pop("query_id"))].append(d)
@@ -2922,12 +2851,14 @@ class SearchEngine:
             out.append((fuzzy[:10], 0.5))
         return out
 
-    def _frequency_dfs(self, variants) -> dict[str, int] | None:
-        """One df lookup covering every 'frequency' variant's terms (memoized)."""
+    def _frequency_dfs(self, variants, prefixes=None) -> dict[str, int] | None:
+        """One df lookup covering every 'frequency' variant's terms in the
+        searched attributes (:meth:`term_dfs`) — per-variant lookups would
+        serialize driver-blocking scans before the one scoring job."""
         terms = sorted(
             {t for v in variants if v.matching == "frequency" and len(set(v.terms)) > 1 for t in v.terms}
         )
-        return self.term_dfs(terms) if terms else None
+        return self.term_dfs(terms, prefixes) if terms else None
 
     def _add_scoring_variants(
         self, pq, dfs, qterms: list[QueryTerm], variants: list[Variant],
@@ -2969,55 +2900,3 @@ class SearchEngine:
         tokens = [t for v in pq.variants for t in v.terms]
         for terms, weight in self._expansion_variants(tokens, set(tokens)):
             add("fallback", terms, weight, "best")
-
-    def _multi_variant_dedup(
-        self,
-        query: str,
-        k: int | None,
-        min_score_threshold: float,
-        normalize: bool,
-        filters: dict | None,
-        pq=None,
-        rank=None,
-    ) -> DataFrame | list | None:
-        """Variant pipeline + scoring + weighting + per-doc dedup + threshold.
-
-        Returns the serving planner's frame (doc_id, score, variant_type,
-        terms_matched) — or its rows, when ``rank`` is the eager step
-        :meth:`_ranked_rows` — or None when the query has no variant: the
-        part of the search shared by the lazy DataFrame API and the eager
-        page API.
-        With a ``k`` it is the final top-``k`` in score order; with
-        ``k=None``, every matching doc, for a caller's field order (phrase
-        variants then degrade to conjunctive matching: positions are only
-        checked inside the top-k heaps).  ``pq`` lets a caller
-        (SearchService) supply an already-processed query carrying
-        request-level overrides (matching_strategy, max_query_variants)
-        without a second pipeline pass."""
-        from .pipeline import process_query
-
-        if pq is None:
-            pq = process_query(query, synonyms=self._synonyms or None)
-        if not pq.variants:
-            return None
-        # request errors (undeclared filter fields) before any Spark job
-        filter_sql = self._filter_sql(filters)
-        qterms: list[QueryTerm] = []
-        variants: list[Variant] = []
-        # positions are checked inside the top-k heaps only
-        positional = getattr(self.meta, "positional", False) and k is not None
-        phrase_specs: dict[int, list[str]] = {}
-        self._add_scoring_variants(
-            pq, self._frequency_dfs(pq.variants), qterms, variants,
-            phrase_specs=phrase_specs if positional else None,
-        )
-        # per-variant EXACT top-k with bucket pruning is sufficient for the
-        # global top-k after weighting: weights are constant per variant, so
-        # within-variant rank by raw score == rank by weighted score, and any
-        # doc in the final top-k is in its winning variant's top-k
-        required = required_terms(variants)
-        return (rank or self._ranked_topk)(
-            qterms, variants, k=k, required=required, phrase_terms=phrase_specs or None,
-            neg=getattr(pq, "exclude_terms", None), filter_sql=filter_sql,
-            normalize=normalize, threshold=min_score_threshold,
-        )

@@ -81,10 +81,7 @@ def federated_search(
         branches = []
         for uid in sorted(engines):
             eng = engines[uid]
-            _uniq, _prefixes, qterms, required = eng._expand_matching(terms, "best")
-            ranked, _warm = scoped.enter_context(
-                eng._ranked_sql(qterms, k=pool_k, required=required)
-            )
+            ranked, _route = scoped.enter_context(eng._ranked_sql(eng._request(pool_k, terms)))
             # presentation-precision (4-decimal) scores BEFORE the
             # normalization ratio: both the ratio's inputs are then
             # engine-stable doubles, so any external oracle normalizing the

@@ -36,9 +36,7 @@ ENGINE_BOOST_NEWMM = 1.1
 # search-as-you-type: a completed last word scores slightly below the same
 # words matched literally (MeiliSearch exactness ranks exact above prefix)
 PREFIX_COMPLETION_WEIGHT = 0.95
-EXACT_MATCH_BOOST = 2.0  # result_ranker.py:1286-1303, config settings.py:61
 POSITION_DECAY = 0.1  # result_ranker.py:364-366
-MIN_SCORE_THRESHOLD = 0.1  # search_proxy/config/settings.py:65
 
 
 def dedup_by_key_max(df: DataFrame, key: str, order_cols: list[str]) -> DataFrame:
@@ -93,32 +91,3 @@ def position_decay(df: DataFrame, part_col: str, order_col: str, score_col: str)
     w = Window.partitionBy(part_col).orderBy(F.asc(order_col))
     pos = F.row_number().over(w) - F.lit(1)
     return df.withColumn(score_col, F.col(score_col) * F.exp(F.lit(-POSITION_DECAY) * pos))
-
-
-def apply_min_score_threshold(df: DataFrame, score_col: str = "score", threshold: float = MIN_SCORE_THRESHOLD) -> DataFrame:
-    """P7 (result_ranker.py:245-249)."""
-    return df.filter(F.col(score_col) >= F.lit(threshold))
-
-
-def paginate_topk(df: DataFrame, order_cols: list[str], limit: int, offset: int = 0) -> DataFrame:
-    """R10: score-desc top-k with offset (search_proxy_service.py:621-627).
-
-    offset=0 compiles to TakeOrderedAndProject; with offset we take
-    offset+limit then slice by global row_number (k stays small)."""
-    ordered = df.orderBy(*[F.desc(c) for c in order_cols])
-    if offset == 0:
-        return ordered.limit(limit)
-    top = ordered.limit(offset + limit)
-    w = Window.orderBy(*[F.desc(c) for c in order_cols])
-    return (
-        top.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") > offset) & (F.col("_rn") <= offset + limit))
-        .drop("_rn")
-    )
-
-
-def exact_match_boost(df: DataFrame, text_col: str, query: str, score_col: str = "score") -> DataFrame:
-    """R3: ×2.0 when the lowercased query is a substring of the text
-    (result_ranker.py:1286-1303)."""
-    hit = F.contains(F.lower(F.col(text_col)), F.lit(query.lower()))
-    return df.withColumn(score_col, F.when(hit, F.col(score_col) * EXACT_MATCH_BOOST).otherwise(F.col(score_col)))

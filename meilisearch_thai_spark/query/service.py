@@ -30,7 +30,7 @@ from .enhancer import (
     relevance_factors,
     select_algorithm,
 )
-from .executor import SearchEngine
+from .executor import SearchEngine, _query_words
 from .pipeline import process_query
 from .requests import SearchRequest, validate_request
 
@@ -183,20 +183,18 @@ class SearchService:
         # lookup; _postprocess keeps only the retrieve list on Hit.attributes
         fetch_attrs = list(dict.fromkeys((attributes_to_retrieve or []) + req.attributes_to_highlight))
         try:
-            # attributesToSearchOn: restriction applies to every lookup the
-            # engine plans inside this block (MeiliSearch search param)
-            with self.engine.search_on(attributes_to_search_on):
-                rows = self.engine.multi_variant_page(
-                    req.query,
-                    k=max(fetch_k, 1),
-                    min_score_threshold=req.min_score_threshold,
-                    normalize=config.normalize,
-                    filters=req.filters,
-                    sort=req.sort or None,
-                    attributes_to_retrieve=fetch_attrs or None,
-                    pq=pq,  # carries matching_strategy/max_query_variants;
-                    # also saves the engine a second Q1-Q8 pipeline pass
-                )
+            rows = self.engine.multi_variant_page(
+                req.query,
+                k=max(fetch_k, 1),
+                min_score_threshold=req.min_score_threshold,
+                normalize=config.normalize,
+                filters=req.filters,
+                sort=req.sort or None,
+                attributes_to_retrieve=fetch_attrs or None,
+                pq=pq,  # carries matching_strategy/max_query_variants;
+                # also saves the engine a second Q1-Q8 pipeline pass
+                attributes_to_search_on=attributes_to_search_on,
+            )
         except Exception:
             # S6: execution failures ARE recorded (success=False) before the
             # error surfaces — without this, failed_queries could never be
@@ -598,21 +596,17 @@ class SearchService:
         (presentation-score DESC, url ASC) total order.  This is the
         exhaustive-export surface (dump every match, arbitrarily deep);
         interactive pagination stays on :meth:`search`'s offset/limit."""
-        from .pipeline import split_query_negatives
-        from ..tokenizer import extract_index_terms, tokenize_for_index
-
         if not 1 <= limit <= 10_000:
             # export pages may be big (unlike search()'s interactive 100
             # cap) but limit=0 has no next-cursor and negatives have no
             # meaning — validate here, the request layer never sees this
             raise ValueError(f"limit must be in [1, 10000], got {limit}")
-        positive, negatives = split_query_negatives(query)
+        terms, negatives = _query_words(query)
         if negatives:
             raise ValueError(
                 "search_after does not support negative keywords; "
                 "use search() for filtered interactive queries"
             )
-        terms = extract_index_terms(tokenize_for_index(positive))
         rows = self.engine.search_after(
             terms, cursor=cursor, k=limit, filters=filters
         ).collect()

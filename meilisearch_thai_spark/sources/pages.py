@@ -114,16 +114,3 @@ def generate_pages(spark: SparkSession, n_rows: int, seed: int = 42, partitions:
             yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
 
     return spark.range(0, n_rows, numPartitions=partitions).mapInPandas(gen, PAGES_SCHEMA)
-
-
-def write_pages(df: DataFrame, path: str, partition_by_lang: bool = True) -> None:
-    """Persist the corpus; ``lang`` partitioning enables partition pruning for
-    the skip-if-no-Thai path (SURVEY P2)."""
-    w = df.write.mode("overwrite")
-    if partition_by_lang:
-        w = w.partitionBy("lang")
-    w.parquet(path)
-
-
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

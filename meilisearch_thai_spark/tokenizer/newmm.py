@@ -279,26 +279,6 @@ class NewmmSegmenter:
             engine=f"{self.engine_tag}_compound",
         )
 
-    # -- T5: character-level fallback -------------------------------------
-    @staticmethod
-    def fallback_tokenize(text: str) -> list[str]:
-        """Char-level fallback: Thai runs grouped, other non-space chars single
-        (reference: src/tokenizer/thai_segmenter.py:261-304). Whitespace dropped."""
-        tokens: list[str] = []
-        cur = ""
-        for ch in text:
-            if is_thai_char(ch):
-                cur += ch
-            else:
-                if cur:
-                    tokens.append(cur)
-                    cur = ""
-                if ch.strip():
-                    tokens.append(ch)
-        if cur:
-            tokens.append(cur)
-        return tokens
-
     # -- T6: boundary offsets ---------------------------------------------
     @staticmethod
     def _boundaries(tokens: list[str]) -> list[int]:

@@ -25,9 +25,9 @@ def sf_dir():
 @pytest.fixture
 def planner_routes(monkeypatch):
     """``spy(engine)`` → the list the engine's serving planner appends
-    each planned route to (``"warm"`` or ``"compressed"``), recorded at
-    its text step (``SearchEngine._ranked_sql``) so the federation's
-    branches count too."""
+    each planned route to (``"warm"``, or ``"compressed"`` for any other
+    route), recorded at its text step (``SearchEngine._ranked_sql``) so the
+    federation's branches count too."""
     from contextlib import contextmanager
 
     def spy(eng):
@@ -35,9 +35,9 @@ def planner_routes(monkeypatch):
 
         @contextmanager
         def ranked_sql(*args, **kwargs):
-            with planned(*args, **kwargs) as (text, warm):
-                routes.append("warm" if warm else "compressed")
-                yield text, warm
+            with planned(*args, **kwargs) as (text, route):
+                routes.append("warm" if route == "warm" else "compressed")
+                yield text, route
 
         monkeypatch.setattr(eng, "_ranked_sql", ranked_sql)
         return routes

@@ -10,6 +10,7 @@ JVM tier, filtered cogroup, phrase)."""
 from __future__ import annotations
 
 import math
+import threading
 from collections import Counter
 
 import pytest
@@ -344,12 +345,60 @@ def test_service_attributes_to_search_on(spark, fielded_index):
     assert [h.url for h in r2.hits] == ["9000", "9001"]
 
 
+@pytest.mark.parametrize("cache_postings", [True, False], ids=["warm", "cold"])
+def test_search_on_is_per_request_under_concurrency(spark, fielded_index, monkeypatch, cache_postings):
+    """attributesToSearchOn belongs to its request: an unrestricted
+    search_page run while a restricted SearchService.search is held inside
+    its planning step, on the same engine, gets its own serial answer, and
+    so does the restricted search."""
+    from meilisearch_thai_spark.query.service import SearchService
+
+    svc = SearchService(spark, fielded_index, cache_postings=cache_postings)
+    eng = svc.engine
+
+    def restricted() -> list[str]:
+        return [h.url for h in svc.search("zebra", limit=5, attributes_to_search_on=["title"]).hits]
+
+    def unrestricted() -> list[str]:
+        return [r["url"] for r in eng.search_page("zebra")]
+
+    try:
+        assert (restricted(), unrestricted()) == (["9000"], ["9000", "9001"])
+        planning, release, holder, got = threading.Event(), threading.Event(), {}, {}
+        planned = eng._ranked_rows
+
+        def held(*args, **kwargs):
+            if threading.get_ident() == holder["ident"]:
+                planning.set()
+                release.wait(120)
+            return planned(*args, **kwargs)
+
+        def client():
+            holder["ident"] = threading.get_ident()
+            got["restricted"] = restricted()
+
+        monkeypatch.setattr(eng, "_ranked_rows", held)
+        worker = threading.Thread(target=client)
+        worker.start()
+        try:
+            assert planning.wait(120)
+            got["unrestricted"] = unrestricted()
+        finally:
+            release.set()
+            worker.join(120)
+        assert not worker.is_alive()
+        assert got == {"restricted": ["9000"], "unrestricted": ["9000", "9001"]}
+    finally:
+        eng._drop_warm()
+        eng.postings.unpersist()
+        eng.doc_stats.unpersist()
+
+
 def test_term_dfs_respects_search_on_without_cache_pollution(cold):
     # 'zebra': title of 9000 only (df 1 per restriction), but content of
     # 9001 too unrestricted (df = max over fields)
     full = cold.term_dfs(["zebra"])["zebra"]
-    with cold.search_on(["title"]):
-        title_df = cold.term_dfs(["zebra"])["zebra"]
+    title_df = cold.term_dfs(["zebra"], cold._search_on(["title"]))["zebra"]
     assert title_df == 1 and full >= 1
     # restricted lookups must not poison the shared memo cache
     assert cold.term_dfs(["zebra"])["zebra"] == full
@@ -392,13 +441,14 @@ def test_uncut_routes_match_oracle(request, corpus, planner_routes, engine, sear
         )
         # a cursor walk of 4-hit pages in (rounded score DESC, url) order
         walk, cursor = [], None
-        with eng.search_on(search_on):
-            while True:
-                page = eng.search_after(q, cursor=cursor, k=4).collect()
-                if not page:
-                    break
-                walk += [(r["url"], r["score"], r["terms_matched"]) for r in page]
-                cursor = (page[-1]["score"], page[-1]["url"])
+        while True:
+            page = eng.search_after(
+                q, cursor=cursor, k=4, attributes_to_search_on=search_on
+            ).collect()
+            if not page:
+                break
+            walk += [(r["url"], r["score"], r["terms_matched"]) for r in page]
+            cursor = (page[-1]["score"], page[-1]["url"])
         rounded = sorted(
             ((u, round(s, SCORE_DECIMALS), m) for u, s, m in want), key=lambda h: (-h[1], h[0])
         )

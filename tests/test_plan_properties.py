@@ -16,6 +16,7 @@ from meilisearch_thai_spark.index.builder import build_index
 from meilisearch_thai_spark.query.executor import (
     QueryTerm,
     SearchEngine,
+    ServeRequest,
     Variant,
     required_terms,
 )
@@ -51,8 +52,8 @@ def test_warm_point_query_plan_has_no_python_stage_or_exchange(warm_engine):
     multi = single + [QueryTerm(1, "อาหาร"), QueryTerm(1, "โรงเรียน")]
     variants = [Variant("original", 1.0, 2, "best"), Variant("tokenized", 0.8, 2, "all")]
     for plan in (
-        warm_engine._ranked_topk(single, k=10),
-        warm_engine._ranked_topk(multi, variants, required=required_terms(variants), k=10),
+        warm_engine._ranked_topk(ServeRequest(single, k=10)),
+        warm_engine._ranked_topk(ServeRequest(multi, variants, required=required_terms(variants), k=10)),
     ):
         plan.collect()  # finalize AQE so the executed plan is the real one
         txt = _final_plan(plan)
@@ -71,7 +72,7 @@ def test_warm_single_variant_plan_is_query_invariant(warm_engine):
     import re
 
     def shape(terms):
-        plan = warm_engine._ranked_topk([QueryTerm(0, t) for t in terms], k=10)
+        plan = warm_engine._ranked_topk(ServeRequest([QueryTerm(0, t) for t in terms], k=10))
         plan.collect()
         txt = re.sub(r"INSET [^)]*", "INSET <terms>", _query_part(plan))
         txt = re.sub(r"#\d+L?", "#x", txt)  # normalize expr ids
@@ -135,7 +136,7 @@ def test_warm_sql_point_path_same_plan_and_values(warm_engine):
     bit: raw BM25 on a single variant, and weighted, boosted,
     per-doc-deduplicated scores on several."""
     terms = ["เทคโนโลยี", "อาหาร"]
-    fast = warm_engine._ranked_topk([QueryTerm(0, t) for t in terms], k=10).collect()
+    fast = warm_engine._ranked_topk(ServeRequest([QueryTerm(0, t) for t in terms], k=10)).collect()
     slow = _column_reference(
         warm_engine, [QueryTerm(0, t) for t in terms], [Variant("x", 1.0, 2, "best")]
     )
@@ -146,7 +147,7 @@ def test_warm_sql_point_path_same_plan_and_values(warm_engine):
               QueryTerm(2, "อาหารไทย"), QueryTerm(2, "เทคโนโลยี")]
     variants = [Variant("original", 1.0, 2, "best"), Variant("tokenized", 0.9, 1, "best"),
                 Variant("fallback", 0.6, 2, "best")]
-    fast = warm_engine._ranked_topk(qterms, variants, k=10).collect()
+    fast = warm_engine._ranked_topk(ServeRequest(qterms, variants, k=10)).collect()
     slow = _column_reference(warm_engine, qterms, variants)
     assert fast and [tuple(r) for r in fast] == [tuple(r) for r in slow]
 
@@ -177,8 +178,10 @@ def _restricted_plans(eng, **restriction):
     multi = single + [QueryTerm(1, "อาหาร"), QueryTerm(1, "โรงเรียน")]
     variants = [Variant("original", 1.0, 2, "best"), Variant("tokenized", 0.8, 2, "all")]
     return (
-        eng._ranked_topk(single, k=10, **restriction),
-        eng._ranked_topk(multi, variants, required=required_terms(variants), k=10, **restriction),
+        eng._ranked_topk(ServeRequest(single, k=10, **restriction)),
+        eng._ranked_topk(
+            ServeRequest(multi, variants, required=required_terms(variants), k=10, **restriction)
+        ),
     )
 
 

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from meilisearch_thai_spark.index import maintenance
 from meilisearch_thai_spark.index.builder import build_index
-from meilisearch_thai_spark.query.executor import QueryTerm, SearchEngine
+from meilisearch_thai_spark.query.executor import QueryTerm, SearchEngine, ServeRequest
 from meilisearch_thai_spark.query.federation import federated_search
 from meilisearch_thai_spark.query.oracle import BM25Oracle
 from meilisearch_thai_spark.sources.pages import generate_pages
@@ -268,7 +268,7 @@ def test_plan_cache_eviction_under_concurrent_inserts(spark, corpus, monkeypatch
         try:
             for w in mine:
                 for k in range(1, 6):  # parsed, not run: five more texts each
-                    eng._ranked_topk([QueryTerm(0, w)], k=k)
+                    eng._ranked_topk(ServeRequest([QueryTerm(0, w)], k=k))
                 got[w] = _pairs(eng.search_page(w, k=5))
         except Exception as e:  # noqa: BLE001 — surfaced below
             errors.append(e)
