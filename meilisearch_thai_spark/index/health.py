@@ -154,16 +154,23 @@ def prometheus_metrics(
     if mem_samples:
         metric("mst_engine_cached_bytes", "gauge",
                "Spark block-manager bytes cached by the engine", mem_samples)
-    # the warm plan cache's serving cases (SearchEngine._warm_entry)
+    # the warm plan cache's serving cases (SearchEngine._warm_entry) and
+    # the request memo's lookups (SearchEngine._memoized)
     for name, mtype, key, help_ in (
         ("mst_plan_cache_misses_total", "counter", "plan_cache_misses",
          "warm statements parsed because no plan was cached"),
         ("mst_plan_cache_hits_total", "counter", "plan_cache_hits",
          "warm statements run from a cached parsed plan"),
         ("mst_result_cache_hits_total", "counter", "result_cache_hits",
-         "warm pages answered from cached rows, with no Spark job"),
+         "warm pages answered from cached hits, with no Spark job"),
         ("mst_result_cache_rows", "gauge", "result_rows_held",
-         "collected rows the warm plan cache keeps"),
+         "resolved hits the warm plan cache keeps"),
+        ("mst_request_memo_hits_total", "counter", "request_memo_hits",
+         "processed queries and prepared requests found in the request memo"),
+        ("mst_request_memo_misses_total", "counter", "request_memo_misses",
+         "processed queries and prepared requests built on a memo miss"),
+        ("mst_request_memo_entries", "gauge", "request_memo_entries",
+         "entries the request memo holds"),
     ):
         samples = [({"uid": uid}, er["memory"][key]) for uid, er in rep["engines"].items()]
         if samples:

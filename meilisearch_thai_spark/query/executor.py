@@ -40,12 +40,20 @@ warm binding's plan cache (:meth:`SearchEngine._warm_entry`):
 - a plan hit (lazy API only): the parsed Dataset is reused, so only
   execution is paid;
 - a result hit: an eager top-k page (:meth:`SearchEngine._ranked_rows`)
-  returns the rows collected the first time — no Spark job, no Py4J
-  round trip.
+  returns copies of the hits collected and resolved to their stored
+  columns the first time, kept under the hit columns — no Spark job, no
+  Py4J round trip, no doc-store read.
+
+In front of the statement, the binding's request memo
+(:meth:`SearchEngine._memoized`) keeps what a repeat would otherwise
+rebuild: the service's processed query and the multi-variant prepared
+request (Q10 vocabulary and typo expansion, filter compilation, checks).
+Both caches start empty when the binding changes.
 """
 
 from __future__ import annotations
 
+import copy
 import itertools
 import os
 import re
@@ -70,8 +78,9 @@ from .requests import check_declared, filters_to_sql, sql_str
 # process-wide temp-view namer; next() on a count is atomic, so engines and
 # requests in different threads never register the same name
 _VIEW_SEQ = itertools.count(1)
-# guards the warm plan caches' insert-and-evict, their rows ceiling and the
-# engines' cache counters (SearchEngine._warm_entry, _keep_rows)
+# guards the warm plan caches' and request memos' insert-and-evict, the
+# kept hits' ceiling and the engines' cache counters
+# (SearchEngine._warm_entry, _keep_page, _memoized)
 _PLAN_LOCK = threading.Lock()
 
 
@@ -153,9 +162,20 @@ def _sql_map(pairs) -> str:
     return "map(" + ", ".join(f"{a}, {b}" for a, b in pairs) + ")"
 
 
+# the columns of a ranked statement's rows (:func:`rank_sql`); every other
+# hit column is a stored doc field, read from the doc store
+_SCORED = ("doc_id", "score", "variant_type", "terms_matched", "query_id")
+
+
 def _rows_held(plans: dict) -> int:
-    """Collected rows kept across one binding's plan-cache entries."""
-    return sum(len(rows) for _df, rows in plans.values() if rows is not None)
+    """Resolved hits kept across one binding's plan-cache entries."""
+    return sum(len(hits) for _df, pages in plans.values() for hits in pages.values())
+
+
+def _copy_hit(hit: dict) -> dict:
+    """A caller's copy of a kept hit; list and map values are copied too,
+    so no caller can change what the next repeat returns."""
+    return {c: copy.deepcopy(v) if isinstance(v, (list, dict)) else v for c, v in hit.items()}
 
 
 def rank_sql(
@@ -183,7 +203,7 @@ def rank_sql(
     ``D`` suffix, so every constant folds to the same IEEE value the Column
     API would build, and the weighting multiplies in the same order —
     results are bit-identical to a Column plan of the same shape."""
-    from .ranker import VARIANT_BOOST_SQL
+    from .ranker import VARIANT_BOOSTS
 
     rel = src
     if required:
@@ -194,6 +214,9 @@ def rank_sql(
     if variants is not None:
         by = ", ".join(keys)
         weight = _sql_map((i, f"{v.weight!r}D") for i, v in enumerate(variants))
+        boost = _sql_map(
+            (i, f"{VARIANT_BOOSTS.get(v.type, 1.0)!r}D") for i, v in enumerate(variants)
+        )
         vtype = _sql_map((i, sql_str(v.type)) for i, v in enumerate(variants))
         qid = (
             f", {_sql_map((i, v.query) for i, v in enumerate(variants))}[variant_id] AS query_id"
@@ -209,7 +232,7 @@ def rank_sql(
             f" max_by(struct(score, variant_type, terms_matched),"
             f" struct(score, weight, -variant_id)) AS b FROM (SELECT {by},"
             f" variant_id, terms_matched, weight, variant_type,"
-            f" score * weight * {VARIANT_BOOST_SQL} AS score FROM (SELECT *,"
+            f" score * weight * {boost}[variant_id] AS score FROM (SELECT *,"
             f" {weight}[variant_id] AS weight, {vtype}[variant_id] AS variant_type{qid}"
             f" FROM {rel})) GROUP BY {by}))"
         )
@@ -734,10 +757,12 @@ class SearchEngine:
         self._doomed_df: DataFrame | None = None  # lazy anti-join side (>cap)
         # (warm tier, its temp view, that view's plan cache) — _warm_binding
         self._warm_bound: tuple = (None, None, {})
-        # warm serving cases since the engine started (_warm_entry); they
-        # survive rebinds, as counters must
+        # warm serving cases (_warm_entry) and request-memo lookups
+        # (_memoized) since the engine started; they survive rebinds, as
+        # counters must
         self._cache_counts = dict.fromkeys(
-            ("plan_cache_misses", "plan_cache_hits", "result_cache_hits"), 0
+            ("plan_cache_misses", "plan_cache_hits", "result_cache_hits",
+             "request_memo_hits", "request_memo_misses"), 0
         )
         self._views: dict[str, DataFrame] = {}  # kind → df behind its temp view
         self._view_id = next(_VIEW_SEQ)  # names this engine's temp views
@@ -810,6 +835,9 @@ class SearchEngine:
             self.postings = self.postings.repartition(P, "bucket").persist()
             self.doc_stats = self.doc_stats.coalesce(max(1, P)).persist()
             self._bucket_partitioned = True
+        # the request memo (_memoized) starts empty once every input it
+        # was built from is reloaded
+        self._memo: dict = {}
 
     @staticmethod
     def _dir_bytes(path: str) -> int:
@@ -995,10 +1023,10 @@ class SearchEngine:
         )
 
     def _warm_entry(self, text: str, eager: bool = False) -> list:
-        """A warm statement's plan-cache entry ``[Dataset, rows]``, parsed
-        on a miss; ``rows`` are its collected rows once an eager page kept
-        them (:meth:`_keep_rows`), else None.  Counts the serving case:
-        a miss, a plan hit, or — for an ``eager`` caller finding rows — a
+        """A warm statement's plan-cache entry ``[Dataset, pages]``, parsed
+        on a miss; ``pages`` maps hit columns to the resolved hits an eager
+        page kept (:meth:`_keep_page`).  Counts the serving case: a miss, a
+        plan hit, or — for an ``eager`` caller finding a kept page — a
         result hit.
 
         Entries are kept per warm binding, keyed by the SQL text, which
@@ -1012,9 +1040,9 @@ class SearchEngine:
         plans = self._warm_binding()[1]
         entry = plans.get(text)
         if entry is None:
-            entry, case = [self.spark.sql(text), None], "plan_cache_misses"
+            entry, case = [self.spark.sql(text), {}], "plan_cache_misses"
         else:
-            case = "result_cache_hits" if eager and entry[1] is not None else "plan_cache_hits"
+            case = "result_cache_hits" if eager and entry[1] else "plan_cache_hits"
         with _PLAN_LOCK:
             self._cache_counts[case] += 1
             if case == "plan_cache_misses":
@@ -1025,49 +1053,58 @@ class SearchEngine:
                 plans[text] = entry
         return entry
 
-    def _keep_rows(self, text: str, entry: list, rows: tuple) -> None:
-        """Keep ``rows`` in ``entry``, ``text``'s plan-cache entry, under
-        ``_RESULT_ROWS_CAP`` rows for the whole binding: the oldest entries
-        give up their rows (their Datasets stay) until these fit.  A page
-        larger than the ceiling is not kept, nor is an entry no longer in
-        the current binding (evicted, or the tier rebound meanwhile)."""
+    def _keep_page(self, text: str, entry: list, cols: tuple, hits: tuple) -> None:
+        """Keep ``hits`` under their columns ``cols`` in ``entry``,
+        ``text``'s plan-cache entry, under ``_RESULT_ROWS_CAP`` hits for
+        the whole binding: the oldest entries give up their pages (their
+        Datasets stay) until these fit.  A page larger than the ceiling is
+        not kept, nor is an entry no longer in the current binding
+        (evicted, or the tier rebound meanwhile)."""
         cap = self._RESULT_ROWS_CAP
         with _PLAN_LOCK:
             plans = self._warm_bound[2]
-            if plans.get(text) is not entry or len(rows) > cap:
+            if plans.get(text) is not entry or len(hits) > cap:
                 return
             held = _rows_held(plans)
             for old in plans.values():
-                if held + len(rows) <= cap:
+                if held + len(hits) <= cap:
                     break
-                if old[1] is not None:
-                    held -= len(old[1])
-                    old[1] = None
-            entry[1] = rows
+                held -= sum(map(len, old[1].values()))
+                old[1] = {}
+            entry[1] = {**entry[1], cols: hits}
 
-    def _ranked_rows(self, req: ServeRequest) -> list:
+    def _ranked_rows(self, req: ServeRequest, cols: Sequence[str] | None = None) -> list[dict]:
         """The serving planner's eager step: the rows of the statement
-        :meth:`_ranked_sql` writes, collected — every eager top-k page
-        ends here.  A warm statement's rows stay in its plan-cache entry
-        (:meth:`_warm_entry`), so a repeated request returns them with no
-        Spark job and no Py4J round trip.  A request with no scoring word,
-        or none that is an index word when the driver vocabulary is
-        complete (:meth:`_vocab_complete`), returns no rows before
-        planning."""
+        :meth:`_ranked_sql` writes, collected and joined to their stored
+        hit ``cols`` (:meth:`_resolve_meta`; by default a hit without
+        retrieved attributes) — every eager top-k page ends here.  A warm
+        statement's resolved hits stay in its plan-cache entry
+        (:meth:`_warm_entry`), keyed by ``cols``, so a repeated request
+        returns copies of them with no Spark job, no Py4J round trip and
+        no doc-store read; other ``cols`` over a kept statement re-read
+        only the doc store.  A request with no scoring word, or none that
+        is an index word when the driver vocabulary is complete
+        (:meth:`_vocab_complete`), returns no rows before planning."""
         qterms = req.qterms
         if not qterms or (
             self._vocab_complete() and self._vocab_set().isdisjoint(q.term for q in qterms)
         ):
             return []
+        cols = tuple(cols or self._hit_cols(None))
         with self._ranked_sql(req) as (text, route):
             if route != "warm":
-                return self.spark.sql(text).collect()
+                return self._resolve_meta(self.spark.sql(text).collect(), cols)
             entry = self._warm_entry(text, eager=True)
-            rows = entry[1]
-            if rows is None:
-                rows = tuple(entry[0].collect())
-                self._keep_rows(text, entry, rows)
-            return list(rows)
+            pages = entry[1]
+            hits = pages.get(cols)
+            if hits is None:
+                kept = next(iter(pages.values()), None)
+                rows = entry[0].collect() if kept is None else [
+                    {c: h[c] for c in _SCORED if c in h} for h in kept
+                ]
+                hits = tuple(self._resolve_meta(rows, cols))
+                self._keep_page(text, entry, cols, hits)
+            return [_copy_hit(h) for h in hits]
 
     def _stats_view(self) -> str:
         """doc_stats as a temp view — the join side of SQL-composed serving
@@ -1132,10 +1169,12 @@ class SearchEngine:
         heap, and the est. heap fraction — the number an operator watches
         before raising ``warm_budget_bytes`` on a serving shard.  Beside
         them, the warm serving cases counted since the engine started
-        (``plan_cache_misses``, ``plan_cache_hits``, ``result_cache_hits``)
-        and the collected rows the plan cache keeps (``result_rows_held``,
-        at most ``result_rows_cap``) — kept on the driver, so not in
-        ``cached_bytes_actual``.
+        (``plan_cache_misses``, ``plan_cache_hits``, ``result_cache_hits``),
+        the resolved hits the plan cache keeps (``result_rows_held``, at
+        most ``result_rows_cap``), the request-memo lookups
+        (``request_memo_hits``, ``request_memo_misses``) and the entries
+        the memo holds (``request_memo_entries``) — kept on the driver, so
+        not in ``cached_bytes_actual``.
 
         On a ``cache_postings=False`` engine this is a pure estimate from
         index metadata (``warm_rows`` is None): the probe must not itself
@@ -1160,12 +1199,14 @@ class SearchEngine:
         }
 
     def _cache_report(self) -> dict:
-        """The plan cache's counters and the rows its binding keeps."""
+        """The plan cache's and request memo's counters, the hits the
+        plan cache's binding keeps and the entries the memo holds."""
         with _PLAN_LOCK:
             return {
                 **self._cache_counts,
                 "result_rows_held": _rows_held(self._warm_bound[2]),
                 "result_rows_cap": self._RESULT_ROWS_CAP,
+                "request_memo_entries": len(self._memo),
             }
 
     def vocabulary(self) -> list[str]:
@@ -1516,13 +1557,39 @@ class SearchEngine:
 
     def _drop_warm(self) -> None:
         """Unpersist the warm tier and the tombstone anti-join side, and
-        drop the plan cache bound to the tier with the rows it keeps; the
-        next warm query rebuilds the tier and starts an empty cache."""
+        drop the plan cache bound to the tier with the hits it keeps, and
+        the request memo; the next warm query rebuilds the tier and starts
+        empty caches."""
         for df in (self._warm, self._doomed_df):
             if df is not None:
                 df.unpersist()
         self._warm, self._doomed_df = None, None
         self._warm_bound = (None, None, {})
+        self._memo = {}
+
+    def _memoized(self, key: tuple, build):
+        """The request memo: ``build()``'s value for ``key``, built once
+        per binding and kept until the binding changes (``refresh_index``,
+        ``refresh_deletes`` after a delete, which start a new memo), at
+        most ``_PLAN_CACHE_CAP`` entries, the oldest evicted first.  Keys
+        are tagged tuples of every input of the value besides the binding;
+        values are never mutated by their readers.  A value built while
+        the binding changed is returned but not kept.  Counts each lookup
+        as a hit or a miss."""
+        memo = self._memo
+        value = memo.get(key)
+        hit = value is not None
+        if not hit:
+            value = build()
+        with _PLAN_LOCK:
+            self._cache_counts["request_memo_hits" if hit else "request_memo_misses"] += 1
+            if not hit and memo is self._memo:
+                # FIFO eviction iterates the dict under the lock, as in
+                # _warm_entry
+                if len(memo) >= self._PLAN_CACHE_CAP:
+                    memo.pop(next(iter(memo), None), None)
+                memo[key] = value
+        return value
 
     def score_variants_topk(self, req: ServeRequest, partitions: int | None = None) -> DataFrame:
         """EXACT per-variant top-``req.k`` with block-max bucket pruning (R11).
@@ -1696,10 +1763,9 @@ class SearchEngine:
             )
         return [a for a in dict.fromkeys(attributes) if not a.startswith("_")]
 
-    def _resolve_meta(self, rows: list, cols: list[str] | None = None) -> list[dict]:
+    def _resolve_meta(self, rows: list, cols: Sequence[str]) -> list[dict]:
         """k-bounded doc-metadata lookup + driver-side merge: the scored
-        ``rows`` gain the stored hit ``cols`` (:meth:`_hit_cols`, by default
-        a hit without retrieved attributes).
+        ``rows`` gain the stored hit ``cols`` (:meth:`_hit_cols`).
 
         Serving engines resolve stored fields for the k winners with a DIRECT
         point read against the doc store, not a cluster job: doc_stats files
@@ -1711,8 +1777,7 @@ class SearchEngine:
         if not rows:
             return []
         ids = [int(r["doc_id"]) for r in rows]
-        scored = ("doc_id", "score", "variant_type", "terms_matched")
-        stored = [c for c in cols or self._hit_cols(None) if c not in scored]
+        stored = [c for c in cols if c not in _SCORED]
         cols = ["doc_id", *stored]
         try:
             import pyarrow.dataset as pads
@@ -1803,9 +1868,9 @@ class SearchEngine:
 
         The scored top-k comes from the serving planner's eager step
         (:meth:`_ranked_rows`: on a warm engine one cached SQL statement,
-        filters and negative keywords included, its rows kept for a
-        repeat) and the winners' metadata from a direct point read
-        (:meth:`_resolve_meta`) — no metadata job.
+        filters and negative keywords included) and the winners' metadata
+        from a direct point read (:meth:`_resolve_meta`) — no metadata
+        job; a warm page's resolved hits are kept for a repeat.
         Sorted requests and negative-only queries take the lazy plan, which
         the DataFrame API keeps for composition."""
         terms, neg = _query_words(query)
@@ -1904,7 +1969,7 @@ class SearchEngine:
         req, page, cols = prepared
         if req.k is None or (req.neg and not req.qterms):
             return [r.asDict() for r in self._run_lazy(req, page, cols).collect()]
-        return self._resolve_meta(self._ranked_rows(req), cols)
+        return self._ranked_rows(req, cols)
 
     def _unscored(self, req: ServeRequest) -> DataFrame:
         """The hits of a request with no scoring word, at score 0.  A
@@ -2519,9 +2584,11 @@ class SearchEngine:
         """Eager serving twin of :meth:`multi_variant_search` — the path a
         request/response service should call: the planner's scored top-k
         collect (on a warm engine one cached SQL statement, filtered or
-        not) + a direct metadata point read (:meth:`_resolve_meta`).
-        Sorted requests and negative-only queries (placeholder semantics)
-        take the lazy plan."""
+        not) + a direct metadata point read (:meth:`_resolve_meta`).  A
+        repeat takes its prepared request from the request memo
+        (:meth:`_variant_prepare`) and its hits, resolved, from the plan
+        cache.  Sorted requests and negative-only queries (placeholder
+        semantics) take the lazy plan."""
         prepared = self._variant_prepare(
             query, k, min_score_threshold, normalize, filters, sort,
             attributes_to_retrieve, pq, attributes_to_search_on,
@@ -2532,15 +2599,27 @@ class SearchEngine:
         self, query, k, threshold, normalize, filters, sort, attributes, pq, search_on
     ) -> tuple:
         """The multi-variant twins' shared preparation (:meth:`_prepare`):
-        the Q1-Q8 variant pipeline, unless the caller ran it (``pq``)."""
+        the Q1-Q8 variant pipeline, unless the caller ran it (``pq``).
+        The prepared request is memoized (:meth:`_memoized`) by the
+        processed query's variants and negative words and every other
+        argument, so a repeat skips building it: Q10 vocabulary and typo
+        expansion, df lookups, the filter's compilation and the request
+        checks."""
         if pq is None:
             from .pipeline import process_query
 
             pq = process_query(query, synonyms=self._synonyms or None)
-        return self._prepare(
+        key = (
+            "request",
+            tuple((v.variant_type, tuple(v.terms), v.weight, v.matching) for v in pq.variants),
+            tuple(pq.exclude_terms), k, threshold, normalize, repr(filters),
+            tuple(sort or ()), tuple(attributes or ()),
+            None if search_on is None else tuple(search_on),
+        )
+        return self._memoized(key, lambda: self._prepare(
             k, attributes, sort, pqs=[pq], filters=filters, search_on=search_on,
             normalize=normalize, threshold=threshold,
-        )
+        ))
 
     def facet_distribution(
         self,
@@ -2812,7 +2891,7 @@ class SearchEngine:
         req = self._request(
             k, pqs=pqs, normalize=normalize, threshold=min_score_threshold, per_query=True
         )
-        resolved = self._resolve_meta(self._ranked_rows(req))
+        resolved = self._ranked_rows(req)
         out: list[list[dict]] = [[] for _ in queries]
         for d in resolved:
             out[int(d.pop("query_id"))].append(d)

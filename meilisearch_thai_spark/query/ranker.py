@@ -24,14 +24,6 @@ VARIANT_BOOSTS = {
     # ×PREFIX_COMPLETION_WEIGHT variant weight, not a second boost discount
     "prefix": 1.2,
 }
-# R2 boost as ONE SQL CASE over a ``variant_type`` column (unknown types
-# keep 1.0); doubles print with ``repr`` + ``D`` so they fold to the table's
-# exact IEEE values
-VARIANT_BOOST_SQL = (
-    "CASE variant_type "
-    + " ".join(f"WHEN '{vt}' THEN {boost!r}D" for vt, boost in VARIANT_BOOSTS.items())
-    + " ELSE 1.0D END"
-)
 ENGINE_BOOST_NEWMM = 1.1
 # search-as-you-type: a completed last word scores slightly below the same
 # words matched literally (MeiliSearch exactness ranks exact above prefix)

@@ -9,6 +9,13 @@ with stage timings and an S6 metrics record.
 
 Everything after the Spark job runs driver-side on ≤ (offset+limit) rows,
 exactly where the reference runs it per-response.
+
+A repeated search does none of the work its first run did before the page
+finishing: the processed query and the engine's prepared request are
+memoized per warm binding (``SearchEngine._memoized``), and a warm page's
+hits are kept resolved in the plan cache, so a repeat runs no Spark job,
+makes no Py4J call and reads no doc store.  Validation and the page
+finishing, with its S6 records, run on every request.
 """
 
 from __future__ import annotations
@@ -18,6 +25,7 @@ from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import SparkSession
 
+from ..dictionary import dictionary_fingerprint
 from .enhancer import (
     ALGORITHMS,
     RankingConfig,
@@ -143,27 +151,7 @@ class SearchService:
         config: RankingConfig = ALGORITHMS[algorithm]
 
         t0 = time.time()
-        pq_kwargs = {}
-        if req.max_query_variants is not None:
-            pq_kwargs["max_variants"] = req.max_query_variants
-        pq = process_query(
-            req.query, synonyms=self.engine._synonyms or None,
-            matching_strategy=req.matching_strategy, **pq_kwargs,
-        )
-        if prefix_search:
-            # search-as-you-type: completions of the last word ride the same
-            # one-job variant fan-out (MeiliSearch prefix-matches the final
-            # word by default; opt-in keeps existing exact-token behavior).
-            # The prefixSearch=disabled setting governs BOTH prefix surfaces
-            # — this one and SearchEngine.search_prefix — identically.
-            if not getattr(self.engine.meta, "prefix_search", True):
-                raise ValueError(
-                    "prefix search is disabled on this index "
-                    "(settings.update_prefix_search to re-enable)"
-                )
-            from .pipeline import add_prefix_variants
-
-            add_prefix_variants(pq, self.engine.expand_terms, raw_query=req.query)
+        pq = self._processed(req, prefix_search)
         t_tok = time.time()
 
         # need offset+limit rows, +headroom when content-dedup may drop some
@@ -210,6 +198,46 @@ class SearchService:
             show_matches_position=show_matches_position,
             show_ranking_score_details=show_ranking_score_details,
         )
+
+    def _processed(self, req: SearchRequest, prefix_search: bool):
+        """The Q1-Q8 processed query of ``req``, memoized per warm binding
+        (``SearchEngine._memoized``) by everything it is built from besides
+        the binding (the engine's synonyms and vocabulary): the query, the
+        matching strategy, the variant cap, prefix search and the
+        process-wide dictionary, which follows the last-loaded index.  The
+        memoized query is complete before it is kept and never mutated
+        after."""
+
+        def build():
+            pq_kwargs = {}
+            if req.max_query_variants is not None:
+                pq_kwargs["max_variants"] = req.max_query_variants
+            pq = process_query(
+                req.query, synonyms=self.engine._synonyms or None,
+                matching_strategy=req.matching_strategy, **pq_kwargs,
+            )
+            if prefix_search:
+                # search-as-you-type: completions of the last word ride the
+                # same one-job variant fan-out (MeiliSearch prefix-matches
+                # the final word by default; opt-in keeps existing
+                # exact-token behavior).  The prefixSearch=disabled setting
+                # governs BOTH prefix surfaces — this one and
+                # SearchEngine.search_prefix — identically.
+                if not getattr(self.engine.meta, "prefix_search", True):
+                    raise ValueError(
+                        "prefix search is disabled on this index "
+                        "(settings.update_prefix_search to re-enable)"
+                    )
+                from .pipeline import add_prefix_variants
+
+                add_prefix_variants(pq, self.engine.expand_terms, raw_query=req.query)
+            return pq
+
+        key = (
+            "query", req.query, req.matching_strategy, req.max_query_variants,
+            prefix_search, dictionary_fingerprint(),
+        )
+        return self.engine._memoized(key, build)
 
     def _max_total_hits(self) -> int | None:
         """pagination.maxTotalHits from the index settings (None = uncapped)
@@ -394,7 +422,7 @@ class SearchService:
                 "variants": [
                     {
                         "type": v.variant_type,
-                        "terms": v.terms,
+                        "terms": list(v.terms),  # the memoized query's stay its own
                         "weight": v.weight,
                         "matching": v.matching,
                         "tokenization_confidence": v.metadata.get("tokenization_confidence"),

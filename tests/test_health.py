@@ -176,19 +176,27 @@ def test_prometheus_metrics_exposition(spark, root):
     )
     assert expected_sum > 0
     # the warm plan cache's counters (the repeat is a result hit) and the
-    # rows it keeps
+    # rows it keeps; the request memo's lookups (the repeat finds its
+    # processed query and its prepared request) and the entries it holds
     word = max(eng.vocabulary(), key=lambda t: (eng.term_dfs([t])[t], t))
-    for _ in range(2):
-        assert svc.search(word, limit=3).hits
+    assert svc.search(word, limit=3).hits
+    memo = eng._cache_report()
+    assert svc.search(word, limit=3).hits
     text = prometheus_metrics(spark, root, engines={"idx1": eng}, services={"idx1": svc})
     lines = text.strip().splitlines()
     rep = eng.warm_memory_report()
     assert rep["result_cache_hits"] >= 1 and rep["result_rows_held"] > 0
+    assert rep["request_memo_hits"] == memo["request_memo_hits"] + 2
+    assert rep["request_memo_misses"] == memo["request_memo_misses"]
+    assert rep["request_memo_entries"] >= 2
     for name, key in (
         ("mst_plan_cache_misses_total", "plan_cache_misses"),
         ("mst_plan_cache_hits_total", "plan_cache_hits"),
         ("mst_result_cache_hits_total", "result_cache_hits"),
         ("mst_result_cache_rows", "result_rows_held"),
+        ("mst_request_memo_hits_total", "request_memo_hits"),
+        ("mst_request_memo_misses_total", "request_memo_misses"),
+        ("mst_request_memo_entries", "request_memo_entries"),
     ):
         assert f'{name}{{uid="idx1"}} {rep[key]}' in lines, name
     # every sample line belongs to a declared family and parses as

@@ -9,6 +9,13 @@ delete, ``update_dictionary`` and ``reprocess_documents`` — the next
 repeat runs on the new tier.  The rows held per binding stay under
 ``_RESULT_ROWS_CAP``.
 
+A repeated ``SearchService.search`` also skips the driver work before the
+page finishing: the page's hits are kept resolved to their stored columns
+(no doc-store read), and the processed query and the engine's prepared
+request are memoized per binding (no Q1-Q8 pipeline, no typo expansion).
+The memo follows every rebind and the process-wide dictionary, and stays
+correct under threads at a cap of two entries.
+
 Also here: the eager step and ``term_dfs`` run no Spark job for words the
 index does not hold, once the driver vocabulary is complete.
 """
@@ -27,6 +34,8 @@ from test_plan_properties import _py4j_calls
 from meilisearch_thai_spark import dictionary as D
 from meilisearch_thai_spark.index.builder import build_index
 from meilisearch_thai_spark.index.maintenance import delete_docs, swap_indexes
+from meilisearch_thai_spark.index.settings import update_dictionary
+from meilisearch_thai_spark.query import service as service_mod
 from meilisearch_thai_spark.query.executor import SearchEngine
 from meilisearch_thai_spark.query.oracle import BM25Oracle
 from meilisearch_thai_spark.query.service import SearchService
@@ -35,6 +44,8 @@ from meilisearch_thai_spark.streaming.ingest import add_documents
 
 N_DOCS = 300
 QUERY = "เทคโนโลยี อาหาร"
+# its second word is no index word, so a first search runs the typo scan
+OOV_QUERY = "เทคโนโลยี ตลาดหลักทรัพย์"
 _GROUPS = itertools.count()
 
 
@@ -301,3 +312,188 @@ def test_term_dfs_runs_no_scan_for_unseen_words(spark, idx):
     scanned = SearchEngine(spark, idx[0], cache_postings=False).term_dfs(terms)
     assert dfs == scanned
     assert all(dfs[c] == 0 for c in letters) and dfs["อาหาร"] > 0
+
+
+def _spy(monkeypatch, owner, name, calls):
+    """Count the calls of ``owner.name`` into ``calls[name]``."""
+    original = getattr(owner, name)
+    calls[name] = 0
+
+    def counted(*args, **kwargs):
+        calls[name] += 1
+        return original(*args, **kwargs)
+
+    monkeypatch.setattr(owner, name, counted)
+
+
+def test_repeat_skips_analysis_expansion_and_doc_store(spark, idx, monkeypatch):
+    """A repeat of a query with an out-of-vocabulary word calls neither
+    the Q1-Q8 pipeline nor the typo scan nor the doc store, runs no Spark
+    job and makes no Py4J call — and answers as its first run did."""
+    svc = SearchService(spark, idx[0])
+    eng = svc.engine
+    svc.search("ปัญญาประดิษฐ์")  # first search: vocabulary, typo settings
+    calls: dict[str, int] = {}
+    _spy(monkeypatch, service_mod, "process_query", calls)
+    _spy(monkeypatch, eng, "expand_terms_fuzzy", calls)
+    _spy(monkeypatch, eng, "_doc_store", calls)
+    first = svc.search(OOV_QUERY)
+    assert first.hits and calls["process_query"] == 1
+    assert calls["expand_terms_fuzzy"] > 0 and calls["_doc_store"] == 1
+    for key in calls:
+        calls[key] = 0
+    with _jobs(spark.sparkContext) as jobs, _py4j_calls(spark) as py4j:
+        again = svc.search(OOV_QUERY)
+    assert calls == {"process_query": 0, "expand_terms_fuzzy": 0, "_doc_store": 0}
+    assert py4j == [] and jobs == []
+    assert _hits(again) == _hits(first)
+    assert again.query_info == first.query_info
+    assert len(svc.events) == 3  # the page finishing records every request
+    _drop(eng)
+
+
+def test_memo_follows_every_rebind(spark, tmp_path):
+    """After refresh_index, delete_docs + refresh_deletes, update_dictionary
+    and reprocess_documents the memo is empty, and the next search and
+    its repeat equal a fresh service's answer."""
+    word = "ควอนตัมคอมพิวเตอร์"
+    ts = datetime.datetime(2026, 1, 1)
+    texts = [f"งานวิจัย{word}ล่าสุด", f"ข่าว{word}ประจำวัน", "ร้านคอมพิวเตอร์ราคาถูก",
+             "คอมพิวเตอร์ราคาถูก", "ร้านอาหารไทยอร่อยมาก"]
+    docs = spark.createDataFrame(
+        [(f"https://ex.com/{i}", t, "th", ts, None) for i, t in enumerate(texts)],
+        "url string, text string, lang string, warc_ts timestamp, html binary",
+    )
+    out = str(tmp_path / "idx")
+    q = f"{word} ราคาถูก"
+    D.set_custom_words([])
+    try:
+        add_documents(spark, docs, out, n_shards=2)
+        svc = SearchService(spark, out)
+        eng = svc.engine
+        for _ in range(2):
+            svc.search(q)
+        assert eng._cache_report()["request_memo_entries"] > 0
+
+        def check(why):
+            assert eng._cache_report()["request_memo_entries"] == 0, why
+            got = _hits(svc.search(q))
+            fresh = SearchService(spark, out)
+            assert got == _hits(fresh.search(q)), why
+            assert _hits(svc.search(q)) == got, why
+            _drop(fresh.engine)
+            return got
+
+        eng.refresh_index()
+        check("refresh_index")
+        assert delete_docs(spark, out, ["https://ex.com/2"]) == 1
+        eng.refresh_deletes()
+        assert "https://ex.com/2" not in {u for u, _s, _v in check("refresh_deletes")}
+        svc.update_dictionary(add=[word])
+        before = check("update_dictionary")
+        svc.reprocess_documents(docs.filter(docs.text.contains(word)))
+        assert check("reprocess_documents") != before
+        _drop(eng)
+    finally:
+        D.set_custom_words([])
+
+
+def test_memo_follows_the_process_dictionary(spark, idx, tmp_path):
+    """The custom dictionary is process-wide, last-loaded index wins: a
+    second engine whose index carries another custom dictionary, loaded
+    between two repeats, changes the repeat's tokenization to the one a
+    fresh pipeline pass gives — never the memoized one."""
+    from meilisearch_thai_spark.query.pipeline import process_query
+
+    word = "ควอนตัมคอมพิวเตอร์"
+    other = str(tmp_path / "other")
+    docs = spark.createDataFrame(
+        [("https://o.ex/0", f"งานวิจัย{word}", "th", datetime.datetime(2026, 1, 1), None)],
+        "url string, text string, lang string, warc_ts timestamp, html binary",
+    )
+    D.set_custom_words([])
+    try:
+        add_documents(spark, docs, other, n_shards=1)
+        update_dictionary(other, add=[word], apply_runtime=False)
+        svc = SearchService(spark, idx[0])
+
+        def terms():
+            info = svc.search(word, include_tokenization_info=True).query_info
+            return [v["terms"] for v in info["tokenization_info"]["variants"]]
+
+        def fresh_terms():
+            return [v.terms for v in process_query(word, synonyms=svc.engine._synonyms or None).variants]
+
+        first = terms()
+        assert terms() == first == fresh_terms()
+        second = SearchEngine(spark, other, cache_postings=False)
+        assert D.get_custom_dictionary() == [word]
+        now = terms()
+        assert now == fresh_terms() and now != first
+        assert [word] in now
+        _drop(svc.engine, second)
+    finally:
+        D.set_custom_words([])
+
+
+def test_mutating_a_returned_hit_leaves_the_repeat_alone(spark, idx):
+    """Callers get copies of the kept hits: changing a returned row, or a
+    returned Hit, does not change what the next repeat returns."""
+    svc = SearchService(spark, idx[0])
+    eng = svc.engine
+    page = eng.search_page(QUERY, k=5, attributes_to_retrieve=["lang"])
+    want = [dict(r) for r in page]
+    for r in page:
+        r["url"], r["score"], r["lang"] = "mutated", -1.0, "xx"
+        r["extra"] = [1]
+    assert eng.search_page(QUERY, k=5, attributes_to_retrieve=["lang"]) == want
+    first = svc.search(QUERY, attributes_to_retrieve=["lang"])
+    want_hits = [(h.url, h.score, dict(h.attributes)) for h in first.hits]
+    for h in first.hits:
+        h.url, h.score = "mutated", -1.0
+        h.attributes["lang"] = "xx"
+    again = svc.search(QUERY, attributes_to_retrieve=["lang"])
+    assert [(h.url, h.score, dict(h.attributes)) for h in again.hits] == want_hits
+    _drop(eng)
+
+
+def test_concurrent_repeats_over_a_memo_of_two(spark, idx, monkeypatch):
+    """Eight threads repeat service searches, out-of-vocabulary words
+    included, against a memo (and plan cache) of two entries: every answer
+    equals serial execution, and the memo never holds more than two."""
+    queries = [QUERY, OOV_QUERY, "ปัญญาประดิษฐ์", "อาหารไทย", f"{QUERY} -ข่าว"]
+    serial_svc = SearchService(spark, idx[0])
+    serial = {q: _hits(serial_svc.search(q)) for q in queries}
+    assert all(serial.values())
+    _drop(serial_svc.engine)
+    svc = SearchService(spark, idx[0])
+    eng = svc.engine
+    svc.search("ปัญญาประดิษฐ์")  # the tier and vocabulary, before the threads
+    monkeypatch.setattr(eng, "_PLAN_CACHE_CAP", 2)
+    held, errors, got = [], [], {i: [] for i in range(8)}
+
+    def client(i):
+        try:
+            for q in (queries[i % 5:] + queries[: i % 5]) * 2:
+                got[i].append((q, _hits(svc.search(q))))
+                held.append(eng._cache_report()["request_memo_entries"])
+        except Exception as e:  # noqa: BLE001 — surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert all(hits == serial[q] for pages in got.values() for q, hits in pages)
+    assert held and max(held) <= 2
+    rep = eng._cache_report()
+    assert rep["request_memo_hits"] > 0 and rep["request_memo_misses"] > 0
+    _drop(eng)
